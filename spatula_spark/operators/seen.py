@@ -188,13 +188,14 @@ class ShardedBloom:
 
     Rebuilding the filter from the full seen table every wave is
     O(total-seen) per wave — fatal at 10^10 URLs. Bitwise OR is
-    associative, so instead each wave builds shard blobs from only the
-    *new* hashes (one small ``applyInPandas`` job over that wave's
-    fetches) and ORs them into driver state; the merged blobs are
-    re-broadcast. Blob size is fixed by (capacity, fpr) at
-    construction, but the SHARD COUNT auto-grows: when the fill ratio
-    crosses the engine's threshold, :meth:`regrow` re-shards ``4x``
-    wider and rebuilds from the exact seen table (geometric growth =>
+    associative, so instead shard blobs are built from only the *new*
+    hashes (one small ``applyInPandas`` job; the engine folds in the
+    keys seen since the previous probe, on the wave that probes next)
+    and ORed into driver state; the merged blobs are re-broadcast.
+    Blob size is fixed by (capacity, fpr) at construction, but the
+    SHARD COUNT auto-grows: when the fill ratio crosses the engine's
+    threshold, :meth:`regrow` re-shards ``4x`` wider and rebuilds
+    from the exact seen table (geometric growth =>
     O(N) total rebuild work), so a crawl that outlives its initial
     sizing keeps its FPR instead of silently degrading. At 10^10 keys
     that converges to ~2.5k shards of ~18 MB at fpr 1e-3; keep the

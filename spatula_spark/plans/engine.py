@@ -72,15 +72,25 @@ Scale notes (the part that must survive 100 TB / 10^10 URLs):
 
 from __future__ import annotations
 
+import copy
+import functools
 import json
 import os
 import shutil
+import sys
+import tempfile
+import time as _time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any, Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
 from . import native as N
@@ -116,14 +126,11 @@ _EMISSION_OUT_SCHEMA = (
     "url_hash long, seen_key long"
 )
 
-_EMISSION_COLS = [
-    "emit_kind", "src_cls", "path", "item_json", "child_cls", "child_url",
-    "child_input_json", "priority", "page_seq", "attempts", "error",
-    "url_hash", "seen_key",
-]
+_EMISSION_COLS = [c.split()[0] for c in _EMISSION_OUT_SCHEMA.split(", ")]
 
 # fetched-row schema for driver-built missing (404) rows — must match
-# the _fetch out_cols projection column-for-column
+# the _fetch out_cols projection column-for-column; also the batch's
+# column order (_BATCH_SELECT)
 _FETCHED_LOCAL_SCHEMA = (
     "page_cls string, path string, url string, input_json string, "
     "payload binary, links array<string>, next_url string, status int, "
@@ -132,11 +139,9 @@ _FETCHED_LOCAL_SCHEMA = (
     "url_hash bigint, seen_key bigint"
 )
 
-_BATCH_SELECT = [
-    "page_cls", "path", "url", "input_json", "payload", "links", "next_url",
-    "status", "attempts", "page_seq", "payload_kind", "image_id", "found",
-    "priority", "flaky_rejects", "url_hash", "seen_key",
-]
+_BATCH_SELECT = [c.split()[0] for c in _FETCHED_LOCAL_SCHEMA.split(", ")]
+
+_SEEN_SCHEMA = "url_hash long, seen_key long"
 
 
 class CrawlError(Exception):
@@ -231,12 +236,17 @@ class CrawlConfig:
     # exactly the Iceberg-snapshot-per-wave write pattern the north
     # rule mandates. "local" keeps localCheckpoint (in-memory blocks).
     materialize: str = "parquet"
-    spill_dir: str | None = None  # default: mkdtemp, removed on success
+    # scratch dir of the wave materializations; default: a fresh
+    # mkdtemp. Never removed by the engine: the CrawlResult DataFrames
+    # scan it lazily, so it must outlive the crawl (the caller owns it)
+    spill_dir: str | None = None
     # small-wave driver materialization: when the fan-out-aware size
     # estimate (max of this wave's frontier and the previous wave's
     # total emissions) is at or below this, the wave's slim emission
-    # rows are collect()ed and re-planted as a LocalRelation instead of
-    # the parquet write+read — the BFS-tail analogue of AQE's
+    # rows are collected as one Arrow table and re-planted as a
+    # LocalRelation (``_local_df``: Arrow batches handed to the JVM, so
+    # no Python worker re-reads them) instead of the parquet
+    # write+read — the BFS-tail analogue of AQE's
     # local-shuffle-read: deep chains (pagination tails, tree crawls)
     # stop paying the ~1s/wave spill round-trip, while big waves keep
     # the cluster path untouched. Emission rows are payload-free
@@ -291,21 +301,48 @@ def _parse_jvm_mem(s: str) -> int:
     return int(s)
 
 
+def _driver_heap(spark: SparkSession) -> int:
+    """The tighter of the driver and executor heaps (a broadcast also
+    lands on every executor); Spark's stock 1 GiB when neither is set.
+    Unset keys read as None: a raising lookup (a local master has no
+    executor memory) costs a py4j exception conversion per call."""
+    mems = [_parse_jvm_mem(v) for v in (
+        spark.conf.get(k, None)
+        for k in ("spark.driver.memory", "spark.executor.memory")) if v]
+    return min(mems) if mems else 1 << 30
+
+
 def _broadcast_rows_budget(
-    spark: SparkSession, frac: float = 0.10, row_bytes: int = 150
+    spark: SparkSession, frac: float = 0.10, row_bytes: int = 150,
+    heap: int | None = None,
 ) -> int:
     """Rows of slim frontier a broadcast may hold: ``frac`` of the
-    driver heap at ~``row_bytes``/row (url + path + input_json +
-    hash-relation overhead). In cluster mode the broadcast also lands
-    on every executor, so the tighter of driver/executor heap rules."""
-    mems = []
-    for key in ("spark.driver.memory", "spark.executor.memory"):
-        try:
-            mems.append(_parse_jvm_mem(spark.conf.get(key)))
-        except Exception:
-            pass
-    heap = min(mems) if mems else 1 << 30  # Spark's stock 1 GiB
+    heap (``_driver_heap`` unless given) at ~``row_bytes``/row (url +
+    path + input_json + hash-relation overhead)."""
+    heap = heap if heap is not None else _driver_heap(spark)
     return max(10_000, int(heap * frac) // row_bytes)
+
+
+_struct = functools.cache(T.StructType.fromDDL)  # DDL -> StructType
+
+
+def _local_df(
+    spark: SparkSession, data: list[tuple] | pa.Table,
+    schema: T.StructType | str,
+) -> DataFrame:
+    """One-partition DataFrame over driver-resident rows (tuples in
+    ``schema`` order, or an Arrow table). The rows travel to the JVM as
+    Arrow batches and are planted there as a LocalRelation (below
+    spark.sql.execution.arrow.localRelationThreshold), so scanning the
+    result never starts a Python worker — an RDD of Python rows
+    (``parallelize``) pays one on every scan."""
+    schema = _struct(schema) if isinstance(schema, str) else schema
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*data)) if data else [()] * len(schema)
+        data = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(data, schema=schema).coalesce(1)
 
 
 @dataclass
@@ -323,6 +360,22 @@ class CrawlResult:
     def items(self) -> list[Any]:
         """Driver-side ordered item values (test/parity helper)."""
         return [json.loads(r["item_json"]) for r in self.ordered().collect()]
+
+
+def _payloadless_cols(status: int, found: bool, hash_cols: list) -> list:
+    """Fetched-row projection (_BATCH_SELECT order) of a frontier row
+    that carries no payload: a 404 or a NullSource page."""
+    return [
+        "page_cls", "path", "url", "input_json",
+        F.lit(None).cast("binary").alias("payload"),
+        F.lit(None).cast("array<string>").alias("links"),
+        F.lit(None).cast("string").alias("next_url"),
+        F.lit(status).alias("status"), "attempts", "page_seq",
+        F.lit(None).cast("string").alias("payload_kind"),
+        F.lit(None).cast("string").alias("image_id"),
+        F.lit(found).alias("found"), "priority",
+        F.lit(0).alias("flaky_rejects"),
+    ] + hash_cols
 
 
 def _hex_path(parent: str, slot: str, idx: int) -> str:
@@ -671,8 +724,9 @@ class CrawlEngine:
         self._store_keys_py: set[int] | None | bool = False  # False=undecided
         # memory-budget default for the broadcast-fetch cap (see
         # CrawlConfig.broadcast_fetch_max)
+        heap = _driver_heap(spark)
         if self.config.broadcast_fetch_max is None:
-            self._bcast_fetch_max = _broadcast_rows_budget(spark)
+            self._bcast_fetch_max = _broadcast_rows_budget(spark, heap=heap)
         else:
             self._bcast_fetch_max = self.config.broadcast_fetch_max
         # driver-python-structure caps: derive from the provisioned
@@ -683,12 +737,12 @@ class CrawlEngine:
         self._driver_store_keys_max = (
             self.config.driver_store_keys_max
             if self.config.driver_store_keys_max is not None
-            else _broadcast_rows_budget(spark, frac=0.05, row_bytes=80)
+            else _broadcast_rows_budget(spark, 0.05, 80, heap)
         )
         self._driver_seen_max = (
             self.config.driver_seen_max
             if self.config.driver_seen_max is not None
-            else _broadcast_rows_budget(spark, frac=0.05, row_bytes=130)
+            else _broadcast_rows_budget(spark, 0.05, 130, heap)
         )
         # lazily-built wave-invariant Column caches (see crawl() —
         # rebuilding expression trees every wave is driver-bound)
@@ -755,8 +809,6 @@ class CrawlEngine:
         materialization job via ``Observation`` — row counts and
         emission-kind tallies come for free instead of costing an extra
         job each per wave."""
-        from pyspark.sql import Observation
-
         obs = None
         if obs_exprs:
             obs = Observation()
@@ -767,7 +819,8 @@ class CrawlEngine:
             self._spill_n += 1
             path = os.path.join(self._spill, f"{self._spill_n:05d}_{label}")
             df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
+            # schema pinned: an inferring read runs a footer job per call
+            out = self.spark.read.schema(df.schema).parquet(path)
         return (out, obs.get) if obs_exprs else (out, None)
 
     # ------------------------------------------------------------ seen union
@@ -784,20 +837,20 @@ class CrawlEngine:
             )
             self._seen_slices = [u]
         if not self._seen_slices:
-            return self.spark.createDataFrame(
-                [], "url_hash long, seen_key long")
+            return self.spark.createDataFrame([], _SEEN_SCHEMA)
         return _union_tree(self._seen_slices)
 
     # ---------------------------------------------------------------- crawl
     def crawl(self, seeds: list[dict] | DataFrame) -> CrawlResult:
         cfg = self.config
         spark = self.spark
-        import tempfile
-
         self._spill_n = 0
         self._spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
         os.makedirs(self._spill, exist_ok=True)
         self._seen_slices: list[DataFrame] = []
+        # seen slices not yet folded into the Bloom filter: the fold
+        # runs only when a wave is about to probe it (see _dedup)
+        self._bloom_pending: list[DataFrame] = []
         self._ckpt_items: list[DataFrame] = []
         self._ckpt_seen: list[DataFrame] = []
         self._ckpt_future = None
@@ -812,6 +865,10 @@ class CrawlEngine:
             # caller-supplied frontiers may predate hash-at-emission
             if c not in frontier.columns:
                 frontier = frontier.withColumn(c, F.lit(None).cast("long"))
+        # seed_frontier emits exactly one row per seed; None = unknown
+        # (DataFrame seeds, or a resume without manifest row stats)
+        n_frontier: int | None = (
+            None if isinstance(seeds, DataFrame) else len(seeds))
         self._seen_count = 0
         # driver-resident twin of the seen set (exact (url_hash,
         # seen_key) pairs) — alive while every wave's new keys were
@@ -870,20 +927,20 @@ class CrawlEngine:
                 else self._try_resume(cfg.checkpoint_dir)
             )
             if resumed is not None:
-                frontier, rseen, results, metrics_rows, start_wave = resumed
+                (frontier, rseen, results, metrics_rows, start_wave,
+                 n_frontier, n_seen) = resumed
                 wave = start_wave
                 self._requeues_possible = True  # in-flight retries unknown
                 self._py_seen = None  # unknown provenance; cluster dedup
-                self._seen_count = rseen.count()
+                self._seen_count = rseen.count() if n_seen is None else n_seen
                 if self._seen_count:
-                    rseen, _ = self._materialize(rseen, "seen_resume")
+                    if self._ice is not None or cfg.checkpoint_expire_deltas:
+                        # the snapshot's seen dirs can vanish mid-crawl
+                        # (expiry after a compaction): keep a private
+                        # copy. Otherwise the slice reads them in place.
+                        rseen, _ = self._materialize(rseen, "seen_resume")
                     self._seen_slices.append(rseen)
-                if self._bloom is not None and self._seen_count:
-                    # one-time rebuild from the checkpointed seen table
-                    self._bloom.add_hashes_df(rseen, key_col="seen_key")
-
-        import sys
-        import time as _time
+                    self._bloom_pending.append(rseen)
 
         def _tick(label: str, t: list) -> None:
             if cfg.verbose:
@@ -942,43 +999,27 @@ class CrawlEngine:
             per_row_expr = F.concat(
                 marker_expr, F.coalesce(cls_arr, N.empty_emissions())
             )
-        nullsrc_cols = [
-            "page_cls", "path", "url", "input_json",
-            F.lit(None).cast("binary").alias("payload"),
-            F.lit(None).cast("array<string>").alias("links"),
-            F.lit(None).cast("string").alias("next_url"),
-            F.lit(200).alias("status"),
-            "attempts", "page_seq",
-            F.lit(None).cast("string").alias("payload_kind"),
-            F.lit(None).cast("string").alias("image_id"),
-            F.lit(True).alias("found"),
-            "priority",
-            F.lit(0).alias("flaky_rejects"),
+        nullsrc_cols = _payloadless_cols(200, True, [
             F.lit(None).cast("long").alias("url_hash"),
             F.lit(None).cast("long").alias("seen_key"),
-        ]
-        blocked_cols = [
-            F.lit("blocked").alias("emit_kind"),
-            F.col("page_cls").alias("src_cls"),
-            "path",
-            F.lit(None).cast("string").alias("item_json"),
-            F.lit(None).cast("string").alias("child_cls"),
-            F.col("url").alias("child_url"),
-            F.col("input_json").alias("child_input_json"),
-            "priority", "page_seq", "attempts",
-            F.lit("robots.txt disallow").alias("error"),
-        ]
-        deferred_cols = [
-            F.lit("deferred").alias("emit_kind"),
-            F.col("page_cls").alias("src_cls"),
-            "path",
-            F.lit(None).cast("string").alias("item_json"),
-            F.col("page_cls").alias("child_cls"),
-            F.col("url").alias("child_url"),
-            F.col("input_json").alias("child_input_json"),
-            "priority", "page_seq", "attempts",
-            F.lit(None).cast("string").alias("error"),
-        ]
+        ])
+
+        def unfetched_cols(kind, child_cls, error):
+            # a frontier row re-emitted unfetched (robots, politeness)
+            return [
+                F.lit(kind).alias("emit_kind"),
+                F.col("page_cls").alias("src_cls"), "path",
+                F.lit(None).cast("string").alias("item_json"),
+                child_cls.cast("string").alias("child_cls"),
+                F.col("url").alias("child_url"),
+                F.col("input_json").alias("child_input_json"),
+                "priority", "page_seq", "attempts",
+                F.lit(error).cast("string").alias("error"),
+            ]
+
+        blocked_cols = unfetched_cols(
+            "blocked", F.lit(None), "robots.txt disallow")
+        deferred_cols = unfetched_cols("deferred", F.col("page_cls"), None)
         kind_names = ("item", "child", "next", "requeue", "skip_item",
                       "skip_page", "handled_error", "error", "reject",
                       "fetched", "blocked", "deferred")
@@ -1042,7 +1083,6 @@ class CrawlEngine:
         ]
         kinds = _followed  # frontier-bound emission kinds
 
-        n_frontier: int | None = None  # None = unknown (seeds / resume)
         self._prev_total_emissions: int | None = None
         while True:
             t = [_time.time()]
@@ -1052,8 +1092,8 @@ class CrawlEngine:
             # width. AQE handles the shuffles; this governs the
             # coalesce + snapshot file counts.
             if n_frontier is None:
-                # first wave / resume: one count (also sizes the fetch
-                # strategy — broadcast vs shuffle join)
+                # DataFrame seeds / stat-less resume: one count (also
+                # sizes the fetch strategy — broadcast vs shuffle join)
                 n_frontier = frontier.count()
             # size this wave's coalesce by its likely OUTPUT, not its
             # input: a wave of list pages explodes ~fan-out× emissions
@@ -1100,6 +1140,7 @@ class CrawlEngine:
             fast_rows = self._frontier_rows
             self._frontier_rows = None
             self._frontier_is_local = False
+            self._wave_bloom_fpr = None  # set by a probing _dedup
             can_fast = (
                 fast_rows is not None
                 and cfg.dedup_urls
@@ -1113,9 +1154,7 @@ class CrawlEngine:
                     for r in fast_rows
                 )
             )
-            deferred = None
-            blocked = None
-            nullsrc = None
+            deferred = blocked = nullsrc = None
             sched_rows: list[tuple] = []
             null_rows: list[tuple] = []
             if can_fast:
@@ -1143,19 +1182,14 @@ class CrawlEngine:
                 # every candidate was already seen: a no-op wave —
                 # skip the Spark job entirely
                 lrows: list | None = []
-                emissions = spark.createDataFrame(
-                    spark.sparkContext.parallelize([], 1),
-                    schema=_EMISSION_OUT_SCHEMA,
-                )
+                emissions = _local_df(spark, [], _EMISSION_OUT_SCHEMA)
                 kind_counts = {k: 0 for k in kind_names}
                 deferred_requeues = 0
             else:
                 if can_fast:
                     if null_rows:
-                        nullsrc = spark.createDataFrame(
-                            spark.sparkContext.parallelize(null_rows, 1),
-                            schema=schemas.FRONTIER_SCHEMA,
-                        )
+                        nullsrc = _local_df(
+                            spark, null_rows, schemas.FRONTIER_SCHEMA)
                     self._frontier_is_local = True
                     fetched = self._fetch_local(sched_rows)
                 else:
@@ -1264,10 +1298,7 @@ class CrawlEngine:
                 # floor)
                 if deferred is not None:
                     parts.append(deferred.select(*deferred_cols))
-                emissions = parts[0]
-                for p in parts[1:]:
-                    emissions = emissions.unionByName(
-                        p, allowMissingColumns=True)
+                emissions = _union_tree(parts, allow_missing=True)
                 # bound partition count: a union's partitioning is the
                 # SUM of its children's — left unchecked the per-wave
                 # union fan-in compounds geometrically across waves
@@ -1279,19 +1310,13 @@ class CrawlEngine:
                     and est <= cfg.driver_wave_max
                 ):
                     # small wave: land the slim emission rows on the
-                    # driver (LocalRelation) — kind counts tallied in
+                    # driver as one Arrow table — kind counts tallied in
                     # Python, no Observation, no spill round-trip.
                     # hash-at-emission (emit_hash_cols) applies ONLY
-                    # here: the hashes are solely for the next wave's
-                    # driver-side dedup, which requires THIS wave's rows
-                    # on the driver — big cluster waves must not pay the
-                    # extra per-child canonicalize+hash+write
-                    # driver-local wave: the plan is one broadcast
-                    # probe + explode over a LocalRelation frontier —
-                    # zero shuffle stages, so AQE's per-stage
-                    # re-planning is pure overhead here (~8% of a
-                    # 13-wave tree crawl measured); big cluster waves
-                    # keep AQE untouched
+                    # here: the hashes serve solely the next wave's
+                    # driver-side dedup. A driver-local frontier's plan
+                    # has zero shuffle stages, so AQE re-planning is
+                    # pure overhead (~8% of a 13-wave tree crawl)
                     _aqe = None
                     if self._frontier_is_local:
                         _aqe = spark.conf.get(
@@ -1299,12 +1324,13 @@ class CrawlEngine:
                         spark.conf.set(
                             "spark.sql.adaptive.enabled", "false")
                     try:
-                        lrows = emissions.select(
-                            *emit_hash_cols).collect()
+                        ltable = emissions.select(
+                            *emit_hash_cols).toArrow()
                     finally:
                         if _aqe is not None:
                             spark.conf.set(
                                 "spark.sql.adaptive.enabled", _aqe)
+                    lrows = ltable.to_pylist()
                     kind_counts = {k: 0 for k in kind_names}
                     deferred_requeues = 0
                     for r in lrows:
@@ -1316,10 +1342,8 @@ class CrawlEngine:
                     # to defaultParallelism slices, and per-wave unions
                     # then compound task counts geometrically (measured
                     # 161 → 417 tasks/stage by wave 12 of a tree crawl)
-                    emissions = spark.createDataFrame(
-                        spark.sparkContext.parallelize(lrows, 1),
-                        schema=_EMISSION_OUT_SCHEMA,
-                    )
+                    emissions = _local_df(
+                        spark, ltable, _EMISSION_OUT_SCHEMA)
                 else:
                     lrows = None
                     emissions, emetrics = self._materialize(
@@ -1384,6 +1408,7 @@ class CrawlEngine:
                 # real table instead; rewriting the accumulated set per
                 # wave would be O(total)/wave — impossible at 10^10.)
                 self._seen_slices.append(new_seen)
+                self._bloom_pending.append(new_seen)
                 self._seen_count += n_new
                 # Python seen-set twin: fed from the driver-collected
                 # rows (free); a cluster wave keeps it alive with one
@@ -1411,27 +1436,6 @@ class CrawlEngine:
                         and len(self._py_seen) > self._driver_seen_max
                     ):
                         self._py_seen = None  # driver-memory cap
-                if (
-                    self._bloom is not None
-                    and self._seen_count >= cfg.bloom_min_seen
-                ):
-                    if self._bloom.count == 0 and self._seen_count > n_new:
-                        # lazy backfill: the filter only starts paying
-                        # once the seen set crosses the threshold; fold
-                        # in everything accumulated so far, once
-                        self._bloom.add_hashes_df(
-                            self._seen_union(), key_col="seen_key")
-                    else:
-                        # incremental: OR this wave's shard blobs into
-                        # the driver-held filter (never a full rebuild)
-                        self._bloom.add_hashes_df(new_seen, key_col="seen_key")
-                    if self._bloom.needs_regrow(cfg.bloom_regrow_fill):
-                        # fill ratio past threshold: FPR would degrade
-                        # geometrically from here; re-shard 4x wider
-                        # from the exact seen table (geometric growth
-                        # keeps total rebuild work O(N) over the crawl)
-                        self._bloom.regrow(
-                            self._seen_union(), key_col="seen_key")
             _tick("seen update", t)
 
             # next frontier: a narrow filter over the ALREADY
@@ -1472,6 +1476,10 @@ class CrawlEngine:
                     ),
                     "blocked": int(kind_counts.get("blocked", 0)),
                     "deferred": int(kind_counts.get("deferred", 0)),
+                    # Bloom prefilter: did this wave's dedup probe it,
+                    # and its estimated FPR at that probe (else None)
+                    "bloom_probed": self._wave_bloom_fpr is not None,
+                    "bloom_fpr": self._wave_bloom_fpr,
                 }
             )
 
@@ -1496,11 +1504,11 @@ class CrawlEngine:
                         # (the r4 behavior: the next wave scans the
                         # durable copy); async keeps the scratch-parquet
                         # plan so the wave never waits on the commit
-                        frontier = spark.read.parquet(
-                            os.path.join(
-                                cfg.checkpoint_dir, f"wave={wave}", "frontier"
-                            )
-                        )
+                        frontier = spark.read.schema(
+                            schemas.FRONTIER_SCHEMA
+                        ).parquet(os.path.join(
+                            cfg.checkpoint_dir, f"wave={wave}", "frontier"
+                        ))
 
             wave += 1
 
@@ -1637,6 +1645,19 @@ class CrawlEngine:
             )
             anti_keys = ["url_hash", "seen_key"]
             if use_bloom:
+                if self._bloom_pending:
+                    # lazy fold: every seen slice since the last probe
+                    # (the resumed set, each wave's new keys) reaches
+                    # the filter in ONE job, only now that a wave
+                    # probes it — builds no wave reads are never paid
+                    self._bloom.add_hashes_df(
+                        _union_tree(self._bloom_pending), key_col="seen_key")
+                    self._bloom_pending = []
+                    while self._bloom.needs_regrow(cfg.bloom_regrow_fill):
+                        # FPR would degrade geometrically: re-shard 4x
+                        # wider from the exact seen table (O(N) total)
+                        self._bloom.regrow(seen, key_col="seen_key")
+                self._wave_bloom_fpr = self._bloom.estimated_fpr()
                 maybe_seen = self._bloom.membership_udf(self.spark)
                 flagged = first_time.withColumn(
                     "_maybe", maybe_seen(F.col("seen_key"))
@@ -1682,20 +1703,7 @@ class CrawlEngine:
                     .alias("flaky_rejects"),
                     "url_hash", "seen_key",
                 ],
-                [
-                    "page_cls", "path", "url", "input_json",
-                    F.lit(None).cast("binary").alias("payload"),
-                    F.lit(None).cast("array<string>").alias("links"),
-                    F.lit(None).cast("string").alias("next_url"),
-                    F.lit(404).alias("status"),
-                    "attempts", "page_seq",
-                    F.lit(None).cast("string").alias("payload_kind"),
-                    F.lit(None).cast("string").alias("image_id"),
-                    F.lit(False).alias("found"),
-                    "priority",
-                    F.lit(0).alias("flaky_rejects"),
-                    "url_hash", "seen_key",
-                ],
+                _payloadless_cols(404, False, ["url_hash", "seen_key"]),
             )
         return self._fetch_cols
 
@@ -1729,9 +1737,8 @@ class CrawlEngine:
             self._store_rows = self.page_store.count()
         keyset = None if self.fetch_fn is not None else self._store_keyset()
         if keyset is None:
-            fetchable = spark.createDataFrame(
-                spark.sparkContext.parallelize(rows, 1),
-                schema=schemas.FRONTIER_SCHEMA,
+            fetchable = _local_df(
+                spark, rows, schemas.FRONTIER_SCHEMA
             ).withColumn("host", host_of(F.col("url")))
             return self._fetch(fetchable)
         out_cols, _ = self._fetch_out_cols()
@@ -1746,25 +1753,14 @@ class CrawlEngine:
         ]
         parts = []
         if found:
-            fr = spark.createDataFrame(
-                spark.sparkContext.parallelize(found, 1),
-                schema=schemas.FRONTIER_SCHEMA,
-            )
+            fr = _local_df(spark, found, schemas.FRONTIER_SCHEMA)
             parts.append(
                 self.page_store.join(F.broadcast(fr), "url_hash", "inner")
                 .select(*out_cols)
             )
         if missing or not parts:
-            parts.append(
-                spark.createDataFrame(
-                    spark.sparkContext.parallelize(missing, 1),
-                    schema=_FETCHED_LOCAL_SCHEMA,
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            parts.append(_local_df(spark, missing, _FETCHED_LOCAL_SCHEMA))
+        return _union_tree(parts)
 
     def _fetch(self, fetchable: DataFrame) -> DataFrame:
         """The fetch stage: an equi-join against the synthetic page-store
@@ -1888,17 +1884,11 @@ class CrawlEngine:
         (immutable until crawl end), so the background write races
         nothing; one worker thread serializes commits so the
         manifest-last atomicity argument is unchanged."""
-        items = (
-            self._ckpt_items[0]
-            if len(self._ckpt_items) == 1
-            else _union_tree(self._ckpt_items)
-        )
+        items = _union_tree(self._ckpt_items)
         seen = _union_tree(self._ckpt_seen) if self._ckpt_seen else None
         self._ckpt_items, self._ckpt_seen = [], []
         mrows = list(metrics_rows)
         if cfg.checkpoint_async:
-            from concurrent.futures import ThreadPoolExecutor
-
             if self._ckpt_pool is None:
                 self._ckpt_pool = ThreadPoolExecutor(
                     max_workers=1, thread_name_prefix="ckpt"
@@ -1999,7 +1989,7 @@ class CrawlEngine:
         if seen_delta is not None:
             parts.append(os.path.join(d, "seen_delta"))
         # one reader over all source dirs: a single scan+write job
-        self.spark.read.parquet(*parts).select("url_hash", "seen_key") \
+        self.spark.read.schema(_SEEN_SCHEMA).parquet(*parts) \
             .write.mode("overwrite").parquet(os.path.join(d, "seen_base"))
         return True
 
@@ -2049,14 +2039,13 @@ class CrawlEngine:
             return None
         last = max(waves)
         d = os.path.join(base, f"wave={last}")
-        with open(os.path.join(d, "MANIFEST.json")) as f:
-            manifest = json.load(f)
-        frontier = self.spark.read.parquet(os.path.join(d, "frontier"))
-        for c in ("url_hash", "seen_key"):
-            # checkpoints written before the hash-at-emission change
-            if c not in frontier.columns:
-                frontier = frontier.withColumn(c, F.lit(None).cast("long"))
-        seen = self.spark.createDataFrame([], "url_hash long, seen_key long")
+        manifest = _read_manifest(d)
+        # every read pins the schema the engine wrote: no footer
+        # inference job, and a frontier written before hash-at-emission
+        # reads its missing url_hash / seen_key columns as null
+        read = self.spark.read.schema
+        frontier = read(schemas.FRONTIER_SCHEMA).parquet(
+            os.path.join(d, "frontier"))
         base_wave, delta_waves = self._seen_sources(base, upto=last)
         for w in sorted(waves):
             # expiry leaves manifests intact; a wave that HAD a delta
@@ -2064,17 +2053,15 @@ class CrawlEngine:
             # ``last`` means this rollback target predates the latest
             # compaction — fail loudly, never rebuild an incomplete
             # seen set (it would silently refetch)
-            if base_wave is not None and w <= base_wave:
+            if (base_wave is not None and w <= base_wave) or w in delta_waves:
                 continue
-            if w in delta_waves:
-                continue
-            with open(os.path.join(base, f"wave={w}", "MANIFEST.json")) as f:
-                if json.load(f).get("has_delta"):
-                    raise CrawlError(
-                        f"wave {w}'s seen delta was expired by a later "
-                        f"compaction; cannot resume as of wave {last} — "
-                        f"resume at or after the latest seen_base snapshot"
-                    )
+            mf = _read_manifest(os.path.join(base, f"wave={w}"))
+            if mf.get("has_delta"):
+                raise CrawlError(
+                    f"wave {w}'s seen delta was expired by a later "
+                    f"compaction; cannot resume as of wave {last} — "
+                    f"resume at or after the latest seen_base snapshot"
+                )
         if upto is not None:
             # rollback: delete snapshots newer than the target so the
             # replayed timeline is linear (abandoned-branch dirs would
@@ -2085,22 +2072,25 @@ class CrawlEngine:
                 if entry.startswith("wave=") and (
                         int(entry.split("=")[1]) > last):
                     shutil.rmtree(os.path.join(base, entry))
-        parts = ([os.path.join(base, f"wave={base_wave}", "seen_base")]
+        parts = ([(base_wave, "seen_base")]
                  if base_wave is not None else [])
-        parts += [os.path.join(base, f"wave={w}", "seen_delta")
-                  for w in delta_waves]
-        if parts:
-            seen = seen.union(
-                self.spark.read.parquet(*parts).select("url_hash", "seen_key")
-            )
+        parts += [(w, "seen_delta") for w in delta_waves]
+        seen = read(_SEEN_SCHEMA).parquet(
+            *[os.path.join(base, f"wave={w}", sub) for w, sub in parts])
+        # row counts from the manifests' footer stats (no job); None
+        # when an older manifest lacks them, and the caller counts
+        counts = [_manifest_rows(_read_manifest(
+            os.path.join(base, f"wave={w}")), sub) for w, sub in parts]
+        n_seen = None if None in counts else sum(counts)
         # one multi-path scan: the wave number rides IN the data (the
         # checkpoint writes the wave-lit column), so a 1000-wave resume
         # costs one scan node, not 1000 union legs
-        results = [self.spark.read.parquet(
+        results = [read(schemas.RESULT_SCHEMA).parquet(
             *[os.path.join(base, f"wave={w}", "items")
               for w in sorted(waves)]
         )]
-        return frontier, seen, results, list(manifest["metrics"]), last + 1
+        return (frontier, seen, results, list(manifest["metrics"]),
+                last + 1, _manifest_rows(manifest, "frontier"), n_seen)
 
     # ----------------------------------------------------------------- scout
     def scout(self, seeds: list[dict] | DataFrame) -> list[dict]:
@@ -2109,8 +2099,6 @@ class CrawlEngine:
         {data, __next__}; children not followed, pagination followed.
         The projection is a native expression over emissions — items
         wrap their own payload, child rows their would-be input."""
-        import copy
-
         saved = self.config
         cfg = copy.copy(saved)
         cfg.scout = True
@@ -2124,13 +2112,25 @@ class CrawlEngine:
         return [json.loads(r["item_json"]) for r in rows]
 
 
+def _read_manifest(wave_dir: str) -> dict:
+    with open(os.path.join(wave_dir, "MANIFEST.json")) as f:
+        return json.load(f)
+
+
+def _manifest_rows(manifest: dict, sub: str) -> int | None:
+    """Rows of snapshot subdir ``sub`` from the manifest's footer
+    stats, or None when the manifest predates them."""
+    files = manifest.get("files", {}).get(sub)
+    if files is None or any(fi.get("rows") is None for fi in files):
+        return None
+    return sum(fi["rows"] for fi in files)
+
+
 def _parquet_dir_stats(d: str) -> list[dict]:
     """Per-file (relative path, bytes, rows) for every parquet part in
     a snapshot dir — rows come from the footer metadata, no data scan.
     The Iceberg-manifest analogue: size/row skew across part files is
     visible from the manifest alone."""
-    import pyarrow.parquet as pq
-
     out = []
     for root, _, names in os.walk(d):
         for n in sorted(names):

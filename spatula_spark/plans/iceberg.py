@@ -139,8 +139,10 @@ class IcebergSnapshots:
     # ------------------------------------------------------------ resume
     def try_resume(self, upto: int | None = None):
         """Mirror of engine._try_resume's return contract:
-        (frontier, seen, [items], metrics_rows, next_wave), or None when
-        no committed snapshot exists (or none at/before ``upto``)."""
+        (frontier, seen, [items], metrics_rows, next_wave, n_frontier,
+        n_seen), or None when no committed snapshot exists (or none
+        at/before ``upto``). The row counts are None: the engine counts
+        the tables itself."""
         cat = self.spark.catalog
         if not cat.tableExists(self._t("manifest")):
             return None
@@ -166,7 +168,8 @@ class IcebergSnapshots:
             .filter(F.col("wave") <= last)
         )
         return (frontier, seen, [items],
-                list(json.loads(row[0]["metrics_json"])), last + 1)
+                list(json.loads(row[0]["metrics_json"])), last + 1,
+                None, None)
 
     def _rollback_past(self, wave: int) -> None:
         """Time-travel rollback: delete every row newer than ``wave``

@@ -354,6 +354,35 @@ def test_driver_caps_derive_from_heap(spark, store):
     assert pinned._driver_seen_max == 456
 
 
+def _strip_manifest_stats(spark, ck):
+    """Rewrite every manifest without its ``files`` footer stats, as a
+    snapshot committed before the stats existed."""
+    import os
+
+    for e in os.listdir(ck):
+        m = os.path.join(ck, e, "MANIFEST.json")
+        if os.path.exists(m):
+            with open(m) as f:
+                mf = json.load(f)
+            del mf["files"]
+            with open(m, "w") as f:
+                json.dump(mf, f)
+
+
+def _drop_frontier_hashes(spark, ck):
+    """Rewrite the last snapshot's frontier without the url_hash /
+    seen_key columns, as one written before hash-at-emission."""
+    import os
+
+    last = max(int(e.split("=")[1]) for e in os.listdir(ck)
+               if e.startswith("wave="))
+    d = os.path.join(ck, f"wave={last}", "frontier")
+    rows = spark.read.parquet(d).drop("url_hash", "seen_key")
+    rows.write.parquet(d + "_old")
+    shutil.rmtree(d)
+    os.rename(d + "_old", d)
+
+
 def test_checkpoint_resume_identical(spark, web, store, tmp_path):
     ck = str(tmp_path / "ck")
     full = CrawlEngine(spark, media_registry(), page_store=store,
@@ -362,6 +391,14 @@ def test_checkpoint_resume_identical(spark, web, store, tmp_path):
     CrawlEngine(spark, media_registry(), page_store=store,
                 config=CrawlConfig(checkpoint_dir=ck, max_waves=2)
                 ).crawl(web.seeds())
+    # the same snapshot as older engines wrote it: manifests without
+    # footer row stats (resume counts the tables instead), and a
+    # frontier without the emission hashes
+    older = []
+    for age in (_strip_manifest_stats, _drop_frontier_hashes):
+        older.append(str(tmp_path / age.__name__))
+        shutil.copytree(ck, older[-1])
+        age(spark, older[-1])
     # run 2: resumes from the snapshot and finishes
     res = CrawlEngine(spark, media_registry(), page_store=store,
                       config=CrawlConfig(checkpoint_dir=ck)
@@ -370,7 +407,111 @@ def test_checkpoint_resume_identical(spark, web, store, tmp_path):
     want = {r["url"] for r in crawl_items_df(full.results).collect()}
     assert got == want
     assert res.seen.count() == full.seen.count()
+    full_seen = sorted(tuple(r) for r in full.seen.collect())
+    for d in older:
+        res = CrawlEngine(spark, media_registry(), page_store=store,
+                          config=CrawlConfig(checkpoint_dir=d)
+                          ).crawl(web.seeds())
+        assert res.items() == full.items(), d
+        assert sorted(tuple(r) for r in res.seen.collect()) == full_seen, d
     shutil.rmtree(ck, ignore_errors=True)
+
+
+def test_resume_then_compaction_and_expiry(spark, web, store, tmp_path):
+    """A crawl stopped at wave 2 and resumed with compaction + expiry:
+    the resumed crawl compacts and expires the very seen dirs its
+    resume read, so the resumed seen slice must be a private copy —
+    items and seen set equal an uncheckpointed crawl's, and
+    ``res.seen`` still reads after the expiry."""
+    import os
+
+    ck = str(tmp_path / "ckx")
+    cfg = dict(checkpoint_dir=ck, checkpoint_compact_every=2,
+               checkpoint_expire_deltas=True)
+    full = CrawlEngine(spark, media_registry(), page_store=store,
+                       config=CrawlConfig()).crawl(web.seeds())
+    CrawlEngine(spark, media_registry(), page_store=store,
+                config=CrawlConfig(max_waves=2, **cfg)).crawl(web.seeds())
+    read_at_resume = {
+        os.path.join(ck, e, sub) for e in os.listdir(ck)
+        for sub in ("seen_base", "seen_delta")
+        if os.path.isdir(os.path.join(ck, e, sub))
+    }
+    res = CrawlEngine(spark, media_registry(), page_store=store,
+                      config=CrawlConfig(**cfg)).crawl(web.seeds())
+    assert any(not os.path.isdir(d) for d in read_at_resume)  # expired
+    assert res.items() == full.items()
+    assert (sorted(tuple(r) for r in res.seen.collect())
+            == sorted(tuple(r) for r in full.seen.collect()))
+    assert res.seen.count() == full.seen.count()
+    shutil.rmtree(ck, ignore_errors=True)
+
+
+def test_lazy_bloom_parity_no_wasted_builds(
+        spark, web, store, tmp_path, monkeypatch):
+    """The Bloom filter is folded only when a wave probes it: a
+    stop -> max_waves=0 probe -> resume crawl builds nothing in the
+    probe or after a leg's last probing wave, the filter holds exactly
+    the seen set at every probe, and the crawl equals the same crawl
+    with the Bloom off (items in path order, dead letters, seen set,
+    metrics counts)."""
+    from spatula_spark.operators.seen import ShardedBloom
+
+    events: list[tuple[str, str]] = []  # (leg, "add" | "probe")
+    at_probe: list[tuple[int, int]] = []  # (filter count, seen count)
+    current = ["?"]
+    real_add = ShardedBloom.add_hashes_df
+    real_dedup = CrawlEngine._dedup
+
+    def add_hashes_df(bloom, *a, **k):
+        events.append((current[0], "add"))
+        return real_add(bloom, *a, **k)
+
+    def dedup(eng, *a, **k):
+        out = real_dedup(eng, *a, **k)
+        if eng._wave_bloom_fpr is not None:
+            events.append((current[0], "probe"))
+            at_probe.append((eng._bloom.count, eng._seen_count))
+        return out
+
+    monkeypatch.setattr(ShardedBloom, "add_hashes_df", add_hashes_df)
+    monkeypatch.setattr(CrawlEngine, "_dedup", dedup)
+
+    def run(use_bloom):
+        ck = str(tmp_path / f"ckb{int(use_bloom)}")
+        out = []
+        for name, waves in (("A", 2), ("probe", 0), ("B", None)):
+            current[0] = name
+            out.append(CrawlEngine(
+                spark, media_registry(), page_store=store,
+                config=CrawlConfig(checkpoint_dir=ck, max_waves=waves,
+                                   use_bloom=use_bloom, bloom_min_seen=1,
+                                   bloom_shard_capacity=1 << 14),
+            ).crawl(web.seeds()))
+        return out
+
+    exact = run(False)
+    assert not events
+    bloom = run(True)
+    assert ("B", "probe") in events  # the resumed leg probes
+    assert not [e for e in events if e[0] == "probe"]  # probe leg: none
+    for name in ("A", "B"):
+        kinds = [kind for who, kind in events if who == name]
+        # every fold is followed by the probe it serves
+        assert all(kinds[i + 1:i + 2] == ["probe"]
+                   for i, k in enumerate(kinds) if k == "add"), kinds
+    assert all(n_bloom == n_seen for n_bloom, n_seen in at_probe)
+    for b, e in zip(bloom, exact):
+        assert b.items() == e.items()
+        assert (sorted(tuple(r) for r in b.dead.collect())
+                == sorted(tuple(r) for r in e.dead.collect()))
+        assert (sorted(tuple(r) for r in b.seen.collect())
+                == sorted(tuple(r) for r in e.seen.collect()))
+        counts = [c for c in e.metrics.columns if not c.startswith("bloom")]
+        assert b.metrics[counts].equals(e.metrics[counts])
+    probed = bloom[2].metrics[bloom[2].metrics["bloom_probed"]]
+    assert len(probed) and probed["bloom_fpr"].between(0, 1e-3).all()
+    assert not exact[2].metrics["bloom_probed"].any()
 
 
 def test_checkpoint_every_k_async_resume_identical(
