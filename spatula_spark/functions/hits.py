@@ -16,9 +16,9 @@ Instead each round rescales the score vector so its MAX equals SCALE,
 entirely in int64: ``s' = (s * SCALE) div max(s)``. max() is
 order-independent, integer division is exact, so every round — and
 therefore the final ranking — is bit-identical between Spark and
-DuckDB and across any partitioning. The max itself is carried as a
-1-row aggregate crossJoin'd back (broadcast NestedLoopJoin of one
-row), never a driver collect, so the pattern is corpus-size-free.
+DuckDB and across any partitioning. The max itself is an
+``Observation`` on the round's eager checkpoint job, never a driver
+collect, so the pattern is corpus-size-free.
 
 Overflow envelope (int64): after renormalization every score is
 <= SCALE = 10^6; a node's next raw score is <= in_degree * SCALE and
@@ -50,11 +50,10 @@ def integer_hits(
 
     Per round: two slim joins + two hash aggregates on (node, score)
     pairs — 16 bytes/node shuffled, payload-free, the same shape that
-    lets graph.py's PageRank survive 10^10 nodes. The rescale is one
-    extra 1-row aggregate + broadcast-crossJoin per phase; each raw
-    score table is eagerly localCheckpoint'ed first, because the
-    broadcast max launches its own job and an uncheckpointed lineage
-    would recompute every earlier round per phase (the lazy-persist +
+    lets graph.py's PageRank survive 10^10 nodes. Each raw score table
+    is eagerly localCheckpoint'ed with the phase's max riding that job
+    as an ``Observation`` (no extra job per phase); uncheckpointed,
+    every phase would recompute every earlier round (the lazy-persist +
     self-join double-compute trap BENCH/BASELINE.md documents) —
     checkpointing turns K rounds from quadratic recompute into K
     constant-depth steps, the same rule a Pregel-style runner uses.

@@ -156,10 +156,6 @@ def hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
     return (signed > 0).cast("int")
 
 
-def lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
-    return lsh_bucket_offset(vec, 0, n_planes, dim)
-
-
 def lsh_buckets(vec: Column, n_tables: int, n_planes: int, dim: int) -> Column:
     """One bucket id per hash table (multi-table LSH: recall compounds
     across independent tables, the standard random-hyperplane recipe).

@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 # tiny embedded stopword lists for the language-ID heuristic; the
 # point is the *operator shape* (vectorized n-gram/marker scoring),
 # not linguistic accuracy
@@ -65,10 +67,6 @@ def stopword_count_from(toks: Column) -> Column:
     )
 
 
-def stopword_count(text: Column) -> Column:
-    return stopword_count_from(tokens(text))
-
-
 def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, "[.,!?;:]", ""))
 
@@ -96,10 +94,6 @@ def quality_score(text: Column) -> Column:
 def lang_marker_score_from(toks: Column, lang: str) -> Column:
     markers = LANG_MARKERS[lang]
     return F.size(F.filter(toks, lambda w: F.lower(w).isin(*markers)))
-
-
-def lang_marker_score(text: Column, lang: str) -> Column:
-    return lang_marker_score_from(tokens(text), lang)
 
 
 def lang_id_from(toks: Column) -> Column:
@@ -681,69 +675,66 @@ def bpe_train_merges(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
     loop_parts = max(8, min(n_sess, n_vocab // 50_000 + 1))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     prev = None
     merges: list[tuple[int, str, str, str, int]] = []
+    loop_conf = {"spark.sql.shuffle.partitions": loop_parts,
+                 "spark.sql.adaptive.enabled": "false"}
     try:
-        for step in range(1, n_merges + 1):
-            arr = F.split(F.col("syms"), sep)
-            # the packed form splits to ['', s1..sk, ''] — slice the
-            # empties off, then adjacent pairs via two shifted slices
-            inner = F.slice(arr, 2, F.size(arr) - 2)
-            seg = cur.select("n_w", inner.alias("s"))
-            k = F.size(F.col("s"))
-            pairs = F.zip_with(
-                F.slice(F.col("s"), 1, k - 1),
-                F.slice(F.col("s"), 2, k - 1),
-                lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-            )
-            best_rows = (
-                seg.select("n_w", F.explode(pairs).alias("p"))
-                .groupBy("p.l", "p.r")
-                .agg(F.sum("n_w").alias("n"))
-                .agg(
-                    F.min(
-                        F.struct(
-                            (F.lit(0) - F.col("n")).alias("negn"),
-                            F.col("l"),
-                            F.col("r"),
-                        )
-                    ).alias("b")
+        with scoped_conf(spark, loop_conf):
+            for step in range(1, n_merges + 1):
+                arr = F.split(F.col("syms"), sep)
+                # the packed form splits to ['', s1..sk, ''] — slice the
+                # empties off, then adjacent pairs via two shifted slices
+                inner = F.slice(arr, 2, F.size(arr) - 2)
+                seg = cur.select("n_w", inner.alias("s"))
+                k = F.size(F.col("s"))
+                pairs = F.zip_with(
+                    F.slice(F.col("s"), 1, k - 1),
+                    F.slice(F.col("s"), 2, k - 1),
+                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
                 )
-                .collect()
-            )
-            # the argmax job consumed every partition of cur, so its
-            # cache is now fully materialized and the previous round's
-            # state can be dropped without triggering recompute
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            b = best_rows[0]["b"] if best_rows else None
-            if b is None or b["l"] is None:
-                break
-            left, right, n = b["l"], b["r"], -b["negn"]
-            merged = left + right
-            merges.append((step, left, right, merged, int(n)))
-            pattern = (
-                f"(?<={sep})"
-                + _re.escape(left)
-                + sep
-                + _re.escape(right)
-                + f"(?={sep})"
-            )
-            # Java replacement string: $ and \ are special
-            repl = merged.replace("\\", "\\\\").replace("$", "\\$")
-            nxt = cur.withColumn(
-                "syms", F.regexp_replace("syms", pattern, repl)
-            ).persist()
-            prev = cur
-            cur = nxt
+                best_rows = (
+                    seg.select("n_w", F.explode(pairs).alias("p"))
+                    .groupBy("p.l", "p.r")
+                    .agg(F.sum("n_w").alias("n"))
+                    .agg(
+                        F.min(
+                            F.struct(
+                                (F.lit(0) - F.col("n")).alias("negn"),
+                                F.col("l"),
+                                F.col("r"),
+                            )
+                        ).alias("b")
+                    )
+                    .collect()
+                )
+                # the argmax job consumed every partition of cur, so its
+                # cache is now fully materialized and the previous round's
+                # state can be dropped without triggering recompute
+                if prev is not None:
+                    prev.unpersist()
+                    prev = None
+                b = best_rows[0]["b"] if best_rows else None
+                if b is None or b["l"] is None:
+                    break
+                left, right, n = b["l"], b["r"], -b["negn"]
+                merged = left + right
+                merges.append((step, left, right, merged, int(n)))
+                pattern = (
+                    f"(?<={sep})"
+                    + _re.escape(left)
+                    + sep
+                    + _re.escape(right)
+                    + f"(?={sep})"
+                )
+                # Java replacement string: $ and \ are special
+                repl = merged.replace("\\", "\\\\").replace("$", "\\$")
+                nxt = cur.withColumn(
+                    "syms", F.regexp_replace("syms", pattern, repl)
+                ).persist()
+                prev = cur
+                cur = nxt
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         cur.unpersist()
         if prev is not None:
             prev.unpersist()

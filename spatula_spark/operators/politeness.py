@@ -178,37 +178,6 @@ def robots_wild_best_expr(
     return expr
 
 
-def apply_robots(
-    frontier: DataFrame, robots: DataFrame | None
-) -> tuple[DataFrame, DataFrame]:
-    """Filter disallowed URLs. Returns (allowed, blocked).
-
-    Longest-matching-prefix decides; ties broken allow-wins. Small rule
-    sets compile to a single CASE expression (collected once on the
-    driver, evaluated inline — no join); oversized rule sets fall back
-    to a broadcast join + longest-prefix aggregate.
-    """
-    if robots is None:
-        return frontier, frontier.limit(0)
-
-    rules = [
-        (r["host"], r["path_prefix"], bool(r["allow"]))
-        for r in robots.limit(ROBOTS_EXPR_MAX_RULES + 1).collect()
-    ]
-    if not rules:
-        return frontier, frontier.limit(0)
-    if len(rules) <= ROBOTS_EXPR_MAX_RULES:
-        allowed_col = robots_allow_expr(rules)
-        decided = frontier.withColumn("_allowed", allowed_col)
-        return (
-            decided.filter(F.col("_allowed")).drop("_allowed"),
-            decided.filter(~F.col("_allowed")).drop("_allowed"),
-        )
-
-    prefix_df, wild = split_robots_rules(robots)
-    return robots_broadcast_join(frontier, prefix_df, wild)
-
-
 def _robots_wild_cond() -> Column:
     return (
         F.instr(F.col("path_prefix"), "*") > 0

@@ -321,15 +321,3 @@ class ShardedBloom:
             return pd.Series(out)
 
         return maybe_seen
-
-    def to_rows(self) -> list[tuple[int, bytes]]:
-        """(shard, blob) rows for checkpointing."""
-        return [(s, w.tobytes()) for s, w in sorted(self.words.items())]
-
-    def load_rows(self, rows, count: int) -> None:
-        self.words = {
-            int(s): np.frombuffer(bytes(b), dtype=np.uint64).copy()
-            for s, b in rows
-        }
-        self.count = count
-        self._dirty = True

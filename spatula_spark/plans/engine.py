@@ -6,23 +6,32 @@ keeps the frontier on the Python call stack and visits pages depth-first
 one at a time, this engine keeps it in a DataFrame and processes one
 **wave** (BFS generation) per iteration:
 
-    seeds
-      └─ wave k:
-           politeness select (hot-host-only ranking window; overflow
-             rides the emissions stream as 'deferred')
-           robots filter (compiled CASE / broadcast-join fallback)
-           URL-seen dedup (bloom prefilter -> exact check) keyed on
-             page identity seen_key = (page_cls, url_hash, input)
-           in-wave first-wins dedup (min_by path per (url_hash, seen_key))
-           fetch = broadcast-frontier probe of the page-store on
+    seeds (_begin: fresh frontier, or resume from the latest snapshot)
+      └─ wave k (crawl() runs one phase method after another):
+           _schedule: politeness select (hot-host-only ranking window;
+             overflow rides the emissions stream as 'deferred'), then
+             robots filter (compiled CASE / broadcast-join fallback)
+           _dedup: URL-seen dedup (bloom prefilter -> exact check)
+             keyed on page identity seen_key = (page_cls, url_hash,
+             input), and in-wave first-wins dedup (min_by path per
+             (url_hash, seen_key))
+           _fetch: broadcast-frontier probe of the page-store on
              xxhash64(canon url) (shuffle join above broadcast_fetch_max)
-           per-class transform, exactly one pass per row:
+           _transform: per-class transform, exactly one pass per row:
              * native specs -> pure Catalyst column exprs (JVM only)
              * hook specs   -> one Arrow mapInPandas dispatch (emits
                its own fetched markers — no shared batch cache)
-           ONE parquet snapshot per wave carries every emission kind;
-             the next frontier is a narrow filter over it
-           seen ∪= fetched keys;  metrics via Observation;  checkpoint
+           _land: ONE parquet snapshot per wave carries every emission
+             kind (kind tallies via Observation); a small wave lands on
+             the driver as one Arrow table instead
+           _update_seen: seen ∪= fetched keys
+           _next_frontier: a narrow filter over the landed emissions;
+             then the wave's metrics row
+           _commit: the durable snapshot (every checkpoint_every waves)
+
+    Fast path, after a wave landed on the driver and when no politeness
+    or robots rule applies: _dedup_driver (Python, against a driver twin
+    of the seen set) and _fetch_local replace _schedule/_dedup/_fetch.
 
 Depth-first emission order is reconstructed, not executed: every row
 carries a lexicographically sortable lineage ``path`` (schemas.py), and
@@ -72,7 +81,6 @@ Scale notes (the part that must survive 100 TB / 10^10 URLs):
 
 from __future__ import annotations
 
-import copy
 import functools
 import json
 import os
@@ -80,8 +88,10 @@ import shutil
 import sys
 import tempfile
 import time as _time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from types import SimpleNamespace
 from typing import Any, Callable
 
 import pandas as pd
@@ -93,6 +103,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
+from ..session import scoped_conf
 from . import native as N
 from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
@@ -115,7 +126,7 @@ from .pagespec import (
 
 # Ceiling on payload rows per wave-coalesce partition. The wave
 # snapshot's coalesce() collapses the fetch+decode+write stage to
-# _wave_parts tasks, so this — not the core count — is what bounds
+# _wave_partitions tasks, so this — not the core count — is what bounds
 # per-task Arrow/python/parquet memory on payload-bearing waves.
 _WAVE_ROWS_PER_PART = 1 << 16
 
@@ -129,7 +140,7 @@ _EMISSION_OUT_SCHEMA = (
 _EMISSION_COLS = [c.split()[0] for c in _EMISSION_OUT_SCHEMA.split(", ")]
 
 # fetched-row schema for driver-built missing (404) rows — must match
-# the _fetch out_cols projection column-for-column; also the batch's
+# the fetch join's found_cols projection column-for-column; also the batch's
 # column order (_BATCH_SELECT)
 _FETCHED_LOCAL_SCHEMA = (
     "page_cls string, path string, url string, input_json string, "
@@ -143,6 +154,28 @@ _BATCH_SELECT = [c.split()[0] for c in _FETCHED_LOCAL_SCHEMA.split(", ")]
 
 _SEEN_SCHEMA = "url_hash long, seen_key long"
 
+_DEAD_KINDS = ("error", "reject")  # the kinds fail_fast raises on
+
+# CrawlResult.metrics count column -> the emission kinds it counts
+_METRIC_KINDS = (
+    ("fetched", ("fetched",)), ("items", ("item",)),
+    ("children", ("child",)), ("next_pages", ("next",)),
+    ("requeued", ("requeue",)), ("skipped_items", ("skip_item",)),
+    ("skipped_pages", ("skip_page",)),
+    ("handled_errors", ("handled_error",)), ("dead", _DEAD_KINDS),
+    ("blocked", ("blocked",)), ("deferred", ("deferred",)),
+)
+# every emission kind a wave lands: each is counted by one column
+_KIND_NAMES = tuple(k for _, kinds in _METRIC_KINDS for k in kinds)
+
+# Bloom prefilter shards at crawl start; ShardedBloom.regrow widens
+# them 4x from the exact seen table whenever the filter fills up
+_BLOOM_SHARDS = 16
+
+# host-salt buckets ahead of the real-HTTP fetch: a hot host spreads
+# over this many tasks (politeness.salted_repartition)
+_SALT_BUCKETS = 8
+
 
 class CrawlError(Exception):
     pass
@@ -151,18 +184,14 @@ class CrawlError(Exception):
 @dataclass
 class CrawlConfig:
     max_waves: int | None = None
-    follow_children: bool = True
-    scout: bool = False
+    scout: bool = False  # see CrawlEngine.scout
     # politeness: per-wave per-host budget; None disables (reference's
     # global --rpm generalized per-host, cli.py:33)
     host_budget_per_wave: int | None = None
-    dedup_urls: bool = True
+    # Bloom prefilter ahead of the exact seen anti-join: "definitely
+    # unseen" rows skip the join, "maybe seen" ones are confirmed by it
     use_bloom: bool = True
     bloom_fpr: float = 1e-3
-    bloom_shards: int = 16
-    # auto-regrow the sharded bloom when inserted keys exceed this
-    # fraction of designed capacity (seen.ShardedBloom.regrow)
-    bloom_regrow_fill: float = 1.0
     # fixed per-shard capacity (blob size is set once; OR-merge keeps
     # it constant). 256k hashes/shard ≈ 460 KB/shard at fpr 1e-3; a
     # 10^10-URL deployment raises shards+capacity (docs in seen.py).
@@ -171,11 +200,6 @@ class CrawlConfig:
     # more than the plain anti-join it saves (measured: the per-wave
     # blob broadcast + python UDF outweigh a sub-100k-row anti-join)
     bloom_min_seen: int = 100_000
-    # bloom_exact_confirm=True: bloom is a prefilter, the exact
-    # anti-join confirms "maybe seen" rows (parity mode — zero false
-    # drops). False: bloom-only (scale mode; FPR-bounded URL loss).
-    bloom_exact_confirm: bool = True
-    salt_buckets: int = 8
     fail_fast: bool = True
     checkpoint_dir: str | None = None
     # real-Iceberg snapshot backend: "catalog.namespace.name" table
@@ -206,12 +230,15 @@ class CrawlConfig:
     # by K at the price of K-1 waves of recovery recompute.
     checkpoint_every: int = 1
     # overlap the durable snapshot write with the next wave's compute:
-    # the checkpoint job runs on ONE background thread over the wave's
-    # already-materialized scratch parquet (immutable until crawl
-    # end), so manifest-last atomicity is untouched; the loop joins
-    # the in-flight write before starting the next one and before
-    # crawl() returns. Hides snapshot-commit latency behind the next
-    # wave's politeness/dedup/fetch stages instead of serializing it.
+    # the commit runs on ONE background thread. Sync and async commit
+    # the same plan (the wave's landed emissions: scratch parquet, or a
+    # LocalRelation for a driver-local wave, immutable until crawl
+    # end), and the next wave reads that same plan in both modes, so
+    # only the timing differs. One thread serializes the commits, so
+    # manifest-last atomicity is untouched; the loop joins the
+    # in-flight write before starting the next one and before crawl()
+    # returns. Hides snapshot-commit latency behind the next wave's
+    # politeness/dedup/fetch stages instead of serializing it.
     checkpoint_async: bool = False
     # snapshot expiry (Iceberg expire_snapshots analogue): after a
     # successful compaction, delete the seen deltas and older bases the
@@ -229,13 +256,6 @@ class CrawlConfig:
     resume_upto_wave: int | None = None
     target_partitions: int | None = None  # defaults to shuffle partitions
     verbose: bool = False  # per-wave step timings to stderr
-    # per-wave materialization. "parquet" writes each wave's frontier/
-    # seen/emissions to a scratch dir and re-reads them — a *reliable*
-    # lineage cut (measured: flat ~1.3s/wave vs exponential growth with
-    # localCheckpoint on Spark 4.1, see BENCH notes); it is also
-    # exactly the Iceberg-snapshot-per-wave write pattern the north
-    # rule mandates. "local" keeps localCheckpoint (in-memory blocks).
-    materialize: str = "parquet"
     # scratch dir of the wave materializations; default: a fresh
     # mkdtemp. Never removed by the engine: the CrawlResult DataFrames
     # scan it lazily, so it must outlive the crawl (the caller owns it)
@@ -360,6 +380,29 @@ class CrawlResult:
     def items(self) -> list[Any]:
         """Driver-side ordered item values (test/parity helper)."""
         return [json.loads(r["item_json"]) for r in self.ordered().collect()]
+
+
+@dataclass
+class _Landed:
+    """One wave's emissions after the land phase."""
+
+    emissions: DataFrame  # scratch-parquet scan, or a LocalRelation
+    rows: list[dict] | None  # the emission rows, if landed on the driver
+    counts: dict[str, int]  # emission kind -> rows
+    requeues: bool  # the next frontier can hold attempts > 0 rows
+
+
+def _metrics_row(wave: int, counts: dict[str, int],
+                 bloom_fpr: float | None) -> dict:
+    """The wave's CrawlResult.metrics row: the _METRIC_KINDS counts,
+    and whether the wave's dedup probed the Bloom prefilter with its
+    estimated FPR at that probe (else None)."""
+    return {
+        "wave": wave,
+        **{col: sum(counts[k] for k in kinds) for col, kinds in _METRIC_KINDS},
+        "bloom_probed": bloom_fpr is not None,
+        "bloom_fpr": bloom_fpr,
+    }
 
 
 def _payloadless_cols(status: int, found: bool, hash_cols: list) -> list:
@@ -701,10 +744,9 @@ class CrawlEngine:
                 )
         self.politeness = politeness
         self.config = config or CrawlConfig()
-        n = self.config.target_partitions or int(
+        self._nparts = self.config.target_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
-        self._nparts = n
         if page_store is not None:
             # projection kept in its source partitioning: the default
             # (broadcast-frontier) fetch never shuffles the store. The
@@ -721,7 +763,6 @@ class CrawlEngine:
         self._store_bykey = None
         self._store_keys_bykey = None
         self._store_rows = None  # counted lazily on first fetch
-        self._store_keys_py: set[int] | None | bool = False  # False=undecided
         # memory-budget default for the broadcast-fetch cap (see
         # CrawlConfig.broadcast_fetch_max)
         heap = _driver_heap(spark)
@@ -744,10 +785,9 @@ class CrawlEngine:
             if self.config.driver_seen_max is not None
             else _broadcast_rows_budget(spark, 0.05, 130, heap)
         )
-        # lazily-built wave-invariant Column caches (see crawl() —
+        # lazily-built wave-invariant Column cache (see _wave_exprs —
         # rebuilding expression trees every wave is driver-bound)
         self._dedup_agg = None
-        self._fetch_cols = None
 
     def _store_by_key(self) -> DataFrame:
         if self._store_bykey is None:
@@ -802,26 +842,27 @@ class CrawlEngine:
         self, df: DataFrame, label: str, obs_exprs: list | None = None
     ):
         """Cut lineage + compute once at a wave boundary (SURVEY §4:
-        the iterative-loop pitfall). Parquet spill by default — an
-        Iceberg deployment makes this the snapshot commit.
+        the iterative-loop pitfall): a parquet write to the scratch dir
+        and a schema-pinned re-read, a reliable cut (measured: flat
+        ~1.3s/wave, where localCheckpoint's cost grew exponentially
+        with the wave count on Spark 4.1). An Iceberg deployment makes
+        this the snapshot commit.
 
         ``obs_exprs``: optional aggregate expressions piggybacked on the
         materialization job via ``Observation`` — row counts and
         emission-kind tallies come for free instead of costing an extra
-        job each per wave."""
+        job each per wave. Returns (the re-read DataFrame, the observed
+        values or None)."""
         obs = None
         if obs_exprs:
             obs = Observation()
             df = df.observe(obs, *obs_exprs)
-        if self.config.materialize == "local":
-            out = df.coalesce(self._nparts).localCheckpoint(eager=True)
-        else:
-            self._spill_n += 1
-            path = os.path.join(self._spill, f"{self._spill_n:05d}_{label}")
-            df.write.mode("overwrite").parquet(path)
-            # schema pinned: an inferring read runs a footer job per call
-            out = self.spark.read.schema(df.schema).parquet(path)
-        return (out, obs.get) if obs_exprs else (out, None)
+        self._spill_n += 1
+        path = os.path.join(self._spill, f"{self._spill_n:05d}_{label}")
+        df.write.mode("overwrite").parquet(path)
+        # schema pinned: an inferring read runs a footer job per call
+        out = self.spark.read.schema(df.schema).parquet(path)
+        return out, (obs.get if obs is not None else None)
 
     # ------------------------------------------------------------ seen union
     def _seen_union(self) -> DataFrame:
@@ -841,9 +882,87 @@ class CrawlEngine:
         return _union_tree(self._seen_slices)
 
     # ---------------------------------------------------------------- crawl
-    def crawl(self, seeds: list[dict] | DataFrame) -> CrawlResult:
+    def crawl(self, seeds: list[dict]) -> CrawlResult:
+        """Run waves until the frontier drains or ``max_waves`` stops
+        the crawl; each wave runs the phase methods in the order the
+        module docstring lists them."""
         cfg = self.config
-        spark = self.spark
+        frontier, n_frontier, start_wave, results, metrics_rows = (
+            self._begin(seeds))
+        ex = self._wave_exprs()
+        dead: list[DataFrame] = []
+        # the previous wave's frontier as FRONTIER_SCHEMA tuples when it
+        # landed on the driver, and its emission total (None: no wave
+        # has run in this crawl yet)
+        frontier_rows: list[tuple] | None = None
+        prev_total: int | None = None
+        # seed lists hold attempts=0 rows only; a resumed frontier may
+        # carry in-flight requeues
+        requeues = start_wave > 0
+        wave = start_wave
+        while True:
+            t = [_time.time()]
+            if n_frontier is None:
+                # stat-less resume / Iceberg: one count (also sizes the
+                # fetch strategy — broadcast vs shuffle join)
+                n_frontier = frontier.count()
+            if n_frontier == 0:
+                break
+            self._tick(wave, "count", t)
+            if cfg.max_waves is not None and wave >= cfg.max_waves + start_wave:
+                break
+            # size the wave by its likely OUTPUT, not its input: the
+            # previous wave's emission total is the fan-out-aware
+            # estimator (a wave of list pages explodes ~fan-out×)
+            est = max(n_frontier, prev_total or 0)
+            self._wave_bloom_fpr = None  # set by a probing _dedup
+            local = self._dedup_driver(frontier_rows)
+            if local is not None and not any(local):
+                # every candidate was already seen: a no-op wave —
+                # skip the Spark job entirely
+                landed = _Landed(
+                    _local_df(self.spark, [], _EMISSION_OUT_SCHEMA), [],
+                    dict.fromkeys(_KIND_NAMES, 0), False)
+            else:
+                if local is None:
+                    fetchable, nullsrc, unfetched = self._schedule(
+                        frontier, n_frontier, ex)
+                    fetched = self._fetch(
+                        self._dedup(fetchable, self._seen_union(), requeues),
+                        n_frontier <= self._bcast_fetch_max, ex)
+                else:
+                    (fetched, nullsrc), unfetched = (
+                        self._fetch_local(*local, ex), [])
+                emissions = self._transform(fetched, nullsrc, unfetched, ex)
+                landed = self._land(
+                    emissions, ex, est, prev_total, local is not None)
+            prev_total = sum(landed.counts.values())
+            requeues = landed.requeues
+            n_frontier = sum(landed.counts[k] for k in ex.followed)
+            self._tick(wave, "emissions ckpt", t)
+            row = _metrics_row(wave, landed.counts, self._wave_bloom_fpr)
+            items = (_scout_projection if cfg.scout else _item_projection)(
+                landed.emissions, wave)
+            results.append(items)
+            dead.append(self._dead_letters(landed.emissions, wave, row["dead"]))
+            new_seen = self._update_seen(landed, n_frontier)
+            self._tick(wave, "seen update", t)
+            frontier, frontier_rows = self._next_frontier(landed, ex)
+            self._tick(wave, "frontier derive", t)
+            metrics_rows.append(row)
+            frontier = self._commit(
+                wave, start_wave, frontier, new_seen, items, metrics_rows)
+            wave += 1
+        return self._finish(
+            wave, start_wave, frontier, results, dead, metrics_rows)
+
+    # ------------------------------------------------------------ wave phases
+    def _begin(self, seeds: list[dict]):
+        """Reset the per-crawl state, and resume from the latest
+        committed snapshot when there is one. Returns (frontier, its
+        row count or None when unknown, start wave, resumed results,
+        resumed metrics rows)."""
+        cfg = self.config
         self._spill_n = 0
         self._spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
         os.makedirs(self._spill, exist_ok=True)
@@ -855,20 +974,6 @@ class CrawlEngine:
         self._ckpt_seen: list[DataFrame] = []
         self._ckpt_future = None
         self._ckpt_pool = None
-        # seed lists are built with attempts=0; DataFrame seeds or a
-        # resume may carry in-flight requeues — be conservative there
-        self._requeues_possible = isinstance(seeds, DataFrame)
-        frontier = (
-            seeds if isinstance(seeds, DataFrame) else self.seed_frontier(seeds)
-        )
-        for c in ("url_hash", "seen_key"):
-            # caller-supplied frontiers may predate hash-at-emission
-            if c not in frontier.columns:
-                frontier = frontier.withColumn(c, F.lit(None).cast("long"))
-        # seed_frontier emits exactly one row per seed; None = unknown
-        # (DataFrame seeds, or a resume without manifest row stats)
-        n_frontier: int | None = (
-            None if isinstance(seeds, DataFrame) else len(seeds))
         self._seen_count = 0
         # driver-resident twin of the seen set (exact (url_hash,
         # seen_key) pairs) — alive while every wave's new keys were
@@ -878,32 +983,13 @@ class CrawlEngine:
         self._py_seen: set[tuple[int, int]] | None = (
             set() if cfg.driver_wave_max else None
         )
-        # previous wave's frontier rows when that wave was
-        # driver-materialized (tuples in FRONTIER_SCHEMA order)
-        self._frontier_rows: list[tuple] | None = None
-        self._frontier_is_local = False
         self._bloom = (
             seen_ops.ShardedBloom(
-                cfg.bloom_shards, cfg.bloom_shard_capacity, cfg.bloom_fpr
+                _BLOOM_SHARDS, cfg.bloom_shard_capacity, cfg.bloom_fpr
             )
             if cfg.use_bloom
             else None
         )
-        results: list[DataFrame] = []
-        dead: list[DataFrame] = []
-        metrics_rows: list[dict] = []
-        dep_values = self._resolve_dependencies()
-        specs = self.registry.specs()
-        hook_cls = [
-            n for n, s in specs.items() if s.native_emit_array is None
-        ]
-        native_cls = [
-            n for n, s in specs.items() if s.native_emit_array is not None
-        ]
-        transform = _make_transform(specs, dep_values)
-
-        wave = 0
-        start_wave = 0
         # real-Iceberg snapshot backend (explicit opt-in; requires a
         # configured catalog + runtime jar — see plans/iceberg.py).
         # Same commit/resume contract as the parquet-manifest analogue.
@@ -920,64 +1006,45 @@ class CrawlEngine:
                     "use checkpoint_dir for the parquet-manifest analogue"
                 )
             self._ice = IcebergSnapshots(self.spark, cfg.iceberg_table_prefix)
-        if cfg.checkpoint_dir or self._ice is not None:
-            resumed = (
-                self._ice.try_resume(cfg.resume_upto_wave)
-                if self._ice is not None
-                else self._try_resume(cfg.checkpoint_dir)
-            )
-            if resumed is not None:
-                (frontier, rseen, results, metrics_rows, start_wave,
-                 n_frontier, n_seen) = resumed
-                wave = start_wave
-                self._requeues_possible = True  # in-flight retries unknown
-                self._py_seen = None  # unknown provenance; cluster dedup
-                self._seen_count = rseen.count() if n_seen is None else n_seen
-                if self._seen_count:
-                    if self._ice is not None or cfg.checkpoint_expire_deltas:
-                        # the snapshot's seen dirs can vanish mid-crawl
-                        # (expiry after a compaction): keep a private
-                        # copy. Otherwise the slice reads them in place.
-                        rseen, _ = self._materialize(rseen, "seen_resume")
-                    self._seen_slices.append(rseen)
-                    self._bloom_pending.append(rseen)
+        # seed_frontier emits exactly one row per seed
+        fresh = (self.seed_frontier(seeds), len(seeds), 0, [], [])
+        resumed = None
+        if self._ice is not None:
+            resumed = self._ice.try_resume(cfg.resume_upto_wave)
+        elif cfg.checkpoint_dir:
+            resumed = self._try_resume(cfg.checkpoint_dir)
+        if resumed is None:
+            return fresh
+        (frontier, rseen, results, metrics_rows, start_wave,
+         n_frontier, n_seen) = resumed
+        self._py_seen = None  # unknown provenance; cluster dedup
+        self._seen_count = rseen.count() if n_seen is None else n_seen
+        if self._seen_count:
+            if self._ice is not None or cfg.checkpoint_expire_deltas:
+                # the snapshot's seen dirs can vanish mid-crawl
+                # (expiry after a compaction): keep a private copy.
+                # Otherwise the slice reads them in place.
+                rseen, _ = self._materialize(rseen, "seen_resume")
+            self._seen_slices.append(rseen)
+            self._bloom_pending.append(rseen)
+        return frontier, n_frontier, start_wave, results, metrics_rows
 
-        def _tick(label: str, t: list) -> None:
-            if cfg.verbose:
-                now = _time.time()
-                # absolute epoch stamp so two concurrent legs' step
-                # streams can be aligned on one wall clock (the
-                # overlap-window scaling analysis needs it)
-                print(f"  [wave {wave}] {label}: {now - t[0]:.2f}s"
-                      f" @{now:.2f}",
-                      file=sys.stderr, flush=True)
-                t[0] = now
+    def _wave_exprs(self) -> SimpleNamespace:
+        """The wave-invariant expression cache, built ONCE per crawl.
 
-        # ------------- wave-invariant expression cache -------------
-        # pyspark Column objects are DataFrame-independent expression
-        # trees, but BUILDING them costs real driver time (one py4j
-        # round-trip per operator; a single class's emission array
-        # measured ~0.2 s to construct). Rebuilding them every wave
-        # made deep-chain crawls driver-bound: the event log showed
-        # ~1 s of job-free driver gap per wave against ~0.3 s of
-        # actual cluster work. Everything that does not depend on the
-        # wave number is built exactly once here and reused.
-        host_expr = host_of(F.col("url"))
-        canon_expr = canonicalize_url(F.col("url"))
-        uhash_expr = url_hash(F.col("canon_url"))
-        # page identity = (class, canonical URL, input): the reference
-        # processes every Page instance — its response cache only
-        # skips the HTTP call, not processing — so the seen set /
-        # first-wins dedup must NOT collapse distinct (cls, input)
-        # pairs sharing one URL.
-        seen_key_expr = F.xxhash64(
-            F.col("page_cls"), F.col("url_hash"),
-            F.coalesce(F.col("input_json"), F.lit("\x00")),
-        )
-        robots_allowed_expr = (
-            politeness_ops.robots_allow_expr(self._robots_rules)
-            if self._robots_rules else None
-        )
+        pyspark Column objects are DataFrame-independent expression
+        trees, but BUILDING them costs real driver time (one py4j
+        round-trip per operator; a single class's emission array
+        measured ~0.2 s to construct). Rebuilding them every wave made
+        deep-chain crawls driver-bound: the event log showed ~1 s of
+        job-free driver gap per wave against ~0.3 s of actual cluster
+        work. Everything that does not depend on the wave number is
+        built here and passed to the phases."""
+        specs = self.registry.specs()
+        native_cls = [
+            n for n, s in specs.items() if s.native_emit_array is not None
+        ]
+        hook_cls = [n for n in specs if n not in native_cls]
         # fetched marker (seen-set source) ++ per-class native arrays;
         # exactly ONE consumer per batch row
         marker_expr = F.when(
@@ -999,10 +1066,6 @@ class CrawlEngine:
             per_row_expr = F.concat(
                 marker_expr, F.coalesce(cls_arr, N.empty_emissions())
             )
-        nullsrc_cols = _payloadless_cols(200, True, [
-            F.lit(None).cast("long").alias("url_hash"),
-            F.lit(None).cast("long").alias("seen_key"),
-        ])
 
         def unfetched_cols(kind, child_cls, error):
             # a frontier row re-emitted unfetched (robots, politeness)
@@ -1017,31 +1080,11 @@ class CrawlEngine:
                 F.lit(error).cast("string").alias("error"),
             ]
 
-        blocked_cols = unfetched_cols(
-            "blocked", F.lit(None), "robots.txt disallow")
-        deferred_cols = unfetched_cols("deferred", F.col("page_cls"), None)
-        kind_names = ("item", "child", "next", "requeue", "skip_item",
-                      "skip_page", "handled_error", "error", "reject",
-                      "fetched", "blocked", "deferred")
-        obs_aggs = (
-            [F.count(F.when(F.col("emit_kind") == k, 1)).alias(k)
-             for k in kind_names]
-            + [F.count(F.when(
-                (F.col("emit_kind") == "deferred")
-                & (F.col("attempts") > 0), 1,
-            )).alias("_deferred_requeues")]
+        # frontier-bound emission kinds: scout mode reports children
+        # without following them
+        followed = ["next", "requeue", "deferred"] + (
+            [] if self.config.scout else ["child"]
         )
-        frontier_cols = [
-            F.col("child_cls").alias("page_cls"),
-            F.col("child_url").alias("url"),
-            F.col("child_input_json").alias("input_json"),
-            F.col("path"),
-            F.col("priority"),
-            F.col("attempts"),
-            F.col("page_seq"),
-            F.col("url_hash"),
-            F.col("seen_key"),
-        ]
         # hash-at-emission: frontier-bound emissions carry their child's
         # page-identity hashes out of the SAME projection that built
         # them (CSE shares the canonicalize subtree), so the next wave's
@@ -1049,11 +1092,8 @@ class CrawlEngine:
         # dedup in pure Python with zero Spark stages. Hook-class
         # (Arrow) emissions leave them null; the cluster path coalesces
         # a recompute in.
-        _followed = ["next", "requeue", "deferred"] + (
-            ["child"] if cfg.follow_children else []
-        )
-        _fr_kind_cond = (
-            F.col("emit_kind").isin(*_followed)
+        fr_kind_cond = (
+            F.col("emit_kind").isin(*followed)
             & F.col("child_url").isNotNull()
             # invalid URLs keep a null hash: parse_url THROWS on them,
             # and the legacy failure point is the next wave's fetchable
@@ -1062,456 +1102,420 @@ class CrawlEngine:
             & F.try_parse_url(
                 F.trim(F.col("child_url")), F.lit("HOST")).isNotNull()
         )
-        _child_uh = url_hash(canonicalize_url(F.col("child_url")))
+        child_uh = url_hash(canonicalize_url(F.col("child_url")))
         emit_hash_cols = [
             c for c in _EMISSION_COLS if c not in ("url_hash", "seen_key")
         ] + [
             F.when(
-                _fr_kind_cond, F.coalesce(F.col("url_hash"), _child_uh)
+                fr_kind_cond, F.coalesce(F.col("url_hash"), child_uh)
             ).otherwise(F.col("url_hash")).alias("url_hash"),
             F.when(
-                _fr_kind_cond,
+                fr_kind_cond,
                 F.coalesce(
                     F.col("seen_key"),
                     F.xxhash64(
                         F.col("child_cls"),
-                        F.coalesce(F.col("url_hash"), _child_uh),
+                        F.coalesce(F.col("url_hash"), child_uh),
                         F.coalesce(F.col("child_input_json"), F.lit("\x00")),
                     ),
                 ),
             ).otherwise(F.col("seen_key")).alias("seen_key"),
         ]
-        kinds = _followed  # frontier-bound emission kinds
+        return SimpleNamespace(
+            hook_cls=hook_cls,
+            native_cls=native_cls,
+            transform=_make_transform(specs, self._resolve_dependencies()),
+            per_row=per_row_expr,
+            host=host_of(F.col("url")),
+            canon=canonicalize_url(F.col("url")),
+            uhash=url_hash(F.col("canon_url")),
+            # page identity = (class, canonical URL, input): the
+            # reference processes every Page instance — its response
+            # cache only skips the HTTP call, not processing — so the
+            # seen set / first-wins dedup must NOT collapse distinct
+            # (cls, input) pairs sharing one URL.
+            seen_key=F.xxhash64(
+                F.col("page_cls"), F.col("url_hash"),
+                F.coalesce(F.col("input_json"), F.lit("\x00")),
+            ),
+            robots_allowed=(
+                politeness_ops.robots_allow_expr(self._robots_rules)
+                if self._robots_rules else None
+            ),
+            # fetched-row projections of the fetch join: store hits,
+            # and not-in-store (404) rows
+            found_cols=[
+                "page_cls", "path", "url", "input_json", "payload",
+                "links", "next_url",
+                F.coalesce(F.col("status"), F.lit(404)).alias("status"),
+                "attempts", "page_seq", "payload_kind", "image_id",
+                F.col("store_url").isNotNull().alias("found"),
+                "priority",
+                # synthetic flakiness: how many leading attempts the
+                # "server" degrades — consumed by accept hooks
+                F.coalesce(F.col("flaky_rejects"), F.lit(0))
+                .alias("flaky_rejects"),
+                "url_hash", "seen_key",
+            ],
+            missing_cols=_payloadless_cols(
+                404, False, ["url_hash", "seen_key"]),
+            nullsrc_cols=_payloadless_cols(200, True, [
+                F.lit(None).cast("long").alias("url_hash"),
+                F.lit(None).cast("long").alias("seen_key"),
+            ]),
+            blocked_cols=unfetched_cols(
+                "blocked", F.lit(None), "robots.txt disallow"),
+            deferred_cols=unfetched_cols("deferred", F.col("page_cls"), None),
+            obs_aggs=[
+                F.count(F.when(F.col("emit_kind") == k, 1)).alias(k)
+                for k in _KIND_NAMES
+            ] + [F.count(F.when(
+                (F.col("emit_kind") == "deferred") & (F.col("attempts") > 0),
+                1,
+            )).alias("_deferred_requeues")],
+            followed=followed,
+            frontier_cols=[
+                F.col("child_cls").alias("page_cls"),
+                F.col("child_url").alias("url"),
+                F.col("child_input_json").alias("input_json"),
+                F.col("path"),
+                F.col("priority"),
+                F.col("attempts"),
+                F.col("page_seq"),
+                F.col("url_hash"),
+                F.col("seen_key"),
+            ],
+            emit_hash_cols=emit_hash_cols,
+        )
 
-        self._prev_total_emissions: int | None = None
-        while True:
-            t = [_time.time()]
-            # adapt per-wave partitioning to the frontier size: tiny
-            # waves at full fan-out pay per-task/per-file overhead for
-            # nothing (measured 2x on deep chains); big waves keep full
-            # width. AQE handles the shuffles; this governs the
-            # coalesce + snapshot file counts.
-            if n_frontier is None:
-                # DataFrame seeds / stat-less resume: one count (also
-                # sizes the fetch strategy — broadcast vs shuffle join)
-                n_frontier = frontier.count()
-            # size this wave's coalesce by its likely OUTPUT, not its
-            # input: a wave of list pages explodes ~fan-out× emissions
-            # (1994 seeds -> 2M children), and sizing by input once
-            # collapsed that whole explode+write into 8 tasks — a
-            # core-count-independent serial floor. The previous wave's
-            # total emission count is the fan-out-aware estimator;
-            # wave 0 (no history) keeps full width.
-            est = max(n_frontier, self._prev_total_emissions or 0)
-            if cfg.target_partitions is None and self._prev_total_emissions:
-                # cap at 2x the session width: big waves keep extra
-                # partitions so per-row cost variance (image decode)
-                # amortizes instead of straggling the stage tail.
-                # The payload-row ceiling is the scale guard: the wave
-                # coalesce collapses the whole fetch+decode+write stage
-                # to this width, so a 2x-cores cap alone puts est/(2N)
-                # payload rows in ONE task — 250k rows/task at N=4 on a
-                # 2M-row wave, and multi-GB tasks on a 10^10-row
-                # frontier regardless of cluster width. Partition count
-                # must track DATA size once waves outgrow the session
-                # width: ~64k payload rows per task keeps Arrow batches,
-                # python worker residency, and parquet writer buffers
-                # flat at any frontier size.
-                self._wave_parts = max(
-                    8 if self._nparts >= 8 else self._nparts,
-                    min(self._nparts * 2, est // 5000 + 1),
-                    min(est // _WAVE_ROWS_PER_PART + 1, 16384),
+    def _tick(self, wave: int, label: str, t: list) -> None:
+        """``verbose``: print the seconds since the wave's previous tick
+        (``t[0]``) to stderr, with an absolute epoch stamp so two
+        concurrent legs' step streams align on one wall clock."""
+        if self.config.verbose:
+            now = _time.time()
+            print(f"  [wave {wave}] {label}: {now - t[0]:.2f}s"
+                  f" @{now:.2f}",
+                  file=sys.stderr, flush=True)
+            t[0] = now
+
+    def _schedule(self, frontier: DataFrame, n_frontier: int, ex):
+        """Schedule phase of a cluster wave: the politeness budget, then
+        robots, then the fetch key columns. Returns (fetchable rows,
+        null-source rows, the unfetched emission parts: robots-blocked
+        and politeness-deferred rows)."""
+        cfg = self.config
+        scheduled = frontier.withColumn("host", ex.host)
+        # politeness budget (F5): overflow deferred, paths untouched.
+        # Disabled => no deferred branch at all: a limit(0) twin of the
+        # frontier subtree would still be re-analyzed and unioned every
+        # wave (measurable driver planning cost on small waves). When
+        # the WHOLE wave fits inside the default budget, no single host
+        # can exceed it: the limiter is a provable no-op, so its
+        # per-wave count aggregate + broadcast join are skipped too
+        # (r6; only sound without a politeness table, whose per-host
+        # budgets can undercut the default).
+        deferred = blocked = None
+        if self.politeness is not None or (
+            cfg.host_budget_per_wave is not None
+            and n_frontier > cfg.host_budget_per_wave
+        ):
+            scheduled, deferred = politeness_ops.split_by_host_budget(
+                scheduled, self.politeness, cfg.host_budget_per_wave,
+            )
+        # robots (F6): precompiled CASE expression when the rule set is
+        # small; broadcast-join longest-prefix path when it isn't (never
+        # a silent truncation). Blocked rows become 'blocked' emissions
+        # so the count rides the wave Observation for free.
+        if ex.robots_allowed is not None:
+            decided = scheduled.withColumn("_allowed", ex.robots_allowed)
+            scheduled = decided.filter(F.col("_allowed")).drop("_allowed")
+            blocked = decided.filter(~F.col("_allowed")).drop("_allowed")
+        elif self._robots_join:
+            scheduled, blocked = politeness_ops.robots_broadcast_join(
+                scheduled, self._robots_prefix_df, self._robots_wild,
+            )
+        fetchable = scheduled.filter(
+            F.col("url").isNotNull()
+        ).withColumn(
+            "canon_url", ex.canon
+        ).withColumn(
+            # hash-at-emission already computed these for native-class
+            # children; recompute where null
+            "url_hash", F.coalesce(F.col("url_hash"), ex.uhash)
+        ).withColumn(
+            "seen_key", F.coalesce(F.col("seen_key"), ex.seen_key)
+        )
+        unfetched = []
+        if blocked is not None:
+            unfetched.append(blocked.select(*ex.blocked_cols))
+        if deferred is not None:
+            unfetched.append(deferred.select(*ex.deferred_cols))
+        return fetchable, scheduled.filter(F.col("url").isNull()), unfetched
+
+    def _dedup_driver(self, rows: list[tuple] | None):
+        """Dedup phase of the small-wave fast path. When the previous
+        wave landed on the driver AND the exact seen set has a live
+        Python twin, first-wins + seen dedup run here in plain Python —
+        the wave then needs ZERO shuffle stages: a local frontier
+        broadcast-joins the page store and the single AQE round does
+        fetch+process+collect. Returns (rows to fetch, null-source
+        rows) as FRONTIER_SCHEMA tuples, or None when the wave takes the
+        cluster path: no driver rows or twin, a politeness budget or
+        robots rules to apply, or a row without its emission hashes."""
+        cfg = self.config
+        if (
+            rows is None
+            or self._py_seen is None
+            or self.politeness is not None
+            or cfg.host_budget_per_wave is not None
+            or self._robots_rules
+            or self._robots_join
+            or not all(
+                r[1] is None or (r[7] is not None and r[8] is not None)
+                for r in rows
+            )
+        ):
+            return None
+        # FRONTIER_SCHEMA tuple slots: 1=url 3=path 5=attempts
+        # 7=url_hash 8=seen_key
+        null_rows = [r for r in rows if r[1] is None]
+        req_rows = [
+            r for r in rows if r[1] is not None and (r[5] or 0) > 0
+        ]
+        best: dict[tuple[int, int], tuple] = {}
+        for r in rows:
+            if r[1] is None or (r[5] or 0) > 0:
+                continue  # null-source / requeue bypass
+            k = (r[7], r[8])
+            b = best.get(k)
+            if b is None or r[3] < b[3]:  # first-wins = min path
+                best[k] = r
+        sched_rows = [
+            r for k, r in best.items() if k not in self._py_seen
+        ] + req_rows
+        return sched_rows, null_rows
+
+    def _transform(self, fetched: DataFrame, nullsrc: DataFrame | None,
+                   unfetched: list[DataFrame], ex) -> DataFrame:
+        """Transform phase: the wave's emission rows, not yet
+        materialized — the fetched batch (plus null-source rows)
+        through its per-class transform, and the unfetched parts.
+
+        Exactly ONE consumer per batch row — native-class rows go
+        through the single native projection (marker ++ class arrays,
+        exploded once), hook-class rows through the Arrow transform
+        which emits its own markers. No shared batch cache:
+        payload-heavy rows stream straight through their one pass (a
+        per-wave payload cache is 10s of GB at 10^6-row waves and was
+        the old OOM ceiling). Robots-blocked and politeness-deferred
+        rows ride the same stream: ONE materialization per wave carries
+        everything, their counts land in the wave's tallies, and the
+        next frontier is a narrow filter over the landed rows (measured:
+        a second write+read per wave was the per-wave fixed-cost
+        floor)."""
+        batch = fetched
+        if nullsrc is not None:
+            batch = batch.unionByName(nullsrc.select(*ex.nullsrc_cols))
+        batch = batch.select(*_BATCH_SELECT)
+        parts = [
+            batch.filter(F.col("page_cls").isin(ex.native_cls))
+            .select(F.explode(ex.per_row).alias("e")).select("e.*")
+        ]
+        if ex.hook_cls:
+            parts.append(
+                batch.filter(F.col("page_cls").isin(ex.hook_cls))
+                .mapInPandas(ex.transform, _EMISSION_OUT_SCHEMA)
+            )
+        return _union_tree(parts + unfetched, allow_missing=True)
+
+    def _land(self, emissions: DataFrame, ex, est: int,
+              prev_total: int | None, local_frontier: bool) -> _Landed:
+        """Materialize phase: compute the wave's emissions once; every
+        later read of the wave scans what this lands.
+
+        A small wave (size estimate ``est`` at or below
+        driver_wave_max) lands on the driver as one Arrow table — kind
+        counts tallied in Python, no Observation, no spill round-trip —
+        and is re-planted as a one-partition LocalRelation. Wave 0
+        never does (no fan-out history to estimate with: a seed wave
+        of list pages can explode 1000x). Hash-at-emission
+        (``emit_hash_cols``) applies ONLY here: the hashes serve solely
+        the next wave's driver-side dedup. Other waves write scratch
+        parquet, with the kind tallies riding the write as an
+        Observation."""
+        cfg = self.config
+        if not (cfg.driver_wave_max and prev_total is not None
+                and est <= cfg.driver_wave_max):
+            # bound partition count: a union's partitioning is the SUM
+            # of its children's — left unchecked the per-wave union
+            # fan-in compounds geometrically across waves (7×(P+8) per
+            # wave). coalesce is narrow (no shuffle).
+            out, m = self._materialize(
+                emissions.coalesce(self._wave_partitions(est, prev_total)),
+                "emissions", ex.obs_aggs,
+            )
+            return _Landed(
+                out, None, {k: int(m[k]) for k in _KIND_NAMES},
+                bool(m["requeue"] or m["_deferred_requeues"]))
+        # a driver-local frontier's plan has zero shuffle stages, so
+        # AQE re-planning is pure overhead (~8% of a 13-wave tree crawl)
+        aqe_off = {"spark.sql.adaptive.enabled": "false"}
+        with scoped_conf(self.spark, aqe_off if local_frontier else {}):
+            table = emissions.select(*ex.emit_hash_cols).toArrow()
+        rows = table.to_pylist()
+        counts = dict.fromkeys(_KIND_NAMES, 0) | Counter(
+            r["emit_kind"] for r in rows)
+        requeues = counts["requeue"] > 0 or any(
+            r["emit_kind"] == "deferred" and (r["attempts"] or 0) > 0
+            for r in rows)
+        # ONE partition: plain createDataFrame parallelizes to
+        # defaultParallelism slices, and per-wave unions then compound
+        # task counts geometrically (measured 161 → 417 tasks/stage by
+        # wave 12 of a tree crawl)
+        return _Landed(_local_df(self.spark, table, _EMISSION_OUT_SCHEMA),
+                       rows, counts, requeues)
+
+    def _wave_partitions(self, est: int, prev_total: int | None) -> int:
+        """Coalesce width of a parquet-landed wave. Tiny waves at full
+        fan-out pay per-task/per-file overhead for nothing (measured 2x
+        on deep chains); big waves keep full width. Sized by ``est``,
+        the wave's likely OUTPUT: sizing by input once collapsed a
+        1994-seed wave's 2M-child explode+write into 8 tasks — a
+        core-count-independent serial floor. Wave 0 (no history) keeps
+        full width."""
+        if self.config.target_partitions is not None or not prev_total:
+            return self._nparts
+        # cap at 2x the session width: big waves keep extra partitions
+        # so per-row cost variance (image decode) amortizes instead of
+        # straggling the stage tail. The payload-row ceiling is the
+        # scale guard: the wave coalesce collapses the whole
+        # fetch+decode+write stage to this width, so a 2x-cores cap
+        # alone puts est/(2N) payload rows in ONE task — 250k rows/task
+        # at N=4 on a 2M-row wave, and multi-GB tasks on a 10^10-row
+        # frontier regardless of cluster width. Partition count must
+        # track DATA size once waves outgrow the session width: ~64k
+        # payload rows per task keeps Arrow batches, python worker
+        # residency, and parquet writer buffers flat at any frontier
+        # size.
+        return max(
+            min(8, self._nparts),
+            min(self._nparts * 2, est // 5000 + 1),
+            min(est // _WAVE_ROWS_PER_PART + 1, 16384),
+        )
+
+    def _dead_letters(self, emissions: DataFrame, wave: int,
+                      n_dead: int) -> DataFrame:
+        """The wave's dead-letter rows (errors, rejects, robots-blocked);
+        raises CrawlError on an error or reject under ``fail_fast``."""
+        dead = emissions.filter(
+            F.col("emit_kind").isin(*_DEAD_KINDS, "blocked"))
+        if self.config.fail_fast and n_dead:
+            samples = dead.filter(
+                F.col("emit_kind").isin(*_DEAD_KINDS)
+            ).select("error").take(3)
+            raise CrawlError(f"wave {wave}: {[s['error'] for s in samples]}")
+        return dead
+
+    def _update_seen(self, landed: _Landed,
+                     n_next: int) -> DataFrame | None:
+        """Seen phase: seen ∪= this wave's first-attempt hashes, which
+        are already unique (in-wave first-wins + the seen anti-join
+        guarantee it; errored fetches are consumed too, matching the
+        reference where an attempted URL is never re-fetched). No
+        global distinct — that would reshuffle the whole seen set every
+        wave. Returns the wave's new seen rows, or None when it fetched
+        nothing."""
+        n_new = landed.counts["fetched"]
+        if not n_new:
+            return None
+        # APPEND-ONLY with zero extra writes: the wave's new hashes
+        # already live in the landed emissions (the 'fetched' marker
+        # rows); the seen "table" is the union of those per-wave slices
+        # — parquet column pruning + the emit_kind predicate keep each
+        # scan to one slim column. (An Iceberg deployment appends to a
+        # real table instead; rewriting the accumulated set per wave
+        # would be O(total)/wave — impossible at 10^10.)
+        new_seen = landed.emissions.filter(
+            F.col("emit_kind") == "fetched"
+        ).select("url_hash", "seen_key")
+        self._seen_slices.append(new_seen)
+        self._bloom_pending.append(new_seen)
+        self._seen_count += n_new
+        # Python seen-set twin: fed from the driver-landed rows (free);
+        # a cluster wave keeps it alive with one tiny pruned collect
+        # ONLY when the next wave is small enough to use it — otherwise
+        # the twin dies and cluster dedup owns the rest of the crawl.
+        cap = self.config.driver_wave_max
+        if self._py_seen is not None:
+            if landed.rows is not None:
+                self._py_seen.update(
+                    (r["url_hash"], r["seen_key"])
+                    for r in landed.rows if r["emit_kind"] == "fetched"
+                )
+            elif n_new <= cap and n_next <= cap:
+                self._py_seen.update(
+                    (r["url_hash"], r["seen_key"])
+                    for r in new_seen.collect()
                 )
             else:
-                self._wave_parts = self._nparts
-            self._n_frontier = n_frontier
-            if n_frontier == 0:
-                break
-            _tick("count", t)
-            if cfg.max_waves is not None and wave >= cfg.max_waves + start_wave:
-                break
+                self._py_seen = None
+            if (
+                self._py_seen is not None
+                and len(self._py_seen) > self._driver_seen_max
+            ):
+                self._py_seen = None  # driver-memory cap
+        return new_seen
 
-            # ------- small-wave fast path: dedup driver-side -------
-            # When the previous wave landed on the driver AND the exact
-            # seen set has a live Python twin, first-wins + seen dedup
-            # run here in plain Python — the wave then needs ZERO
-            # shuffle stages: a local frontier broadcast-joins the page
-            # store and the single AQE round does fetch+process+collect.
-            fast_rows = self._frontier_rows
-            self._frontier_rows = None
-            self._frontier_is_local = False
-            self._wave_bloom_fpr = None  # set by a probing _dedup
-            can_fast = (
-                fast_rows is not None
-                and cfg.dedup_urls
-                and self._py_seen is not None
-                and self.politeness is None
-                and cfg.host_budget_per_wave is None
-                and robots_allowed_expr is None
-                and not self._robots_join
-                and all(
-                    r[1] is None or (r[7] is not None and r[8] is not None)
-                    for r in fast_rows
-                )
+    def _next_frontier(self, landed: _Landed, ex):
+        """Next-frontier phase: a narrow filter over the ALREADY landed
+        emissions — no second write+read. Lineage stays bounded: every
+        wave's frontier derives from exactly one landed scan (deferred
+        rows were folded into the emissions). Returns (frontier, the
+        same rows as FRONTIER_SCHEMA tuples for the next wave's
+        driver-side dedup when the wave landed on the driver, else
+        None)."""
+        frontier = landed.emissions.filter(
+            F.col("emit_kind").isin(ex.followed)
+        ).select(*ex.frontier_cols)
+        if landed.rows is None:
+            return frontier, None
+        return frontier, [
+            (r["child_cls"], r["child_url"], r["child_input_json"],
+             r["path"], int(r["priority"] or 0), int(r["attempts"] or 0),
+             int(r["page_seq"] or 0), r["url_hash"], r["seen_key"])
+            for r in landed.rows if r["emit_kind"] in ex.followed
+        ]
+
+    def _commit(self, wave: int, start_wave: int, frontier: DataFrame,
+                new_seen: DataFrame | None, items: DataFrame,
+                metrics_rows: list[dict]) -> DataFrame:
+        """Commit phase: the Iceberg snapshot, or the parquet-manifest
+        snapshot of the deltas accumulated since the last commit every
+        ``checkpoint_every`` waves. Returns the frontier the next wave
+        reads: the committed Iceberg table, else the landed plan."""
+        cfg = self.config
+        if self._ice is not None:
+            self._ice.commit_wave(
+                wave, frontier, new_seen, items, metrics_rows)
+            return (
+                self.spark.table(self._ice._t("frontier"))
+                .filter(F.col("wave") == wave).drop("wave")
             )
-            deferred = blocked = nullsrc = None
-            sched_rows: list[tuple] = []
-            null_rows: list[tuple] = []
-            if can_fast:
-                # FRONTIER_SCHEMA tuple slots: 1=url 3=path 5=attempts
-                # 7=url_hash 8=seen_key
-                null_rows = [r for r in fast_rows if r[1] is None]
-                req_rows = [
-                    r for r in fast_rows
-                    if r[1] is not None and (r[5] or 0) > 0
-                ]
-                best: dict[tuple[int, int], tuple] = {}
-                for r in fast_rows:
-                    if r[1] is None or (r[5] or 0) > 0:
-                        continue  # null-source / requeue bypass
-                    k = (r[7], r[8])
-                    b = best.get(k)
-                    if b is None or r[3] < b[3]:  # first-wins = min path
-                        best[k] = r
-                sched_rows = [
-                    r for k, r in best.items() if k not in self._py_seen
-                ] + req_rows
-                self._n_frontier = len(sched_rows)
+        if cfg.checkpoint_dir:
+            self._ckpt_items.append(items)
+            if new_seen is not None:
+                self._ckpt_seen.append(new_seen)
+            if (wave + 1 - start_wave) % max(1, cfg.checkpoint_every) == 0:
+                self._commit_checkpoint(cfg, wave, frontier, metrics_rows)
+        return frontier
 
-            if can_fast and not sched_rows and not null_rows:
-                # every candidate was already seen: a no-op wave —
-                # skip the Spark job entirely
-                lrows: list | None = []
-                emissions = _local_df(spark, [], _EMISSION_OUT_SCHEMA)
-                kind_counts = {k: 0 for k in kind_names}
-                deferred_requeues = 0
-            else:
-                if can_fast:
-                    if null_rows:
-                        nullsrc = _local_df(
-                            spark, null_rows, schemas.FRONTIER_SCHEMA)
-                    self._frontier_is_local = True
-                    fetched = self._fetch_local(sched_rows)
-                else:
-                    frontier = frontier.withColumn("host", host_expr)
-
-                    # politeness budget (F5): overflow deferred, paths
-                    # untouched. Disabled => no deferred branch at all:
-                    # a limit(0) twin of the frontier subtree would
-                    # still be re-analyzed and unioned every wave
-                    # (measurable driver planning cost on small waves).
-                    if (self.politeness is None
-                            and cfg.host_budget_per_wave is None):
-                        scheduled = frontier
-                    elif (self.politeness is None
-                          and n_frontier <= cfg.host_budget_per_wave):
-                        # the WHOLE wave fits inside the default budget,
-                        # so no single host can exceed it: the limiter
-                        # is a provable no-op — skip its per-wave count
-                        # aggregate + broadcast join (r6; only sound
-                        # without a politeness table, whose per-host
-                        # budgets can undercut the default)
-                        scheduled = frontier
-                    else:
-                        scheduled, deferred = (
-                            politeness_ops.split_by_host_budget(
-                                frontier, self.politeness,
-                                cfg.host_budget_per_wave,
-                            )
-                        )
-                    # robots (F6): precompiled CASE expression when the
-                    # rule set is small; broadcast-join longest-prefix
-                    # path when it isn't (never a silent truncation).
-                    # Blocked rows become 'blocked' emissions so the
-                    # count rides the wave Observation for free.
-                    if robots_allowed_expr is not None:
-                        decided = scheduled.withColumn(
-                            "_allowed", robots_allowed_expr)
-                        scheduled = decided.filter(
-                            F.col("_allowed")).drop("_allowed")
-                        blocked = decided.filter(
-                            ~F.col("_allowed")).drop("_allowed")
-                    elif self._robots_join:
-                        scheduled, blocked = (
-                            politeness_ops.robots_broadcast_join(
-                                scheduled, self._robots_prefix_df,
-                                self._robots_wild,
-                            )
-                        )
-
-                    fetchable = scheduled.filter(
-                        F.col("url").isNotNull()
-                    ).withColumn(
-                        "canon_url", canon_expr
-                    ).withColumn(
-                        # hash-at-emission already computed these for
-                        # native-class children; recompute where null
-                        "url_hash", F.coalesce(F.col("url_hash"),
-                                               uhash_expr)
-                    ).withColumn(
-                        "seen_key", F.coalesce(F.col("seen_key"),
-                                               seen_key_expr)
-                    )
-                    nullsrc = scheduled.filter(F.col("url").isNull())
-
-                    if cfg.dedup_urls:
-                        fetchable = self._dedup(
-                            fetchable, self._seen_union())
-
-                    fetched = self._fetch(fetchable)
-                if nullsrc is None:
-                    batch = fetched.select(*_BATCH_SELECT)
-                else:
-                    batch = fetched.unionByName(
-                        nullsrc.select(*nullsrc_cols)
-                    ).select(*_BATCH_SELECT)
-
-                # Exactly ONE consumer per batch row — native-class
-                # rows go through the single native projection (marker
-                # ++ class arrays, exploded once), hook-class rows
-                # through the Arrow transform which emits its own
-                # markers. No shared batch cache: payload-heavy rows
-                # stream straight through their one pass (a per-wave
-                # payload cache is 10s of GB at 10^6-row waves and was
-                # the old OOM ceiling).
-                native_part = batch.filter(
-                    F.col("page_cls").isin(native_cls)
-                ).select(F.explode(per_row_expr).alias("e")).select("e.*")
-                parts: list[DataFrame] = [native_part]
-                if hook_cls:
-                    parts.append(
-                        batch.filter(
-                            F.col("page_cls").isin(hook_cls)
-                        ).mapInPandas(transform, _EMISSION_OUT_SCHEMA)
-                    )
-                if blocked is not None:
-                    # robots-blocked rows ride the emissions stream so
-                    # the count lands in the Observation (no extra job)
-                    # and the rows themselves reach the dead-letter
-                    # output
-                    parts.append(blocked.select(*blocked_cols))
-                # politeness-deferred rows ride the emissions stream
-                # too: ONE materialization per wave carries everything
-                # — the next frontier is then a narrow filter over the
-                # written parquet instead of a second write+read job
-                # (measured: the two jobs were the per-wave fixed-cost
-                # floor)
-                if deferred is not None:
-                    parts.append(deferred.select(*deferred_cols))
-                emissions = _union_tree(parts, allow_missing=True)
-                # bound partition count: a union's partitioning is the
-                # SUM of its children's — left unchecked the per-wave
-                # union fan-in compounds geometrically across waves
-                # (7×(P+8) per wave). coalesce is narrow (no shuffle)
-                # and caps every wave at nparts.
-                if (
-                    cfg.driver_wave_max
-                    and self._prev_total_emissions is not None
-                    and est <= cfg.driver_wave_max
-                ):
-                    # small wave: land the slim emission rows on the
-                    # driver as one Arrow table — kind counts tallied in
-                    # Python, no Observation, no spill round-trip.
-                    # hash-at-emission (emit_hash_cols) applies ONLY
-                    # here: the hashes serve solely the next wave's
-                    # driver-side dedup. A driver-local frontier's plan
-                    # has zero shuffle stages, so AQE re-planning is
-                    # pure overhead (~8% of a 13-wave tree crawl)
-                    _aqe = None
-                    if self._frontier_is_local:
-                        _aqe = spark.conf.get(
-                            "spark.sql.adaptive.enabled", "true")
-                        spark.conf.set(
-                            "spark.sql.adaptive.enabled", "false")
-                    try:
-                        ltable = emissions.select(
-                            *emit_hash_cols).toArrow()
-                    finally:
-                        if _aqe is not None:
-                            spark.conf.set(
-                                "spark.sql.adaptive.enabled", _aqe)
-                    lrows = ltable.to_pylist()
-                    kind_counts = {k: 0 for k in kind_names}
-                    deferred_requeues = 0
-                    for r in lrows:
-                        kind_counts[r["emit_kind"]] += 1
-                        if (r["emit_kind"] == "deferred"
-                                and (r["attempts"] or 0) > 0):
-                            deferred_requeues += 1
-                    # ONE partition: plain createDataFrame parallelizes
-                    # to defaultParallelism slices, and per-wave unions
-                    # then compound task counts geometrically (measured
-                    # 161 → 417 tasks/stage by wave 12 of a tree crawl)
-                    emissions = _local_df(
-                        spark, ltable, _EMISSION_OUT_SCHEMA)
-                else:
-                    lrows = None
-                    emissions, emetrics = self._materialize(
-                        emissions.coalesce(self._wave_parts), "emissions",
-                        obs_aggs,
-                    )
-                    kind_counts = {k: int(emetrics[k]) for k in kind_names}
-                    deferred_requeues = int(emetrics["_deferred_requeues"])
-            self._prev_total_emissions = sum(kind_counts.values())
-            n_frontier_next = sum(kind_counts.get(k, 0) for k in kinds)
-            n_new = kind_counts["fetched"]
-            # next wave needs the requeue split only if it can actually
-            # contain attempts>0 rows (fresh requeues or deferred ones)
-            self._requeues_possible = bool(
-                kind_counts.get("requeue", 0) or deferred_requeues
-            )
-            _tick("emissions ckpt", t)
-            new_seen = emissions.filter(
-                F.col("emit_kind") == "fetched"
-            ).select("url_hash", "seen_key")
-
-            if cfg.scout:
-                wave_items = _scout_projection(emissions, wave)
-            else:
-                wave_items = emissions.filter(
-                    F.col("emit_kind") == "item"
-                ).select(
-                    F.col("path"),
-                    F.col("src_cls").alias("page_cls"),
-                    F.col("item_json"),
-                    F.lit(wave).alias("wave"),
-                )
-            results.append(wave_items)
-
-            wave_dead = emissions.filter(
-                F.col("emit_kind").isin("error", "reject", "blocked")
-            )
-            n_dead = int(
-                kind_counts.get("error", 0) + kind_counts.get("reject", 0)
-            )
-            if cfg.fail_fast and n_dead:
-                samples = wave_dead.filter(
-                    F.col("emit_kind").isin("error", "reject")
-                ).select("error").take(3)
-                raise CrawlError(
-                    f"wave {wave}: {[s['error'] for s in samples]}"
-                )
-            dead.append(wave_dead)
-
-            # seen ∪= this wave's first-attempt hashes (already unique:
-            # in-wave first-wins + seen anti-join guarantee it; errored
-            # fetches are consumed too, matching the reference where an
-            # attempted URL is never re-fetched). No global distinct —
-            # that would reshuffle the whole seen set every wave.
-            if n_new:
-                # APPEND-ONLY with zero extra writes: the wave's new
-                # hashes already live in the materialized emissions
-                # (the 'fetched' marker rows); the seen "table" is the
-                # union of those per-wave slices — parquet column
-                # pruning + the emit_kind predicate keep each scan to
-                # one slim column. (An Iceberg deployment appends to a
-                # real table instead; rewriting the accumulated set per
-                # wave would be O(total)/wave — impossible at 10^10.)
-                self._seen_slices.append(new_seen)
-                self._bloom_pending.append(new_seen)
-                self._seen_count += n_new
-                # Python seen-set twin: fed from the driver-collected
-                # rows (free); a cluster wave keeps it alive with one
-                # tiny pruned collect ONLY when the next wave is small
-                # enough to use it — otherwise the twin dies and
-                # cluster dedup owns the rest of the crawl.
-                if self._py_seen is not None:
-                    if lrows is not None:
-                        self._py_seen.update(
-                            (r["url_hash"], r["seen_key"])
-                            for r in lrows if r["emit_kind"] == "fetched"
-                        )
-                    elif (
-                        n_new <= cfg.driver_wave_max
-                        and n_frontier_next <= cfg.driver_wave_max
-                    ):
-                        self._py_seen.update(
-                            (r["url_hash"], r["seen_key"])
-                            for r in new_seen.collect()
-                        )
-                    else:
-                        self._py_seen = None
-                    if (
-                        self._py_seen is not None
-                        and len(self._py_seen) > self._driver_seen_max
-                    ):
-                        self._py_seen = None  # driver-memory cap
-            _tick("seen update", t)
-
-            # next frontier: a narrow filter over the ALREADY
-            # materialized emissions parquet — no second write+read.
-            # Lineage stays bounded: every wave's frontier derives from
-            # exactly one parquet scan (deferred rows were folded into
-            # the emissions write above).
-            frontier = emissions.filter(
-                F.col("emit_kind").isin(kinds)
-            ).select(*frontier_cols)
-            if lrows is not None:
-                # frontier rows in FRONTIER_SCHEMA order for the next
-                # wave's driver-side dedup
-                self._frontier_rows = [
-                    (r["child_cls"], r["child_url"],
-                     r["child_input_json"], r["path"],
-                     int(r["priority"] or 0), int(r["attempts"] or 0),
-                     int(r["page_seq"] or 0), r["url_hash"],
-                     r["seen_key"])
-                    for r in lrows if r["emit_kind"] in kinds
-                ]
-            n_frontier = n_frontier_next
-            _tick("frontier derive", t)
-
-            metrics_rows.append(
-                {
-                    "wave": wave,
-                    "fetched": int(n_new),  # fetched-marker count
-                    "items": int(kind_counts.get("item", 0)),
-                    "children": int(kind_counts.get("child", 0)),
-                    "next_pages": int(kind_counts.get("next", 0)),
-                    "requeued": int(kind_counts.get("requeue", 0)),
-                    "skipped_items": int(kind_counts.get("skip_item", 0)),
-                    "skipped_pages": int(kind_counts.get("skip_page", 0)),
-                    "handled_errors": int(kind_counts.get("handled_error", 0)),
-                    "dead": int(
-                        kind_counts.get("error", 0) + kind_counts.get("reject", 0)
-                    ),
-                    "blocked": int(kind_counts.get("blocked", 0)),
-                    "deferred": int(kind_counts.get("deferred", 0)),
-                    # Bloom prefilter: did this wave's dedup probe it,
-                    # and its estimated FPR at that probe (else None)
-                    "bloom_probed": self._wave_bloom_fpr is not None,
-                    "bloom_fpr": self._wave_bloom_fpr,
-                }
-            )
-
-            if self._ice is not None:
-                self._ice.commit_wave(
-                    wave, frontier, new_seen if n_new else None,
-                    wave_items, metrics_rows,
-                )
-                frontier = (
-                    spark.table(self._ice._t("frontier"))
-                    .filter(F.col("wave") == wave).drop("wave")
-                )
-            elif cfg.checkpoint_dir:
-                self._ckpt_items.append(wave_items)
-                if n_new:
-                    self._ckpt_seen.append(new_seen)
-                every = max(1, cfg.checkpoint_every)
-                if (wave + 1 - start_wave) % every == 0:
-                    self._commit_checkpoint(cfg, wave, frontier, metrics_rows)
-                    if not cfg.checkpoint_async:
-                        # sync mode re-reads the just-committed frontier
-                        # (the r4 behavior: the next wave scans the
-                        # durable copy); async keeps the scratch-parquet
-                        # plan so the wave never waits on the commit
-                        frontier = spark.read.schema(
-                            schemas.FRONTIER_SCHEMA
-                        ).parquet(os.path.join(
-                            cfg.checkpoint_dir, f"wave={wave}", "frontier"
-                        ))
-
-            wave += 1
-
+    def _finish(self, wave: int, start_wave: int, frontier: DataFrame,
+                results: list[DataFrame], dead: list[DataFrame],
+                metrics_rows: list[dict]) -> CrawlResult:
+        """Flush the last every-K window's deltas, wait for the commit
+        in flight, and assemble the CrawlResult."""
+        cfg, spark = self.config, self.spark
         if self._ice is None and cfg.checkpoint_dir:
             if self._ckpt_items or self._ckpt_seen:
                 # flush deltas from the tail waves of an every-K window
@@ -1519,17 +1523,13 @@ class CrawlEngine:
                 # a resume from this snapshot sees the finished crawl)
                 self._commit_checkpoint(cfg, wave - 1, frontier, metrics_rows)
             self._join_checkpoint()
-
-        all_results = _union_tree(
-            [spark.createDataFrame([], schemas.RESULT_SCHEMA)] + results
-        )
-        all_dead = _union_tree(
-            [spark.createDataFrame([], _EMISSION_OUT_SCHEMA)] + dead,
-            allow_missing=True,
-        )
         return CrawlResult(
-            results=all_results,
-            dead=all_dead,
+            results=_union_tree(
+                [spark.createDataFrame([], schemas.RESULT_SCHEMA)] + results),
+            dead=_union_tree(
+                [spark.createDataFrame([], _EMISSION_OUT_SCHEMA)] + dead,
+                allow_missing=True,
+            ),
             seen=self._seen_union(),
             metrics=pd.DataFrame(metrics_rows),
             waves=wave - start_wave,
@@ -1592,7 +1592,8 @@ class CrawlEngine:
             )
         return F.when(failed, err).otherwise(ok)
 
-    def _dedup(self, fetchable: DataFrame, seen: DataFrame) -> DataFrame:
+    def _dedup(self, fetchable: DataFrame, seen: DataFrame,
+               requeues: bool) -> DataFrame:
         """Seen-set + in-wave dedup (F4 + E5-at-frontier, first-wins).
 
         Keyed on ``seen_key`` = (page_cls, url_hash, input) — page
@@ -1610,14 +1611,17 @@ class CrawlEngine:
         is legitimately being re-fetched (retry loop pages.py:168-195).
         The requeue split (whose union would break the partitioning
         reuse) only happens in waves that can actually contain
-        requeues, tracked from the previous wave's emission counts.
+        requeues (``requeues``, from the previous wave's emission
+        counts).
+
+        Above ``bloom_min_seen`` seen keys the Bloom filter prefilters:
+        "definitely unseen" rows skip the exact check, and "maybe seen"
+        rows are confirmed by it, so no unseen row is ever dropped.
         """
         cfg = self.config
-        requeues = None
         first_time = fetchable
-        if self._requeues_possible:
+        if requeues:
             first_time = fetchable.filter(F.col("attempts") == 0)
-            requeues = fetchable.filter(F.col("attempts") > 0)
 
         # first-wins by lineage path: min_by under a plain hash
         # aggregate (map-side combine; no sort). Grouping carries BOTH
@@ -1638,13 +1642,9 @@ class CrawlEngine:
         )
 
         if self._seen_count > 0:
-            use_bloom = (
-                cfg.use_bloom
-                and self._bloom is not None
-                and self._seen_count >= cfg.bloom_min_seen
-            )
             anti_keys = ["url_hash", "seen_key"]
-            if use_bloom:
+            if (self._bloom is not None
+                    and self._seen_count >= cfg.bloom_min_seen):
                 if self._bloom_pending:
                     # lazy fold: every seen slice since the last probe
                     # (the resumed set, each wave's new keys) reaches
@@ -1653,7 +1653,7 @@ class CrawlEngine:
                     self._bloom.add_hashes_df(
                         _union_tree(self._bloom_pending), key_col="seen_key")
                     self._bloom_pending = []
-                    while self._bloom.needs_regrow(cfg.bloom_regrow_fill):
+                    while self._bloom.needs_regrow():
                         # FPR would degrade geometrically: re-shard 4x
                         # wider from the exact seen table (O(N) total)
                         self._bloom.regrow(seen, key_col="seen_key")
@@ -1662,89 +1662,64 @@ class CrawlEngine:
                 flagged = first_time.withColumn(
                     "_maybe", maybe_seen(F.col("seen_key"))
                 )
-                if cfg.bloom_exact_confirm:
-                    # left join + filter instead of split/anti/union:
-                    # same rows survive ("definitely unseen" kept
-                    # outright, "maybe" kept only without an exact
-                    # match), but the left side's url_hash partitioning
-                    # flows through to the fetch join — a union of the
-                    # two slivers would discard it
-                    marked = flagged.join(
-                        seen.select(*anti_keys)
-                        .withColumn("_seen", F.lit(True)),
-                        anti_keys, "left",
-                    )
-                    first_time = marked.filter(
-                        (~F.col("_maybe")) | F.col("_seen").isNull()
-                    ).drop("_maybe", "_seen")
-                else:
-                    first_time = flagged.filter(~F.col("_maybe")).drop("_maybe")
+                # left join + filter instead of split/anti/union: same
+                # rows survive ("definitely unseen" kept outright,
+                # "maybe" kept only without an exact match), but the
+                # left side's url_hash partitioning flows through to the
+                # fetch join — a union of the two slivers would discard it
+                marked = flagged.join(
+                    seen.select(*anti_keys).withColumn("_seen", F.lit(True)),
+                    anti_keys, "left",
+                )
+                first_time = marked.filter(
+                    (~F.col("_maybe")) | F.col("_seen").isNull()
+                ).drop("_maybe", "_seen")
             else:
                 first_time = first_time.join(seen, anti_keys, "left_anti")
-        if requeues is not None:
-            first_time = first_time.unionByName(requeues)
+        if requeues:
+            first_time = first_time.unionByName(
+                fetchable.filter(F.col("attempts") > 0))
         return first_time
 
-    def _fetch_out_cols(self):
-        """(found-row, missing-row) projections for the fetch join,
-        built once (wave-invariant Column trees)."""
-        if self._fetch_cols is None:
-            self._fetch_cols = (
-                [
-                    "page_cls", "path", "url", "input_json", "payload",
-                    "links", "next_url",
-                    F.coalesce(F.col("status"), F.lit(404)).alias("status"),
-                    "attempts", "page_seq", "payload_kind", "image_id",
-                    F.col("store_url").isNotNull().alias("found"),
-                    "priority",
-                    # synthetic flakiness: how many leading attempts the
-                    # "server" degrades — consumed by accept hooks
-                    F.coalesce(F.col("flaky_rejects"), F.lit(0))
-                    .alias("flaky_rejects"),
-                    "url_hash", "seen_key",
-                ],
-                _payloadless_cols(404, False, ["url_hash", "seen_key"]),
-            )
-        return self._fetch_cols
-
+    @functools.cached_property
     def _store_keyset(self) -> set[int] | None:
         """One-time driver copy of the store's url_hash set, or None
         when the store is too big for the driver
-        (``driver_store_keys_max``)."""
-        if self._store_keys_py is False:  # sentinel: not yet decided
-            if (
-                self.page_store is not None
-                and self._store_rows is not None
-                and self._store_rows <= self._driver_store_keys_max
-            ):
-                self._store_keys_py = {
-                    r[0]
-                    for r in self.page_store.select("url_hash").collect()
-                }
-            else:
-                self._store_keys_py = None
-        return self._store_keys_py
+        (``driver_store_keys_max``). Read after the store is counted."""
+        if (
+            self.page_store is None
+            or self._store_rows > self._driver_store_keys_max
+        ):
+            return None
+        return {r[0] for r in self.page_store.select("url_hash").collect()}
 
-    def _fetch_local(self, rows: list[tuple]) -> DataFrame:
+    def _fetch_local(self, rows: list[tuple], null_rows: list[tuple], ex):
         """Small-wave fetch over driver-resident frontier rows (tuples
         in FRONTIER_SCHEMA order). With a driver-sized store keyset the
         found/missing split happens in Python, so the wave's plan has
         NO anti-join leg — one broadcast build plus the store probe.
         Falls back to the generic `_fetch` (real-HTTP fetcher, or a
-        store too big for a driver keyset)."""
+        store too big for a driver keyset). Returns (fetched rows, the
+        null-source rows as a DataFrame or None)."""
         spark = self.spark
+        nullsrc = (_local_df(spark, null_rows, schemas.FRONTIER_SCHEMA)
+                   if null_rows else None)
         if self._store_rows is None and self.page_store is not None:
             self._store_rows = self.page_store.count()
-        keyset = None if self.fetch_fn is not None else self._store_keyset()
+        keyset = None if self.fetch_fn is not None else self._store_keyset
         if keyset is None:
             fetchable = _local_df(
                 spark, rows, schemas.FRONTIER_SCHEMA
             ).withColumn("host", host_of(F.col("url")))
-            return self._fetch(fetchable)
-        out_cols, _ = self._fetch_out_cols()
+            # a driver-local frontier always broadcasts: the build is
+            # free (LocalRelation — no upstream recompute, the cost that
+            # makes the broadcast path lose on tiny CLUSTER waves) and
+            # the whole wave collapses to one AQE round with zero
+            # shuffle stages
+            return self._fetch(fetchable, True, ex), nullsrc
         found = [r for r in rows if r[7] in keyset]
         missing = [
-            # out_cols order: page_cls path url input_json payload links
+            # found_cols order: page_cls path url input_json payload links
             # next_url status attempts page_seq payload_kind image_id
             # found priority flaky_rejects url_hash seen_key
             (r[0], r[3], r[1], r[2], None, None, None, 404, r[5], r[6],
@@ -1756,17 +1731,19 @@ class CrawlEngine:
             fr = _local_df(spark, found, schemas.FRONTIER_SCHEMA)
             parts.append(
                 self.page_store.join(F.broadcast(fr), "url_hash", "inner")
-                .select(*out_cols)
+                .select(*ex.found_cols)
             )
         if missing or not parts:
             parts.append(_local_df(spark, missing, _FETCHED_LOCAL_SCHEMA))
-        return _union_tree(parts)
+        return _union_tree(parts), nullsrc
 
-    def _fetch(self, fetchable: DataFrame) -> DataFrame:
-        """The fetch stage: an equi-join against the synthetic page-store
+    def _fetch(self, fetchable: DataFrame, broadcast: bool, ex) -> DataFrame:
+        """Fetch phase: an equi-join against the synthetic page-store
         (reference ``URL.get_response`` sources.py:42-52 becomes a join),
         or the real-HTTP mapInPandas fetcher when ``fetch_fn`` is set —
-        identical output schema either way."""
+        identical output schema either way. ``broadcast``: the frontier
+        is small enough to broadcast against the store in place (a
+        driver-local wave, or one within broadcast_fetch_max)."""
         if self.fetch_fn is not None:
             from ..operators.politeness import salted_repartition
             from ..sources.http_fetch import FETCHED_SCHEMA
@@ -1774,9 +1751,7 @@ class CrawlEngine:
             # here host-salting genuinely matters: fetch work is
             # per-host network time, and a hot host would pile onto
             # one task (north-rule skew mandate)
-            fr = salted_repartition(
-                fetchable, self._nparts, self.config.salt_buckets
-            )
+            fr = salted_repartition(fetchable, self._nparts, _SALT_BUCKETS)
             return fr.mapInPandas(self.fetch_fn, FETCHED_SCHEMA)
         if self.page_store is None:
             raise CrawlError("no page_store configured")
@@ -1785,19 +1760,11 @@ class CrawlEngine:
         # salted repartition (politeness.salted_repartition) belongs in
         # front of the real-HTTP fetch variant, where work is grouped
         # per host and a hot host would pile onto one task.
-        out_cols, missing_cols = self._fetch_out_cols()
         if self._store_rows is None:
             # one count, first fetch only: gates the store-keys
             # broadcast below and warms the persisted store cache
             self._store_rows = self.page_store.count()
-        n = getattr(self, "_n_frontier", None)
-        # a driver-local frontier always broadcasts: the build is free
-        # (LocalRelation — no upstream recompute, the cost that makes
-        # the broadcast path lose on tiny CLUSTER waves) and the whole
-        # wave collapses to one AQE round with zero shuffle stages
-        if getattr(self, "_frontier_is_local", False) or (
-            n is not None and n <= self._bcast_fetch_max
-        ):
+        if broadcast:
             # default path: broadcast the SLIM frontier, probe the
             # payload-heavy store in place — no store shuffle ever, no
             # frontier shuffle at the join, and the transform/decode
@@ -1806,7 +1773,7 @@ class CrawlEngine:
             # gets from bucket pruning.
             found = self.page_store.join(
                 F.broadcast(fetchable), "url_hash", "inner"
-            ).select(*out_cols)
+            ).select(*ex.found_cols)
             # not-in-store rows (404 path): anti-join against the
             # store's key column only. Small stores broadcast the keys
             # (pruned from the columnar cache, ~8 B/row — but still
@@ -1818,17 +1785,17 @@ class CrawlEngine:
                 missing = fetchable.join(
                     F.broadcast(self.page_store.select("url_hash")),
                     "url_hash", "left_anti",
-                ).select(*missing_cols)
+                ).select(*ex.missing_cols)
             else:
                 missing = fetchable.join(
                     self._store_keys(), "url_hash", "left_anti"
-                ).select(*missing_cols)
+                ).select(*ex.missing_cols)
             return found.unionByName(missing)
         # big-wave fallback: classic shuffle join against the
         # url_hash-bucketed store copy — the frontier side reshuffles,
         # the store side reuses its bucketing
         joined = fetchable.join(self._store_by_key(), "url_hash", "left")
-        return joined.select(*out_cols)
+        return joined.select(*ex.found_cols)
 
     def _resolve_dependencies(self) -> dict[str, dict[str, Any]]:
         """Instance dependencies: fetch + process each dep page ONCE on
@@ -2000,36 +1967,21 @@ class CrawlEngine:
         bounded fan-in regardless of crawl length."""
         base_wave = None
         deltas = []
-        if not os.path.isdir(base):
-            return None, []
-        for entry in os.listdir(base):
-            if not entry.startswith("wave="):
-                continue
-            w = int(entry.split("=")[1])
-            d = os.path.join(base, entry)
-            if w > upto or not os.path.exists(
-                    os.path.join(d, "MANIFEST.json")):
-                continue
-            if os.path.isdir(os.path.join(d, "seen_base")) and (
-                    base_wave is None or w > base_wave):
+        for w in _committed_waves(base, upto):  # ascending: latest base wins
+            d = os.path.join(base, f"wave={w}")
+            if os.path.isdir(os.path.join(d, "seen_base")):
                 base_wave = w
             if os.path.isdir(os.path.join(d, "seen_delta")):
                 deltas.append(w)
-        return base_wave, sorted(
+        return base_wave, [
             w for w in deltas if base_wave is None or w > base_wave
-        )
+        ]
 
     def _try_resume(self, base):
         if not os.path.isdir(base):
             return None
         upto = self.config.resume_upto_wave
-        waves = []
-        for entry in os.listdir(base):
-            m = os.path.join(base, entry, "MANIFEST.json")
-            if entry.startswith("wave=") and os.path.exists(m):
-                w = int(entry.split("=")[1])
-                if upto is None or w <= upto:
-                    waves.append(w)
+        waves = _committed_waves(base, upto)
         if not waves:
             if upto is not None:
                 raise CrawlError(
@@ -2047,7 +1999,7 @@ class CrawlEngine:
         frontier = read(schemas.FRONTIER_SCHEMA).parquet(
             os.path.join(d, "frontier"))
         base_wave, delta_waves = self._seen_sources(base, upto=last)
-        for w in sorted(waves):
+        for w in waves:
             # expiry leaves manifests intact; a wave that HAD a delta
             # but lost the dir and isn't covered by a base at or before
             # ``last`` means this rollback target predates the latest
@@ -2086,30 +2038,36 @@ class CrawlEngine:
         # checkpoint writes the wave-lit column), so a 1000-wave resume
         # costs one scan node, not 1000 union legs
         results = [read(schemas.RESULT_SCHEMA).parquet(
-            *[os.path.join(base, f"wave={w}", "items")
-              for w in sorted(waves)]
+            *[os.path.join(base, f"wave={w}", "items") for w in waves]
         )]
         return (frontier, seen, results, list(manifest["metrics"]),
                 last + 1, _manifest_rows(manifest, "frontier"), n_seen)
 
     # ----------------------------------------------------------------- scout
-    def scout(self, seeds: list[dict] | DataFrame) -> list[dict]:
+    def scout(self, seeds: list[dict]) -> list[dict]:
         """Reference ``spatula scout`` (cli.py:444-468 +
         ``_to_scout_result`` pages.py:19-30): each result projected to
         {data, __next__}; children not followed, pagination followed.
         The projection is a native expression over emissions — items
         wrap their own payload, child rows their would-be input."""
         saved = self.config
-        cfg = copy.copy(saved)
-        cfg.scout = True
-        cfg.follow_children = False
-        self.config = cfg
+        self.config = replace(saved, scout=True)
         try:
-            res = self.crawl(seeds)
+            return self.crawl(seeds).items()
         finally:
             self.config = saved
-        rows = res.results.orderBy("path").select("item_json").collect()
-        return [json.loads(r["item_json"]) for r in rows]
+
+
+def _committed_waves(base: str, upto: int | None = None) -> list[int]:
+    """Ascending waves with a committed snapshot (its MANIFEST.json) in
+    ``base``, at or before ``upto`` when given."""
+    if not os.path.isdir(base):
+        return []
+    waves = (int(e.split("=")[1]) for e in os.listdir(base)
+             if e.startswith("wave="))
+    return sorted(w for w in waves if (upto is None or w <= upto)
+                  and os.path.exists(os.path.join(
+                      base, f"wave={w}", "MANIFEST.json")))
 
 
 def _read_manifest(wave_dir: str) -> dict:
@@ -2172,6 +2130,16 @@ def _json_string_literal(col) -> "F.Column":
     for ch, rep in (("\n", "\\\\n"), ("\r", "\\\\r"), ("\t", "\\\\t")):
         escaped = F.regexp_replace(escaped, ch, rep)
     return F.concat(F.lit('"'), escaped, F.lit('"'))
+
+
+def _item_projection(emissions: DataFrame, wave: int) -> DataFrame:
+    """The wave's result rows (RESULT_SCHEMA): its items."""
+    return emissions.filter(F.col("emit_kind") == "item").select(
+        F.col("path"),
+        F.col("src_cls").alias("page_cls"),
+        F.col("item_json"),
+        F.lit(wave).alias("wave"),
+    )
 
 
 def _scout_projection(emissions: DataFrame, wave: int) -> DataFrame:

@@ -237,16 +237,6 @@ class PageSpec:
             r = REJECTED_RESPONSE_RETRIES
         return r + 1
 
-    def default_source_url(self) -> str | None:
-        if isinstance(self.source, str):
-            return self.source
-        if isinstance(self.source, URL):
-            return self.source.url
-        return None
-
-    def is_null_source(self) -> bool:
-        return isinstance(self.source, NullSource)
-
 
 class PageRegistry:
     """Name -> PageSpec dispatch table (the Spark replacement for the

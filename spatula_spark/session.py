@@ -10,6 +10,8 @@ timestamps bit-for-bit.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -77,3 +79,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(
+    spark: SparkSession, conf: Mapping[str, object]
+) -> Iterator[None]:
+    """Set session conf keys for the body of a ``with`` block, then put
+    each back as it was, also when the body raises: a set key gets its
+    value back, an unset key is unset again (``get(key, default)``
+    would report ``default`` as if set, and writing it back pins it).
+
+    Session conf is global to the SparkSession, not to the thread: a
+    query planned on another thread meanwhile (the crawl engine's async
+    snapshot commit) sees the scoped values. So only keys that shape a
+    plan without changing its rows (partition counts, AQE) belong here."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -21,11 +21,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 
-def write_results_parquet(results: DataFrame, path: str) -> None:
-    """Primary sink: columnar append (Iceberg table in deployment)."""
-    results.write.mode("overwrite").parquet(path)
-
-
 def to_json_files(
     results: DataFrame,
     out_dir: str,

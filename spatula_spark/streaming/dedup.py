@@ -26,6 +26,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
 from .windows import EVENTS_SCHEMA
 
 
@@ -85,19 +86,15 @@ def stream_distinct_keys(
     # the query snapshots shuffle.partitions at start() as its state
     # partition count; derive it from input size, restore the session
     # conf immediately after
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark, src))
-    )
-    try:
+    with scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": _state_partitions(spark, src)
+    }):
         q = (
             stream.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
     finally:
@@ -133,11 +130,9 @@ def stream_distinct_derived(
     )
     deduped = derive(stream).dropDuplicatesWithinWatermark(list(out_cols))
     # input-sized state partitioning (see _state_partitions)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark, src))
-    )
-    try:
+    with scoped_conf(spark, {
+        "spark.sql.shuffle.partitions": _state_partitions(spark, src)
+    }):
         q = (
             deduped.select(*out_cols)
             .writeStream.format("memory")
@@ -146,8 +141,6 @@ def stream_distinct_derived(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.awaitTermination()
     finally:

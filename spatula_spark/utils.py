@@ -114,29 +114,19 @@ def debug_run(
     children ("would continue with <Page>" semantics), optionally
     following pagination; returns the scout-style projections with
     continuous numbering across pages (tests/test_cli.py:146-157)."""
-    import copy
+    import dataclasses
 
-    spec = engine.registry[page_cls]
     if input is None:
-        input = spec.example_input
-    saved = engine.config
-    cfg = copy.copy(saved)
-    cfg.scout = True
-    cfg.follow_children = False
+        input = engine.registry[page_cls].example_input
     # pagination rides the 'next' emission kind; --no-pagination is a
     # one-wave run (cli.py:359-370 prints a notice and stops)
     if not follow_pagination:
-        cfg.max_waves = 1
-    elif max_waves is not None:
-        cfg.max_waves = max_waves
-    engine.config = cfg
+        max_waves = 1
+    saved = engine.config
+    if max_waves is not None:
+        engine.config = dataclasses.replace(saved, max_waves=max_waves)
     try:
-        res = engine.crawl(
-            [{"page_cls": page_cls, "input": input, "url": url}]
-        )
-        import json as _json
-
-        rows = res.results.orderBy("path").select("item_json").collect()
-        return [_json.loads(r["item_json"]) for r in rows]
+        return engine.scout(
+            [{"page_cls": page_cls, "input": input, "url": url}])
     finally:
         engine.config = saved

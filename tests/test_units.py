@@ -634,3 +634,55 @@ def test_pagectx_xml_json_parse_errors_are_typed():
     with pytest.raises(UnsupportedDocumentError, match="json:"):
         ctx("json", b"{not json").json
     assert ctx("json", b'{"k": 1}').json == {"k": 1}
+
+
+# ------------------------------------------------------------ scoped conf
+# a plan-shape key the test session never sets
+_UNSET_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def test_scoped_conf_leaves_unset_key_unset(spark):
+    from spatula_spark.session import scoped_conf
+
+    assert spark.conf.get(_UNSET_KEY, None) is None
+    with scoped_conf(spark, {_UNSET_KEY: "1m"}):
+        assert spark.conf.get(_UNSET_KEY) == "1m"
+    assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_scoped_conf_restores_set_key(spark):
+    from spatula_spark.session import scoped_conf
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with scoped_conf(spark, {key: 3}):
+        assert spark.conf.get(key) == "3"
+    assert spark.conf.get(key) == before
+
+
+def test_scoped_conf_restores_after_exception(spark):
+    from spatula_spark.session import scoped_conf
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {key: 3, _UNSET_KEY: "1m"}):
+            raise RuntimeError("boom")
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_session_conf_written_only_by_session_module():
+    """Session conf is global to the SparkSession: every write in the
+    package goes through session.py (get_spark, scoped_conf)."""
+    import pathlib
+    import re
+
+    import spatula_spark
+
+    root = pathlib.Path(spatula_spark.__file__).parent
+    writers = sorted(
+        str(p.relative_to(root)) for p in root.rglob("*.py")
+        if re.search(r"\.conf\.(un)?set\(", p.read_text())
+    )
+    assert writers == ["session.py"]
