@@ -15,7 +15,7 @@ exchange, exactly what a sorted-file rewrite costs. The reference has
 no layout management at all (single-process JSON files; cf.
 /root/reference/src/spatula/cli.py scrape output) — this is part of
 the engine's "beyond the reference at scale" surface, alongside the
-Iceberg snapshot backend in plans/iceberg.py.
+Iceberg snapshot backend in plans/snapshots.py.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ one at a time, this engine keeps it in a DataFrame and processes one
            _schedule: politeness select (hot-host-only ranking window;
              overflow rides the emissions stream as 'deferred'), then
              robots filter (compiled CASE / broadcast-join fallback)
-           _dedup: URL-seen dedup (bloom prefilter -> exact check)
+           _dedup: URL-seen dedup (exact anti-join; Bloom probe at scale)
              keyed on page identity seen_key = (page_cls, url_hash,
              input), and in-wave first-wins dedup (min_by path per
              (url_hash, seen_key))
@@ -27,7 +27,7 @@ one at a time, this engine keeps it in a DataFrame and processes one
            _update_seen: seen ∪= fetched keys
            _next_frontier: a narrow filter over the landed emissions;
              then the wave's metrics row
-           _commit: the durable snapshot (every checkpoint_every waves)
+           _commit: to the snapshot store every checkpoint_every waves
 
     Fast path, after a wave landed on the driver and when no politeness
     or robots rule applies: _dedup_driver (Python, against a driver twin
@@ -71,9 +71,11 @@ Scale notes (the part that must survive 100 TB / 10^10 URLs):
 * ONE parquet snapshot per wave (the Iceberg-commit pattern) cuts the
   iterative lineage; frontier/results/seen/dead are all narrow views
   over it.
-* The seen-set check never shuffles the full frontier: the broadcast
-  Bloom tier answers "definitely unseen" locally; only the
-  "maybe seen" sliver (FPR-bounded) needs the exact table.
+* The seen-set check is an exact join on the dedup aggregate's keys,
+  reusing its exchange. Above bloom_min_seen a broadcast Bloom filter
+  flags each row "maybe seen" first, but every row still joins the
+  seen set, so the output is the plain anti-join's (pruning the join
+  input by the flag is open work).
 * payload ``bytes`` columns exist only between the fetch and the
   one-pass transform; frontier/results/seen stay slim, and nothing
   payload-heavy is ever cached (the wave streams it).
@@ -84,7 +86,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import shutil
 import sys
 import tempfile
 import time as _time
@@ -96,7 +97,6 @@ from typing import Any, Callable
 
 import pandas as pd
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -109,6 +109,7 @@ from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
 from ..operators.parsers import UnsupportedDocumentError
 from ..urls import canonicalize_url, host_of, url_hash
+from .snapshots import SEEN_SCHEMA, CrawlError, open_snapshots
 from .pagespec import (
     ChildPage,
     HandledError,  # noqa: F401  (public API re-export)
@@ -152,8 +153,6 @@ _FETCHED_LOCAL_SCHEMA = (
 
 _BATCH_SELECT = [c.split()[0] for c in _FETCHED_LOCAL_SCHEMA.split(", ")]
 
-_SEEN_SCHEMA = "url_hash long, seen_key long"
-
 _DEAD_KINDS = ("error", "reject")  # the kinds fail_fast raises on
 
 # CrawlResult.metrics count column -> the emission kinds it counts
@@ -171,14 +170,15 @@ _KIND_NAMES = tuple(k for _, kinds in _METRIC_KINDS for k in kinds)
 # Bloom prefilter shards at crawl start; ShardedBloom.regrow widens
 # them 4x from the exact seen table whenever the filter fills up
 _BLOOM_SHARDS = 16
+_BLOOM_FPR = 1e-3
+# fixed per-shard capacity (blob size is set once; OR-merge keeps it
+# constant). 256k hashes/shard ≈ 460 KB/shard at fpr 1e-3; a
+# 10^10-URL deployment raises shards+capacity (docs in seen.py).
+_BLOOM_SHARD_CAPACITY = 1 << 18
 
 # host-salt buckets ahead of the real-HTTP fetch: a hot host spreads
 # over this many tasks (politeness.salted_repartition)
 _SALT_BUCKETS = 8
-
-
-class CrawlError(Exception):
-    pass
 
 
 @dataclass
@@ -188,36 +188,20 @@ class CrawlConfig:
     # politeness: per-wave per-host budget; None disables (reference's
     # global --rpm generalized per-host, cli.py:33)
     host_budget_per_wave: int | None = None
-    # Bloom prefilter ahead of the exact seen anti-join: "definitely
-    # unseen" rows skip the join, "maybe seen" ones are confirmed by it
-    use_bloom: bool = True
-    bloom_fpr: float = 1e-3
-    # fixed per-shard capacity (blob size is set once; OR-merge keeps
-    # it constant). 256k hashes/shard ≈ 460 KB/shard at fpr 1e-3; a
-    # 10^10-URL deployment raises shards+capacity (docs in seen.py).
-    bloom_shard_capacity: int = 1 << 18
-    # below this many seen URLs the broadcast-bloom prefilter costs
-    # more than the plain anti-join it saves (measured: the per-wave
-    # blob broadcast + python UDF outweigh a sub-100k-row anti-join)
-    bloom_min_seen: int = 100_000
+    # from this many seen URLs on, each cluster wave probes a broadcast
+    # Bloom filter of the seen set ahead of the exact seen join (which
+    # still sees every row; see _dedup); None never probes. Below
+    # ~100k the per-wave blob broadcast + python UDF cost more than
+    # the plain anti-join (measured)
+    bloom_min_seen: int | None = 100_000
     fail_fast: bool = True
     checkpoint_dir: str | None = None
     # real-Iceberg snapshot backend: "catalog.namespace.name" table
     # prefix; takes precedence over checkpoint_dir's parquet-manifest
-    # analogue when a catalog is configured (plans/iceberg.py). The
-    # compaction/expiry/rollback knobs below apply to the analogue;
-    # on Iceberg they map to stock catalog procedures.
+    # analogue and needs a configured catalog (plans/snapshots.py). The
+    # cadence and rollback knobs below apply to both backends;
+    # checkpoint_expire_deltas is parquet-only and rejected with it.
     iceberg_table_prefix: str | None = None
-    # Iceberg-style snapshot compaction: every K committed seen DELTAS,
-    # the checkpoint rewrites the accumulated seen set as one
-    # ``seen_base`` under the current wave (manifest-flagged), so
-    # resume reads ONE base + at most K-1 deltas instead of every
-    # wave's delta since the crawl began — a 1000-wave crawl at
-    # 10^10-URL scale would otherwise fan in 1000 small parquet dirs.
-    # LSM-style tradeoff: compaction costs one O(|seen|) rewrite per K
-    # waves; K trades resume fan-in against rewrite amortization.
-    # 0 disables (every delta kept live forever, pre-compaction shape).
-    checkpoint_compact_every: int = 16
     # durable-snapshot cadence: commit the wave checkpoint every K
     # waves (1 = every wave, the round-4 behavior). Between durable
     # waves the engine keeps only its scratch-parquet lineage cuts
@@ -241,16 +225,17 @@ class CrawlConfig:
     # politeness/dedup/fetch stages instead of serializing it.
     checkpoint_async: bool = False
     # snapshot expiry (Iceberg expire_snapshots analogue): after a
-    # successful compaction, delete the seen deltas and older bases the
-    # new base supersedes. Keeps seen storage at ~1x instead of 2x (+
-    # one full copy per retained base); the tradeoff is that rollback
-    # to a wave older than the latest base becomes impossible — resume
-    # detects the gap via the manifests' has_delta flags and raises
-    # instead of silently rebuilding an incomplete seen set.
+    # successful seen compaction (every 16 deltas), delete the seen
+    # deltas and older bases the new base supersedes. Keeps seen
+    # storage at ~1x instead of 2x (+ one full copy per retained
+    # base); the tradeoff is that rollback to a wave older than the
+    # latest base becomes impossible — resume detects the gap via the
+    # manifests' has_delta flags and raises instead of silently
+    # rebuilding an incomplete seen set. Parquet snapshots only.
     checkpoint_expire_deltas: bool = False
     # time-travel resume (Iceberg rollback_to_snapshot analogue):
     # resume from the wave=N snapshot even when later snapshots exist.
-    # Later wave dirs are DELETED at resume so the replayed timeline is
+    # Later snapshots are DELETED at resume so the replayed timeline is
     # linear — without the rollback a subsequent resume would pick up
     # stale post-N state from the abandoned branch. None = latest.
     resume_upto_wave: int | None = None
@@ -878,7 +863,7 @@ class CrawlEngine:
             )
             self._seen_slices = [u]
         if not self._seen_slices:
-            return self.spark.createDataFrame([], _SEEN_SCHEMA)
+            return self.spark.createDataFrame([], SEEN_SCHEMA)
         return _union_tree(self._seen_slices)
 
     # ---------------------------------------------------------------- crawl
@@ -950,7 +935,7 @@ class CrawlEngine:
             frontier, frontier_rows = self._next_frontier(landed, ex)
             self._tick(wave, "frontier derive", t)
             metrics_rows.append(row)
-            frontier = self._commit(
+            self._commit(
                 wave, start_wave, frontier, new_seen, items, metrics_rows)
             wave += 1
         return self._finish(
@@ -973,7 +958,9 @@ class CrawlEngine:
         self._ckpt_items: list[DataFrame] = []
         self._ckpt_seen: list[DataFrame] = []
         self._ckpt_future = None
-        self._ckpt_pool = None
+        self._ckpt_pool = (
+            ThreadPoolExecutor(max_workers=1, thread_name_prefix="ckpt")
+            if cfg.checkpoint_async else None)
         self._seen_count = 0
         # driver-resident twin of the seen set (exact (url_hash,
         # seen_key) pairs) — alive while every wave's new keys were
@@ -985,49 +972,27 @@ class CrawlEngine:
         )
         self._bloom = (
             seen_ops.ShardedBloom(
-                _BLOOM_SHARDS, cfg.bloom_shard_capacity, cfg.bloom_fpr
-            )
-            if cfg.use_bloom
-            else None
+                _BLOOM_SHARDS, _BLOOM_SHARD_CAPACITY, _BLOOM_FPR)
+            if cfg.bloom_min_seen is not None else None
         )
-        # real-Iceberg snapshot backend (explicit opt-in; requires a
-        # configured catalog + runtime jar — see plans/iceberg.py).
-        # Same commit/resume contract as the parquet-manifest analogue.
-        self._ice = None
-        if cfg.iceberg_table_prefix:
-            from .iceberg import IcebergSnapshots, iceberg_available
-
-            if not iceberg_available(self.spark):
-                raise CrawlError(
-                    "iceberg_table_prefix is set but no Iceberg catalog "
-                    "is configured/loadable on this session (need "
-                    "spark.sql.catalog.<name>=org.apache.iceberg.spark."
-                    "SparkCatalog and the iceberg-spark-runtime jar); "
-                    "use checkpoint_dir for the parquet-manifest analogue"
-                )
-            self._ice = IcebergSnapshots(self.spark, cfg.iceberg_table_prefix)
-        # seed_frontier emits exactly one row per seed
-        fresh = (self.seed_frontier(seeds), len(seeds), 0, [], [])
-        resumed = None
-        if self._ice is not None:
-            resumed = self._ice.try_resume(cfg.resume_upto_wave)
-        elif cfg.checkpoint_dir:
-            resumed = self._try_resume(cfg.checkpoint_dir)
+        self._store = open_snapshots(self.spark, cfg)
+        resumed = self._store and self._store.resume(cfg.resume_upto_wave)
         if resumed is None:
-            return fresh
-        (frontier, rseen, results, metrics_rows, start_wave,
-         n_frontier, n_seen) = resumed
+            # seed_frontier emits exactly one row per seed
+            return self.seed_frontier(seeds), len(seeds), 0, [], []
         self._py_seen = None  # unknown provenance; cluster dedup
-        self._seen_count = rseen.count() if n_seen is None else n_seen
+        rseen = resumed.seen
+        self._seen_count = (rseen.count() if resumed.n_seen is None
+                            else resumed.n_seen)
         if self._seen_count:
-            if self._ice is not None or cfg.checkpoint_expire_deltas:
-                # the snapshot's seen dirs can vanish mid-crawl
-                # (expiry after a compaction): keep a private copy.
-                # Otherwise the slice reads them in place.
+            if self._store.seen_volatile:
+                # the snapshot's seen files can vanish mid-crawl: keep a
+                # private copy. Otherwise the slice reads them in place.
                 rseen, _ = self._materialize(rseen, "seen_resume")
             self._seen_slices.append(rseen)
             self._bloom_pending.append(rseen)
-        return frontier, n_frontier, start_wave, results, metrics_rows
+        return (resumed.frontier, resumed.n_frontier, resumed.next_wave,
+                [resumed.items], resumed.metrics_rows)
 
     def _wave_exprs(self) -> SimpleNamespace:
         """The wave-invariant expression cache, built ONCE per crawl.
@@ -1489,40 +1454,32 @@ class CrawlEngine:
 
     def _commit(self, wave: int, start_wave: int, frontier: DataFrame,
                 new_seen: DataFrame | None, items: DataFrame,
-                metrics_rows: list[dict]) -> DataFrame:
-        """Commit phase: the Iceberg snapshot, or the parquet-manifest
-        snapshot of the deltas accumulated since the last commit every
-        ``checkpoint_every`` waves. Returns the frontier the next wave
-        reads: the committed Iceberg table, else the landed plan."""
-        cfg = self.config
-        if self._ice is not None:
-            self._ice.commit_wave(
-                wave, frontier, new_seen, items, metrics_rows)
-            return (
-                self.spark.table(self._ice._t("frontier"))
-                .filter(F.col("wave") == wave).drop("wave")
-            )
-        if cfg.checkpoint_dir:
-            self._ckpt_items.append(items)
-            if new_seen is not None:
-                self._ckpt_seen.append(new_seen)
-            if (wave + 1 - start_wave) % max(1, cfg.checkpoint_every) == 0:
-                self._commit_checkpoint(cfg, wave, frontier, metrics_rows)
-        return frontier
+                metrics_rows: list[dict]) -> None:
+        """Commit phase: accumulate the wave's item and seen deltas and,
+        every ``checkpoint_every`` waves, commit their union since the
+        last commit to the snapshot store (plans/snapshots.py)."""
+        if self._store is None:
+            return
+        self._ckpt_items.append(items)
+        if new_seen is not None:
+            self._ckpt_seen.append(new_seen)
+        if (wave + 1 - start_wave) % max(1, self.config.checkpoint_every) == 0:
+            self._commit_window(wave, frontier, metrics_rows)
 
     def _finish(self, wave: int, start_wave: int, frontier: DataFrame,
                 results: list[DataFrame], dead: list[DataFrame],
                 metrics_rows: list[dict]) -> CrawlResult:
         """Flush the last every-K window's deltas, wait for the commit
         in flight, and assemble the CrawlResult."""
-        cfg, spark = self.config, self.spark
-        if self._ice is None and cfg.checkpoint_dir:
-            if self._ckpt_items or self._ckpt_seen:
-                # flush deltas from the tail waves of an every-K window
-                # (frontier is the final — possibly empty — frontier, so
-                # a resume from this snapshot sees the finished crawl)
-                self._commit_checkpoint(cfg, wave - 1, frontier, metrics_rows)
-            self._join_checkpoint()
+        spark = self.spark
+        if self._ckpt_items:
+            # flush deltas from the tail waves of an every-K window
+            # (frontier is the final — possibly empty — frontier, so
+            # a resume from this snapshot sees the finished crawl)
+            self._commit_window(wave - 1, frontier, metrics_rows)
+        self._join_checkpoint()
+        if self._ckpt_pool is not None:
+            self._ckpt_pool.shutdown()
         return CrawlResult(
             results=_union_tree(
                 [spark.createDataFrame([], schemas.RESULT_SCHEMA)] + results),
@@ -1614,9 +1571,11 @@ class CrawlEngine:
         requeues (``requeues``, from the previous wave's emission
         counts).
 
-        Above ``bloom_min_seen`` seen keys the Bloom filter prefilters:
-        "definitely unseen" rows skip the exact check, and "maybe seen"
-        rows are confirmed by it, so no unseen row is ever dropped.
+        From ``bloom_min_seen`` seen keys on, a Bloom probe flags each
+        row "maybe seen" ahead of the exact check. It prunes nothing:
+        every row, flagged or not, still left-joins the seen set, so
+        the output and the join input are the plain anti-join's and
+        the probe only adds its filter build and an Arrow UDF.
         """
         cfg = self.config
         first_time = fetchable
@@ -1843,7 +1802,7 @@ class CrawlEngine:
         return spec.process_page(ctx)
 
     # ----------------------------------------------------------- checkpoint
-    def _commit_checkpoint(self, cfg, wave, frontier, metrics_rows):
+    def _commit_window(self, wave, frontier, metrics_rows):
         """Commit the accumulated item/seen deltas (every-K window) as
         the wave-``wave`` snapshot — inline, or on the single
         checkpoint thread when ``checkpoint_async``. The inputs are
@@ -1854,21 +1813,12 @@ class CrawlEngine:
         items = _union_tree(self._ckpt_items)
         seen = _union_tree(self._ckpt_seen) if self._ckpt_seen else None
         self._ckpt_items, self._ckpt_seen = [], []
-        mrows = list(metrics_rows)
-        if cfg.checkpoint_async:
-            if self._ckpt_pool is None:
-                self._ckpt_pool = ThreadPoolExecutor(
-                    max_workers=1, thread_name_prefix="ckpt"
-                )
-            self._join_checkpoint()
-            self._ckpt_future = self._ckpt_pool.submit(
-                self._checkpoint, cfg.checkpoint_dir, wave, frontier,
-                seen, items, mrows,
-            )
-        else:
-            self._checkpoint(
-                cfg.checkpoint_dir, wave, frontier, seen, items, mrows
-            )
+        args = (wave, frontier, seen, items, list(metrics_rows))
+        if self._ckpt_pool is None:
+            self._store.commit(*args)
+            return
+        self._join_checkpoint()
+        self._ckpt_future = self._ckpt_pool.submit(self._store.commit, *args)
 
     def _join_checkpoint(self):
         """Wait for (and surface errors from) the in-flight async
@@ -1876,172 +1826,6 @@ class CrawlEngine:
         if self._ckpt_future is not None:
             f, self._ckpt_future = self._ckpt_future, None
             f.result()
-
-    def _checkpoint(self, base, wave, frontier, seen_delta, items,
-                    metrics_rows):
-        """Wave-granular snapshot: full frontier + this wave's seen
-        DELTA (append-only — the accumulated seen set is the union of
-        all wave deltas, never rewritten) + results delta + metrics +
-        manifest. With an Iceberg catalog this is one atomic snapshot
-        commit; on plain parquet we emulate atomicity by writing the
-        manifest last."""
-        d = os.path.join(base, f"wave={wave}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-        frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
-        if seen_delta is not None:
-            seen_delta.write.mode("overwrite").parquet(
-                os.path.join(d, "seen_delta")
-            )
-        items.write.mode("overwrite").parquet(os.path.join(d, "items"))
-        has_base = self._maybe_compact_seen(base, wave, seen_delta)
-        # Iceberg-manifest file stats: per-file bytes + row counts read
-        # from the parquet footers (no data scan) — resumability and
-        # skew diagnostics ride the snapshot itself
-        stats = {
-            sub: _parquet_dir_stats(os.path.join(d, sub))
-            for sub in ("frontier", "seen_delta", "seen_base", "items")
-            if os.path.isdir(os.path.join(d, sub))
-        }
-        with open(os.path.join(d, "MANIFEST.json"), "w") as f:
-            json.dump({"wave": wave, "complete": True,
-                       "has_delta": seen_delta is not None,
-                       "seen_base": has_base, "files": stats,
-                       "metrics": metrics_rows}, f)
-        if has_base and self.config.checkpoint_expire_deltas:
-            self._expire_superseded(base, wave)
-
-    def _expire_superseded(self, base, new_base_wave):
-        """Delete seen deltas and older seen bases that the freshly
-        committed base at ``new_base_wave`` supersedes (Iceberg
-        expire_snapshots). Runs only AFTER the new base's manifest is
-        on disk, so a kill between compaction and expiry never loses
-        state. Manifests are untouched: their ``has_delta`` flags are
-        how a later rollback detects it cannot reach past the base."""
-        for entry in os.listdir(base):
-            if not entry.startswith("wave="):
-                continue
-            w = int(entry.split("=")[1])
-            if w > new_base_wave:
-                continue
-            d = os.path.join(base, entry)
-            delta = os.path.join(d, "seen_delta")
-            if os.path.isdir(delta):
-                shutil.rmtree(delta)
-            old_base = os.path.join(d, "seen_base")
-            if w < new_base_wave and os.path.isdir(old_base):
-                shutil.rmtree(old_base)
-
-    def _maybe_compact_seen(self, base, wave, seen_delta) -> bool:
-        """Compact the seen set into ``wave=N/seen_base`` when
-        ``checkpoint_compact_every`` deltas have accumulated since the
-        last base (Iceberg manifest-rewrite analogue). Runs BEFORE this
-        wave's manifest, so a kill mid-compaction leaves the previous
-        snapshot chain fully intact. Per-wave deltas are disjoint by
-        construction (each holds only keys NEW that wave), so the base
-        is a plain union — no distinct shuffle."""
-        every = self.config.checkpoint_compact_every
-        if not every:
-            return False
-        base_wave, delta_waves = self._seen_sources(base, upto=wave - 1)
-        pending = len(delta_waves) + (1 if seen_delta is not None else 0)
-        if pending < every:
-            return False
-        parts = []
-        if base_wave is not None:
-            parts.append(os.path.join(base, f"wave={base_wave}", "seen_base"))
-        parts += [os.path.join(base, f"wave={w}", "seen_delta")
-                  for w in delta_waves]
-        d = os.path.join(base, f"wave={wave}")
-        if seen_delta is not None:
-            parts.append(os.path.join(d, "seen_delta"))
-        # one reader over all source dirs: a single scan+write job
-        self.spark.read.schema(_SEEN_SCHEMA).parquet(*parts) \
-            .write.mode("overwrite").parquet(os.path.join(d, "seen_base"))
-        return True
-
-    def _seen_sources(self, base, upto):
-        """(latest committed base wave <= upto or None, delta waves to
-        union after it). The seen set as of wave ``upto`` is
-        seen_base(base_wave) ∪ deltas of waves in (base_wave, upto] —
-        bounded fan-in regardless of crawl length."""
-        base_wave = None
-        deltas = []
-        for w in _committed_waves(base, upto):  # ascending: latest base wins
-            d = os.path.join(base, f"wave={w}")
-            if os.path.isdir(os.path.join(d, "seen_base")):
-                base_wave = w
-            if os.path.isdir(os.path.join(d, "seen_delta")):
-                deltas.append(w)
-        return base_wave, [
-            w for w in deltas if base_wave is None or w > base_wave
-        ]
-
-    def _try_resume(self, base):
-        if not os.path.isdir(base):
-            return None
-        upto = self.config.resume_upto_wave
-        waves = _committed_waves(base, upto)
-        if not waves:
-            if upto is not None:
-                raise CrawlError(
-                    f"resume_upto_wave={upto}: no committed snapshot at "
-                    f"or before that wave in {base}"
-                )
-            return None
-        last = max(waves)
-        d = os.path.join(base, f"wave={last}")
-        manifest = _read_manifest(d)
-        # every read pins the schema the engine wrote: no footer
-        # inference job, and a frontier written before hash-at-emission
-        # reads its missing url_hash / seen_key columns as null
-        read = self.spark.read.schema
-        frontier = read(schemas.FRONTIER_SCHEMA).parquet(
-            os.path.join(d, "frontier"))
-        base_wave, delta_waves = self._seen_sources(base, upto=last)
-        for w in waves:
-            # expiry leaves manifests intact; a wave that HAD a delta
-            # but lost the dir and isn't covered by a base at or before
-            # ``last`` means this rollback target predates the latest
-            # compaction — fail loudly, never rebuild an incomplete
-            # seen set (it would silently refetch)
-            if (base_wave is not None and w <= base_wave) or w in delta_waves:
-                continue
-            mf = _read_manifest(os.path.join(base, f"wave={w}"))
-            if mf.get("has_delta"):
-                raise CrawlError(
-                    f"wave {w}'s seen delta was expired by a later "
-                    f"compaction; cannot resume as of wave {last} — "
-                    f"resume at or after the latest seen_base snapshot"
-                )
-        if upto is not None:
-            # rollback: delete snapshots newer than the target so the
-            # replayed timeline is linear (abandoned-branch dirs would
-            # otherwise poison the NEXT resume's max-wave scan). Runs
-            # only after the completeness validation above — a REFUSED
-            # rollback must leave the live snapshot chain untouched.
-            for entry in os.listdir(base):
-                if entry.startswith("wave=") and (
-                        int(entry.split("=")[1]) > last):
-                    shutil.rmtree(os.path.join(base, entry))
-        parts = ([(base_wave, "seen_base")]
-                 if base_wave is not None else [])
-        parts += [(w, "seen_delta") for w in delta_waves]
-        seen = read(_SEEN_SCHEMA).parquet(
-            *[os.path.join(base, f"wave={w}", sub) for w, sub in parts])
-        # row counts from the manifests' footer stats (no job); None
-        # when an older manifest lacks them, and the caller counts
-        counts = [_manifest_rows(_read_manifest(
-            os.path.join(base, f"wave={w}")), sub) for w, sub in parts]
-        n_seen = None if None in counts else sum(counts)
-        # one multi-path scan: the wave number rides IN the data (the
-        # checkpoint writes the wave-lit column), so a 1000-wave resume
-        # costs one scan node, not 1000 union legs
-        results = [read(schemas.RESULT_SCHEMA).parquet(
-            *[os.path.join(base, f"wave={w}", "items") for w in waves]
-        )]
-        return (frontier, seen, results, list(manifest["metrics"]),
-                last + 1, _manifest_rows(manifest, "frontier"), n_seen)
 
     # ----------------------------------------------------------------- scout
     def scout(self, seeds: list[dict]) -> list[dict]:
@@ -2056,52 +1840,6 @@ class CrawlEngine:
             return self.crawl(seeds).items()
         finally:
             self.config = saved
-
-
-def _committed_waves(base: str, upto: int | None = None) -> list[int]:
-    """Ascending waves with a committed snapshot (its MANIFEST.json) in
-    ``base``, at or before ``upto`` when given."""
-    if not os.path.isdir(base):
-        return []
-    waves = (int(e.split("=")[1]) for e in os.listdir(base)
-             if e.startswith("wave="))
-    return sorted(w for w in waves if (upto is None or w <= upto)
-                  and os.path.exists(os.path.join(
-                      base, f"wave={w}", "MANIFEST.json")))
-
-
-def _read_manifest(wave_dir: str) -> dict:
-    with open(os.path.join(wave_dir, "MANIFEST.json")) as f:
-        return json.load(f)
-
-
-def _manifest_rows(manifest: dict, sub: str) -> int | None:
-    """Rows of snapshot subdir ``sub`` from the manifest's footer
-    stats, or None when the manifest predates them."""
-    files = manifest.get("files", {}).get(sub)
-    if files is None or any(fi.get("rows") is None for fi in files):
-        return None
-    return sum(fi["rows"] for fi in files)
-
-
-def _parquet_dir_stats(d: str) -> list[dict]:
-    """Per-file (relative path, bytes, rows) for every parquet part in
-    a snapshot dir — rows come from the footer metadata, no data scan.
-    The Iceberg-manifest analogue: size/row skew across part files is
-    visible from the manifest alone."""
-    out = []
-    for root, _, names in os.walk(d):
-        for n in sorted(names):
-            if not n.endswith(".parquet"):
-                continue
-            p = os.path.join(root, n)
-            try:
-                rows = pq.ParquetFile(p).metadata.num_rows
-            except Exception:
-                rows = None
-            out.append({"path": os.path.relpath(p, d),
-                        "bytes": os.path.getsize(p), "rows": rows})
-    return out
 
 
 def _union_tree(dfs: list, allow_missing: bool = False):

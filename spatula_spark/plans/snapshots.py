@@ -1,0 +1,461 @@
+"""Crawl-state snapshots: the one module that knows the snapshot format.
+
+The crawl engine commits wave state and resumes from it through one
+two-method contract, which both stores here implement:
+
+* ``commit(wave, frontier, seen_delta, items, metrics_rows)``: the full
+  frontier after wave ``wave``, the seen keys and result rows new since
+  the previous commit (``seen_delta`` None when none), and every
+  metrics row so far. The engine keeps the cadence for either store
+  (every ``checkpoint_every`` waves, optionally on one background
+  thread, plus a tail commit when the crawl stops mid-window).
+* ``resume(upto) -> Resumed | None``: the latest committed snapshot, or
+  with ``upto`` the latest at or before that wave, deleting later ones
+  so the replayed timeline is linear (Iceberg rollback_to_snapshot).
+
+Both commit manifest-last: readers take the latest manifested wave, so
+a kill mid-commit leaves the previous snapshot whole. ``seen_volatile``
+says whether the seen files a resume read can vanish mid-crawl.
+
+``ParquetSnapshots`` (``checkpoint_dir``) is a parquet-manifest
+ANALOGUE of Iceberg snapshots for deployments without the Iceberg
+runtime jar: one ``wave=N`` dir per commit holding ``frontier``,
+``seen_delta`` (append-only), ``items``, every ``_COMPACT_EVERY``
+deltas a ``seen_base`` (the whole seen set; ``expire_deltas`` deletes
+what it supersedes), and ``MANIFEST.json`` (written last).
+
+``IcebergSnapshots`` (``iceberg_table_prefix``) is the catalog-native
+store for deployments that have one (`spark-submit --packages
+org.apache.iceberg:iceberg-spark-runtime-...` plus a
+``spark.sql.catalog.<name>`` configuration): four real tables, the
+manifest table's row as commit marker, rollback as a row-level
+``DELETE ... WHERE wave > N``. Its append-only seen table has no delta
+fan-in to compact and no deltas to expire, so
+``checkpoint_expire_deltas`` with a prefix is rejected. Its e2e test
+(tests/test_crawl_media.py::test_iceberg_checkpoint_resume) is
+skip-marked without a catalog.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+from dataclasses import dataclass
+
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .. import schemas
+
+SEEN_SCHEMA = "url_hash long, seen_key long"
+
+# parquet seen compaction: every K committed seen deltas, the commit
+# rewrites the accumulated seen set as one seen_base under its wave, so
+# resume reads ONE base + at most K-1 deltas instead of every wave's
+# delta since the crawl began — a 1000-wave crawl at 10^10-URL scale
+# would otherwise fan in 1000 small parquet dirs. LSM-style tradeoff:
+# one O(|seen|) rewrite per K waves against resume fan-in.
+_COMPACT_EVERY = 16
+
+_ICEBERG_CATALOG_CLASSES = (
+    "org.apache.iceberg.spark.SparkCatalog",
+    "org.apache.iceberg.spark.SparkSessionCatalog",
+)
+
+
+class CrawlError(Exception):
+    pass
+
+
+@dataclass
+class Resumed:
+    """A committed snapshot, read back for the crawl to continue."""
+
+    frontier: DataFrame
+    seen: DataFrame
+    items: DataFrame  # every committed result row
+    metrics_rows: list[dict]
+    next_wave: int
+    # row counts known without a job, else None (the engine counts)
+    n_frontier: int | None
+    n_seen: int | None
+
+
+def open_snapshots(spark: SparkSession, cfg):
+    """The store a crawl with CrawlConfig ``cfg`` commits to and resumes
+    from: Iceberg tables when ``iceberg_table_prefix`` is set, else
+    parquet under ``checkpoint_dir``, else None (no snapshots)."""
+    if cfg.iceberg_table_prefix:
+        if cfg.checkpoint_expire_deltas:
+            raise CrawlError(
+                "checkpoint_expire_deltas applies to checkpoint_dir "
+                "snapshots only; unset it or iceberg_table_prefix"
+            )
+        if not iceberg_available(spark):
+            raise CrawlError(
+                "iceberg_table_prefix is set but no Iceberg catalog "
+                "is configured/loadable on this session (need "
+                "spark.sql.catalog.<name>=org.apache.iceberg.spark."
+                "SparkCatalog and the iceberg-spark-runtime jar); "
+                "use checkpoint_dir for the parquet-manifest analogue"
+            )
+        return IcebergSnapshots(spark, cfg.iceberg_table_prefix)
+    if cfg.checkpoint_dir:
+        return ParquetSnapshots(
+            spark, cfg.checkpoint_dir, cfg.checkpoint_expire_deltas)
+    return None
+
+
+class ParquetSnapshots:
+    """Wave-granular snapshots as ``wave=N`` parquet dirs under ``base``
+    (layout in the module docstring)."""
+
+    def __init__(self, spark: SparkSession, base: str,
+                 expire_deltas: bool):
+        self.spark = spark
+        self.base = base
+        self.expire_deltas = expire_deltas
+        # expiry after a compaction deletes seen dirs a resume read
+        self.seen_volatile = expire_deltas
+
+    def _path(self, wave: int, *sub: str) -> str:
+        return os.path.join(self.base, f"wave={wave}", *sub)
+
+    def commit(self, wave, frontier, seen_delta, items, metrics_rows):
+        """Full frontier + the seen and results deltas + metrics +
+        manifest. Atomicity is emulated by writing the manifest last."""
+        d = self._path(wave)
+        if os.path.exists(d):
+            shutil.rmtree(d)
+        frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
+        if seen_delta is not None:
+            seen_delta.write.mode("overwrite").parquet(
+                os.path.join(d, "seen_delta")
+            )
+        items.write.mode("overwrite").parquet(os.path.join(d, "items"))
+        has_base = self._compact_seen(wave, seen_delta)
+        # Iceberg-manifest file stats: per-file bytes + row counts read
+        # from the parquet footers (no data scan) — resumability and
+        # skew diagnostics ride the snapshot itself
+        stats = {
+            sub: _parquet_dir_stats(os.path.join(d, sub))
+            for sub in ("frontier", "seen_delta", "seen_base", "items")
+            if os.path.isdir(os.path.join(d, sub))
+        }
+        with open(os.path.join(d, "MANIFEST.json"), "w") as f:
+            json.dump({"wave": wave, "complete": True,
+                       "has_delta": seen_delta is not None,
+                       "seen_base": has_base, "files": stats,
+                       "metrics": metrics_rows}, f)
+        if has_base and self.expire_deltas:
+            self._expire_superseded(wave)
+
+    def _expire_superseded(self, new_base_wave):
+        """Delete seen deltas and older seen bases that the freshly
+        committed base at ``new_base_wave`` supersedes (Iceberg
+        expire_snapshots). Runs only AFTER the new base's manifest is
+        on disk, so a kill between compaction and expiry never loses
+        state. Manifests are untouched: their ``has_delta`` flags are
+        how a later rollback detects it cannot reach past the base."""
+        for w in self._waves():
+            if w > new_base_wave:
+                continue
+            delta = self._path(w, "seen_delta")
+            if os.path.isdir(delta):
+                shutil.rmtree(delta)
+            old_base = self._path(w, "seen_base")
+            if w < new_base_wave and os.path.isdir(old_base):
+                shutil.rmtree(old_base)
+
+    def _compact_seen(self, wave, seen_delta) -> bool:
+        """Compact the seen set into ``wave=N/seen_base`` when
+        ``_COMPACT_EVERY`` deltas have accumulated since the last base
+        (Iceberg manifest-rewrite analogue). Runs BEFORE this wave's
+        manifest, so a kill mid-compaction leaves the previous snapshot
+        chain fully intact. Per-wave deltas are disjoint by
+        construction (each holds only keys NEW that wave), so the base
+        is a plain union — no distinct shuffle."""
+        base_wave, delta_waves = self._seen_sources(upto=wave - 1)
+        pending = len(delta_waves) + (1 if seen_delta is not None else 0)
+        if pending < _COMPACT_EVERY:
+            return False
+        parts = ([self._path(base_wave, "seen_base")]
+                 if base_wave is not None else [])
+        parts += [self._path(w, "seen_delta") for w in delta_waves]
+        if seen_delta is not None:
+            parts.append(self._path(wave, "seen_delta"))
+        # one reader over all source dirs: a single scan+write job
+        self.spark.read.schema(SEEN_SCHEMA).parquet(*parts) \
+            .write.mode("overwrite").parquet(self._path(wave, "seen_base"))
+        return True
+
+    def _seen_sources(self, upto):
+        """(latest committed base wave <= upto or None, delta waves to
+        union after it). The seen set as of wave ``upto`` is
+        seen_base(base_wave) ∪ deltas of waves in (base_wave, upto] —
+        bounded fan-in regardless of crawl length."""
+        base_wave = None
+        deltas = []
+        # ascending: the latest base wins
+        for w in self._committed_waves(upto):
+            if os.path.isdir(self._path(w, "seen_base")):
+                base_wave = w
+            if os.path.isdir(self._path(w, "seen_delta")):
+                deltas.append(w)
+        return base_wave, [
+            w for w in deltas if base_wave is None or w > base_wave
+        ]
+
+    def resume(self, upto: int | None) -> Resumed | None:
+        if not os.path.isdir(self.base):
+            return None
+        waves = self._committed_waves(upto)
+        if not waves:
+            if upto is not None:
+                raise _no_snapshot_before(upto, self.base)
+            return None
+        last = max(waves)
+        manifest = self._manifest(last)
+        # every read pins the schema the engine wrote: no footer
+        # inference job, and a frontier written before hash-at-emission
+        # reads its missing url_hash / seen_key columns as null
+        read = self.spark.read.schema
+        frontier = read(schemas.FRONTIER_SCHEMA).parquet(
+            self._path(last, "frontier"))
+        base_wave, delta_waves = self._seen_sources(upto=last)
+        for w in waves:
+            # expiry leaves manifests intact; a wave that HAD a delta
+            # but lost the dir and isn't covered by a base at or before
+            # ``last`` means this rollback target predates the latest
+            # compaction — fail loudly, never rebuild an incomplete
+            # seen set (it would silently refetch)
+            if (base_wave is not None and w <= base_wave) or w in delta_waves:
+                continue
+            if self._manifest(w).get("has_delta"):
+                raise CrawlError(
+                    f"wave {w}'s seen delta was expired by a later "
+                    f"compaction; cannot resume as of wave {last} — "
+                    f"resume at or after the latest seen_base snapshot"
+                )
+        if upto is not None:
+            # rollback: delete snapshots newer than the target so the
+            # replayed timeline is linear (abandoned-branch dirs would
+            # otherwise poison the NEXT resume's max-wave scan). Runs
+            # only after the completeness validation above — a REFUSED
+            # rollback must leave the live snapshot chain untouched.
+            for w in self._waves():
+                if w > last:
+                    shutil.rmtree(self._path(w))
+        parts = ([(base_wave, "seen_base")]
+                 if base_wave is not None else [])
+        parts += [(w, "seen_delta") for w in delta_waves]
+        seen = read(SEEN_SCHEMA).parquet(
+            *[self._path(w, sub) for w, sub in parts])
+        # row counts from the manifests' footer stats (no job); None
+        # when an older manifest lacks them, and the caller counts
+        counts = [_manifest_rows(self._manifest(w), sub) for w, sub in parts]
+        n_seen = None if None in counts else sum(counts)
+        # one multi-path scan: the wave number rides IN the data (the
+        # items carry their wave column), so a 1000-wave resume costs
+        # one scan node, not 1000 union legs
+        items = read(schemas.RESULT_SCHEMA).parquet(
+            *[self._path(w, "items") for w in waves])
+        return Resumed(frontier, seen, items, list(manifest["metrics"]),
+                       last + 1, _manifest_rows(manifest, "frontier"),
+                       n_seen)
+
+    def _waves(self) -> list[int]:
+        """Every wave with a snapshot dir, committed or not."""
+        if not os.path.isdir(self.base):
+            return []
+        return [int(e.split("=")[1]) for e in os.listdir(self.base)
+                if e.startswith("wave=")]
+
+    def _committed_waves(self, upto: int | None) -> list[int]:
+        """Ascending waves with a committed snapshot (its MANIFEST.json),
+        at or before ``upto`` when given."""
+        return sorted(w for w in self._waves() if (upto is None or w <= upto)
+                      and os.path.exists(self._path(w, "MANIFEST.json")))
+
+    def _manifest(self, wave: int) -> dict:
+        with open(self._path(wave, "MANIFEST.json")) as f:
+            return json.load(f)
+
+
+def _no_snapshot_before(upto: int, where: str) -> CrawlError:
+    return CrawlError(f"resume_upto_wave={upto}: no committed snapshot at "
+                      f"or before that wave in {where}")
+
+
+def _manifest_rows(manifest: dict, sub: str) -> int | None:
+    """Rows of snapshot subdir ``sub`` from the manifest's footer
+    stats, or None when the manifest predates them."""
+    files = manifest.get("files", {}).get(sub)
+    if files is None or any(fi.get("rows") is None for fi in files):
+        return None
+    return sum(fi["rows"] for fi in files)
+
+
+def _parquet_dir_stats(d: str) -> list[dict]:
+    """Per-file (relative path, bytes, rows) for every parquet part in
+    a snapshot dir — rows come from the footer metadata, no data scan.
+    The Iceberg-manifest analogue: size/row skew across part files is
+    visible from the manifest alone."""
+    out = []
+    for root, _, names in os.walk(d):
+        for n in sorted(names):
+            if not n.endswith(".parquet"):
+                continue
+            p = os.path.join(root, n)
+            try:
+                rows = pq.ParquetFile(p).metadata.num_rows
+            except Exception:
+                rows = None
+            out.append({"path": os.path.relpath(p, d),
+                        "bytes": os.path.getsize(p), "rows": rows})
+    return out
+
+
+def iceberg_catalogs(spark: SparkSession) -> list[str]:
+    """Names of Iceberg catalogs configured on this session (empty when
+    the runtime jar or the configuration is absent)."""
+    out = []
+    for k, v in spark.sparkContext.getConf().getAll():
+        if (
+            k.startswith("spark.sql.catalog.")
+            and k.count(".") == 3
+            and v in _ICEBERG_CATALOG_CLASSES
+        ):
+            out.append(k.rsplit(".", 1)[1])
+    if not out:
+        return []
+    try:  # the configuration may name a class the classpath lacks
+        spark.sparkContext._jvm.java.lang.Class.forName(
+            _ICEBERG_CATALOG_CLASSES[0]
+        )
+    except Exception:
+        return []
+    return sorted(out)
+
+
+def iceberg_available(spark: SparkSession) -> bool:
+    return bool(iceberg_catalogs(spark))
+
+
+class IcebergSnapshots:
+    """Wave-granular crawl snapshots as four catalog tables under
+    ``prefix`` (``<catalog>.<namespace>.<name>``):
+
+    ``<prefix>_frontier``  wave-partitioned full frontier per commit
+    ``<prefix>_seen``      append-only (url_hash, seen_key, wave)
+    ``<prefix>_items``     append-only results, by their own wave column
+    ``<prefix>_manifest``  1 row per committed wave (written LAST)
+    """
+
+    # resume's seen rows are a filter over a table later commits and
+    # rollbacks change
+    seen_volatile = True
+
+    def __init__(self, spark: SparkSession, prefix: str):
+        if prefix.count(".") != 2:
+            raise ValueError(
+                "iceberg_table_prefix must be catalog.namespace.name, "
+                f"got {prefix!r}"
+            )
+        self.spark = spark
+        self.prefix = prefix
+        self.catalog, self.namespace = prefix.split(".")[:2]
+        self._ensured = False
+
+    def _t(self, name: str) -> str:
+        return f"{self.prefix}_{name}"
+
+    def _ensure_tables(self, frontier: DataFrame, items: DataFrame) -> None:
+        if self._ensured:
+            return
+        self.spark.sql(
+            f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.{self.namespace}"
+        )
+        for name, df in (
+            ("frontier", frontier.withColumn("wave", F.lit(0))),
+            ("items", items),
+        ):
+            df.limit(0).writeTo(self._t(name)).partitionedBy(
+                F.col("wave")
+            ).using("iceberg").createOrReplace()
+        self.spark.sql(
+            f"CREATE OR REPLACE TABLE {self._t('seen')} "
+            "(url_hash BIGINT, seen_key BIGINT, wave INT) USING iceberg "
+            "PARTITIONED BY (wave)"
+        )
+        self.spark.sql(
+            f"CREATE OR REPLACE TABLE {self._t('manifest')} "
+            "(wave INT, metrics_json STRING) USING iceberg"
+        )
+        self._ensured = True
+
+    # ------------------------------------------------------------ commit
+    def commit(self, wave, frontier, seen_delta, items, metrics_rows):
+        self._ensure_tables(frontier, items)
+        w = F.lit(wave).cast("int")
+        if seen_delta is not None:
+            seen_delta.select(
+                "url_hash", "seen_key", w.alias("wave")
+            ).writeTo(self._t("seen")).append()
+        # items keep the wave that emitted them: every one is at or
+        # before this commit's wave, and after the previous commit's
+        items.writeTo(self._t("items")).append()
+        frontier.withColumn("wave", w).writeTo(self._t("frontier")).append()
+        # manifest row LAST = the atomic commit marker (readers take
+        # max(manifest.wave); everything above is invisible until here)
+        self.spark.createDataFrame(
+            [(wave, json.dumps(metrics_rows))], "wave int, metrics_json string"
+        ).writeTo(self._t("manifest")).append()
+
+    # ------------------------------------------------------------ resume
+    def resume(self, upto: int | None) -> Resumed | None:
+        """The row counts are None: the engine counts the tables."""
+        if not self.spark.catalog.tableExists(self._t("manifest")):
+            return None
+        man = self.spark.table(self._t("manifest"))
+        if upto is not None:
+            man = man.filter(F.col("wave") <= upto)
+        row = man.orderBy(F.col("wave").desc()).limit(1).collect()
+        if not row:
+            if upto is not None:
+                raise _no_snapshot_before(upto, self.prefix)
+            return None
+        last = int(row[0]["wave"])
+        # also drops rows a killed commit appended after ``last``: the
+        # replayed waves append them again
+        self._rollback_past(last)
+        # the tables hold the snapshot chain: later commits append
+        self._ensured = True
+        frontier = (
+            self.spark.table(self._t("frontier"))
+            .filter(F.col("wave") == last).drop("wave")
+        )
+        seen = (
+            self.spark.table(self._t("seen"))
+            .filter(F.col("wave") <= last).select("url_hash", "seen_key")
+        )
+        items = (
+            self.spark.table(self._t("items"))
+            .filter(F.col("wave") <= last)
+        )
+        return Resumed(frontier, seen, items,
+                       list(json.loads(row[0]["metrics_json"])), last + 1,
+                       None, None)
+
+    def _rollback_past(self, wave: int) -> None:
+        """Time-travel rollback: delete every row newer than ``wave``
+        so the replayed timeline is linear (the parquet analogue
+        deletes abandoned wave dirs). Row-level DELETE is the Iceberg
+        way; it commits a new snapshot per table, so a crash mid-way
+        re-runs idempotently on the next resume."""
+        for name in ("manifest", "frontier", "seen", "items"):
+            self.spark.sql(
+                f"DELETE FROM {self._t(name)} WHERE wave > {wave}"
+            )

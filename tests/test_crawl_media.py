@@ -4,10 +4,13 @@ kill-and-resume from checkpoint (north-rule mandates)."""
 
 import json
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from spatula_spark.plans import engine as engine_mod
+from spatula_spark.plans import snapshots
 from spatula_spark.plans.engine import CrawlConfig, CrawlEngine
 from spatula_spark.plans.media_pipeline import (
     crawl_items_df,
@@ -174,10 +177,10 @@ def test_virtual_fetcher_matches_store(spark):
                  skew=1, with_errors=True, with_flaky=True)
     st = w.page_store_with_media(spark)
     eng_store = CrawlEngine(spark, media_verify_registry(), page_store=st,
-                            config=CrawlConfig(use_bloom=False))
+                            config=CrawlConfig(bloom_min_seen=None))
     eng_virtual = CrawlEngine(spark, media_verify_registry(),
                               fetch_fn=w.fetcher(),
-                              config=CrawlConfig(use_bloom=False))
+                              config=CrawlConfig(bloom_min_seen=None))
     r1 = eng_store.crawl(w.seeds())
     r2 = eng_virtual.crawl(w.seeds())
     i1 = r1.items()
@@ -300,10 +303,10 @@ def test_robots_blocks_prefix(spark, web, store):
     assert got == expected_detail_urls(web) - blocked
 
 
-def test_bloom_and_exact_agree(spark, web, store):
-    base = CrawlConfig(use_bloom=False)
-    bloom = CrawlConfig(use_bloom=True, bloom_min_seen=1,
-                        bloom_shard_capacity=1 << 14)
+def test_bloom_and_exact_agree(spark, web, store, monkeypatch):
+    monkeypatch.setattr(engine_mod, "_BLOOM_SHARD_CAPACITY", 1 << 14)
+    base = CrawlConfig(bloom_min_seen=None)
+    bloom = CrawlConfig(bloom_min_seen=1)
     r1 = CrawlEngine(spark, media_registry(), page_store=store,
                      config=base).crawl(web.seeds())
     r2 = CrawlEngine(spark, media_registry(), page_store=store,
@@ -421,7 +424,8 @@ def test_checkpoint_resume_identical(spark, web, store, tmp_path):
     shutil.rmtree(ck, ignore_errors=True)
 
 
-def test_resume_then_compaction_and_expiry(spark, web, store, tmp_path):
+def test_resume_then_compaction_and_expiry(
+        spark, web, store, tmp_path, monkeypatch):
     """A crawl stopped at wave 2 and resumed with compaction + expiry:
     the resumed crawl compacts and expires the very seen dirs its
     resume read, so the resumed seen slice must be a private copy —
@@ -430,8 +434,8 @@ def test_resume_then_compaction_and_expiry(spark, web, store, tmp_path):
     import os
 
     ck = str(tmp_path / "ckx")
-    cfg = dict(checkpoint_dir=ck, checkpoint_compact_every=2,
-               checkpoint_expire_deltas=True)
+    monkeypatch.setattr(snapshots, "_COMPACT_EVERY", 2)
+    cfg = dict(checkpoint_dir=ck, checkpoint_expire_deltas=True)
     full = CrawlEngine(spark, media_registry(), page_store=store,
                        config=CrawlConfig()).crawl(web.seeds())
     CrawlEngine(spark, media_registry(), page_store=store,
@@ -480,6 +484,7 @@ def test_lazy_bloom_parity_no_wasted_builds(
 
     monkeypatch.setattr(ShardedBloom, "add_hashes_df", add_hashes_df)
     monkeypatch.setattr(CrawlEngine, "_dedup", dedup)
+    monkeypatch.setattr(engine_mod, "_BLOOM_SHARD_CAPACITY", 1 << 14)
 
     def run(use_bloom):
         ck = str(tmp_path / f"ckb{int(use_bloom)}")
@@ -489,8 +494,7 @@ def test_lazy_bloom_parity_no_wasted_builds(
             out.append(CrawlEngine(
                 spark, media_registry(), page_store=store,
                 config=CrawlConfig(checkpoint_dir=ck, max_waves=waves,
-                                   use_bloom=use_bloom, bloom_min_seen=1,
-                                   bloom_shard_capacity=1 << 14),
+                                   bloom_min_seen=1 if use_bloom else None),
             ).crawl(web.seeds()))
         return out
 
@@ -552,24 +556,24 @@ def test_checkpoint_every_k_async_resume_identical(
 
 
 def test_checkpoint_seen_compaction_bounds_resume_fanin(
-        spark, web, store, tmp_path):
-    """checkpoint_compact_every=K rewrites the accumulated seen set as
-    one seen_base every K deltas (Iceberg manifest-rewrite analogue),
+        spark, web, store, tmp_path, monkeypatch):
+    """Seen compaction (K = _COMPACT_EVERY, patched to 2) rewrites the
+    accumulated seen set as one seen_base every K deltas (Iceberg
+    manifest-rewrite analogue),
     so resume reads one base + <K deltas no matter how many waves ran —
     without it a long crawl's resume unions every wave's little delta
     dir since wave 0. Kill-and-resume must stay byte-identical."""
     import os
 
     ck = str(tmp_path / "ckc")
+    monkeypatch.setattr(snapshots, "_COMPACT_EVERY", 2)
     full = CrawlEngine(spark, media_registry(), page_store=store,
                        config=CrawlConfig()).crawl(web.seeds())
     CrawlEngine(spark, media_registry(), page_store=store,
-                config=CrawlConfig(checkpoint_dir=ck, max_waves=2,
-                                   checkpoint_compact_every=2)
+                config=CrawlConfig(checkpoint_dir=ck, max_waves=2)
                 ).crawl(web.seeds())
     eng = CrawlEngine(spark, media_registry(), page_store=store,
-                      config=CrawlConfig(checkpoint_dir=ck,
-                                         checkpoint_compact_every=2))
+                      config=CrawlConfig(checkpoint_dir=ck))
     res = eng.crawl(web.seeds())
     got = {r["url"] for r in crawl_items_df(res.results).collect()}
     want = {r["url"] for r in crawl_items_df(full.results).collect()}
@@ -578,7 +582,7 @@ def test_checkpoint_seen_compaction_bounds_resume_fanin(
 
     last = max(int(e.split("=")[1]) for e in os.listdir(ck)
                if e.startswith("wave="))
-    base_wave, deltas = eng._seen_sources(ck, upto=last)
+    base_wave, deltas = eng._store._seen_sources(upto=last)
     assert base_wave is not None  # compaction actually ran
     assert len(deltas) < 2  # bounded fan-in: fewer than K deltas live
     # the compacted view (base + post-base deltas) must equal the
@@ -634,7 +638,8 @@ def test_checkpoint_rollback_time_travel(spark, web, store, tmp_path):
     shutil.rmtree(ck, ignore_errors=True)
 
 
-def test_checkpoint_expiry_and_manifest_stats(spark, web, store, tmp_path):
+def test_checkpoint_expiry_and_manifest_stats(
+        spark, web, store, tmp_path, monkeypatch):
     """checkpoint_expire_deltas deletes what each new seen_base
     supersedes (storage stays ~1x the seen set), manifests carry
     per-file byte/row stats from the parquet footers, resume from the
@@ -644,8 +649,8 @@ def test_checkpoint_expiry_and_manifest_stats(spark, web, store, tmp_path):
     import os
 
     ck = str(tmp_path / "cke")
-    cfg = CrawlConfig(checkpoint_dir=ck, checkpoint_compact_every=2,
-                      checkpoint_expire_deltas=True)
+    monkeypatch.setattr(snapshots, "_COMPACT_EVERY", 2)
+    cfg = CrawlConfig(checkpoint_dir=ck, checkpoint_expire_deltas=True)
     res = CrawlEngine(spark, media_registry(), page_store=store,
                       config=cfg).crawl(web.seeds())
     n_items = res.results.count()
@@ -756,7 +761,7 @@ def test_iceberg_backend_requires_catalog(spark, web, store):
     container ships no Iceberg runtime jar) fails loudly with guidance
     instead of silently degrading to the parquet analogue."""
     from spatula_spark.plans.engine import CrawlError
-    from spatula_spark.plans.iceberg import iceberg_available
+    from spatula_spark.plans.snapshots import iceberg_available
 
     assert not iceberg_available(spark)
     eng = CrawlEngine(
@@ -767,8 +772,84 @@ def test_iceberg_backend_requires_catalog(spark, web, store):
         eng.crawl(web.seeds())
 
 
+def test_iceberg_rejects_delta_expiry(spark, web, store):
+    """checkpoint_expire_deltas has no Iceberg counterpart (the seen
+    table keeps no deltas to expire): with iceberg_table_prefix it is
+    rejected before any catalog lookup, not silently ignored."""
+    from spatula_spark.plans.engine import CrawlError
+
+    eng = CrawlEngine(
+        spark, media_registry(), page_store=store,
+        config=CrawlConfig(iceberg_table_prefix="ice.crawl.t",
+                           checkpoint_expire_deltas=True),
+    )
+    with pytest.raises(CrawlError, match="checkpoint_expire_deltas.*"
+                                         "iceberg_table_prefix"):
+        eng.crawl(web.seeds())
+
+
+class _RecordingStore:
+    """A snapshot store that records each commit (its wave, item rows,
+    seen-delta size and metrics-row count) and how many ran to the end."""
+
+    seen_volatile = False
+
+    def __init__(self):
+        self.commits: list[tuple] = []
+        self.done = 0
+
+    def commit(self, wave, frontier, seen_delta, items, metrics_rows):
+        self.commits.append((
+            wave, sorted((r["path"], r["wave"]) for r in items.collect()),
+            0 if seen_delta is None else seen_delta.count(),
+            len(metrics_rows)))
+        time.sleep(0.5)  # keeps an async commit in flight a while
+        self.done += 1
+
+    def resume(self, upto):
+        return None
+
+
+@pytest.mark.parametrize("async_commit", [False, True])
+def test_commit_cadence_through_store(
+        spark, web, store, monkeypatch, async_commit):
+    """The engine keeps the commit cadence for whichever store _begin
+    opens, here a recording one: with checkpoint_every=2 a commit lands
+    on every second wave, plus a tail commit when the crawl stops
+    mid-window (a max_waves stop, or a drained frontier); each commit
+    carries exactly its window's items and seen keys and every metrics
+    row so far; the async mode commits the same sequence and has
+    nothing in flight when crawl() returns."""
+    opened: list[_RecordingStore] = []
+
+    def open_recording(spark, cfg):
+        opened.append(_RecordingStore())
+        return opened[-1]
+
+    monkeypatch.setattr(engine_mod, "open_snapshots", open_recording)
+    for max_waves in (3, None):
+        res = CrawlEngine(
+            spark, media_registry(), page_store=store,
+            config=CrawlConfig(checkpoint_every=2, max_waves=max_waves,
+                               checkpoint_async=async_commit),
+        ).crawl(web.seeds())
+        rec, n = opened[-1], res.waves
+        assert (n == 3) if max_waves else (n > 3)
+        assert rec.done == len(rec.commits)
+        windows = [(w - 1, w) for w in range(1, n, 2)]
+        if n % 2:
+            windows.append((n - 1, n - 1))  # the tail commit
+        assert [c[0] for c in rec.commits] == [hi for _, hi in windows]
+        items = [(r["path"], r["wave"]) for r in res.results.collect()]
+        fetched = res.metrics["fetched"].tolist()
+        for (lo, hi), (_, got, n_seen, n_rows) in zip(windows, rec.commits):
+            assert got == sorted(i for i in items if lo <= i[1] <= hi)
+            assert n_seen == sum(fetched[lo:hi + 1])
+            assert n_rows == hi + 1
+
+
 def _iceberg_ready():
-    from spatula_spark.plans.iceberg import iceberg_available
+    from spatula_spark.plans.snapshots import iceberg_available
     from spatula_spark.session import get_spark
 
     try:
@@ -787,7 +868,7 @@ def test_iceberg_checkpoint_resume(spark, web, store):
     """Kill-and-resume contract on the REAL Iceberg backend — the twin
     of test_checkpoint_resume_identical, same assertions, catalog
     tables instead of the parquet-manifest analogue."""
-    from spatula_spark.plans.iceberg import iceberg_catalogs
+    from spatula_spark.plans.snapshots import iceberg_catalogs
 
     prefix = f"{iceberg_catalogs(spark)[0]}.spatula_test.crawl"
     full = CrawlEngine(spark, media_registry(), page_store=store,

@@ -171,7 +171,7 @@ def _registry():
 def engine(spark, tiny_store):
     return CrawlEngine(
         spark, _registry(), page_store=tiny_store,
-        config=CrawlConfig(use_bloom=False),
+        config=CrawlConfig(bloom_min_seen=None),
     )
 
 
@@ -181,7 +181,7 @@ def _run(engine, cls, input=None, **cfg):
 
         eng = CrawlEngine(
             engine.spark, engine.registry,
-            config=CrawlConfig(**{**CrawlConfig(use_bloom=False).__dict__, **cfg}),
+            config=CrawlConfig(**{**CrawlConfig(bloom_min_seen=None).__dict__, **cfg}),
         )
         eng.page_store = engine.page_store
         engine = eng
@@ -309,7 +309,7 @@ def test_unhandled_error_fail_fast(engine, spark, tiny_store):
         process_page=lambda ctx: {},
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     with pytest.raises(CrawlError, match="HTTP error"):
         eng.crawl([{"page_cls": "Unhandled"}])
 
@@ -322,7 +322,7 @@ def test_missing_url_is_404(engine, spark, tiny_store):
         process_page=lambda ctx: {},
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     with pytest.raises(CrawlError, match="status=404"):
         eng.crawl([{"page_cls": "Nowhere"}])
 
@@ -348,7 +348,7 @@ def test_page_factories_force_parse_kind(engine, spark, tiny_store):
         process_page=lambda ctx: ctx.json,
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     assert eng.crawl([{"page_cls": "ForcedHtmlList"}]).items() == [
         "one", "two", "three",
     ]
@@ -375,7 +375,7 @@ def test_pdf_page_golden(spark, tiny_store):
         process_page=lambda ctx: {"text": ctx.text},
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     assert eng.crawl([{"page_cls": "PdfDoc"}]).items() == [
         {"text": "Hello World\nCol1Col2\n"}
     ]
@@ -394,7 +394,7 @@ def test_excel_list_golden(spark, tiny_store):
         "XlsxList", source="http://xlsx.example.com/data",
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     assert eng.crawl([{"page_cls": "XlsxList"}]).items() == [
         ["a", "b", "c"], [1, 2, 3], [4, 5, 6],
     ]
@@ -425,7 +425,7 @@ def test_per_input_dependency(spark, tiny_store):
     # default config: dedup keys on page identity (cls, url, input), so
     # the two Detail shims sharing one dep URL must BOTH process
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     res = eng.crawl([{"page_cls": "Root"}])
     assert res.items() == [
         {"n": 1, "award": "gold-1"},
@@ -464,7 +464,7 @@ def test_multi_per_input_dependencies(spark, tiny_store):
         ],
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     res = eng.crawl([{"page_cls": "Root2"}])
     assert res.items() == [
         {"n": 1, "award": "gold-1", "shout": "GOLD"},
@@ -496,7 +496,7 @@ def test_dedup_is_page_identity_not_url(spark, tiny_store):
         ],
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     res = eng.crawl([{"page_cls": "Fan"}])
     assert res.items() == [
         {"who": "a", "award": "gold"},
@@ -538,7 +538,7 @@ def test_scout_escapes_json(spark, tiny_store):
         )],
     ))
     eng = CrawlEngine(spark, reg, page_store=tiny_store,
-                      config=CrawlConfig(use_bloom=False))
+                      config=CrawlConfig(bloom_min_seen=None))
     out = eng.scout([{"page_cls": "Evil"}])
     assert out == [{
         "data": None,
@@ -587,7 +587,7 @@ def test_parse_error_dead_letter(spark):
     reg.register(json_page("GoodJson", source=f"{base}/good",
                            process_page=lambda ctx: ctx.json))
     eng = CrawlEngine(spark, reg, page_store=store,
-                      config=CrawlConfig(use_bloom=False, fail_fast=False))
+                      config=CrawlConfig(bloom_min_seen=None, fail_fast=False))
     res = eng.crawl([{"page_cls": c}
                      for c in ("LzwDoc", "BadJson", "GoodJson")])
     assert res.items() == [{"ok": 1}]
@@ -601,5 +601,5 @@ def test_parse_error_dead_letter(spark):
     with pytest.raises(CrawlError, match="parse_error: pdf"):
         CrawlEngine(
             spark, reg, page_store=store,
-            config=CrawlConfig(use_bloom=False),
+            config=CrawlConfig(bloom_min_seen=None),
         ).crawl([{"page_cls": "LzwDoc"}])

@@ -132,7 +132,7 @@ def test_http_headers_and_user_agent(spark, site):
         fetch_fn=make_http_fetcher(
             user_agent="spatula-test 9.9", headers={"X-Custom": "yes"},
         ),
-        config=CrawlConfig(use_bloom=False),
+        config=CrawlConfig(bloom_min_seen=None),
     )
     res = eng.crawl([{"page_cls": "Echo", "url": f"{site}/echo-header"}])
     assert res.items() == [{"x_custom": "yes", "ua": "spatula-test 9.9"}]
@@ -151,7 +151,7 @@ def test_http_fastmode_cache(spark, site, tmp_path):
             fetch_fn=make_http_fetcher(
                 user_agent="c", headers={"X-Custom": "c"}, cache_dir=cache,
             ),
-            config=CrawlConfig(use_bloom=False),
+            config=CrawlConfig(bloom_min_seen=None),
         )
         return eng.crawl([{"page_cls": "Echo", "url": f"{site}/echo-header"}])
 

@@ -64,7 +64,7 @@ def test_recrawl_schedules_exactly_the_mutated_pages(spark):
     for t, version in ((1_000, 1), (2_000, 2)):
         eng = CrawlEngine(
             spark, _registry(), page_store=_store(spark, version),
-            config=CrawlConfig(use_bloom=False),
+            config=CrawlConfig(bloom_min_seen=None),
         )
         snaps += [
             {**item, "t": t} for item in eng.crawl(seeds).items()
@@ -150,7 +150,7 @@ def test_sitemap_driven_crawl_through_engine(spark):
         name="LeafPage", process_page=lambda ctx: {"u": ctx.url},
     ))
     eng = CrawlEngine(
-        spark, reg, page_store=store, config=CrawlConfig(use_bloom=False),
+        spark, reg, page_store=store, config=CrawlConfig(bloom_min_seen=None),
     )
     res = eng.crawl([{"page_cls": "SitemapPage", "url": idx_url}])
     assert [i["u"] for i in res.items()] == details

@@ -686,3 +686,20 @@ def test_session_conf_written_only_by_session_module():
         if re.search(r"\.conf\.(un)?set\(", p.read_text())
     )
     assert writers == ["session.py"]
+
+
+def test_snapshot_format_known_only_by_snapshots_module():
+    """The snapshot layout (manifest file, seen delta and base dirs)
+    is one module's decision: the engine reaches it only through the
+    store's commit/resume contract."""
+    import pathlib
+    import re
+
+    import spatula_spark
+
+    root = pathlib.Path(spatula_spark.__file__).parent
+    users = sorted(
+        str(p.relative_to(root)) for p in root.rglob("*.py")
+        if re.search(r"MANIFEST\.json|seen_delta|seen_base", p.read_text())
+    )
+    assert users == ["plans/snapshots.py"]
