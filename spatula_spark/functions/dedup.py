@@ -247,6 +247,13 @@ def _capped_bucket_pairs(
     Returns columns ``(_a, _b[, _pa, _pb])`` — ids and, when
     ``payload_c`` is given, the payload (fingerprint) of each side.
     Bucket-min hubs guarantee ``_a < _b``.
+
+    Invariant: the ``key_cols`` are non-null. Every caller's keys are
+    (band literal, md5 band signature), (band literal, bit block of a
+    fingerprint), or a null-filtered cluster id. The stats join-back drops a
+    null-key row (a null fingerprint), which then emits nothing — the
+    same as in the uncapped equi-join — whereas a count/min window
+    would have pooled every null key into one bucket.
     """
     pay = [payload_c] if payload_c else []
     hub_struct = F.struct(
@@ -510,6 +517,10 @@ def incremental_near_dups(
     which is why the gate-scale battery query runs uncapped.
     ``stats`` (opt-in) is filled with the same cap telemetry as
     :func:`_capped_bucket_pairs`.
+
+    The ``(band, bsig)`` bucket keys are never null (``bsig`` is md5
+    over ``concat_ws``, which skips nulls), so the cap's stats
+    join-back keeps every base band row.
     """
     # both sides are read twice (signature build + text re-join in the
     # verify stage) — same lifecycle as minhash_dedup_pairs
@@ -621,7 +632,13 @@ def containment_pairs(
     is asymmetric): ``(doc_a, doc_b, containment)`` = share of doc_a's
     pruned shingles that also occur in doc_b, ≥ ``threshold``,
     doc_a ≠ doc_b, rounded to 6 places (integer-count division —
-    bit-identical cross-engine)."""
+    bit-identical cross-engine).
+
+    The call itself runs Spark work: the pruned posting table is cut
+    with an EAGER ``localCheckpoint`` before this returns (one job for
+    the shingle explode and hot-gram anti-join), and its blocks stay
+    on the executors until the returned DataFrame is garbage
+    collected on the driver."""
     posts = (
         _spread(df)
         .select(
@@ -1067,7 +1084,12 @@ def _mih_near_dups(
     bucket therefore meet only the hub (the lossy, documented trade:
     an outside probe within radius of a member but not hub-connected
     through any other small bucket is dropped — telemetry via
-    ``stats``)."""
+    ``stats``).
+
+    The ``(b, key)`` block keys are null only for a null fingerprint.
+    The cap's stats join-back drops such a row, as the probe
+    equi-join does without the cap, so a null fingerprint never has
+    a near-dup either way."""
     q = max_hamming // 4
     masks = [0]
     masks += [1 << j for j in range(16)]

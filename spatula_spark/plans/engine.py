@@ -16,7 +16,8 @@ one at a time, this engine keeps it in a DataFrame and processes one
              input), and in-wave first-wins dedup (min_by path per
              (url_hash, seen_key))
            _fetch: broadcast-frontier probe of the page-store on
-             xxhash64(canon url) (shuffle join above broadcast_fetch_max)
+             xxhash64(canon url) (shuffle join above broadcast_fetch_max);
+             not-in-store (404) rows anti-join the wave's found keys
            _transform: per-class transform, exactly one pass per row:
              * native specs -> pure Catalyst column exprs (JVM only)
              * hook specs   -> one Arrow mapInPandas dispatch (emits
@@ -63,7 +64,10 @@ Scale notes (the part that must survive 100 TB / 10^10 URLs):
   on (url_hash, seen_key); the seen check reuses that exchange, and
   the fetch broadcasts the frontier against the page store in place —
   payload bytes are NEVER shuffled (waves above broadcast_fetch_max
-  fall back to a bucketed shuffle join).
+  fall back to a bucketed shuffle join). The 404 rows are the
+  frontier anti-joined against a broadcast of the wave's own found
+  keys, so every broadcast a wave builds is wave-sized, never
+  store-sized.
 * Politeness ranks only the hosts a count-aggregate proves over
   budget; cold hosts bypass the sort via a broadcast hash join. Hot
   hosts in the real-HTTP fetch path are salt-split on
@@ -108,6 +112,7 @@ from . import native as N
 from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
 from ..operators.parsers import UnsupportedDocumentError
+from ..sources.http_fetch import FETCHED_SCHEMA
 from ..urls import canonicalize_url, host_of, url_hash
 from .snapshots import SEEN_SCHEMA, CrawlError, open_snapshots
 from .pagespec import (
@@ -140,18 +145,9 @@ _EMISSION_OUT_SCHEMA = (
 
 _EMISSION_COLS = [c.split()[0] for c in _EMISSION_OUT_SCHEMA.split(", ")]
 
-# fetched-row schema for driver-built missing (404) rows — must match
-# the fetch join's found_cols projection column-for-column; also the batch's
-# column order (_BATCH_SELECT)
-_FETCHED_LOCAL_SCHEMA = (
-    "page_cls string, path string, url string, input_json string, "
-    "payload binary, links array<string>, next_url string, status int, "
-    "attempts int, page_seq int, payload_kind string, image_id string, "
-    "found boolean, priority int, flaky_rejects int, "
-    "url_hash bigint, seen_key bigint"
-)
-
-_BATCH_SELECT = [c.split()[0] for c in _FETCHED_LOCAL_SCHEMA.split(", ")]
+# the fetched batch's column order: the fetch join's found_cols and
+# missing_cols projections and the real-HTTP fetcher all produce it
+_BATCH_SELECT = [c.split()[0] for c in FETCHED_SCHEMA.split(", ")]
 
 _DEAD_KINDS = ("error", "reject")  # the kinds fail_fast raises on
 
@@ -271,28 +267,6 @@ class CrawlConfig:
     # 1 GiB and ~17M at 24 GiB, scaling with what the deployment
     # actually provisioned. Set an int to pin it explicitly.
     broadcast_fetch_max: int | None = None
-    # the 404 anti-join's store-keys broadcast is O(|store|), not
-    # O(wave): above this many store rows, derive "missing" via a
-    # shuffle anti-join against the url_hash-partitioned keys-only
-    # store copy instead (frontier side is wave-sized; the store side
-    # reuses its bucketing, key column pruned)
-    broadcast_store_keys_max: int = 4_000_000
-    # driver-side store keyset (fast-path 404 detection): at or below
-    # this many store rows the url_hash set is collected ONCE (~80 B/
-    # key in a Python set) and small-wave found/missing splits happen
-    # in Python — no per-wave store-keys broadcast job at all. Bigger
-    # stores keep the in-plan anti-join. None (default) derives the
-    # cap from the provisioned driver heap — 5% at ~80 B/key (~650k
-    # at Spark's stock 1 GiB, ~16M at 24 GiB) — so a larger deployment
-    # widens the fast path instead of inheriting a laptop literal.
-    driver_store_keys_max: int | None = None
-    # cap on the driver-resident seen-set twin (~100-150 B/key in a
-    # Python set): beyond this the twin is dropped and cluster dedup
-    # owns the rest of the crawl. Deep chains add O(1) keys/wave and
-    # never approach it; breadth-heavy crawls lose the twin early via
-    # driver_wave_max anyway. None (default) derives from the driver
-    # heap like driver_store_keys_max (5% at ~130 B/key).
-    driver_seen_max: int | None = None
 
 
 _MEM_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -746,8 +720,6 @@ class CrawlEngine:
         else:
             self.page_store = None
         self._store_bykey = None
-        self._store_keys_bykey = None
-        self._store_rows = None  # counted lazily on first fetch
         # memory-budget default for the broadcast-fetch cap (see
         # CrawlConfig.broadcast_fetch_max)
         heap = _driver_heap(spark)
@@ -755,21 +727,25 @@ class CrawlEngine:
             self._bcast_fetch_max = _broadcast_rows_budget(spark, heap=heap)
         else:
             self._bcast_fetch_max = self.config.broadcast_fetch_max
-        # driver-python-structure caps: derive from the provisioned
-        # driver heap when left at None (the literals-don't-scale
-        # amber from round 4) — a python set key costs ~80 B (ints) to
+        # driver-python-structure caps, derived from the provisioned
+        # driver heap (the literals-don't-scale amber from round 4) so a
+        # larger deployment widens the fast path instead of inheriting
+        # a laptop literal: a python set key costs ~80 B (ints) to
         # ~130 B (with overhead), and 5% of heap is a safe residency
-        # budget beside py4j + result buffers
-        self._driver_store_keys_max = (
-            self.config.driver_store_keys_max
-            if self.config.driver_store_keys_max is not None
-            else _broadcast_rows_budget(spark, 0.05, 80, heap)
-        )
-        self._driver_seen_max = (
-            self.config.driver_seen_max
-            if self.config.driver_seen_max is not None
-            else _broadcast_rows_budget(spark, 0.05, 130, heap)
-        )
+        # budget beside py4j + result buffers.
+        # Driver-side store keyset (fast-path 404 detection): at or
+        # below this many store rows the url_hash set is collected ONCE
+        # and small-wave found/missing splits happen in Python (~650k
+        # keys at Spark's stock 1 GiB, ~16M at 24 GiB); bigger stores
+        # keep the in-plan anti-join.
+        self._driver_store_keys_max = _broadcast_rows_budget(
+            spark, 0.05, 80, heap)
+        # Driver-resident seen-set twin: beyond this the twin is dropped
+        # and cluster dedup owns the rest of the crawl. Deep chains add
+        # O(1) keys/wave and never approach it; breadth-heavy crawls
+        # lose the twin early via driver_wave_max anyway.
+        self._driver_seen_max = _broadcast_rows_budget(
+            spark, 0.05, 130, heap)
         # lazily-built wave-invariant Column cache (see _wave_exprs —
         # rebuilding expression trees every wave is driver-bound)
         self._dedup_agg = None
@@ -780,20 +756,6 @@ class CrawlEngine:
                 self._nparts, "url_hash"
             ).persist()
         return self._store_bykey
-
-    def _store_keys(self) -> DataFrame:
-        """url_hash-partitioned keys-only store copy for the 404
-        anti-join when the store is too big to broadcast its keys.
-        Reuses the full bucketed copy when that already exists."""
-        if self._store_bykey is not None:
-            return self._store_bykey.select("url_hash")
-        if self._store_keys_bykey is None:
-            self._store_keys_bykey = (
-                self.page_store.select("url_hash")
-                .repartition(self._nparts, "url_hash")
-                .persist()
-            )
-        return self._store_keys_bykey
 
     # ---------------------------------------------------------------- seeds
     def seed_frontier(self, seeds: list[dict]) -> DataFrame:
@@ -967,8 +929,14 @@ class CrawlEngine:
         # small enough to land on the driver; enables the zero-shuffle
         # small-wave dedup. Killed (None) the moment a wave's key count
         # exceeds driver_wave_max; cluster dedup takes over seamlessly.
+        # Never built when a politeness table, host budget or robots
+        # rules apply: _dedup_driver cannot use it on any wave then.
         self._py_seen: set[tuple[int, int]] | None = (
-            set() if cfg.driver_wave_max else None
+            set() if cfg.driver_wave_max and not (
+                self.politeness is not None
+                or cfg.host_budget_per_wave is not None
+                or self._robots_rules or self._robots_join)
+            else None
         )
         self._bloom = (
             seen_ops.ShardedBloom(
@@ -1226,16 +1194,12 @@ class CrawlEngine:
         broadcast-joins the page store and the single AQE round does
         fetch+process+collect. Returns (rows to fetch, null-source
         rows) as FRONTIER_SCHEMA tuples, or None when the wave takes the
-        cluster path: no driver rows or twin, a politeness budget or
-        robots rules to apply, or a row without its emission hashes."""
-        cfg = self.config
+        cluster path: no driver rows or twin (there is none when a
+        politeness budget or robots rules apply, see _begin), or a row
+        without its emission hashes."""
         if (
             rows is None
             or self._py_seen is None
-            or self.politeness is not None
-            or cfg.host_budget_per_wave is not None
-            or self._robots_rules
-            or self._robots_join
             or not all(
                 r[1] is None or (r[7] is not None and r[8] is not None)
                 for r in rows
@@ -1644,10 +1608,10 @@ class CrawlEngine:
     def _store_keyset(self) -> set[int] | None:
         """One-time driver copy of the store's url_hash set, or None
         when the store is too big for the driver
-        (``driver_store_keys_max``). Read after the store is counted."""
+        (``_driver_store_keys_max``; one store count decides)."""
         if (
             self.page_store is None
-            or self._store_rows > self._driver_store_keys_max
+            or self.page_store.count() > self._driver_store_keys_max
         ):
             return None
         return {r[0] for r in self.page_store.select("url_hash").collect()}
@@ -1656,15 +1620,15 @@ class CrawlEngine:
         """Small-wave fetch over driver-resident frontier rows (tuples
         in FRONTIER_SCHEMA order). With a driver-sized store keyset the
         found/missing split happens in Python, so the wave's plan has
-        NO anti-join leg — one broadcast build plus the store probe.
-        Falls back to the generic `_fetch` (real-HTTP fetcher, or a
-        store too big for a driver keyset). Returns (fetched rows, the
-        null-source rows as a DataFrame or None)."""
+        NO anti-join leg — one broadcast build plus the store probe;
+        the missing rows take the cluster path's 404 projection
+        (``missing_cols``) over a LocalRelation. Falls back to the
+        generic `_fetch` (real-HTTP fetcher, or a store too big for a
+        driver keyset). Returns (fetched rows, the null-source rows as
+        a DataFrame or None)."""
         spark = self.spark
         nullsrc = (_local_df(spark, null_rows, schemas.FRONTIER_SCHEMA)
                    if null_rows else None)
-        if self._store_rows is None and self.page_store is not None:
-            self._store_rows = self.page_store.count()
         keyset = None if self.fetch_fn is not None else self._store_keyset
         if keyset is None:
             fetchable = _local_df(
@@ -1677,14 +1641,7 @@ class CrawlEngine:
             # shuffle stages
             return self._fetch(fetchable, True, ex), nullsrc
         found = [r for r in rows if r[7] in keyset]
-        missing = [
-            # found_cols order: page_cls path url input_json payload links
-            # next_url status attempts page_seq payload_kind image_id
-            # found priority flaky_rejects url_hash seen_key
-            (r[0], r[3], r[1], r[2], None, None, None, 404, r[5], r[6],
-             None, None, False, r[4], 0, r[7], r[8])
-            for r in rows if r[7] not in keyset
-        ]
+        missing = [r for r in rows if r[7] not in keyset]
         parts = []
         if found:
             fr = _local_df(spark, found, schemas.FRONTIER_SCHEMA)
@@ -1693,7 +1650,8 @@ class CrawlEngine:
                 .select(*ex.found_cols)
             )
         if missing or not parts:
-            parts.append(_local_df(spark, missing, _FETCHED_LOCAL_SCHEMA))
+            parts.append(_local_df(spark, missing, schemas.FRONTIER_SCHEMA)
+                         .select(*ex.missing_cols))
         return _union_tree(parts), nullsrc
 
     def _fetch(self, fetchable: DataFrame, broadcast: bool, ex) -> DataFrame:
@@ -1702,15 +1660,16 @@ class CrawlEngine:
         or the real-HTTP mapInPandas fetcher when ``fetch_fn`` is set —
         identical output schema either way. ``broadcast``: the frontier
         is small enough to broadcast against the store in place (a
-        driver-local wave, or one within broadcast_fetch_max)."""
+        driver-local wave, or one within broadcast_fetch_max). A
+        frontier row the store lacks comes out as a payloadless 404:
+        the broadcast path anti-joins the frontier against the wave's
+        found keys, the shuffle path reads the left join's null side."""
         if self.fetch_fn is not None:
-            from ..operators.politeness import salted_repartition
-            from ..sources.http_fetch import FETCHED_SCHEMA
-
             # here host-salting genuinely matters: fetch work is
             # per-host network time, and a hot host would pile onto
             # one task (north-rule skew mandate)
-            fr = salted_repartition(fetchable, self._nparts, _SALT_BUCKETS)
+            fr = politeness_ops.salted_repartition(
+                fetchable, self._nparts, _SALT_BUCKETS)
             return fr.mapInPandas(self.fetch_fn, FETCHED_SCHEMA)
         if self.page_store is None:
             raise CrawlError("no page_store configured")
@@ -1719,10 +1678,6 @@ class CrawlEngine:
         # salted repartition (politeness.salted_repartition) belongs in
         # front of the real-HTTP fetch variant, where work is grouped
         # per host and a hot host would pile onto one task.
-        if self._store_rows is None:
-            # one count, first fetch only: gates the store-keys
-            # broadcast below and warms the persisted store cache
-            self._store_rows = self.page_store.count()
         if broadcast:
             # default path: broadcast the SLIM frontier, probe the
             # payload-heavy store in place — no store shuffle ever, no
@@ -1734,21 +1689,14 @@ class CrawlEngine:
                 F.broadcast(fetchable), "url_hash", "inner"
             ).select(*ex.found_cols)
             # not-in-store rows (404 path): anti-join against the
-            # store's key column only. Small stores broadcast the keys
-            # (pruned from the columnar cache, ~8 B/row — but still
-            # O(|store|) per wave); big stores would OOM the driver, so
-            # they take a shuffle anti-join where only the WAVE-sized
-            # frontier moves and the store side reuses its keys-only
-            # bucketed copy.
-            if self._store_rows <= self.config.broadcast_store_keys_max:
-                missing = fetchable.join(
-                    F.broadcast(self.page_store.select("url_hash")),
-                    "url_hash", "left_anti",
-                ).select(*ex.missing_cols)
-            else:
-                missing = fetchable.join(
-                    self._store_keys(), "url_hash", "left_anti"
-                ).select(*ex.missing_cols)
+            # wave's FOUND keys, not the store's. That build side is
+            # bounded by the wave at any store size (the frontier
+            # broadcast is reused inside it), so no wave broadcasts or
+            # copies anything O(|store|).
+            missing = fetchable.join(
+                F.broadcast(found.select("url_hash")),
+                "url_hash", "left_anti",
+            ).select(*ex.missing_cols)
             return found.unionByName(missing)
         # big-wave fallback: classic shuffle join against the
         # url_hash-bucketed store copy — the frontier side reshuffles,

@@ -2,6 +2,7 @@
 verification, plus politeness/robots/seen-set behavior and
 kill-and-resume from checkpoint (north-rule mandates)."""
 
+import dataclasses
 import json
 import shutil
 import time
@@ -115,20 +116,110 @@ def test_shuffle_fetch_fallback_matches_broadcast(spark, web, store):
     assert r1.waves == r2.waves
 
 
-def test_store_keys_antijoin_fallback_matches_broadcast(spark, web, store):
-    """Big stores must NOT broadcast their whole url_hash column for
-    the 404 anti-join (O(|store|) memory per wave): forcing the
-    shuffle-anti-join path (broadcast_store_keys_max=0) must produce
-    an identical crawl."""
-    default = CrawlEngine(spark, media_registry(), page_store=store,
-                          config=CrawlConfig())
-    forced = CrawlEngine(spark, media_registry(), page_store=store,
-                         config=CrawlConfig(broadcast_store_keys_max=0))
-    r1 = default.crawl(web.seeds())
-    r2 = forced.crawl(web.seeds())
-    assert r1.items() == r2.items()
-    assert r1.seen.count() == r2.seen.count()
-    assert r1.waves == r2.waves
+def _holey_store_crawl(spark, web, store, **cfg):
+    """Crawl a store missing every 7th detail page, with a detail class
+    that does not handle errors: each missing page is a 404 dead
+    letter (``fail_fast`` off so the crawl runs to the end)."""
+    holey = store.filter(
+        (F.col("kind") != "detail")
+        | (F.regexp_extract("url", r"/detail/(\d+)$", 1).cast("int") % 7
+           != 0))
+    reg = media_registry()
+    reg.register(dataclasses.replace(reg["MediaDetailPage"],
+                                     handles_errors=False))
+    return CrawlEngine(spark, reg, page_store=holey,
+                       config=CrawlConfig(fail_fast=False, **cfg)
+                       ).crawl(web.seeds())
+
+
+def test_missing_pages_parity_across_fetch_paths(spark, web, store):
+    """Pages the store lacks become the same 404 dead letters on every
+    fetch path: the cluster broadcast fetch (frontier anti-joined
+    against the wave's found keys), the cluster shuffle join
+    (broadcast_fetch_max=0), and the driver path's keyset split."""
+    driver = _holey_store_crawl(spark, web, store)
+    dead = [r["error"] for r in driver.dead.collect()]
+    assert dead and all("status=404" in e for e in dead)
+    for label, cfg in (
+        ("broadcast", {"driver_wave_max": 0}),
+        ("shuffle", {"driver_wave_max": 0, "broadcast_fetch_max": 0}),
+    ):
+        res = _holey_store_crawl(spark, web, store, **cfg)
+        _assert_same_crawl(res, driver, label)
+
+
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending through the
+    adaptive wrapper, query stages and reused exchanges."""
+    yield node
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    elif kind == "ReusedExchangeExec":
+        kids = [node.child()]
+    else:
+        it, kids = node.children().iterator(), []
+        while it.hasNext():
+            kids.append(it.next())
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def test_missing_antijoin_builds_on_found_keys(spark, store):
+    """The broadcast fetch's 404 anti-join builds on the wave's found
+    keys (a store ⋈ frontier join), never on a bare scan of the
+    store's keys: its broadcast stays wave-sized at any store size."""
+    eng = CrawlEngine(spark, media_registry(), page_store=store,
+                      config=CrawlConfig())
+    ex = eng._wave_exprs()
+    seeds = [{"page_cls": "MediaDetailPage",
+              "url": f"http://{host}.example.com/detail/{j}"}
+             for host in ("h0", "nowhere") for j in range(10)]
+    fetchable, _, _ = eng._schedule(
+        eng.seed_frontier(seeds), len(seeds), ex)
+    fetched = eng._fetch(fetchable, True, ex)
+    assert sorted(r["status"] for r in fetched.collect()) == \
+        [200] * 10 + [404] * 10
+    anti = [n for n in _plan_nodes(
+                fetched._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+            and n.joinType().toString() == "LeftAnti"]
+    assert len(anti) == 1
+    assert anti[0].buildSide().toString() == "BuildRight"
+    build = list(_plan_nodes(anti[0].right()))
+    assert any(n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+               and n.joinType().toString() == "Inner" for n in build)
+
+
+def test_budgeted_crawl_builds_no_seen_twin(spark, web, store, monkeypatch):
+    """A host budget keeps every wave off the driver dedup path, so the
+    engine builds no driver seen twin and never collects a wave's new
+    seen keys to feed one."""
+    collected = []
+    collect = type(store).collect
+
+    def spy(df):
+        collected.append(tuple(df.columns))
+        return collect(df)
+
+    monkeypatch.setattr(type(store), "collect", spy)
+    eng = CrawlEngine(spark, media_registry(), page_store=store,
+                      config=CrawlConfig(host_budget_per_wave=7,
+                                         max_waves=3))
+    twins = []
+    update_seen = eng._update_seen
+
+    def spy_update(landed, n_next):
+        out = update_seen(landed, n_next)
+        twins.append(eng._py_seen)
+        return out
+
+    eng._update_seen = spy_update
+    eng.crawl(web.seeds())
+    assert len(twins) == 3 and all(t is None for t in twins)
+    assert ("url_hash", "seen_key") not in collected
 
 
 def test_politeness_table_with_nonpositive_budget_rejected(spark, store):
@@ -339,9 +430,8 @@ def test_dfs_order_matches_document_order(spark, web, store):
 
 def test_driver_caps_derive_from_heap(spark, store):
     """The driver-python-structure caps scale with the provisioned
-    driver heap when left at their None defaults (the round-4
-    'literals don't scale' amber): 5% of heap at the structure's
-    bytes/key, never below the 10k floor; explicit ints still win."""
+    driver heap (the round-4 'literals don't scale' amber): 5% of heap
+    at the structure's bytes/key, never below the 10k floor."""
     from spatula_spark.plans.engine import _parse_jvm_mem
 
     eng = CrawlEngine(spark, media_registry(), page_store=store,
@@ -349,12 +439,6 @@ def test_driver_caps_derive_from_heap(spark, store):
     heap = _parse_jvm_mem(spark.conf.get("spark.driver.memory"))
     assert eng._driver_store_keys_max == max(10_000, int(heap * 0.05) // 80)
     assert eng._driver_seen_max == max(10_000, int(heap * 0.05) // 130)
-    pinned = CrawlEngine(
-        spark, media_registry(), page_store=store,
-        config=CrawlConfig(driver_store_keys_max=123,
-                           driver_seen_max=456))
-    assert pinned._driver_store_keys_max == 123
-    assert pinned._driver_seen_max == 456
 
 
 def _strip_manifest_stats(spark, ck):

@@ -3,8 +3,9 @@ equivalence and the watermark state-eviction trade."""
 
 import datetime as dt
 import os
+from types import SimpleNamespace
 
-from spatula_spark.streaming.dedup import stream_distinct_keys
+from spatula_spark.streaming.dedup import _state_partitions, stream_distinct_keys
 
 
 def _write_events(spark, path, rows):
@@ -73,3 +74,17 @@ def test_state_evicted_after_watermark(spark, tmp_path):
     clicks = [r for r in rows if r["user_id"] == 1]
     assert len(clicks) == 2  # once per side of the eviction
     assert len([r for r in rows if r["user_id"] == 9]) == 1
+
+
+def test_state_partitions_unknown_size_keeps_session_width(tmp_path):
+    """A source os.walk cannot size (an s3:// or hdfs:// path, or an
+    empty dir) keeps the session width instead of shrinking to the
+    8-partition floor; a small local source still takes the floor."""
+    conf = {"spark.sql.shuffle.partitions": "32"}
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d)))
+    assert _state_partitions(spark, "s3://bucket/events/") == 32
+    assert _state_partitions(spark, "hdfs://nn:8020/events") == 32
+    assert _state_partitions(spark, str(tmp_path)) == 32
+    (tmp_path / "part-0.parquet").write_bytes(b"x" * 1024)
+    assert _state_partitions(spark, str(tmp_path)) == 8
