@@ -810,11 +810,12 @@ def bpe_encode_tokens_q(spark, sf_dir):
 
 @register("bpe_train_merges", _bpe_merges_oracle)
 def bpe_train_merges_q(spark, sf_dir):
-    """Full BPE tokenizer training (tx.bpe_train_merges): 10 merge
-    rounds over the documents corpus — each round one vocab-sized
-    pair-count aggregate, a single-row argmax collect, and a
-    boundary-anchored regexp re-segmentation of the persisted
-    vocabulary state. The merge sequence (step, pair, merged, count)
+    """Full BPE tokenizer training (tx.bpe_train_merges): 10 merges
+    over the documents corpus in rounds — each round one vocab-sized
+    pair-count aggregate, a ranked top-pairs collect from which the
+    driver accepts every merge sequential BPE would make next, and
+    those merges' boundary-anchored regexp re-segmentation of the
+    persisted vocabulary state. The merge sequence (step, pair, merged, count)
     is integer/total-order deterministic, replayed bit-for-bit by the
     independent pure-Python twin that renders the oracle."""
     return tx.bpe_train_merges(_t(spark, sf_dir, "documents"), n_merges=10)

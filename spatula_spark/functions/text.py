@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import scoped_conf
+from ..session import local_df, scoped_conf
 
 # tiny embedded stopword lists for the language-ID heuristic; the
 # point is the *operator shape* (vectorized n-gram/marker scoring),
@@ -611,38 +611,161 @@ def bpe_pair_counts(
 BPE_SEP = "\x1f"
 
 
+def _bpe_segment(word: Column) -> Column:
+    """A word's initial packed segmentation: ``SEP c1 SEP ... SEP cn SEP
+    </w> SEP`` (characters plus the end-of-word symbol; leading and
+    trailing SEP so every symbol boundary is explicit)."""
+    chars = F.split(word, "(?!$)")
+    return F.concat(
+        F.lit(BPE_SEP),
+        F.array_join(chars, BPE_SEP),
+        F.lit(BPE_SEP + "</w>" + BPE_SEP),
+    )
+
+
+def _bpe_apply(syms: Column, merges) -> Column:
+    """Apply the ordered ``(left, right, ...)`` merges to a packed
+    segmentation, one boundary-anchored regexp_replace per merge. Java
+    regex ``replaceAll`` consumes matches left-to-right without
+    overlap, which IS the BPE merge rule, and the ``(?<=SEP)l SEP
+    r(?=SEP)`` lookarounds make overlapping occurrences like ``a a a
+    a`` merge to ``aa aa`` exactly as the scan-based formulation does.
+    The chain stays one projection however long it is."""
+    import re as _re
+
+    sep = BPE_SEP
+    for left, right, *_ in merges:
+        pattern = (
+            f"(?<={sep})" + _re.escape(left) + sep
+            + _re.escape(right) + f"(?={sep})"
+        )
+        # Java replacement string: $ and \ are special
+        repl = (left + right).replace("\\", "\\\\").replace("$", "\\$")
+        syms = F.regexp_replace(syms, pattern, repl)
+    return syms
+
+
+def _bpe_ranked_pairs(
+    state: DataFrame, k: int
+) -> list[tuple[str, str, int]]:
+    """The top ``k`` adjacent symbol pairs of a packed ``(n_w, syms)``
+    vocabulary as ``(left, right, n)``, ``n`` weighted by word count,
+    in (n DESC, left ASC, right ASC) order: one vocab-sized aggregate
+    (map-side combined) and one collect of at most ``k`` rows."""
+    arr = F.split(F.col("syms"), BPE_SEP)
+    # the packed form splits to ['', s1..sk, ''] — slice the empties
+    # off, then adjacent pairs via two shifted slices
+    inner = F.slice(arr, 2, F.size(arr) - 2)
+    seg = state.select("n_w", inner.alias("s"))
+    n = F.size(F.col("s"))
+    pairs = F.zip_with(
+        F.slice(F.col("s"), 1, n - 1),
+        F.slice(F.col("s"), 2, n - 1),
+        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+    )
+    rows = (
+        seg.select("n_w", F.explode(pairs).alias("p"))
+        .groupBy("p.l", "p.r")
+        .agg(F.sum("n_w").alias("n"))
+        .orderBy(F.col("n").desc(), "l", "r")
+        .limit(k)
+        .collect()
+    )
+    return [(r["l"], r["r"], int(r["n"])) for r in rows]
+
+
+def _bpe_merge_batch(
+    ranked: list[tuple[str, str, int]], made: set[str], room: int
+) -> list[tuple[str, str, int]]:
+    """The merges one training round may accept: the longest prefix of
+    ``ranked`` that sequential BPE would also pick next, in order.
+
+    ``ranked`` is this round's top pairs as ``(left, right, n)`` in
+    (n DESC, left ASC, right ASC) order, at most ``room + 1`` of them;
+    ``made`` holds every string merged in earlier rounds; ``room`` is
+    how many merges are still wanted. Member ``p_i`` (i >= 2) joins
+    only when
+
+    (a) no earlier member is a self-pair ``(a, a)`` — its merge creates
+        ``(aa, a)``, bounded only by its own count;
+    (b) its left symbol is no earlier member's right symbol and its
+        right symbol no earlier member's left symbol, so occurrences of
+        members never overlap;
+    (c) no earlier member's merged string is already live — a live
+        string (``</w>`` or anything merged before) would raise counts
+        of pairs holding it; and
+    (d) its merged string differs from every earlier member's.
+
+    The batch then drops members from the tail until its last count is
+    strictly above the next ranked pair's, or one member is left."""
+    batch: list[tuple[str, str, int]] = []
+    lefts: set[str] = set()
+    rights: set[str] = set()
+    merged: set[str] = set()
+    for left, right, n in ranked[:room]:
+        if batch:
+            last_l, last_r, _ = batch[-1]
+            if (
+                last_l == last_r
+                or left in rights
+                or right in lefts
+                or last_l + last_r in made
+                or last_l + last_r == "</w>"
+                or left + right in merged
+            ):
+                break
+        batch.append((left, right, n))
+        lefts.add(left)
+        rights.add(right)
+        merged.add(left + right)
+    while (
+        len(batch) > 1
+        and len(ranked) > len(batch)
+        and ranked[len(batch)][2] == batch[-1][2]
+    ):
+        batch.pop()
+    return batch
+
+
 def bpe_train_merges(
     df: DataFrame, text_col: str = "text", n_merges: int = 10
 ) -> DataFrame:
     """Full distributed BPE tokenizer training (Sennrich et al. 2016):
-    ``n_merges`` rounds of count-pairs -> argmax -> re-segment, the
-    iterative loop :func:`bpe_pair_counts` is the first round of.
+    ``n_merges`` merges in training order, the iterative loop
+    :func:`bpe_pair_counts` is the first round of.
 
     Scale shape — the loop never touches corpus-scale rows after the
     single word-count pass: state is the Heaps-law vocabulary table
-    ``(w, n_w, syms)`` where ``syms`` packs the word's current
-    segmentation as ``SEP sym SEP ... SEP`` (leading/trailing SEP so
-    every symbol boundary is explicit). Each round runs one vocab-sized
-    pair count (map-side combined) whose single-row argmax is the only
-    thing collected (one row per round), then rewrites the packed
-    string with one boundary-anchored regexp_replace — Java regex
-    ``replaceAll`` consumes matches left-to-right without overlap,
-    which IS the BPE merge rule, and the ``(?<=SEP)l SEP r(?=SEP)``
-    lookarounds make overlapping occurrences like ``a a a a`` merge to
-    ``aa aa`` exactly as the scan-based formulation does. Per-round
-    state is persisted and the previous round unpersisted, so lineage
-    stays O(1) across rounds.
+    ``(n_w, syms)`` where ``syms`` packs the word's current
+    segmentation as ``SEP sym SEP ... SEP``. Each round runs one
+    vocab-sized pair count (map-side combined) and collects only its
+    top ``room + 1`` pairs, ``room`` being the merges still wanted. The
+    driver accepts the longest ranked prefix :func:`_bpe_merge_batch`
+    allows (no self-pair before the last member, no member overlapping
+    an earlier one, no earlier member's merged string already live, no
+    two members merging to one string, and a strict count drop after
+    the last member) and rewrites the packed string with that prefix's
+    merges chained in one persisted projection (:func:`_bpe_apply`).
+    Per-round state is persisted and the previous round unpersisted,
+    so lineage stays O(1) across rounds.
 
-    Determinism: integer counts; argmax tie-break is (count DESC,
-    left ASC, right ASC) via a single min(struct(-n, l, r)) aggregate
-    — a total order, so the merge sequence is replayable bit-for-bit
-    by an independent trainer (the pure-Python twin that renders the
-    oracle literal table, pinned again by pytest).
+    Exactness: a merge to a string not yet live lowers only the counts
+    of pairs overlapping it, and a pair it creates, ``(x, ab)``, is
+    bounded by the overlapping pair ``(x, a)``. The conditions keep
+    every such pair out of the accepted prefix, so each lies at or
+    below the first rejected pair, whose count is strictly below the
+    last member's: every member is the argmax at its own step, its
+    count this round is its sequential count, and a batch of one is
+    the plain argmax.
+
+    Determinism: integer counts; the tie-break is (count DESC, left
+    ASC, right ASC) — a total order, so the merge sequence is
+    replayable bit-for-bit by an independent trainer (the pure-Python
+    twin that renders the oracle literal table, pinned again by
+    pytest).
 
     Returns (step, left_sym, right_sym, merged, n): the merge table a
     tokenizer ships as its vocab, in training order."""
-    import re as _re
-
     from .dedup import normalized_words
 
     spark = df.sparkSession
@@ -653,95 +776,65 @@ def bpe_train_merges(
         .groupBy("w")
         .agg(F.count("*").alias("n_w"))
     )
-    # initial segmentation: characters + the terminal '</w>' symbol
-    chars = F.split(F.col("w"), "(?!$)")
-    init = F.concat(
-        F.lit(sep),
-        F.array_join(chars, sep),
-        F.lit(sep + "</w>" + sep),
-    )
-    cur = freq.select("n_w", init.alias("syms")).persist()
-    # size the merge loop's shuffles from the VOCAB, not the session
-    # (guide §2: derive partitioning from data size): every round is a
-    # vocab-sized pair aggregate, so at battery scale AQE's per-stage
-    # re-planning dominates the sub-second jobs (measured ~25% of the
-    # 10-round wall), while at production vocab sizes a static
-    # ~50k-rows-per-partition layout is already right — so AQE is
-    # disabled only INSIDE the loop, with partitions pre-sized, and
-    # both confs restored after. The count also materializes the
-    # persisted state (round 1 would otherwise do it implicitly).
-    n_vocab = cur.count()
-    n_sess = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    loop_parts = max(8, min(n_sess, n_vocab // 50_000 + 1))
+    cur = freq.select(
+        "n_w", _bpe_segment(F.col("w")).alias("syms")
+    ).persist()
     prev = None
     merges: list[tuple[int, str, str, str, int]] = []
-    loop_conf = {"spark.sql.shuffle.partitions": loop_parts,
-                 "spark.sql.adaptive.enabled": "false"}
+    made: set[str] = set()
+    # AQE is off from the count on, both confs restored after: its
+    # per-stage re-planning dominates the sub-second jobs of this loop
+    # (measured ~25% of the 10-round wall) and turns the count into
+    # four jobs; the cached vocabulary keeps the layout AQE gave it at
+    # persist. The count materializes that state (round 1 would
+    # otherwise do it implicitly) and sizes the loop's shuffles from
+    # the VOCAB, capped at the session width: every round is a
+    # vocab-sized pair aggregate, so at battery scale one reduce task
+    # beats a wider split of a ~100-row table, while at production
+    # vocab sizes a static ~50k-rows-per-partition layout is already
+    # right.
     try:
-        with scoped_conf(spark, loop_conf):
-            for step in range(1, n_merges + 1):
-                arr = F.split(F.col("syms"), sep)
-                # the packed form splits to ['', s1..sk, ''] — slice the
-                # empties off, then adjacent pairs via two shifted slices
-                inner = F.slice(arr, 2, F.size(arr) - 2)
-                seg = cur.select("n_w", inner.alias("s"))
-                k = F.size(F.col("s"))
-                pairs = F.zip_with(
-                    F.slice(F.col("s"), 1, k - 1),
-                    F.slice(F.col("s"), 2, k - 1),
-                    lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-                )
-                best_rows = (
-                    seg.select("n_w", F.explode(pairs).alias("p"))
-                    .groupBy("p.l", "p.r")
-                    .agg(F.sum("n_w").alias("n"))
-                    .agg(
-                        F.min(
-                            F.struct(
-                                (F.lit(0) - F.col("n")).alias("negn"),
-                                F.col("l"),
-                                F.col("r"),
-                            )
-                        ).alias("b")
-                    )
-                    .collect()
-                )
-                # the argmax job consumed every partition of cur, so its
-                # cache is now fully materialized and the previous round's
-                # state can be dropped without triggering recompute
-                if prev is not None:
-                    prev.unpersist()
-                    prev = None
-                b = best_rows[0]["b"] if best_rows else None
-                if b is None or b["l"] is None:
-                    break
-                left, right, n = b["l"], b["r"], -b["negn"]
-                merged = left + right
-                merges.append((step, left, right, merged, int(n)))
-                pattern = (
-                    f"(?<={sep})"
-                    + _re.escape(left)
-                    + sep
-                    + _re.escape(right)
-                    + f"(?={sep})"
-                )
-                # Java replacement string: $ and \ are special
-                repl = merged.replace("\\", "\\\\").replace("$", "\\$")
-                nxt = cur.withColumn(
-                    "syms", F.regexp_replace("syms", pattern, repl)
-                ).persist()
-                prev = cur
-                cur = nxt
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            n_vocab = cur.count()
+            n_sess = int(
+                spark.conf.get("spark.sql.shuffle.partitions", "32")
+            )
+            loop_parts = min(n_sess, n_vocab // 50_000 + 1)
+            with scoped_conf(
+                spark, {"spark.sql.shuffle.partitions": loop_parts}
+            ):
+                while len(merges) < n_merges:
+                    room = n_merges - len(merges)
+                    ranked = _bpe_ranked_pairs(cur, room + 1)
+                    # the ranking job consumed every partition of cur,
+                    # so its cache is now fully materialized and the
+                    # previous round's state can be dropped without
+                    # triggering recompute
+                    if prev is not None:
+                        prev.unpersist()
+                        prev = None
+                    batch = _bpe_merge_batch(ranked, made, room)
+                    if not batch:
+                        break
+                    for left, right, n in batch:
+                        merges.append(
+                            (len(merges) + 1, left, right, left + right, n)
+                        )
+                        made.add(left + right)
+                    prev = cur
+                    cur = cur.withColumn(
+                        "syms", _bpe_apply(F.col("syms"), batch)
+                    ).persist()
     finally:
         cur.unpersist()
         if prev is not None:
             prev.unpersist()
-    return spark.createDataFrame(
+    # a LocalRelation: scanning the merge table starts no Python worker
+    return local_df(
+        spark,
         merges,
-        schema="step int, left_sym string, right_sym string, "
-        "merged string, n long",
+        "step int, left_sym string, right_sym string, merged string, "
+        "n long",
     )
 
 
@@ -761,13 +854,11 @@ def bpe_encode_counts(
     Scale shape: the merge chain is applied to the DISTINCT word table
     only — all ``n_merges`` boundary-anchored regexp_replaces fuse
     into ONE vocab-sized projection (no loop jobs, unlike training,
-    which must argmax between rounds) — and documents then count
-    tokens via an explode + join on the word key + per-doc sum, so
-    corpus-scale rows never carry segmentation strings. Returns
-    (doc_id, n_words, n_tokens); docs with no words are omitted
-    (explode semantics), matching the twin."""
-    import re as _re
-
+    which must recount pairs between rounds to know its next merges)
+    — and documents then count tokens via an explode + join on the
+    word key + per-doc sum, so corpus-scale rows never carry
+    segmentation strings. Returns (doc_id, n_words, n_tokens); docs
+    with no words are omitted (explode semantics), matching the twin."""
     from .dedup import normalized_words
 
     sep = BPE_SEP
@@ -781,17 +872,7 @@ def bpe_encode_counts(
         "doc_id", F.explode(normalized_words(F.col(text_col))).alias("w")
     ).filter((F.length("w") > 0) & (~F.col("w").contains(sep)))
     vocab = toks.select("w").distinct()
-    chars = F.split(F.col("w"), "(?!$)")
-    syms = F.concat(
-        F.lit(sep), F.array_join(chars, sep), F.lit(sep + "</w>" + sep)
-    )
-    for left, right in merges:
-        pattern = (
-            f"(?<={sep})" + _re.escape(left) + sep
-            + _re.escape(right) + f"(?={sep})"
-        )
-        repl = (left + right).replace("\\", "\\\\").replace("$", "\\$")
-        syms = F.regexp_replace(syms, pattern, repl)
+    syms = _bpe_apply(_bpe_segment(F.col("w")), merges)
     # packed form splits to ['', s1..sk, ''] — token count = size - 2
     wordtok = vocab.select(
         "w", (F.size(F.split(syms, sep)) - 2).cast("long").alias("w_toks")

@@ -100,14 +100,11 @@ from types import SimpleNamespace
 from typing import Any, Callable
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
-from ..session import scoped_conf
+from ..session import local_df, scoped_conf
 from . import native as N
 from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
@@ -245,7 +242,7 @@ class CrawlConfig:
     # estimate (max of this wave's frontier and the previous wave's
     # total emissions) is at or below this, the wave's slim emission
     # rows are collected as one Arrow table and re-planted as a
-    # LocalRelation (``_local_df``: Arrow batches handed to the JVM, so
+    # LocalRelation (``local_df``: Arrow batches handed to the JVM, so
     # no Python worker re-reads them) instead of the parquet
     # write+read — the BFS-tail analogue of AQE's
     # local-shuffle-read: deep chains (pagination tails, tree crawls)
@@ -300,28 +297,6 @@ def _broadcast_rows_budget(
     path + input_json + hash-relation overhead)."""
     heap = heap if heap is not None else _driver_heap(spark)
     return max(10_000, int(heap * frac) // row_bytes)
-
-
-_struct = functools.cache(T.StructType.fromDDL)  # DDL -> StructType
-
-
-def _local_df(
-    spark: SparkSession, data: list[tuple] | pa.Table,
-    schema: T.StructType | str,
-) -> DataFrame:
-    """One-partition DataFrame over driver-resident rows (tuples in
-    ``schema`` order, or an Arrow table). The rows travel to the JVM as
-    Arrow batches and are planted there as a LocalRelation (below
-    spark.sql.execution.arrow.localRelationThreshold), so scanning the
-    result never starts a Python worker — an RDD of Python rows
-    (``parallelize``) pays one on every scan."""
-    schema = _struct(schema) if isinstance(schema, str) else schema
-    if not isinstance(data, pa.Table):
-        arrow = to_arrow_schema(schema)
-        cols = list(zip(*data)) if data else [()] * len(schema)
-        data = pa.Table.from_arrays(
-            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
-    return spark.createDataFrame(data, schema=schema).coalesce(1)
 
 
 @dataclass
@@ -868,7 +843,7 @@ class CrawlEngine:
                 # every candidate was already seen: a no-op wave —
                 # skip the Spark job entirely
                 landed = _Landed(
-                    _local_df(self.spark, [], _EMISSION_OUT_SCHEMA), [],
+                    local_df(self.spark, [], _EMISSION_OUT_SCHEMA), [],
                     dict.fromkeys(_KIND_NAMES, 0), False)
             else:
                 if local is None:
@@ -1302,7 +1277,7 @@ class CrawlEngine:
         # defaultParallelism slices, and per-wave unions then compound
         # task counts geometrically (measured 161 → 417 tasks/stage by
         # wave 12 of a tree crawl)
-        return _Landed(_local_df(self.spark, table, _EMISSION_OUT_SCHEMA),
+        return _Landed(local_df(self.spark, table, _EMISSION_OUT_SCHEMA),
                        rows, counts, requeues)
 
     def _wave_partitions(self, est: int, prev_total: int | None) -> int:
@@ -1627,11 +1602,11 @@ class CrawlEngine:
         driver keyset). Returns (fetched rows, the null-source rows as
         a DataFrame or None)."""
         spark = self.spark
-        nullsrc = (_local_df(spark, null_rows, schemas.FRONTIER_SCHEMA)
+        nullsrc = (local_df(spark, null_rows, schemas.FRONTIER_SCHEMA)
                    if null_rows else None)
         keyset = None if self.fetch_fn is not None else self._store_keyset
         if keyset is None:
-            fetchable = _local_df(
+            fetchable = local_df(
                 spark, rows, schemas.FRONTIER_SCHEMA
             ).withColumn("host", host_of(F.col("url")))
             # a driver-local frontier always broadcasts: the build is
@@ -1644,13 +1619,13 @@ class CrawlEngine:
         missing = [r for r in rows if r[7] not in keyset]
         parts = []
         if found:
-            fr = _local_df(spark, found, schemas.FRONTIER_SCHEMA)
+            fr = local_df(spark, found, schemas.FRONTIER_SCHEMA)
             parts.append(
                 self.page_store.join(F.broadcast(fr), "url_hash", "inner")
                 .select(*ex.found_cols)
             )
         if missing or not parts:
-            parts.append(_local_df(spark, missing, schemas.FRONTIER_SCHEMA)
+            parts.append(local_df(spark, missing, schemas.FRONTIER_SCHEMA)
                          .select(*ex.missing_cols))
         return _union_tree(parts), nullsrc
 

@@ -9,11 +9,15 @@ timestamps bit-for-bit.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -105,3 +109,25 @@ def scoped_conf(
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+_struct = functools.cache(T.StructType.fromDDL)  # DDL -> StructType
+
+
+def local_df(
+    spark: SparkSession, data: list[tuple] | pa.Table,
+    schema: T.StructType | str,
+) -> DataFrame:
+    """One-partition DataFrame over driver-resident rows (tuples in
+    ``schema`` order, or an Arrow table). The rows travel to the JVM as
+    Arrow batches and are planted there as a LocalRelation (below
+    spark.sql.execution.arrow.localRelationThreshold), so scanning the
+    result never starts a Python worker — an RDD of Python rows
+    (``parallelize``) pays one on every scan."""
+    schema = _struct(schema) if isinstance(schema, str) else schema
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*data)) if data else [()] * len(schema)
+        data = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(data, schema=schema).coalesce(1)

@@ -1889,36 +1889,216 @@ def test_bpe_encode_counts_matches_python_twin(spark):
     assert got[0][1] < n_chars0 + got[0][0]
 
 
-def test_bpe_train_merges_matches_python_twin(spark):
+# step 5 merges ('<', '/w>') into the end marker '</w>', which raises
+# the count of ('<', '</w>') from 3 to 4 within the same round
+BPE_END_MARKER_CORPUS = [
+    "w/>>// <w/ < w/>",
+    ">a a><a>/ w< waa/aa >/>>wa<",
+    "a</w>b </w> <</w>>",
+]
+# ('a', 'a') ranks first and ('x', 'y') second with nothing overlapping
+# it, yet ('aa', 'a'), created by the self-pair, beats ('x', 'y')
+BPE_SELF_PAIR_CORPUS = ["aaab aaac aaad xyq xyr"]
+
+
+@pytest.mark.parametrize(
+    "texts, n_merges",
+    [
+        (
+            [
+                "the cat sat on the mat",
+                "the cats eat the rats",
+                "low lower lowest newer newest",
+                "  Mixed   CASE   text  with.punct, and $dollar\\back ",
+                "aaaa aaaa aa a",
+                "x.y x.y (par) (par) [br] c++ c++",
+                "",
+            ],
+            15,
+        ),
+        (BPE_END_MARKER_CORPUS, 15),
+        (BPE_SELF_PAIR_CORPUS, 5),
+    ],
+    ids=["adversarial", "end_marker", "self_pair"],
+)
+def test_bpe_train_merges_matches_python_twin(spark, texts, n_merges):
     """The distributed merge loop replays the independent dict-based
-    trainer bit-for-bit on an adversarial corpus: regex metachars and
-    Java-replacement specials ($, backslash) inside symbols,
-    overlapping merge runs (aaaa -> aa aa, not aa a a), count ties
-    broken (left ASC, right ASC), and an empty document."""
+    trainer bit-for-bit: regex metachars and Java-replacement specials
+    ($, backslash) inside symbols, overlapping merge runs (aaaa -> aa
+    aa, not aa a a), count ties broken (left ASC, right ASC), an empty
+    document, a merge re-creating the live end marker, and a self-pair
+    whose merge creates a pair that outranks the next disjoint one."""
     from spatula_spark.functions.text import (
         bpe_python_twin,
         bpe_train_merges,
     )
 
-    texts = [
-        "the cat sat on the mat",
-        "the cats eat the rats",
-        "low lower lowest newer newest",
-        "  Mixed   CASE   text  with.punct, and $dollar\\back ",
-        "aaaa aaaa aa a",
-        "x.y x.y (par) (par) [br] c++ c++",
-        "",
-    ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = [tuple(r) for r in bpe_train_merges(df, n_merges=15).collect()]
-    want = bpe_python_twin(texts, 15)
-    assert len(got) == 15
+    got = [
+        tuple(r) for r in bpe_train_merges(df, n_merges=n_merges).collect()
+    ]
+    want = bpe_python_twin(texts, n_merges)
+    assert len(got) == n_merges
     assert got == want
-    # training order: counts are non-increasing and steps sequential
-    assert [s for s, *_ in got] == list(range(1, 16))
-    assert all(a[4] >= b[4] for a, b in zip(got, got[1:]))
+    # training order: steps sequential; a count rises only right after
+    # a merge that re-creates a live symbol (here the end marker)
+    assert [s for s, *_ in got] == list(range(1, n_merges + 1))
+    assert all(
+        a[4] >= b[4] or a[3] == "</w>" for a, b in zip(got, got[1:])
+    )
+
+
+def _merge_scan(syms, left, right):
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (left, right):
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _batched_bpe(texts, n_merges, rule):
+    """Plain-Python BPE trainer that accepts each round's merges through
+    ``rule`` (the batch rule's signature): returns (merges, rounds)."""
+    import re
+    from collections import Counter
+
+    wf = Counter(
+        w
+        for t in texts
+        for w in re.sub(r"\s+", " ", t.strip()).lower().split(" ")
+        if w
+    )
+    segs = {w: list(w) + ["</w>"] for w in wf}
+    made, merges, rounds = set(), [], 0
+    while len(merges) < n_merges:
+        room = n_merges - len(merges)
+        pc = Counter()
+        for w, syms in segs.items():
+            for pair in zip(syms, syms[1:]):
+                pc[pair] += wf[w]
+        ranked = sorted(
+            ((left, right, n) for (left, right), n in pc.items()),
+            key=lambda t: (-t[2], t[0], t[1]),
+        )[: room + 1]
+        batch = rule(ranked, made, room)
+        if not batch:
+            break
+        rounds += 1
+        for left, right, n in batch:
+            merges.append((len(merges) + 1, left, right, left + right, n))
+            made.add(left + right)
+            segs = {w: _merge_scan(s, left, right) for w, s in segs.items()}
+    return merges, rounds
+
+
+def _candidate_only_rule(ranked, made, room):
+    """A wrong batch rule: it tests each CANDIDATE's merged string
+    against the live set instead of the earlier members' strings."""
+    batch = []
+    for left, right, n in ranked[:room]:
+        if batch and (
+            batch[-1][0] == batch[-1][1]
+            or left in {r for _, r, _ in batch}
+            or right in {lt for lt, _, _ in batch}
+            or left + right in made | {"</w>"}
+            or left + right in {lt + r for lt, r, _ in batch}
+        ):
+            break
+        batch.append((left, right, n))
+    while (
+        len(batch) > 1
+        and len(ranked) > len(batch)
+        and ranked[len(batch)][2] == batch[-1][2]
+    ):
+        batch.pop()
+    return batch
+
+
+def test_bpe_merge_batch_replays_sequential_twin():
+    """The batch rule, driven by a plain pair counter, reproduces the
+    one-merge-per-round twin's merge list exactly on seeded random
+    corpora over alphabets holding the end-marker characters and the
+    regex/replacement specials, plus the two pinned corpora."""
+    import random
+
+    from spatula_spark.functions.text import _bpe_merge_batch, bpe_python_twin
+
+    rng = random.Random(20160)
+    alphabets = ["ab", "abc", "aw/<>", "</w>$\\.", "a<w/>$\\.", "abcdefg"]
+    cases = [(BPE_END_MARKER_CORPUS, 15), (BPE_SELF_PAIR_CORPUS, 5)]
+    for _ in range(3000):
+        chars = rng.choice(alphabets) + "  "
+        texts = [
+            "".join(rng.choice(chars) for _ in range(rng.randint(0, 30)))
+            for _ in range(rng.randint(1, 4))
+        ]
+        cases.append((texts, rng.randint(1, 30)))
+    for texts, n_merges in cases:
+        got, _ = _batched_bpe(texts, n_merges, _bpe_merge_batch)
+        assert got == bpe_python_twin(texts, n_merges), (texts, n_merges)
+
+
+def test_bpe_end_marker_corpus_rejects_candidate_only_rule():
+    """The pinned end-marker corpus tells the rule apart from one that
+    checks only the candidate's merged string: that rule batches
+    ('<', '</w>') behind ('<', '/w>') and records its stale count."""
+    from spatula_spark.functions.text import _bpe_merge_batch, bpe_python_twin
+
+    want = bpe_python_twin(BPE_END_MARKER_CORPUS, 15)
+    got, _ = _batched_bpe(BPE_END_MARKER_CORPUS, 15, _bpe_merge_batch)
+    wrong, _ = _batched_bpe(BPE_END_MARKER_CORPUS, 15, _candidate_only_rule)
+    assert got == want
+    assert wrong != want
+
+
+def test_bpe_train_merges_collects_once_per_batched_round(
+    spark, monkeypatch
+):
+    """On a corpus shaped like the benchmark's documents (a few dozen
+    repeated words), training collects its ranked pairs once per round
+    the batch rule needs — fewer rounds than merges."""
+    import random
+
+    from spatula_spark.functions.text import (
+        _bpe_merge_batch,
+        bpe_python_twin,
+        bpe_train_merges,
+    )
+
+    rng = random.Random(3)
+    vocab = (
+        "join hash row batch scan customer column filter small slow merge "
+        "order vector line data table agg value key stream window spark a "
+        "group part big sort query fast the"
+    ).split()
+    texts = [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(8, 90)))
+        for _ in range(60)
+    ]
+    want, rounds = _batched_bpe(texts, 10, _bpe_merge_batch)
+    assert want == bpe_python_twin(texts, 10)
+    assert rounds < 10
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    calls = []
+    real_collect = type(df).collect
+
+    def spy(self):
+        calls.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    out = bpe_train_merges(df, n_merges=10)
+    assert len(calls) == rounds
+    monkeypatch.undo()
+    assert [tuple(r) for r in out.collect()] == want
 
 
 def test_zorder_key_and_locality(spark):
