@@ -9,6 +9,13 @@ schedule at most ``budget`` fetches; the overflow is *deferred* — it
 stays in the frontier with untouched lineage paths, so crawl ordering
 is unchanged, only wave assignment shifts.
 
+Both rules TAG the frontier instead of splitting it: the budget adds
+``_deferred`` (split_by_host_budget) and the oversized robots path
+``_allowed`` (robots_broadcast_join; small rule sets compile to one
+expression). The engine folds the tags into one ``_fate`` per row, so
+each wave branch (fetch, null-source, deferred or blocked) is a filter
+over one frame rather than its own copy of the split.
+
 Scale notes:
 * budget selection = ``row_number() over (partition by host order by
   priority, path)`` — one shuffle on ``host``. A hot host (the classic
@@ -37,12 +44,14 @@ def split_by_host_budget(
     frontier: DataFrame,
     politeness: DataFrame | None,
     default_budget: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Partition a wave's frontier into (scheduled, deferred).
+) -> DataFrame:
+    """Tag a wave's frontier with ``_deferred``: true on the rows over
+    their host's budget, which stay in the frontier for a later wave.
 
     ``politeness``: optional DataFrame (host, budget_per_wave)
-    overriding ``default_budget``. Null-source rows (no fetch) are
-    always scheduled. ``default_budget=None`` disables the limiter.
+    overriding ``default_budget``. ``frontier`` needs a ``host`` column;
+    null-source rows (null url, so null host) are never deferred.
+    ``default_budget=None`` disables the limiter (nothing deferred).
 
     Plan shape (the scale-critical part): a naive ``row_number() over
     (partition by host)`` sorts the ENTIRE frontier every wave. Instead
@@ -51,10 +60,12 @@ def split_by_host_budget(
     ranking window, everything else passes straight through a broadcast
     hash join (no sort, no extra shuffle). The hot set is bounded by
     ``frontier_size / budget`` rows — thousands, not billions — so the
-    broadcast is safe at any frontier size with sane budgets.
+    broadcast is safe at any frontier size with sane budgets. The
+    result is one frame (cold rows ∪ ranked hot rows); the engine
+    derives every wave branch from it by filters.
     """
     if default_budget is None and politeness is None:
-        return frontier, frontier.limit(0)
+        return frontier.withColumn("_deferred", F.lit(False))
     if default_budget is not None and default_budget < 1:
         # budget 0 would defer every row every wave => the crawl loop
         # never drains; None is the documented "disabled" spelling
@@ -62,10 +73,8 @@ def split_by_host_budget(
             "host budget must be >= 1 (use None to disable the limiter)"
         )
 
-    fetchable = frontier.filter(F.col("url").isNotNull())
-    nullsrc = frontier.filter(F.col("url").isNull())
-
-    counts = fetchable.groupBy("host").agg(F.count("*").alias("_hn"))
+    counts = frontier.filter(F.col("url").isNotNull()).groupBy("host").agg(
+        F.count("*").alias("_hn"))
     if politeness is not None:
         counts = counts.join(F.broadcast(politeness), "host", "left")
         # explicit None check — `or` would turn a (validated-away) 0
@@ -79,19 +88,16 @@ def split_by_host_budget(
         "host", budget_col.cast("long").alias("_budget")
     )
 
-    flagged = fetchable.join(F.broadcast(hot), "host", "left")
-    cold = flagged.filter(F.col("_budget").isNull()).drop("_budget")
-    hot_rows = flagged.filter(F.col("_budget").isNotNull())
+    # a null host (null-source row) never matches the equi-join: cold
+    flagged = frontier.join(F.broadcast(hot), "host", "left")
+    cold = flagged.filter(F.col("_budget").isNull()).select(
+        *frontier.columns, F.lit(False).alias("_deferred"))
 
     w = Window.partitionBy("host").orderBy("priority", "path")
-    ranked = hot_rows.withColumn("_rn", F.row_number().over(w))
-    sched_hot = ranked.filter(F.col("_rn") <= F.col("_budget")).drop(
-        "_rn", "_budget"
-    )
-    deferred = ranked.filter(F.col("_rn") > F.col("_budget")).drop(
-        "_rn", "_budget"
-    )
-    return nullsrc.unionByName(cold).unionByName(sched_hot), deferred
+    ranked = flagged.filter(F.col("_budget").isNotNull()).select(
+        *frontier.columns,
+        (F.row_number().over(w) > F.col("_budget")).alias("_deferred"))
+    return cold.unionByName(ranked)
 
 
 ROBOTS_EXPR_MAX_RULES = 5000
@@ -190,10 +196,12 @@ def split_robots_rules(robots: DataFrame):
     expression (they are hand-written per host; a corpus where they
     alone exceed ROBOTS_EXPR_MAX_RULES is pathological and refused
     rather than silently mis-matched)."""
+    # toArrow runs ONE job; a limited collect() scans one partition
+    # first, then the rest (two jobs)
     wild_rows = (
         robots.filter(_robots_wild_cond())
         .limit(ROBOTS_EXPR_MAX_RULES + 1)
-        .collect()
+        .toArrow().to_pylist()
     )
     if len(wild_rows) > ROBOTS_EXPR_MAX_RULES:
         raise ValueError(
@@ -210,8 +218,9 @@ def robots_broadcast_join(
     frontier: DataFrame,
     robots: DataFrame,
     wild_rules: list[tuple[str, str, bool]] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Oversized-rule-set path: broadcast join + longest-match
+) -> DataFrame:
+    """Oversized-rule-set path: ``frontier`` tagged with ``_allowed``
+    by a broadcast join + longest-match
     aggregate over the PREFIX rules, combined with a compiled
     expression over the (few) WILDCARD rules. Used by the engine when
     the rule count exceeds ROBOTS_EXPR_MAX_RULES — the CASE expression
@@ -250,12 +259,9 @@ def robots_broadcast_join(
                 robots_wild_best_expr(wild_rules, F.col("_path")),
             ),
         )
-    decided = best.withColumn(
+    return best.withColumn(
         "_allowed", F.coalesce(F.col("_best")["a"], F.lit(True))
     ).drop("_best", "_path")
-    allowed = decided.filter(F.col("_allowed")).drop("_allowed")
-    blocked = decided.filter(~F.col("_allowed")).drop("_allowed")
-    return allowed, blocked
 
 
 def salted_repartition(df: DataFrame, n: int, salt_buckets: int, url_col: str = "url") -> DataFrame:

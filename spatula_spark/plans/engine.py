@@ -8,16 +8,23 @@ one at a time, this engine keeps it in a DataFrame and processes one
 
     seeds (_begin: fresh frontier, or resume from the latest snapshot)
       └─ wave k (crawl() runs one phase method after another):
-           _schedule: politeness select (hot-host-only ranking window;
-             overflow rides the emissions stream as 'deferred'), then
-             robots filter (compiled CASE / broadcast-join fallback)
+           _schedule: ONE tagged frontier — a politeness tag
+             (hot-host-only ranking window) and robots (compiled CASE /
+             broadcast-join fallback) fold into one _fate per row:
+             deferred, null-source, blocked or fetch; deferred and
+             blocked rows ride the emissions stream unfetched. A small
+             wave with a politeness split or robots rules lands the
+             tagged frame on the driver (one Arrow collect) and plans
+             only the branches whose fate occurs
            _dedup: URL-seen dedup (exact anti-join; Bloom probe at scale)
              keyed on page identity seen_key = (page_cls, url_hash,
              input), and in-wave first-wins dedup (min_by path per
              (url_hash, seen_key))
-           _fetch: broadcast-frontier probe of the page-store on
+           _fetch_wave: broadcast-frontier probe of the page-store on
              xxhash64(canon url) (shuffle join above broadcast_fetch_max);
-             not-in-store (404) rows anti-join the wave's found keys
+             not-in-store (404) rows anti-join the wave's found keys.
+             The real-HTTP fetcher runs on host-salted rows; for hook
+             classes it is fused with their transform (one Python pass)
            _transform: per-class transform, exactly one pass per row:
              * native specs -> pure Catalyst column exprs (JVM only)
              * hook specs   -> one Arrow mapInPandas dispatch (emits
@@ -32,7 +39,11 @@ one at a time, this engine keeps it in a DataFrame and processes one
 
     Fast path, after a wave landed on the driver and when no politeness
     or robots rule applies: _dedup_driver (Python, against a driver twin
-    of the seen set) and _fetch_local replace _schedule/_dedup/_fetch.
+    of the seen set) and _fetch_local replace _schedule/_dedup/
+    _fetch_wave. With a politeness or robots rule there is no twin; a
+    small wave then lands its tagged schedule instead (see _schedule),
+    so its plan starts from a LocalRelation rather than re-deriving the
+    budget split in each branch.
 
 Depth-first emission order is reconstructed, not executed: every row
 carries a lexicographically sortable lineage ``path`` (schemas.py), and
@@ -69,7 +80,8 @@ Scale notes (the part that must survive 100 TB / 10^10 URLs):
   keys, so every broadcast a wave builds is wave-sized, never
   store-sized.
 * Politeness ranks only the hosts a count-aggregate proves over
-  budget; cold hosts bypass the sort via a broadcast hash join. Hot
+  budget; cold hosts bypass the sort via a broadcast hash join, and the
+  wave's branches filter the one tagged frame. Hot
   hosts in the real-HTTP fetch path are salt-split on
   (host, xxhash64(url)); AQE skew-join handles residue.
 * ONE parquet snapshot per wave (the Iceberg-commit pattern) cuts the
@@ -100,11 +112,13 @@ from types import SimpleNamespace
 from typing import Any, Callable
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
-from ..session import local_df, scoped_conf
+from ..session import _struct, local_df, scoped_conf
 from . import native as N
 from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
@@ -250,7 +264,10 @@ class CrawlConfig:
     # the cluster path untouched. Emission rows are payload-free
     # (~200 B), so the cap bounds driver memory at a few MB. Wave 0
     # never takes this path (no fan-out history to estimate with — a
-    # seed wave of list pages can explode 1000x). 0 disables.
+    # seed wave of list pages can explode 1000x). The same cap bounds
+    # the frontier of a wave with a politeness split or robots rules
+    # whose tagged schedule lands on the driver (see _schedule). 0
+    # disables both.
     driver_wave_max: int = 20_000
     # fetch-join strategy: waves at or below this row count broadcast
     # the slim frontier side against the page store IN PLACE — the
@@ -327,15 +344,17 @@ class _Landed:
 
 
 def _metrics_row(wave: int, counts: dict[str, int],
-                 bloom_fpr: float | None) -> dict:
+                 bloom_fpr: float | None, schedule_local: bool) -> dict:
     """The wave's CrawlResult.metrics row: the _METRIC_KINDS counts,
-    and whether the wave's dedup probed the Bloom prefilter with its
-    estimated FPR at that probe (else None)."""
+    whether the wave's dedup probed the Bloom prefilter with its
+    estimated FPR at that probe (else None), and whether its tagged
+    schedule landed on the driver (see _schedule)."""
     return {
         "wave": wave,
         **{col: sum(counts[k] for k in kinds) for col, kinds in _METRIC_KINDS},
         "bloom_probed": bloom_fpr is not None,
         "bloom_fpr": bloom_fpr,
+        "schedule_local": schedule_local,
     }
 
 
@@ -618,6 +637,27 @@ def _make_transform(
     return transform
 
 
+def _fetch_then_transform(fetch_fn: Callable, transform: Callable,
+                          fetched_schema: pa.Schema) -> Callable:
+    """The mapInPandas body of real-HTTP hook-class rows: fetch and
+    transform in ONE Python pass instead of two chained UDF stages.
+    Each fetched batch is passed through Arrow in ``fetched_schema``
+    first, so the transform sees the values a separate fetch stage
+    would hand it over the JVM: int64 hashes, int32 statuses, no float
+    or null conjured by pandas dtype inference."""
+
+    def as_arrow_batch(batches):
+        for pdf in batches:
+            yield pa.Table.from_pandas(
+                pdf, schema=fetched_schema, preserve_index=False
+            ).to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+
+    def fetch_transform(batches):
+        return transform(as_arrow_batch(fetch_fn(batches)))
+
+    return fetch_transform
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -644,9 +684,11 @@ class CrawlEngine:
         self._robots_prefix_df = None
         self._robots_wild = None
         if robots is not None:
+            # toArrow: ONE job; a limited collect() is two (it scans
+            # one partition first, then the rest)
             rows = robots.limit(
                 politeness_ops.ROBOTS_EXPR_MAX_RULES + 1
-            ).collect()
+            ).toArrow().to_pylist()
             if len(rows) > politeness_ops.ROBOTS_EXPR_MAX_RULES:
                 # oversized rule set: the CASE expression would silently
                 # truncate to an arbitrary subset; use the broadcast-join
@@ -757,7 +799,8 @@ class CrawlEngine:
                     None,
                 )
             )
-        return self.spark.createDataFrame(rows, schema=schemas.FRONTIER_SCHEMA)
+        # a LocalRelation: scanning it starts no Python worker
+        return local_df(self.spark, rows, schemas.FRONTIER_SCHEMA)
 
     # ------------------------------------------------------------ materialize
     def _materialize(
@@ -800,7 +843,7 @@ class CrawlEngine:
             )
             self._seen_slices = [u]
         if not self._seen_slices:
-            return self.spark.createDataFrame([], SEEN_SCHEMA)
+            return local_df(self.spark, [], SEEN_SCHEMA)
         return _union_tree(self._seen_slices)
 
     # ---------------------------------------------------------------- crawl
@@ -838,6 +881,7 @@ class CrawlEngine:
             # estimator (a wave of list pages explodes ~fan-out×)
             est = max(n_frontier, prev_total or 0)
             self._wave_bloom_fpr = None  # set by a probing _dedup
+            self._wave_schedule_local = False  # set by a landing _schedule
             local = self._dedup_driver(frontier_rows)
             if local is not None and not any(local):
                 # every candidate was already seen: a no-op wave —
@@ -849,20 +893,24 @@ class CrawlEngine:
                 if local is None:
                     fetchable, nullsrc, unfetched = self._schedule(
                         frontier, n_frontier, ex)
-                    fetched = self._fetch(
-                        self._dedup(fetchable, self._seen_union(), requeues),
-                        n_frontier <= self._bcast_fetch_max, ex)
+                    if fetchable is not None:
+                        fetchable = self._dedup(
+                            fetchable, self._seen_union(), requeues)
+                    fetched, hooked = self._fetch_wave(
+                        fetchable, n_frontier <= self._bcast_fetch_max, ex)
                 else:
-                    (fetched, nullsrc), unfetched = (
+                    (fetched, hooked, nullsrc), unfetched = (
                         self._fetch_local(*local, ex), [])
-                emissions = self._transform(fetched, nullsrc, unfetched, ex)
+                emissions = self._transform(
+                    fetched, hooked, nullsrc, unfetched, ex)
                 landed = self._land(
                     emissions, ex, est, prev_total, local is not None)
             prev_total = sum(landed.counts.values())
             requeues = landed.requeues
             n_frontier = sum(landed.counts[k] for k in ex.followed)
             self._tick(wave, "emissions ckpt", t)
-            row = _metrics_row(wave, landed.counts, self._wave_bloom_fpr)
+            row = _metrics_row(wave, landed.counts, self._wave_bloom_fpr,
+                               self._wave_schedule_local)
             items = (_scout_projection if cfg.scout else _item_projection)(
                 landed.emissions, wave)
             results.append(items)
@@ -975,19 +1023,6 @@ class CrawlEngine:
                 marker_expr, F.coalesce(cls_arr, N.empty_emissions())
             )
 
-        def unfetched_cols(kind, child_cls, error):
-            # a frontier row re-emitted unfetched (robots, politeness)
-            return [
-                F.lit(kind).alias("emit_kind"),
-                F.col("page_cls").alias("src_cls"), "path",
-                F.lit(None).cast("string").alias("item_json"),
-                child_cls.cast("string").alias("child_cls"),
-                F.col("url").alias("child_url"),
-                F.col("input_json").alias("child_input_json"),
-                "priority", "page_seq", "attempts",
-                F.lit(error).cast("string").alias("error"),
-            ]
-
         # frontier-bound emission kinds: scout mode reports children
         # without following them
         followed = ["next", "requeue", "deferred"] + (
@@ -1029,10 +1064,15 @@ class CrawlEngine:
                 ),
             ).otherwise(F.col("seen_key")).alias("seen_key"),
         ]
+        transform = _make_transform(specs, self._resolve_dependencies())
+        fate = F.col("_fate")
         return SimpleNamespace(
             hook_cls=hook_cls,
             native_cls=native_cls,
-            transform=_make_transform(specs, self._resolve_dependencies()),
+            transform=transform,
+            fetch_transform=self.fetch_fn and _fetch_then_transform(
+                self.fetch_fn, transform,
+                to_arrow_schema(_struct(FETCHED_SCHEMA))),
             per_row=per_row_expr,
             host=host_of(F.col("url")),
             canon=canonicalize_url(F.col("url")),
@@ -1071,9 +1111,20 @@ class CrawlEngine:
                 F.lit(None).cast("long").alias("url_hash"),
                 F.lit(None).cast("long").alias("seen_key"),
             ]),
-            blocked_cols=unfetched_cols(
-                "blocked", F.lit(None), "robots.txt disallow"),
-            deferred_cols=unfetched_cols("deferred", F.col("page_cls"), None),
+            # a frontier row re-emitted unfetched: its fate is the
+            # emission kind (robots-blocked, or politeness-deferred)
+            unfetched_cols=[
+                fate.alias("emit_kind"),
+                F.col("page_cls").alias("src_cls"), "path",
+                F.lit(None).cast("string").alias("item_json"),
+                F.when(fate == "deferred", F.col("page_cls"))
+                .alias("child_cls"),
+                F.col("url").alias("child_url"),
+                F.col("input_json").alias("child_input_json"),
+                "priority", "page_seq", "attempts",
+                F.when(fate == "blocked", F.lit("robots.txt disallow"))
+                .alias("error"),
+            ],
             obs_aggs=[
                 F.count(F.when(F.col("emit_kind") == k, 1)).alias(k)
                 for k in _KIND_NAMES
@@ -1108,58 +1159,84 @@ class CrawlEngine:
             t[0] = now
 
     def _schedule(self, frontier: DataFrame, n_frontier: int, ex):
-        """Schedule phase of a cluster wave: the politeness budget, then
-        robots, then the fetch key columns. Returns (fetchable rows,
-        null-source rows, the unfetched emission parts: robots-blocked
-        and politeness-deferred rows)."""
+        """Schedule phase of a cluster wave: ONE tagged frontier, each
+        row's ``_fate`` decided in this precedence — politeness-deferred,
+        then null-source, then robots-blocked, else fetch (so null-source
+        rows are never deferred or blocked, and deferred rows skip the
+        robots check) — with the fetch key columns of the fetch rows.
+        Every branch is a filter over that one frame.
+
+        When a politeness split or robots rules apply and the wave is
+        small (``n_frontier`` <= driver_wave_max, exactly the waves that
+        never have a driver seen twin), the tagged frame lands on the
+        driver as one Arrow table and is re-planted as a LocalRelation:
+        the wave plan then starts from it instead of re-deriving the
+        split in every branch, and a branch whose fate no row has is not
+        planned at all. Returns (fetchable rows or None, null-source rows
+        or None, the unfetched emission parts)."""
         cfg = self.config
-        scheduled = frontier.withColumn("host", ex.host)
+        tagged = frontier.withColumn("host", ex.host)
         # politeness budget (F5): overflow deferred, paths untouched.
-        # Disabled => no deferred branch at all: a limit(0) twin of the
-        # frontier subtree would still be re-analyzed and unioned every
-        # wave (measurable driver planning cost on small waves). When
-        # the WHOLE wave fits inside the default budget, no single host
-        # can exceed it: the limiter is a provable no-op, so its
-        # per-wave count aggregate + broadcast join are skipped too
-        # (r6; only sound without a politeness table, whose per-host
-        # budgets can undercut the default).
-        deferred = blocked = None
-        if self.politeness is not None or (
+        # Disabled => no deferred tag at all. When the WHOLE wave fits
+        # inside the default budget, no single host can exceed it: the
+        # limiter is a provable no-op, so its per-wave count aggregate
+        # + broadcast join are skipped too (r6; only sound without a
+        # politeness table, whose per-host budgets can undercut the
+        # default).
+        split = self.politeness is not None or (
             cfg.host_budget_per_wave is not None
-            and n_frontier > cfg.host_budget_per_wave
-        ):
-            scheduled, deferred = politeness_ops.split_by_host_budget(
-                scheduled, self.politeness, cfg.host_budget_per_wave,
-            )
+            and n_frontier > cfg.host_budget_per_wave)
+        # (condition, fate) arms in precedence order; the first that
+        # holds decides, and a row no arm claims is fetched
+        arms = [(F.col("url").isNull(), "nullsrc")]
+        if split:
+            tagged = politeness_ops.split_by_host_budget(
+                tagged, self.politeness, cfg.host_budget_per_wave)
+            arms.insert(0, (F.col("_deferred"), "deferred"))
         # robots (F6): precompiled CASE expression when the rule set is
         # small; broadcast-join longest-prefix path when it isn't (never
         # a silent truncation). Blocked rows become 'blocked' emissions
         # so the count rides the wave Observation for free.
         if ex.robots_allowed is not None:
-            decided = scheduled.withColumn("_allowed", ex.robots_allowed)
-            scheduled = decided.filter(F.col("_allowed")).drop("_allowed")
-            blocked = decided.filter(~F.col("_allowed")).drop("_allowed")
+            arms.append((~ex.robots_allowed, "blocked"))
         elif self._robots_join:
-            scheduled, blocked = politeness_ops.robots_broadcast_join(
-                scheduled, self._robots_prefix_df, self._robots_wild,
-            )
-        fetchable = scheduled.filter(
-            F.col("url").isNotNull()
-        ).withColumn(
-            "canon_url", ex.canon
+            tagged = politeness_ops.robots_broadcast_join(
+                tagged, self._robots_prefix_df, self._robots_wild)
+            arms.append((~F.col("_allowed"), "blocked"))
+        fate = F.when(*arms[0])
+        for cond, kind in arms[1:]:
+            fate = fate.when(cond, kind)
+        fates = {"fetch"} | {kind for _, kind in arms}
+        is_fetch = F.col("_fate") == "fetch"
+        tagged = tagged.withColumn(
+            "_fate", fate.otherwise("fetch")
+        ).drop("_deferred", "_allowed").withColumn(
+            "canon_url", F.when(is_fetch, ex.canon)
         ).withColumn(
             # hash-at-emission already computed these for native-class
             # children; recompute where null
-            "url_hash", F.coalesce(F.col("url_hash"), ex.uhash)
+            "url_hash",
+            F.when(is_fetch, F.coalesce(F.col("url_hash"), ex.uhash)),
         ).withColumn(
-            "seen_key", F.coalesce(F.col("seen_key"), ex.seen_key)
+            "seen_key",
+            F.when(is_fetch, F.coalesce(F.col("seen_key"), ex.seen_key)),
         )
+        if len(arms) > 1 and n_frontier <= cfg.driver_wave_max:
+            table = tagged.toArrow()
+            fates = set(table.column("_fate").to_pylist())
+            tagged = local_df(self.spark, table, tagged.schema)
+            self._wave_schedule_local = True
+        fetchable = nullsrc = None
+        if "fetch" in fates:
+            fetchable = tagged.filter(is_fetch).drop("_fate")
+        if "nullsrc" in fates:
+            nullsrc = tagged.filter(F.col("_fate") == "nullsrc")
         unfetched = []
-        if blocked is not None:
-            unfetched.append(blocked.select(*ex.blocked_cols))
-        if deferred is not None:
-            unfetched.append(deferred.select(*ex.deferred_cols))
-        return fetchable, scheduled.filter(F.col("url").isNull()), unfetched
+        if fates & {"blocked", "deferred"}:
+            unfetched.append(
+                tagged.filter(F.col("_fate").isin("blocked", "deferred"))
+                .select(*ex.unfetched_cols))
+        return fetchable, nullsrc, unfetched
 
     def _dedup_driver(self, rows: list[tuple] | None):
         """Dedup phase of the small-wave fast path. When the previous
@@ -1200,7 +1277,8 @@ class CrawlEngine:
         ] + req_rows
         return sched_rows, null_rows
 
-    def _transform(self, fetched: DataFrame, nullsrc: DataFrame | None,
+    def _transform(self, fetched: DataFrame | None,
+                   hooked: DataFrame | None, nullsrc: DataFrame | None,
                    unfetched: list[DataFrame], ex) -> DataFrame:
         """Transform phase: the wave's emission rows, not yet
         materialized — the fetched batch (plus null-source rows)
@@ -1209,28 +1287,36 @@ class CrawlEngine:
         Exactly ONE consumer per batch row — native-class rows go
         through the single native projection (marker ++ class arrays,
         exploded once), hook-class rows through the Arrow transform
-        which emits its own markers. No shared batch cache:
-        payload-heavy rows stream straight through their one pass (a
-        per-wave payload cache is 10s of GB at 10^6-row waves and was
-        the old OOM ceiling). Robots-blocked and politeness-deferred
-        rows ride the same stream: ONE materialization per wave carries
-        everything, their counts land in the wave's tallies, and the
-        next frontier is a narrow filter over the landed rows (measured:
-        a second write+read per wave was the per-wave fixed-cost
-        floor)."""
-        batch = fetched
+        which emits its own markers. ``hooked``: the hook-class
+        emissions the fused real-HTTP fetch already produced (see
+        _fetch_wave); ``fetched`` then holds native-class rows only, and
+        only null-source rows of a hook class still take the transform
+        here. A leg with no class, or no input, is not built. No shared
+        batch cache: payload-heavy rows stream straight through their
+        one pass (a per-wave payload cache is 10s of GB at 10^6-row
+        waves and was the old OOM ceiling). Robots-blocked and
+        politeness-deferred rows ride the same stream: ONE
+        materialization per wave carries everything, their counts land
+        in the wave's tallies, and the next frontier is a narrow filter
+        over the landed rows (measured: a second write+read per wave was
+        the per-wave fixed-cost floor)."""
         if nullsrc is not None:
-            batch = batch.unionByName(nullsrc.select(*ex.nullsrc_cols))
-        batch = batch.select(*_BATCH_SELECT)
-        parts = [
-            batch.filter(F.col("page_cls").isin(ex.native_cls))
-            .select(F.explode(ex.per_row).alias("e")).select("e.*")
-        ]
-        if ex.hook_cls:
+            nullsrc = nullsrc.select(*ex.nullsrc_cols)
+        parts = [] if hooked is None else [hooked]
+        batch = [df for df in (fetched, nullsrc) if df is not None]
+        if batch and ex.native_cls:
             parts.append(
-                batch.filter(F.col("page_cls").isin(ex.hook_cls))
-                .mapInPandas(ex.transform, _EMISSION_OUT_SCHEMA)
-            )
+                _union_tree(batch).select(*_BATCH_SELECT)
+                .filter(F.col("page_cls").isin(ex.native_cls))
+                .select(F.explode(ex.per_row).alias("e")).select("e.*"))
+        if hooked is not None:
+            # the fused fetch already transformed the fetched hook rows
+            batch = [nullsrc] if nullsrc is not None else []
+        if batch and ex.hook_cls:
+            parts.append(
+                _union_tree(batch).select(*_BATCH_SELECT)
+                .filter(F.col("page_cls").isin(ex.hook_cls))
+                .mapInPandas(ex.transform, _EMISSION_OUT_SCHEMA))
         return _union_tree(parts + unfetched, allow_missing=True)
 
     def _land(self, emissions: DataFrame, ex, est: int,
@@ -1421,9 +1507,9 @@ class CrawlEngine:
             self._ckpt_pool.shutdown()
         return CrawlResult(
             results=_union_tree(
-                [spark.createDataFrame([], schemas.RESULT_SCHEMA)] + results),
+                [local_df(spark, [], schemas.RESULT_SCHEMA)] + results),
             dead=_union_tree(
-                [spark.createDataFrame([], _EMISSION_OUT_SCHEMA)] + dead,
+                [local_df(spark, [], _EMISSION_OUT_SCHEMA)] + dead,
                 allow_missing=True,
             ),
             seen=self._seen_union(),
@@ -1597,13 +1683,15 @@ class CrawlEngine:
         found/missing split happens in Python, so the wave's plan has
         NO anti-join leg — one broadcast build plus the store probe;
         the missing rows take the cluster path's 404 projection
-        (``missing_cols``) over a LocalRelation. Falls back to the
-        generic `_fetch` (real-HTTP fetcher, or a store too big for a
-        driver keyset). Returns (fetched rows, the null-source rows as
-        a DataFrame or None)."""
+        (``missing_cols``) over a LocalRelation. Falls back to
+        `_fetch_wave` (real-HTTP fetcher, or a store too big for a
+        driver keyset). Returns (fetched rows, fused hook emissions,
+        the null-source rows), each a DataFrame or None."""
         spark = self.spark
         nullsrc = (local_df(spark, null_rows, schemas.FRONTIER_SCHEMA)
                    if null_rows else None)
+        if not rows:
+            return None, None, nullsrc
         keyset = None if self.fetch_fn is not None else self._store_keyset
         if keyset is None:
             fetchable = local_df(
@@ -1614,7 +1702,7 @@ class CrawlEngine:
             # makes the broadcast path lose on tiny CLUSTER waves) and
             # the whole wave collapses to one AQE round with zero
             # shuffle stages
-            return self._fetch(fetchable, True, ex), nullsrc
+            return (*self._fetch_wave(fetchable, True, ex), nullsrc)
         found = [r for r in rows if r[7] in keyset]
         missing = [r for r in rows if r[7] not in keyset]
         parts = []
@@ -1624,28 +1712,51 @@ class CrawlEngine:
                 self.page_store.join(F.broadcast(fr), "url_hash", "inner")
                 .select(*ex.found_cols)
             )
-        if missing or not parts:
+        if missing:
             parts.append(local_df(spark, missing, schemas.FRONTIER_SCHEMA)
                          .select(*ex.missing_cols))
-        return _union_tree(parts), nullsrc
+        return _union_tree(parts), None, nullsrc
+
+    def _fetch_wave(self, fetchable: DataFrame | None, broadcast: bool,
+                    ex) -> tuple[DataFrame | None, DataFrame | None]:
+        """Fetch phase: (the fetched batch for _transform, the hook-class
+        emissions of the fused real-HTTP fetch), each None when the wave
+        has no such rows. The page store is fetched by _fetch. With
+        ``fetch_fn`` the rows are host-salted once; hook-class rows then
+        run fetch and transform in ONE mapInPandas (a second chained
+        Python UDF stage measured ~0.25 s a wave at local[4], even over
+        empty partitions), and native-class rows are fetched for the
+        Catalyst transform."""
+        if fetchable is None:
+            return None, None
+        if self.fetch_fn is None:
+            return self._fetch(fetchable, broadcast, ex), None
+        # here host-salting genuinely matters: fetch work is per-host
+        # network time, and a hot host would pile onto one task
+        # (north-rule skew mandate)
+        salted = politeness_ops.salted_repartition(
+            fetchable, self._nparts, _SALT_BUCKETS)
+        fetched = hooked = None
+        if ex.native_cls:
+            fetched = salted.filter(
+                F.col("page_cls").isin(ex.native_cls)
+            ).mapInPandas(self.fetch_fn, FETCHED_SCHEMA)
+        if ex.hook_cls:
+            hooked = salted.filter(
+                F.col("page_cls").isin(ex.hook_cls)
+            ).mapInPandas(ex.fetch_transform, _EMISSION_OUT_SCHEMA)
+        return fetched, hooked
 
     def _fetch(self, fetchable: DataFrame, broadcast: bool, ex) -> DataFrame:
-        """Fetch phase: an equi-join against the synthetic page-store
-        (reference ``URL.get_response`` sources.py:42-52 becomes a join),
-        or the real-HTTP mapInPandas fetcher when ``fetch_fn`` is set —
-        identical output schema either way. ``broadcast``: the frontier
-        is small enough to broadcast against the store in place (a
-        driver-local wave, or one within broadcast_fetch_max). A
-        frontier row the store lacks comes out as a payloadless 404:
-        the broadcast path anti-joins the frontier against the wave's
-        found keys, the shuffle path reads the left join's null side."""
-        if self.fetch_fn is not None:
-            # here host-salting genuinely matters: fetch work is
-            # per-host network time, and a hot host would pile onto
-            # one task (north-rule skew mandate)
-            fr = politeness_ops.salted_repartition(
-                fetchable, self._nparts, _SALT_BUCKETS)
-            return fr.mapInPandas(self.fetch_fn, FETCHED_SCHEMA)
+        """Page-store fetch: an equi-join against the synthetic page
+        store (reference ``URL.get_response`` sources.py:42-52 becomes a
+        join), in FETCHED_SCHEMA — the real-HTTP fetcher's output
+        schema. ``broadcast``: the frontier is small enough to broadcast
+        against the store in place (a driver-local wave, or one within
+        broadcast_fetch_max). A frontier row the store lacks comes out
+        as a payloadless 404: the broadcast path anti-joins the frontier
+        against the wave's found keys, the shuffle path reads the left
+        join's null side."""
         if self.page_store is None:
             raise CrawlError("no page_store configured")
         # NOTE on skew: the equi-join key is xxhash64(canon url) —

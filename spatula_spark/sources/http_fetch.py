@@ -7,7 +7,10 @@ this module is the drop-in network variant: an Arrow-batched
 honoring per-source method / POST data / headers / timeout / verify
 (reference ``sources.py:11-40``, carried on the frontier's source
 columns) — and emits the same batch schema the join produces, so the
-rest of the wave is identical.
+rest of the wave is identical. For hook-class pages the engine runs
+this body and the page transform in one ``mapInPandas`` (each fetched
+batch converted through Arrow in ``FETCHED_SCHEMA`` in between), so a
+fetcher's output columns are matched by name and type either way.
 
 Batching notes (the politeness contract): rows arrive already
 budget-limited per host by the wave's politeness window; the

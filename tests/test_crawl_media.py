@@ -24,6 +24,8 @@ from spatula_spark.sources.synthweb import (
     expected_detail_urls,
 )
 
+from plan_nodes import node_names, plan_nodes as _plan_nodes
+
 
 @pytest.fixture(scope="module")
 def web():
@@ -148,25 +150,6 @@ def test_missing_pages_parity_across_fetch_paths(spark, web, store):
         _assert_same_crawl(res, driver, label)
 
 
-def _plan_nodes(node):
-    """Every node of an executed physical plan, descending through the
-    adaptive wrapper, query stages and reused exchanges."""
-    yield node
-    kind = node.getClass().getSimpleName()
-    if kind == "AdaptiveSparkPlanExec":
-        kids = [node.executedPlan()]
-    elif kind.endswith("QueryStageExec"):
-        kids = [node.plan()]
-    elif kind == "ReusedExchangeExec":
-        kids = [node.child()]
-    else:
-        it, kids = node.children().iterator(), []
-        while it.hasNext():
-            kids.append(it.next())
-    for k in kids:
-        yield from _plan_nodes(k)
-
-
 def test_missing_antijoin_builds_on_found_keys(spark, store):
     """The broadcast fetch's 404 anti-join builds on the wave's found
     keys (a store ⋈ frontier join), never on a bare scan of the
@@ -283,6 +266,33 @@ def test_virtual_fetcher_matches_store(spark):
         int(r2.metrics["handled_errors"].sum()) > 0
 
 
+def test_fetch_fn_fetches_each_row_once(spark):
+    """With ``fetch_fn`` and both native (list) and hook (detail)
+    classes, every fetched page reaches the fetcher exactly once: each
+    class leg fetches only its own rows, so no leg re-runs another's
+    fetches (the network requests of a real fetcher)."""
+    from spatula_spark.plans.media_pipeline import media_verify_registry
+
+    w = SynthWeb(n_hosts=2, details_per_host=20, details_per_list=10,
+                 skew=1, with_errors=False, with_flaky=False)
+    inner = w.fetcher()
+    fetched = spark.sparkContext.accumulator(0)
+
+    def fetch(batches):
+        def count(it):
+            for pdf in it:
+                fetched.add(len(pdf))
+                yield pdf
+        return inner(count(batches))
+
+    res = CrawlEngine(spark, media_verify_registry(), fetch_fn=fetch,
+                      config=CrawlConfig(bloom_min_seen=None,
+                                         driver_wave_max=0)
+                      ).crawl(w.seeds())
+    assert len(res.items()) == 40
+    assert fetched.value == res.seen.count() == 44
+
+
 def test_robots_oversized_ruleset_uses_join(spark, web, store, monkeypatch):
     """Rule sets beyond the CASE-expression cap must NOT be silently
     truncated: the engine falls back to the broadcast-join path and
@@ -372,11 +382,10 @@ def test_robots_rfc9309_grammar(spark):
     )
     prefix_df, wild = P.split_robots_rules(robots_df)
     assert wild and prefix_df.count() + len(wild) == len(rules)
-    allowed_j, blocked_j = P.robots_broadcast_join(
-        frontier, prefix_df, wild
-    )
-    got_join = {r["case_id"]: True for r in allowed_j.collect()}
-    got_join.update({r["case_id"]: False for r in blocked_j.collect()})
+    decided = P.robots_broadcast_join(frontier, prefix_df, wild)
+    assert set(decided.columns) == set(frontier.columns) | {"_allowed"}
+    got_join = {r["case_id"]: r["_allowed"] for r in decided.collect()}
+    assert len(got_join) == len(cases)
 
     for i, (rs, path, want) in enumerate(cases):
         assert got_case[i] == want, (rs, path, "compiled")
@@ -392,6 +401,109 @@ def test_robots_blocks_prefix(spark, web, store):
                if "h1.example.com/detail/13" in u}
     assert blocked  # fixture actually exercises the rule
     assert got == expected_detail_urls(web) - blocked
+
+
+def _mixed_registry():
+    """Native list pages, hook detail pages, and a NullSource hook page
+    ("Note") that every 7th detail emits as a child."""
+    from spatula_spark.plans.pagespec import ChildPage, NullSource, PageSpec
+
+    def detail(ctx):
+        doc = ctx.json["doc"]
+        out = [{"url": ctx.url, "doc": doc}]
+        if doc % 7 == 0:
+            out.append(ChildPage("Note", input={"doc": doc}))
+        return out
+
+    reg = media_registry()
+    reg.register(PageSpec(name="MediaDetailPage", process_page=detail,
+                          handles_errors=True))
+    reg.register(PageSpec(name="Note", source=NullSource(),
+                          process_page=lambda ctx: {"note": ctx.input}))
+    return reg
+
+
+@pytest.fixture(scope="module")
+def sched_web():
+    """One list page of 16 details per host: a host budget of 6 defers
+    over three waves, and the web's robots rule blocks /detail/13."""
+    return SynthWeb(n_hosts=3, details_per_host=16, details_per_list=16,
+                    skew=1, with_errors=False, with_flaky=False)
+
+
+@pytest.fixture(scope="module")
+def sched_store(spark, sched_web):
+    df = sched_web.page_store(spark)
+    df.persist().count()
+    return df
+
+
+def _scheduled_crawl(spark, web, store, registry=None, **cfg):
+    """A crawl whose waves defer (host budget 6) and robots-block."""
+    return CrawlEngine(
+        spark, registry or _mixed_registry(), page_store=store,
+        robots=web.robots(spark),
+        config=CrawlConfig(host_budget_per_wave=6, **cfg),
+    ).crawl(web.seeds())
+
+
+def test_schedule_paths_parity(spark, sched_web, sched_store, monkeypatch):
+    """A wave's tagged schedule landed on the driver (default
+    driver_wave_max), kept in the cluster plan (driver_wave_max=0), and
+    with the robots join fallback all give the same crawl: ordered
+    items, dead letters, seen set and per-wave metric counts, over
+    deferred, robots-blocked, null-source, native and hook rows."""
+    from spatula_spark.operators import politeness as pol
+
+    counts = ["wave", *(c for c, _ in engine_mod._METRIC_KINDS)]
+
+    def crawl_rows(res):
+        return (res.items(),
+                sorted((tuple(r) for r in res.dead.collect()), key=repr),
+                sorted(tuple(r) for r in res.seen.collect()),
+                res.metrics[counts].to_dict("records"))
+
+    web, store = sched_web, sched_store
+    landed = _scheduled_crawl(spark, web, store)
+    m = landed.metrics
+    assert m["deferred"].sum() > 0 and m["blocked"].sum() > 0
+    assert m["schedule_local"].all()
+    items = landed.items()
+    assert any("note" in i for i in items)
+    assert {i["url"] for i in items if "url" in i} == expected_detail_urls(
+        web) - {u for u in expected_detail_urls(web)
+                if "h1.example.com/detail/13" in u}
+    want = crawl_rows(landed)
+    cluster = _scheduled_crawl(spark, web, store, driver_wave_max=0)
+    assert not cluster.metrics["schedule_local"].any()
+    assert crawl_rows(cluster) == want
+    monkeypatch.setattr(pol, "ROBOTS_EXPR_MAX_RULES", 0)
+    joined = _scheduled_crawl(spark, web, store)
+    assert joined.metrics["schedule_local"].all()
+    assert crawl_rows(joined) == want
+
+
+def test_landed_schedule_plan_shape(spark, sched_web, sched_store,
+                                    monkeypatch):
+    """A small budgeted, robots-filtered wave after the first plans from
+    its schedule landed on the driver: its executed plan has no ranking
+    window and its frontier side is a LocalRelation."""
+    plans = []
+    real = CrawlEngine._transform
+
+    def transform(eng, *a):
+        out = real(eng, *a)
+        plans.append(node_names(out))
+        return out
+
+    monkeypatch.setattr(CrawlEngine, "_transform", transform)
+    res = _scheduled_crawl(spark, sched_web, sched_store, media_registry())
+    assert res.metrics["deferred"].iloc[1] > 0
+    assert len(plans) == res.waves
+    for names in plans[1:]:
+        assert "WindowExec" not in names
+        assert "LocalTableScanExec" in names
+    assert res.metrics["schedule_local"].all()
 
 
 def test_bloom_and_exact_agree(spark, web, store, monkeypatch):

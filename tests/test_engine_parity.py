@@ -517,11 +517,14 @@ def test_retries_zero_parity():
 
 def test_zero_host_budget_rejected(spark, tiny_store):
     """budget=0 would defer every row forever (infinite loop); must be
-    rejected up front."""
+    rejected up front. A disabled limiter (None) tags no row deferred."""
     from spatula_spark.operators.politeness import split_by_host_budget
 
     with pytest.raises(ValueError, match="host budget"):
         split_by_host_budget(tiny_store.limit(0), None, 0)
+    tagged = split_by_host_budget(tiny_store, None, None)
+    assert tagged.columns == tiny_store.columns + ["_deferred"]
+    assert tagged.filter("_deferred").count() == 0
 
 
 def test_scout_escapes_json(spark, tiny_store):

@@ -174,3 +174,86 @@ def test_http_404_dead_letter(spark, site):
     res = eng.crawl([{"page_cls": "Nope", "url": f"{site}/missing"}])
     assert res.dead.count() == 1
     assert "status=404" in res.dead.collect()[0]["error"]
+
+
+def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
+                                                        monkeypatch):
+    """Hook-class rows of a real-HTTP wave are fetched and transformed
+    by ONE mapInPandas — no Python stage feeds another — on cluster
+    waves and the driver fast path alike, and the crawl still yields
+    every item and the 404 dead letter. With a robots rule every wave's
+    schedule lands on the driver, so no empty null-source leg is planned
+    either: exactly one mapInPandas per wave."""
+    from plan_nodes import plan_nodes
+
+    plans = []
+    real = CrawlEngine._transform
+
+    def transform(eng, *a):
+        out = real(eng, *a)
+        udfs = [n for n in plan_nodes(out._jdf.queryExecution().executedPlan())
+                if n.getClass().getSimpleName() == "MapInPandasExec"]
+        plans.append([
+            sum(m.getClass().getSimpleName() == "MapInPandasExec"
+                for m in list(plan_nodes(n))[1:])
+            for n in udfs])
+        return out
+
+    monkeypatch.setattr(CrawlEngine, "_transform", transform)
+    reg = _registry(site)
+    reg.register(PageSpec(name="Nope", process_page=lambda ctx: {}))
+    host = site.split("/")[2].split(":")[0]
+    for robots in (None, spark.createDataFrame(
+            [(host, "/nothing", False)],
+            "host string, path_prefix string, allow boolean")):
+        plans.clear()
+        res = CrawlEngine(
+            spark, reg, fetch_fn=make_http_fetcher(), robots=robots,
+            config=CrawlConfig(fail_fast=False),
+        ).crawl([{"page_cls": "EmployeeList", "url": f"{site}/list"},
+                 {"page_cls": "Nope", "url": f"{site}/missing"}])
+        assert [i["id"] for i in res.items()] == list(range(7))
+        dead = res.dead.collect()
+        assert len(dead) == 1 and "status=404" in dead[0]["error"]
+        assert res.seen.count() == 11
+        assert len(plans) == res.waves >= 3
+        # no mapInPandas reads another one's output
+        assert all(chained == [0] * len(chained) for chained in plans)
+    assert res.metrics["schedule_local"].all()
+    assert [len(udfs) for udfs in plans] == [1] * res.waves
+
+
+def test_fused_fetch_hands_transform_arrow_typed_batches(spark):
+    """The fused body passes each fetched batch through Arrow in
+    FETCHED_SCHEMA: object-dtype ints (what a fetcher's row tuples
+    build) reach the transform as exact int64/int32 columns."""
+    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from spatula_spark.plans.engine import _fetch_then_transform
+    from spatula_spark.session import _struct
+    from spatula_spark.sources.http_fetch import FETCHED_SCHEMA
+
+    cols = [c.split()[0] for c in FETCHED_SCHEMA.split(", ")]
+    big = (1 << 62) + 1  # not representable as float64
+    row = ("P", "0", "http://x/", None, b"{}", None, None, 200, 0, 0,
+           "json", None, True, 0, 0, big, -big)
+    seen = []
+
+    def fetch(batches):
+        for _ in batches:
+            yield pd.DataFrame([row], columns=cols, dtype=object)
+
+    def transform(batches):
+        for pdf in batches:
+            seen.append(pdf)
+            yield pdf
+
+    body = _fetch_then_transform(
+        fetch, transform, to_arrow_schema(_struct(FETCHED_SCHEMA)))
+    list(body(iter([pd.DataFrame({"url": ["http://x/"]})])))
+    pdf = seen[0]
+    assert str(pdf["url_hash"].dtype) == "int64"
+    assert str(pdf["status"].dtype) == "int32"
+    assert int(pdf["url_hash"][0]) == big and int(pdf["seen_key"][0]) == -big
+    assert pdf["payload"][0] == b"{}" and pdf["found"][0]
