@@ -31,11 +31,17 @@ one at a time, this engine keeps it in a DataFrame and processes one
                its own fetched markers — no shared batch cache)
            _land: ONE parquet snapshot per wave carries every emission
              kind (kind tallies via Observation); a small wave lands on
-             the driver as one Arrow table instead
+             the driver as one Arrow table instead. Either way a wave
+             whose emission total is at most driver_wave_max is
+             driver-held: its rows stay on the driver (a parquet-landed
+             one is read back with pyarrow, no Spark job)
            _update_seen: seen ∪= fetched keys
            _next_frontier: a narrow filter over the landed emissions;
              then the wave's metrics row
-           _commit: to the snapshot store every checkpoint_every waves
+           _commit: to the snapshot store every checkpoint_every waves;
+             a driver-held wave's frontier, seen delta and items are
+             Arrow tables built from its rows, which the store writes
+             with pyarrow (no Spark job), other waves' are DataFrames
 
     Fast path, after a wave landed on the driver and when no politeness
     or robots rule applies: _dedup_driver (Python, against a driver twin
@@ -113,12 +119,13 @@ from typing import Any, Callable
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
-from ..session import _struct, local_df, scoped_conf
+from ..session import _struct, arrow_table, as_df, local_df, scoped_conf
 from . import native as N
 from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
@@ -338,9 +345,10 @@ class _Landed:
     """One wave's emissions after the land phase."""
 
     emissions: DataFrame  # scratch-parquet scan, or a LocalRelation
-    rows: list[dict] | None  # the emission rows, if landed on the driver
+    rows: list[dict] | None  # the emission rows, if driver-held
     counts: dict[str, int]  # emission kind -> rows
     requeues: bool  # the next frontier can hold attempts > 0 rows
+    null_urls: bool  # the next frontier can hold null-url rows
 
 
 def _metrics_row(wave: int, counts: dict[str, int],
@@ -676,35 +684,13 @@ class CrawlEngine:
         self.spark = spark
         self.registry = registry
         self.robots = robots
-        # compile small robots rule sets ONCE into a Catalyst CASE
-        # expression (politeness.robots_allow_expr); collecting the
-        # rules per wave would cost one job each
+        # the robots rules, compiled by _load_robots once a wave is
+        # about to run
+        self._robots_loaded = False
         self._robots_rules = None
         self._robots_join = False
         self._robots_prefix_df = None
         self._robots_wild = None
-        if robots is not None:
-            # toArrow: ONE job; a limited collect() is two (it scans
-            # one partition first, then the rest)
-            rows = robots.limit(
-                politeness_ops.ROBOTS_EXPR_MAX_RULES + 1
-            ).toArrow().to_pylist()
-            if len(rows) > politeness_ops.ROBOTS_EXPR_MAX_RULES:
-                # oversized rule set: the CASE expression would silently
-                # truncate to an arbitrary subset; use the broadcast-join
-                # longest-match path per wave instead. Wildcard rules
-                # are split out ONCE here (they ride a compiled
-                # expression on top of the prefix join — collecting
-                # them per wave would cost a job each).
-                self._robots_join = True
-                self._robots_prefix_df, self._robots_wild = (
-                    politeness_ops.split_robots_rules(robots)
-                )
-            else:
-                self._robots_rules = [
-                    (r["host"], r["path_prefix"], bool(r["allow"]))
-                    for r in rows
-                ]
         # validate the per-host budget table ONCE here (it's
         # broadcast-small): a budget_per_wave <= 0 row would defer that
         # host's rows on every wave, so the loop never drains
@@ -767,6 +753,37 @@ class CrawlEngine:
         # rebuilding expression trees every wave is driver-bound)
         self._dedup_agg = None
 
+    def _load_robots(self) -> None:
+        """Compile the robots rules ONCE per engine, on the first wave
+        (a crawl that runs none, such as a resume probe, reads nothing):
+        a small rule set into a Catalyst CASE expression
+        (politeness.robots_allow_expr), since collecting the rules per
+        wave would cost one job each."""
+        if self._robots_loaded or self.robots is None:
+            return
+        self._robots_loaded = True
+        # toArrow: ONE job; a limited collect() is two (it scans one
+        # partition first, then the rest)
+        rows = self.robots.limit(
+            politeness_ops.ROBOTS_EXPR_MAX_RULES + 1
+        ).toArrow().to_pylist()
+        if len(rows) > politeness_ops.ROBOTS_EXPR_MAX_RULES:
+            # oversized rule set: the CASE expression would silently
+            # truncate to an arbitrary subset; use the broadcast-join
+            # longest-match path per wave instead. Wildcard rules are
+            # split out ONCE here (they ride a compiled expression on
+            # top of the prefix join — collecting them per wave would
+            # cost a job each).
+            self._robots_join = True
+            self._robots_prefix_df, self._robots_wild = (
+                politeness_ops.split_robots_rules(self.robots)
+            )
+        else:
+            self._robots_rules = [
+                (r["host"], r["path_prefix"], bool(r["allow"]))
+                for r in rows
+            ]
+
     def _store_by_key(self) -> DataFrame:
         if self._store_bykey is None:
             self._store_bykey = self.page_store.repartition(
@@ -779,6 +796,12 @@ class CrawlEngine:
         """Build wave-0 frontier from seed dicts
         (page_cls, url?, input?, priority?). Source resolution follows
         the reference precedence (pages.py:157-166)."""
+        # a LocalRelation: scanning it starts no Python worker
+        return local_df(
+            self.spark, self._seed_rows(seeds), schemas.FRONTIER_SCHEMA)
+
+    def _seed_rows(self, seeds: list[dict]) -> list[tuple]:
+        """The wave-0 frontier as FRONTIER_SCHEMA tuples, one per seed."""
         rows = []
         for i, s in enumerate(seeds):
             spec = self.registry[s["page_cls"]]
@@ -799,8 +822,7 @@ class CrawlEngine:
                     None,
                 )
             )
-        # a LocalRelation: scanning it starts no Python worker
-        return local_df(self.spark, rows, schemas.FRONTIER_SCHEMA)
+        return rows
 
     # ------------------------------------------------------------ materialize
     def _materialize(
@@ -817,7 +839,7 @@ class CrawlEngine:
         materialization job via ``Observation`` — row counts and
         emission-kind tallies come for free instead of costing an extra
         job each per wave. Returns (the re-read DataFrame, the observed
-        values or None)."""
+        values or None, the written dir)."""
         obs = None
         if obs_exprs:
             obs = Observation()
@@ -827,7 +849,7 @@ class CrawlEngine:
         df.write.mode("overwrite").parquet(path)
         # schema pinned: an inferring read runs a footer job per call
         out = self.spark.read.schema(df.schema).parquet(path)
-        return out, (obs.get if obs is not None else None)
+        return out, (obs.get if obs is not None else None), path
 
     # ------------------------------------------------------------ seen union
     def _seen_union(self) -> DataFrame:
@@ -837,7 +859,7 @@ class CrawlEngine:
         the cluster-side table (dedup anti-join, bloom backfill/regrow)
         triggers it."""
         if len(self._seen_slices) > 8:
-            u, _ = self._materialize(
+            u, _, _ = self._materialize(
                 _union_tree(self._seen_slices).coalesce(self._nparts),
                 "seen_compact",
             )
@@ -852,13 +874,13 @@ class CrawlEngine:
         the crawl; each wave runs the phase methods in the order the
         module docstring lists them."""
         cfg = self.config
-        frontier, n_frontier, start_wave, results, metrics_rows = (
-            self._begin(seeds))
-        ex = self._wave_exprs()
+        (frontier, n_frontier, start_wave, results, metrics_rows,
+         null_urls) = self._begin(seeds)
+        ex = None  # built once a wave is about to run
         dead: list[DataFrame] = []
         # the previous wave's frontier as FRONTIER_SCHEMA tuples when it
-        # landed on the driver, and its emission total (None: no wave
-        # has run in this crawl yet)
+        # was driver-held, and its emission total (None: no wave has
+        # run in this crawl yet)
         frontier_rows: list[tuple] | None = None
         prev_total: int | None = None
         # seed lists hold attempts=0 rows only; a resumed frontier may
@@ -876,6 +898,11 @@ class CrawlEngine:
             self._tick(wave, "count", t)
             if cfg.max_waves is not None and wave >= cfg.max_waves + start_wave:
                 break
+            if ex is None:
+                # per-crawl set-up a crawl that runs no wave never pays
+                ex = self._wave_exprs()
+                if self._robots_rules or self._robots_join:
+                    self._py_seen = None  # see _begin
             # size the wave by its likely OUTPUT, not its input: the
             # previous wave's emission total is the fan-out-aware
             # estimator (a wave of list pages explodes ~fan-out×)
@@ -888,11 +915,11 @@ class CrawlEngine:
                 # skip the Spark job entirely
                 landed = _Landed(
                     local_df(self.spark, [], _EMISSION_OUT_SCHEMA), [],
-                    dict.fromkeys(_KIND_NAMES, 0), False)
+                    dict.fromkeys(_KIND_NAMES, 0), False, False)
             else:
                 if local is None:
                     fetchable, nullsrc, unfetched = self._schedule(
-                        frontier, n_frontier, ex)
+                        frontier, n_frontier, ex, null_urls)
                     if fetchable is not None:
                         fetchable = self._dedup(
                             fetchable, self._seen_union(), requeues)
@@ -906,7 +933,7 @@ class CrawlEngine:
                 landed = self._land(
                     emissions, ex, est, prev_total, local is not None)
             prev_total = sum(landed.counts.values())
-            requeues = landed.requeues
+            requeues, null_urls = landed.requeues, landed.null_urls
             n_frontier = sum(landed.counts[k] for k in ex.followed)
             self._tick(wave, "emissions ckpt", t)
             row = _metrics_row(wave, landed.counts, self._wave_bloom_fpr,
@@ -920,18 +947,19 @@ class CrawlEngine:
             frontier, frontier_rows = self._next_frontier(landed, ex)
             self._tick(wave, "frontier derive", t)
             metrics_rows.append(row)
-            self._commit(
-                wave, start_wave, frontier, new_seen, items, metrics_rows)
+            self._commit(wave, start_wave, landed, frontier, frontier_rows,
+                         new_seen, items, metrics_rows)
+            self._tick(wave, "commit", t)
             wave += 1
-        return self._finish(
-            wave, start_wave, frontier, results, dead, metrics_rows)
+        return self._finish(wave, start_wave, results, dead, metrics_rows)
 
     # ------------------------------------------------------------ wave phases
     def _begin(self, seeds: list[dict]):
         """Reset the per-crawl state, and resume from the latest
         committed snapshot when there is one. Returns (frontier, its
         row count or None when unknown, start wave, resumed results,
-        resumed metrics rows)."""
+        resumed metrics rows, whether the frontier can hold a null-url
+        row)."""
         cfg = self.config
         self._spill_n = 0
         self._spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
@@ -940,8 +968,11 @@ class CrawlEngine:
         # seen slices not yet folded into the Bloom filter: the fold
         # runs only when a wave is about to probe it (see _dedup)
         self._bloom_pending: list[DataFrame] = []
-        self._ckpt_items: list[DataFrame] = []
-        self._ckpt_seen: list[DataFrame] = []
+        # the every-K window's snapshot views: DataFrames, or Arrow
+        # tables of driver-held waves (see _commit)
+        self._ckpt_items: list[DataFrame | pa.Table] = []
+        self._ckpt_seen: list[DataFrame | pa.Table] = []
+        self._ckpt_frontier = None
         self._ckpt_future = None
         self._ckpt_pool = (
             ThreadPoolExecutor(max_workers=1, thread_name_prefix="ckpt")
@@ -954,11 +985,12 @@ class CrawlEngine:
         # exceeds driver_wave_max; cluster dedup takes over seamlessly.
         # Never built when a politeness table, host budget or robots
         # rules apply: _dedup_driver cannot use it on any wave then.
+        # (crawl() drops it under robots rules, which are read only
+        # once a wave is about to run.)
         self._py_seen: set[tuple[int, int]] | None = (
             set() if cfg.driver_wave_max and not (
                 self.politeness is not None
-                or cfg.host_budget_per_wave is not None
-                or self._robots_rules or self._robots_join)
+                or cfg.host_budget_per_wave is not None)
             else None
         )
         self._bloom = (
@@ -969,8 +1001,9 @@ class CrawlEngine:
         self._store = open_snapshots(self.spark, cfg)
         resumed = self._store and self._store.resume(cfg.resume_upto_wave)
         if resumed is None:
-            # seed_frontier emits exactly one row per seed
-            return self.seed_frontier(seeds), len(seeds), 0, [], []
+            rows = self._seed_rows(seeds)
+            return (local_df(self.spark, rows, schemas.FRONTIER_SCHEMA),
+                    len(rows), 0, [], [], any(r[1] is None for r in rows))
         self._py_seen = None  # unknown provenance; cluster dedup
         rseen = resumed.seen
         self._seen_count = (rseen.count() if resumed.n_seen is None
@@ -979,11 +1012,12 @@ class CrawlEngine:
             if self._store.seen_volatile:
                 # the snapshot's seen files can vanish mid-crawl: keep a
                 # private copy. Otherwise the slice reads them in place.
-                rseen, _ = self._materialize(rseen, "seen_resume")
+                rseen, _, _ = self._materialize(rseen, "seen_resume")
             self._seen_slices.append(rseen)
             self._bloom_pending.append(rseen)
+        # a resumed frontier's null urls are unknown
         return (resumed.frontier, resumed.n_frontier, resumed.next_wave,
-                [resumed.items], resumed.metrics_rows)
+                [resumed.items], resumed.metrics_rows, True)
 
     def _wave_exprs(self) -> SimpleNamespace:
         """The wave-invariant expression cache, built ONCE per crawl.
@@ -996,6 +1030,7 @@ class CrawlEngine:
         job-free driver gap per wave against ~0.3 s of actual cluster
         work. Everything that does not depend on the wave number is
         built here and passed to the phases."""
+        self._load_robots()
         specs = self.registry.specs()
         native_cls = [
             n for n, s in specs.items() if s.native_emit_array is not None
@@ -1131,7 +1166,11 @@ class CrawlEngine:
             ] + [F.count(F.when(
                 (F.col("emit_kind") == "deferred") & (F.col("attempts") > 0),
                 1,
-            )).alias("_deferred_requeues")],
+            )).alias("_deferred_requeues"), F.count(F.when(
+                F.col("emit_kind").isin(followed)
+                & F.col("child_url").isNull(),
+                1,
+            )).alias("_null_urls")],
             followed=followed,
             frontier_cols=[
                 F.col("child_cls").alias("page_cls"),
@@ -1158,13 +1197,16 @@ class CrawlEngine:
                   file=sys.stderr, flush=True)
             t[0] = now
 
-    def _schedule(self, frontier: DataFrame, n_frontier: int, ex):
+    def _schedule(self, frontier: DataFrame, n_frontier: int, ex,
+                  null_urls: bool = True):
         """Schedule phase of a cluster wave: ONE tagged frontier, each
         row's ``_fate`` decided in this precedence — politeness-deferred,
         then null-source, then robots-blocked, else fetch (so null-source
         rows are never deferred or blocked, and deferred rows skip the
         robots check) — with the fetch key columns of the fetch rows.
-        Every branch is a filter over that one frame.
+        Every branch is a filter over that one frame. The null-source
+        arm (and branch) exists only when ``null_urls`` says the
+        frontier can hold a null-url row (True when unknown).
 
         When a politeness split or robots rules apply and the wave is
         small (``n_frontier`` <= driver_wave_max, exactly the waves that
@@ -1188,7 +1230,7 @@ class CrawlEngine:
             and n_frontier > cfg.host_budget_per_wave)
         # (condition, fate) arms in precedence order; the first that
         # holds decides, and a row no arm claims is fetched
-        arms = [(F.col("url").isNull(), "nullsrc")]
+        arms = [(F.col("url").isNull(), "nullsrc")] if null_urls else []
         if split:
             tagged = politeness_ops.split_by_host_budget(
                 tagged, self.politeness, cfg.host_budget_per_wave)
@@ -1197,19 +1239,22 @@ class CrawlEngine:
         # small; broadcast-join longest-prefix path when it isn't (never
         # a silent truncation). Blocked rows become 'blocked' emissions
         # so the count rides the wave Observation for free.
+        robots = ex.robots_allowed is not None or self._robots_join
         if ex.robots_allowed is not None:
             arms.append((~ex.robots_allowed, "blocked"))
         elif self._robots_join:
             tagged = politeness_ops.robots_broadcast_join(
                 tagged, self._robots_prefix_df, self._robots_wild)
             arms.append((~F.col("_allowed"), "blocked"))
-        fate = F.when(*arms[0])
-        for cond, kind in arms[1:]:
-            fate = fate.when(cond, kind)
+        fate = None
+        for cond, kind in arms:
+            fate = (F.when(cond, kind) if fate is None
+                    else fate.when(cond, kind))
+        fate = F.lit("fetch") if fate is None else fate.otherwise("fetch")
         fates = {"fetch"} | {kind for _, kind in arms}
         is_fetch = F.col("_fate") == "fetch"
         tagged = tagged.withColumn(
-            "_fate", fate.otherwise("fetch")
+            "_fate", fate
         ).drop("_deferred", "_allowed").withColumn(
             "canon_url", F.when(is_fetch, ex.canon)
         ).withColumn(
@@ -1221,7 +1266,7 @@ class CrawlEngine:
             "seen_key",
             F.when(is_fetch, F.coalesce(F.col("seen_key"), ex.seen_key)),
         )
-        if len(arms) > 1 and n_frontier <= cfg.driver_wave_max:
+        if (split or robots) and n_frontier <= cfg.driver_wave_max:
             table = tagged.toArrow()
             fates = set(table.column("_fate").to_pylist())
             tagged = local_df(self.spark, table, tagged.schema)
@@ -1333,7 +1378,10 @@ class CrawlEngine:
         (``emit_hash_cols``) applies ONLY here: the hashes serve solely
         the next wave's driver-side dedup. Other waves write scratch
         parquet, with the kind tallies riding the write as an
-        Observation."""
+        Observation; when those prove the wave small after all (wave 0,
+        a resumed leg's first wave), its rows are read back with
+        pyarrow — no Spark job, and driver_wave_max bounds the memory —
+        so every wave within the cap is driver-held (``rows`` set)."""
         cfg = self.config
         if not (cfg.driver_wave_max and prev_total is not None
                 and est <= cfg.driver_wave_max):
@@ -1341,13 +1389,20 @@ class CrawlEngine:
             # of its children's — left unchecked the per-wave union
             # fan-in compounds geometrically across waves (7×(P+8) per
             # wave). coalesce is narrow (no shuffle).
-            out, m = self._materialize(
+            out, m, path = self._materialize(
                 emissions.coalesce(self._wave_partitions(est, prev_total)),
                 "emissions", ex.obs_aggs,
             )
+            counts = {k: int(m[k]) for k in _KIND_NAMES}
+            rows = None
+            total = sum(counts.values())
+            if cfg.driver_wave_max and total <= cfg.driver_wave_max:
+                rows = pq.read_table(path, schema=to_arrow_schema(
+                    _struct(_EMISSION_OUT_SCHEMA))).to_pylist()
             return _Landed(
-                out, None, {k: int(m[k]) for k in _KIND_NAMES},
-                bool(m["requeue"] or m["_deferred_requeues"]))
+                out, rows, counts,
+                bool(m["requeue"] or m["_deferred_requeues"]),
+                bool(m["_null_urls"]))
         # a driver-local frontier's plan has zero shuffle stages, so
         # AQE re-planning is pure overhead (~8% of a 13-wave tree crawl)
         aqe_off = {"spark.sql.adaptive.enabled": "false"}
@@ -1359,12 +1414,14 @@ class CrawlEngine:
         requeues = counts["requeue"] > 0 or any(
             r["emit_kind"] == "deferred" and (r["attempts"] or 0) > 0
             for r in rows)
+        null_urls = any(r["emit_kind"] in ex.followed
+                        and r["child_url"] is None for r in rows)
         # ONE partition: plain createDataFrame parallelizes to
         # defaultParallelism slices, and per-wave unions then compound
         # task counts geometrically (measured 161 → 417 tasks/stage by
         # wave 12 of a tree crawl)
         return _Landed(local_df(self.spark, table, _EMISSION_OUT_SCHEMA),
-                       rows, counts, requeues)
+                       rows, counts, requeues, null_urls)
 
     def _wave_partitions(self, est: int, prev_total: int | None) -> int:
         """Coalesce width of a parquet-landed wave. Tiny waves at full
@@ -1463,8 +1520,8 @@ class CrawlEngine:
         wave's frontier derives from exactly one landed scan (deferred
         rows were folded into the emissions). Returns (frontier, the
         same rows as FRONTIER_SCHEMA tuples for the next wave's
-        driver-side dedup when the wave landed on the driver, else
-        None)."""
+        driver-side dedup and the snapshot when the wave is
+        driver-held, else None)."""
         frontier = landed.emissions.filter(
             F.col("emit_kind").isin(ex.followed)
         ).select(*ex.frontier_cols)
@@ -1477,31 +1534,52 @@ class CrawlEngine:
             for r in landed.rows if r["emit_kind"] in ex.followed
         ]
 
-    def _commit(self, wave: int, start_wave: int, frontier: DataFrame,
+    def _commit(self, wave: int, start_wave: int, landed: _Landed,
+                frontier: DataFrame, frontier_rows: list[tuple] | None,
                 new_seen: DataFrame | None, items: DataFrame,
                 metrics_rows: list[dict]) -> None:
         """Commit phase: accumulate the wave's item and seen deltas and,
         every ``checkpoint_every`` waves, commit their union since the
-        last commit to the snapshot store (plans/snapshots.py)."""
+        last commit to the snapshot store (plans/snapshots.py).
+
+        A driver-held wave's views are Arrow tables built from the rows
+        the driver holds: the frontier tuples, the fetched (url_hash,
+        seen_key) pairs, and the item rows ``_item_projection`` selects
+        (scout items keep their Catalyst projection), so its snapshot
+        write starts no Spark job. Other waves' views are the
+        DataFrames over the landed emissions."""
         if self._store is None:
             return
+        rows = landed.rows
+        if rows is not None:
+            frontier = arrow_table(frontier_rows, schemas.FRONTIER_SCHEMA)
+            if new_seen is not None:
+                new_seen = arrow_table(
+                    [(r["url_hash"], r["seen_key"]) for r in rows
+                     if r["emit_kind"] == "fetched"], SEEN_SCHEMA)
+            if not self.config.scout:
+                items = arrow_table(
+                    [(r["path"], r["src_cls"], r["item_json"], wave)
+                     for r in rows if r["emit_kind"] == "item"],
+                    schemas.RESULT_SCHEMA)
+        self._ckpt_frontier = frontier
         self._ckpt_items.append(items)
         if new_seen is not None:
             self._ckpt_seen.append(new_seen)
         if (wave + 1 - start_wave) % max(1, self.config.checkpoint_every) == 0:
-            self._commit_window(wave, frontier, metrics_rows)
+            self._commit_window(wave, metrics_rows)
 
-    def _finish(self, wave: int, start_wave: int, frontier: DataFrame,
-                results: list[DataFrame], dead: list[DataFrame],
+    def _finish(self, wave: int, start_wave: int, results: list[DataFrame],
+                dead: list[DataFrame],
                 metrics_rows: list[dict]) -> CrawlResult:
         """Flush the last every-K window's deltas, wait for the commit
         in flight, and assemble the CrawlResult."""
         spark = self.spark
         if self._ckpt_items:
             # flush deltas from the tail waves of an every-K window
-            # (frontier is the final — possibly empty — frontier, so
-            # a resume from this snapshot sees the finished crawl)
-            self._commit_window(wave - 1, frontier, metrics_rows)
+            # (with the final — possibly empty — frontier, so a resume
+            # from this snapshot sees the finished crawl)
+            self._commit_window(wave - 1, metrics_rows)
         self._join_checkpoint()
         if self._ckpt_pool is not None:
             self._ckpt_pool.shutdown()
@@ -1836,18 +1914,21 @@ class CrawlEngine:
         return spec.process_page(ctx)
 
     # ----------------------------------------------------------- checkpoint
-    def _commit_window(self, wave, frontier, metrics_rows):
-        """Commit the accumulated item/seen deltas (every-K window) as
-        the wave-``wave`` snapshot — inline, or on the single
-        checkpoint thread when ``checkpoint_async``. The inputs are
-        filters over the wave's already-materialized scratch parquet
-        (immutable until crawl end), so the background write races
-        nothing; one worker thread serializes commits so the
-        manifest-last atomicity argument is unchanged."""
-        items = _union_tree(self._ckpt_items)
-        seen = _union_tree(self._ckpt_seen) if self._ckpt_seen else None
+    def _commit_window(self, wave, metrics_rows):
+        """Commit the accumulated item/seen deltas (every-K window) and
+        the latest frontier as the wave-``wave`` snapshot — inline, or
+        on the single checkpoint thread when ``checkpoint_async``. The
+        inputs are filters over the waves' already-landed emissions
+        (immutable until crawl end) or Arrow tables nothing mutates, so
+        the background write races nothing; one worker thread
+        serializes commits so the manifest-last atomicity argument is
+        unchanged."""
+        items = _window_view(self.spark, self._ckpt_items,
+                             schemas.RESULT_SCHEMA)
+        seen = (_window_view(self.spark, self._ckpt_seen, SEEN_SCHEMA)
+                if self._ckpt_seen else None)
         self._ckpt_items, self._ckpt_seen = [], []
-        args = (wave, frontier, seen, items, list(metrics_rows))
+        args = (wave, self._ckpt_frontier, seen, items, list(metrics_rows))
         if self._ckpt_pool is None:
             self._store.commit(*args)
             return
@@ -1891,6 +1972,15 @@ def _union_tree(dfs: list, allow_missing: bool = False):
             for i in range(0, len(dfs), 2)
         ]
     return dfs[0]
+
+
+def _window_view(spark: SparkSession, parts: list, schema):
+    """One snapshot view over an every-K window's per-wave views: one
+    Arrow table when every wave was driver-held, else a union with the
+    Arrow parts planted as LocalRelations."""
+    if all(isinstance(p, pa.Table) for p in parts):
+        return pa.concat_tables(parts)
+    return _union_tree([as_df(spark, p, schema) for p in parts])
 
 
 def _json_string_literal(col) -> "F.Column":

@@ -8,7 +8,10 @@ two-method contract, which both stores here implement:
   the previous commit (``seen_delta`` None when none), and every
   metrics row so far. The engine keeps the cadence for either store
   (every ``checkpoint_every`` waves, optionally on one background
-  thread, plus a tail commit when the crawl stops mid-window).
+  thread, plus a tail commit when the crawl stops mid-window). Each
+  view is a DataFrame, or an Arrow table in the view's schema
+  (``FRONTIER_SCHEMA``, ``SEEN_SCHEMA``, ``RESULT_SCHEMA``) when the
+  engine already holds the window's rows on the driver.
 * ``resume(upto) -> Resumed | None``: the latest committed snapshot, or
   with ``upto`` the latest at or before that wave, deleting later ones
   so the replayed timeline is linear (Iceberg rollback_to_snapshot).
@@ -22,7 +25,11 @@ ANALOGUE of Iceberg snapshots for deployments without the Iceberg
 runtime jar: one ``wave=N`` dir per commit holding ``frontier``,
 ``seen_delta`` (append-only), ``items``, every ``_COMPACT_EVERY``
 deltas a ``seen_base`` (the whole seen set; ``expire_deltas`` deletes
-what it supersedes), and ``MANIFEST.json`` (written last).
+what it supersedes), and ``MANIFEST.json`` (written last). A DataFrame
+view is written by Spark; an Arrow view by ``pyarrow`` on the calling
+thread, as one part file in the session's
+``spark.sql.parquet.compression.codec`` with every column optional (as
+Spark writes them), so a small wave's commit starts no Spark job.
 
 ``IcebergSnapshots`` (``iceberg_table_prefix``) is the catalog-native
 store for deployments that have one (`spark-submit --packages
@@ -31,9 +38,11 @@ org.apache.iceberg:iceberg-spark-runtime-...` plus a
 manifest table's row as commit marker, rollback as a row-level
 ``DELETE ... WHERE wave > N``. Its append-only seen table has no delta
 fan-in to compact and no deltas to expire, so
-``checkpoint_expire_deltas`` with a prefix is rejected. Its e2e test
+``checkpoint_expire_deltas`` with a prefix is rejected. Arrow views
+are planted as LocalRelations (``local_df``) and appended like any
+other. Its e2e test
 (tests/test_crawl_media.py::test_iceberg_checkpoint_resume) is
-skip-marked without a catalog.
+skip-marked without a catalog, so that Arrow path is unexercised here.
 """
 
 from __future__ import annotations
@@ -43,11 +52,13 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..session import as_df
 
 SEEN_SCHEMA = "url_hash long, seen_key long"
 
@@ -58,6 +69,15 @@ SEEN_SCHEMA = "url_hash long, seen_key long"
 # would otherwise fan in 1000 small parquet dirs. LSM-style tradeoff:
 # one O(|seen|) rewrite per K waves against resume fan-in.
 _COMPACT_EVERY = 16
+
+# spark.sql.parquet.compression.codec -> the pyarrow codec that writes
+# the same parquet compression; a codec pyarrow cannot write (lzo)
+# leaves the Arrow view to a Spark write
+_ARROW_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "gzip": "gzip", "brotli": "brotli", "lz4": "lz4", "lz4_raw": "lz4",
+    "zstd": "zstd",
+}
 
 _ICEBERG_CATALOG_CLASSES = (
     "org.apache.iceberg.spark.SparkCatalog",
@@ -129,12 +149,12 @@ class ParquetSnapshots:
         d = self._path(wave)
         if os.path.exists(d):
             shutil.rmtree(d)
-        frontier.write.mode("overwrite").parquet(os.path.join(d, "frontier"))
+        self._write(frontier, os.path.join(d, "frontier"),
+                    schemas.FRONTIER_SCHEMA)
         if seen_delta is not None:
-            seen_delta.write.mode("overwrite").parquet(
-                os.path.join(d, "seen_delta")
-            )
-        items.write.mode("overwrite").parquet(os.path.join(d, "items"))
+            self._write(seen_delta, os.path.join(d, "seen_delta"),
+                        SEEN_SCHEMA)
+        self._write(items, os.path.join(d, "items"), schemas.RESULT_SCHEMA)
         has_base = self._compact_seen(wave, seen_delta)
         # Iceberg-manifest file stats: per-file bytes + row counts read
         # from the parquet footers (no data scan) — resumability and
@@ -151,6 +171,22 @@ class ParquetSnapshots:
                        "metrics": metrics_rows}, f)
         if has_base and self.expire_deltas:
             self._expire_superseded(wave)
+
+    def _write(self, view, path: str, schema) -> None:
+        """One snapshot view as a parquet dir: a DataFrame by a Spark
+        write, an Arrow table by ``pq.write_table`` in the session codec
+        (no Spark job)."""
+        codec = _ARROW_CODECS.get(self.spark.conf.get(
+            "spark.sql.parquet.compression.codec", "snappy").lower())
+        if codec is None or isinstance(view, DataFrame):
+            as_df(self.spark, view, schema).write.mode(
+                "overwrite").parquet(path)
+            return
+        os.makedirs(path)
+        optional = pa.schema([f.with_nullable(True) for f in view.schema])
+        pq.write_table(view.cast(optional),
+                       os.path.join(path, "part-00000.parquet"),
+                       compression=codec)
 
     def _expire_superseded(self, new_base_wave):
         """Delete seen deltas and older seen bases that the freshly
@@ -398,6 +434,9 @@ class IcebergSnapshots:
 
     # ------------------------------------------------------------ commit
     def commit(self, wave, frontier, seen_delta, items, metrics_rows):
+        frontier = as_df(self.spark, frontier, schemas.FRONTIER_SCHEMA)
+        seen_delta = as_df(self.spark, seen_delta, SEEN_SCHEMA)
+        items = as_df(self.spark, items, schemas.RESULT_SCHEMA)
         self._ensure_tables(frontier, items)
         w = F.lit(wave).cast("int")
         if seen_delta is not None:

@@ -126,8 +126,24 @@ def local_df(
     (``parallelize``) pays one on every scan."""
     schema = _struct(schema) if isinstance(schema, str) else schema
     if not isinstance(data, pa.Table):
-        arrow = to_arrow_schema(schema)
-        cols = list(zip(*data)) if data else [()] * len(schema)
-        data = pa.Table.from_arrays(
-            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+        data = arrow_table(data, schema)
     return spark.createDataFrame(data, schema=schema).coalesce(1)
+
+
+def as_df(spark: SparkSession, data: DataFrame | pa.Table,
+          schema: T.StructType | str) -> DataFrame:
+    """``data`` as a DataFrame: an Arrow table planted by ``local_df``
+    in ``schema``, a DataFrame as it is."""
+    if isinstance(data, pa.Table):
+        return local_df(spark, data, schema)
+    return data
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType | str) -> pa.Table:
+    """Driver-resident rows (tuples in ``schema`` order) as an Arrow
+    table of ``schema``'s Arrow types."""
+    schema = _struct(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)

@@ -7,6 +7,8 @@ import json
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -313,8 +315,8 @@ def test_robots_oversized_ruleset_uses_join(spark, web, store, monkeypatch):
     )
     eng = CE(spark, media_registry(), page_store=store, robots=extra,
              config=CrawlConfig())
-    assert eng._robots_join and eng._robots_rules is None
     res = eng.crawl(web.seeds())
+    assert eng._robots_join and eng._robots_rules is None
     got = {r["url"] for r in crawl_items_df(res.results).collect()}
     blocked = {u for u in expected_detail_urls(web)
                if ("h1.example.com/detail/13" in u
@@ -595,13 +597,19 @@ def _assert_same_crawl(res, full, label=None):
     assert res.metrics[counts].equals(full.metrics[counts]), label
 
 
-def test_checkpoint_resume_identical(spark, web, store, tmp_path):
+@pytest.mark.parametrize("cap", [{}, {"driver_wave_max": 0}],
+                         ids=["arrow_write", "spark_write"])
+def test_checkpoint_resume_identical(spark, web, store, tmp_path, cap):
+    """Kill-and-resume equals the uncheckpointed crawl, from snapshots
+    of driver-held waves (written with pyarrow) and of cluster waves
+    (written by Spark), and from the same snapshots as older engines
+    wrote them."""
     ck = str(tmp_path / "ck")
     full = CrawlEngine(spark, media_registry(), page_store=store,
                        config=CrawlConfig()).crawl(web.seeds())
     # run 1: killed after 2 waves (simulated by max_waves)
     CrawlEngine(spark, media_registry(), page_store=store,
-                config=CrawlConfig(checkpoint_dir=ck, max_waves=2)
+                config=CrawlConfig(checkpoint_dir=ck, max_waves=2, **cap)
                 ).crawl(web.seeds())
     # the same snapshot as older engines wrote it: manifests without
     # footer row stats (resume counts the tables instead), and a
@@ -614,10 +622,89 @@ def test_checkpoint_resume_identical(spark, web, store, tmp_path):
     # run 2: resumes from the snapshot and finishes
     for d in [ck] + older:
         res = CrawlEngine(spark, media_registry(), page_store=store,
-                          config=CrawlConfig(checkpoint_dir=d)
+                          config=CrawlConfig(checkpoint_dir=d, **cap)
                           ).crawl(web.seeds())
         _assert_same_crawl(res, full, d)
     shutil.rmtree(ck, ignore_errors=True)
+
+
+def test_checkpoint_window_mixing_held_and_cluster_waves(
+        spark, web, store, tmp_path, monkeypatch):
+    """A checkpoint_every=2 window whose first wave is above a small
+    driver_wave_max and whose second is driver-held commits one union
+    of Spark and Arrow views; a crawl resumed from it equals the
+    uninterrupted crawl (items, dead letters, seen set, metrics)."""
+    held = {}
+    real = CrawlEngine._commit
+
+    def commit(eng, wave, start_wave, landed, *a):
+        held[wave] = landed.rows is not None
+        return real(eng, wave, start_wave, landed, *a)
+
+    monkeypatch.setattr(CrawlEngine, "_commit", commit)
+    ck = str(tmp_path / "ckm")
+    full = CrawlEngine(spark, media_registry(), page_store=store,
+                       config=CrawlConfig()).crawl(web.seeds())
+    cfg = dict(checkpoint_dir=ck, checkpoint_every=2, driver_wave_max=96)
+    CrawlEngine(spark, media_registry(), page_store=store,
+                config=CrawlConfig(max_waves=4, **cfg)).crawl(web.seeds())
+    # the stopped leg's last window, waves 2-3: 97 emissions, then 73
+    assert (held[2], held[3]) == (False, True), held
+    res = CrawlEngine(spark, media_registry(), page_store=store,
+                      config=CrawlConfig(**cfg)).crawl(web.seeds())
+    _assert_same_crawl(res, full)
+
+
+def test_held_wave_commit_starts_no_spark_job(spark, web, store, tmp_path,
+                                              monkeypatch):
+    """Committing a driver-held wave writes its views with pyarrow: no
+    Spark job runs inside any commit, and every part file carries the
+    session's parquet codec. A crawl that then runs no wave (the
+    max_waves=0 resume probe) starts no Spark job either, robots table
+    included."""
+    from spatula_spark.session import scoped_conf
+
+    sc = spark.sparkContext
+    jobs = []
+    real = snapshots.ParquetSnapshots.commit
+
+    def commit(store_, wave, *a):
+        sc.setJobGroup(f"commit-{wave}", "snapshot commit")
+        try:
+            return real(store_, wave, *a)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(
+                f"commit-{wave}"))
+
+    monkeypatch.setattr(snapshots.ParquetSnapshots, "commit", commit)
+    ck = tmp_path / "ckj"
+    robots = web.robots(spark)
+    with scoped_conf(spark, {"spark.sql.parquet.compression.codec": "gzip"}):
+        res = CrawlEngine(spark, media_registry(), page_store=store,
+                          robots=robots,
+                          config=CrawlConfig(checkpoint_dir=str(ck),
+                                             max_waves=3)).crawl(web.seeds())
+    assert res.waves == 3 and not jobs
+    parts = sorted(ck.glob("wave=*/*/*.parquet"))
+    assert {p.parent.name for p in parts} == {
+        "frontier", "seen_delta", "items"}
+    assert len(parts) == 9
+    for p in parts:
+        meta = pq.ParquetFile(p).metadata
+        assert {meta.row_group(0).column(i).compression
+                for i in range(meta.num_columns)} == {"GZIP"}, p
+    sc.setJobGroup("probe", "resume probe")
+    try:
+        probe = CrawlEngine(spark, media_registry(), page_store=store,
+                            robots=robots,
+                            config=CrawlConfig(checkpoint_dir=str(ck),
+                                               max_waves=0)
+                            ).crawl(web.seeds())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert probe.waves == 0
+    assert not sc.statusTracker().getJobIdsForGroup("probe")
 
 
 def test_resume_then_compaction_and_expiry(
@@ -984,6 +1071,13 @@ def test_iceberg_rejects_delta_expiry(spark, web, store):
         eng.crawl(web.seeds())
 
 
+def _view_rows(view):
+    """A snapshot view's rows: an Arrow table's, or a DataFrame's."""
+    if isinstance(view, pa.Table):
+        return view.to_pylist()
+    return [r.asDict() for r in view.collect()]
+
+
 class _RecordingStore:
     """A snapshot store that records each commit (its wave, item rows,
     seen-delta size and metrics-row count) and how many ran to the end."""
@@ -996,8 +1090,8 @@ class _RecordingStore:
 
     def commit(self, wave, frontier, seen_delta, items, metrics_rows):
         self.commits.append((
-            wave, sorted((r["path"], r["wave"]) for r in items.collect()),
-            0 if seen_delta is None else seen_delta.count(),
+            wave, sorted((r["path"], r["wave"]) for r in _view_rows(items)),
+            0 if seen_delta is None else len(_view_rows(seen_delta)),
             len(metrics_rows)))
         time.sleep(0.5)  # keeps an async commit in flight a while
         self.done += 1

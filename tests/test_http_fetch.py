@@ -181,9 +181,10 @@ def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
     """Hook-class rows of a real-HTTP wave are fetched and transformed
     by ONE mapInPandas — no Python stage feeds another — on cluster
     waves and the driver fast path alike, and the crawl still yields
-    every item and the 404 dead letter. With a robots rule every wave's
-    schedule lands on the driver, so no empty null-source leg is planned
-    either: exactly one mapInPandas per wave."""
+    every item and the 404 dead letter. No frontier here holds a
+    null-url row, so no empty null-source leg is planned, with or
+    without the robots rule (under which every wave's schedule lands on
+    the driver): exactly one mapInPandas per wave."""
     from plan_nodes import plan_nodes
 
     plans = []
@@ -219,8 +220,8 @@ def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
         assert len(plans) == res.waves >= 3
         # no mapInPandas reads another one's output
         assert all(chained == [0] * len(chained) for chained in plans)
+        assert [len(udfs) for udfs in plans] == [1] * res.waves, robots
     assert res.metrics["schedule_local"].all()
-    assert [len(udfs) for udfs in plans] == [1] * res.waves
 
 
 def test_fused_fetch_hands_transform_arrow_typed_batches(spark):
