@@ -8,14 +8,11 @@ one at a time, this engine keeps it in a DataFrame and processes one
 
     seeds (_begin: fresh frontier, or resume from the latest snapshot)
       └─ wave k (crawl() runs one phase method after another):
-           _schedule: ONE tagged frontier — a politeness tag
+           _schedule: ONE tagged frontier (_tag) — a politeness tag
              (hot-host-only ranking window) and robots (compiled CASE /
              broadcast-join fallback) fold into one _fate per row:
              deferred, null-source, blocked or fetch; deferred and
-             blocked rows ride the emissions stream unfetched. A small
-             wave with a politeness split or robots rules lands the
-             tagged frame on the driver (one Arrow collect) and plans
-             only the branches whose fate occurs
+             blocked rows ride the emissions stream unfetched
            _dedup: URL-seen dedup (exact anti-join; Bloom probe at scale)
              keyed on page identity seen_key = (page_cls, url_hash,
              input), and in-wave first-wins dedup (min_by path per
@@ -43,13 +40,12 @@ one at a time, this engine keeps it in a DataFrame and processes one
              Arrow tables built from its rows, which the store writes
              with pyarrow (no Spark job), other waves' are DataFrames
 
-    Fast path, after a wave landed on the driver and when no politeness
-    or robots rule applies: _dedup_driver (Python, against a driver twin
-    of the seen set) and _fetch_local replace _schedule/_dedup/
-    _fetch_wave. With a politeness or robots rule there is no twin; a
-    small wave then lands its tagged schedule instead (see _schedule),
-    so its plan starts from a LocalRelation rather than re-deriving the
-    budget split in each branch.
+    Driver route, for every wave of at most driver_wave_max frontier
+    rows while the driver twin of the seen set is alive: _dedup_driver
+    runs the same schedule (collecting _tag's frame once when a
+    politeness split or robots rules apply) and dedups in Python against
+    the twin, and _fetch_local replaces _fetch_wave, so the wave plans
+    from LocalRelations with no dedup shuffle.
 
 Depth-first emission order is reconstructed, not executed: every row
 carries a lexicographically sortable lineage ``path`` (schemas.py), and
@@ -272,9 +268,8 @@ class CrawlConfig:
     # (~200 B), so the cap bounds driver memory at a few MB. Wave 0
     # never takes this path (no fan-out history to estimate with — a
     # seed wave of list pages can explode 1000x). The same cap bounds
-    # the frontier of a wave with a politeness split or robots rules
-    # whose tagged schedule lands on the driver (see _schedule). 0
-    # disables both.
+    # the frontier of a driver-route wave (schedule and dedup on the
+    # driver, see _dedup_driver). 0 disables both.
     driver_wave_max: int = 20_000
     # fetch-join strategy: waves at or below this row count broadcast
     # the slim frontier side against the page store IN PLACE — the
@@ -355,8 +350,8 @@ def _metrics_row(wave: int, counts: dict[str, int],
                  bloom_fpr: float | None, schedule_local: bool) -> dict:
     """The wave's CrawlResult.metrics row: the _METRIC_KINDS counts,
     whether the wave's dedup probed the Bloom prefilter with its
-    estimated FPR at that probe (else None), and whether its tagged
-    schedule landed on the driver (see _schedule)."""
+    estimated FPR at that probe (else None), and whether the wave took
+    the driver route (see _dedup_driver)."""
     return {
         "wave": wave,
         **{col: sum(counts[k] for k in kinds) for col, kinds in _METRIC_KINDS},
@@ -706,6 +701,10 @@ class CrawlEngine:
                 )
         self.politeness = politeness
         self.config = config or CrawlConfig()
+        if self.config.checkpoint_every < 1:
+            raise ValueError(
+                f"checkpoint_every must be >= 1, got "
+                f"{self.config.checkpoint_every}")
         self._nparts = self.config.target_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
@@ -732,11 +731,11 @@ class CrawlEngine:
             self._bcast_fetch_max = self.config.broadcast_fetch_max
         # driver-python-structure caps, derived from the provisioned
         # driver heap (the literals-don't-scale amber from round 4) so a
-        # larger deployment widens the fast path instead of inheriting
+        # larger deployment widens the driver route instead of inheriting
         # a laptop literal: a python set key costs ~80 B (ints) to
         # ~130 B (with overhead), and 5% of heap is a safe residency
         # budget beside py4j + result buffers.
-        # Driver-side store keyset (fast-path 404 detection): at or
+        # Driver-side store keyset (driver-route 404 detection): at or
         # below this many store rows the url_hash set is collected ONCE
         # and small-wave found/missing splits happen in Python (~650k
         # keys at Spark's stock 1 GiB, ~16M at 24 GiB); bigger stores
@@ -901,43 +900,43 @@ class CrawlEngine:
             if ex is None:
                 # per-crawl set-up a crawl that runs no wave never pays
                 ex = self._wave_exprs()
-                if self._robots_rules or self._robots_join:
-                    self._py_seen = None  # see _begin
+                self._refill_twin()
             # size the wave by its likely OUTPUT, not its input: the
             # previous wave's emission total is the fan-out-aware
             # estimator (a wave of list pages explodes ~fan-out×)
             est = max(n_frontier, prev_total or 0)
             self._wave_bloom_fpr = None  # set by a probing _dedup
-            self._wave_schedule_local = False  # set by a landing _schedule
-            local = self._dedup_driver(frontier_rows)
-            if local is not None and not any(local):
+            # the driver route: schedule and dedup over driver rows
+            driver = (self._py_seen is not None
+                      and n_frontier <= cfg.driver_wave_max)
+            if driver:
+                rows, null_rows, unfetched = self._dedup_driver(
+                    frontier, frontier_rows, n_frontier, ex, null_urls)
+                fetched, hooked, nullsrc = self._fetch_local(
+                    rows, null_rows, ex)
+            else:
+                fetchable, nullsrc, unfetched = self._schedule(
+                    frontier, n_frontier, ex, null_urls)
+                fetched, hooked = self._fetch_wave(
+                    self._dedup(fetchable, self._seen_union(), requeues),
+                    n_frontier <= self._bcast_fetch_max, ex)
+            if (fetched is None and hooked is None and nullsrc is None
+                    and not unfetched):
                 # every candidate was already seen: a no-op wave —
                 # skip the Spark job entirely
                 landed = _Landed(
                     local_df(self.spark, [], _EMISSION_OUT_SCHEMA), [],
                     dict.fromkeys(_KIND_NAMES, 0), False, False)
             else:
-                if local is None:
-                    fetchable, nullsrc, unfetched = self._schedule(
-                        frontier, n_frontier, ex, null_urls)
-                    if fetchable is not None:
-                        fetchable = self._dedup(
-                            fetchable, self._seen_union(), requeues)
-                    fetched, hooked = self._fetch_wave(
-                        fetchable, n_frontier <= self._bcast_fetch_max, ex)
-                else:
-                    (fetched, hooked, nullsrc), unfetched = (
-                        self._fetch_local(*local, ex), [])
                 emissions = self._transform(
                     fetched, hooked, nullsrc, unfetched, ex)
-                landed = self._land(
-                    emissions, ex, est, prev_total, local is not None)
+                landed = self._land(emissions, ex, est, prev_total, driver)
             prev_total = sum(landed.counts.values())
             requeues, null_urls = landed.requeues, landed.null_urls
             n_frontier = sum(landed.counts[k] for k in ex.followed)
             self._tick(wave, "emissions ckpt", t)
             row = _metrics_row(wave, landed.counts, self._wave_bloom_fpr,
-                               self._wave_schedule_local)
+                               driver)
             items = (_scout_projection if cfg.scout else _item_projection)(
                 landed.emissions, wave)
             results.append(items)
@@ -981,18 +980,12 @@ class CrawlEngine:
         # driver-resident twin of the seen set (exact (url_hash,
         # seen_key) pairs) — alive while every wave's new keys were
         # small enough to land on the driver; enables the zero-shuffle
-        # small-wave dedup. Killed (None) the moment a wave's key count
-        # exceeds driver_wave_max; cluster dedup takes over seamlessly.
-        # Never built when a politeness table, host budget or robots
-        # rules apply: _dedup_driver cannot use it on any wave then.
-        # (crawl() drops it under robots rules, which are read only
-        # once a wave is about to run.)
+        # small-wave dedup (the driver route). Killed (None) the moment
+        # a wave's key count exceeds driver_wave_max; cluster dedup
+        # takes over seamlessly. A resumed seen set refills it once a
+        # wave is about to run (_refill_twin).
         self._py_seen: set[tuple[int, int]] | None = (
-            set() if cfg.driver_wave_max and not (
-                self.politeness is not None
-                or cfg.host_budget_per_wave is not None)
-            else None
-        )
+            set() if cfg.driver_wave_max else None)
         self._bloom = (
             seen_ops.ShardedBloom(
                 _BLOOM_SHARDS, _BLOOM_SHARD_CAPACITY, _BLOOM_FPR)
@@ -1004,7 +997,6 @@ class CrawlEngine:
             rows = self._seed_rows(seeds)
             return (local_df(self.spark, rows, schemas.FRONTIER_SCHEMA),
                     len(rows), 0, [], [], any(r[1] is None for r in rows))
-        self._py_seen = None  # unknown provenance; cluster dedup
         rseen = resumed.seen
         self._seen_count = (rseen.count() if resumed.n_seen is None
                             else resumed.n_seen)
@@ -1018,6 +1010,17 @@ class CrawlEngine:
         # a resumed frontier's null urls are unknown
         return (resumed.frontier, resumed.n_frontier, resumed.next_wave,
                 [resumed.items], resumed.metrics_rows, True)
+
+    def _refill_twin(self) -> None:
+        """Load a resumed seen set into the twin (one collect) when it
+        has at most _driver_seen_max keys, else drop the twin."""
+        if self._py_seen is None or not self._seen_count:
+            return
+        self._py_seen = None
+        if self._seen_count <= self._driver_seen_max:
+            seen = self._seen_union().toArrow()
+            self._py_seen = set(zip(seen["url_hash"].to_pylist(),
+                                    seen["seen_key"].to_pylist()))
 
     def _wave_exprs(self) -> SimpleNamespace:
         """The wave-invariant expression cache, built ONCE per crawl.
@@ -1197,49 +1200,39 @@ class CrawlEngine:
                   file=sys.stderr, flush=True)
             t[0] = now
 
-    def _schedule(self, frontier: DataFrame, n_frontier: int, ex,
-                  null_urls: bool = True):
-        """Schedule phase of a cluster wave: ONE tagged frontier, each
-        row's ``_fate`` decided in this precedence — politeness-deferred,
-        then null-source, then robots-blocked, else fetch (so null-source
-        rows are never deferred or blocked, and deferred rows skip the
-        robots check) — with the fetch key columns of the fetch rows.
-        Every branch is a filter over that one frame. The null-source
-        arm (and branch) exists only when ``null_urls`` says the
-        frontier can hold a null-url row (True when unknown).
-
-        When a politeness split or robots rules apply and the wave is
-        small (``n_frontier`` <= driver_wave_max, exactly the waves that
-        never have a driver seen twin), the tagged frame lands on the
-        driver as one Arrow table and is re-planted as a LocalRelation:
-        the wave plan then starts from it instead of re-deriving the
-        split in every branch, and a branch whose fate no row has is not
-        planned at all. Returns (fetchable rows or None, null-source rows
-        or None, the unfetched emission parts)."""
+    def _split(self, n_frontier: int) -> bool:
+        """Whether the wave takes the politeness split (F5): not when the
+        WHOLE wave fits inside the default budget, which makes the
+        limiter a provable no-op (r6; only sound without a politeness
+        table, whose per-host budgets can undercut the default)."""
         cfg = self.config
-        tagged = frontier.withColumn("host", ex.host)
-        # politeness budget (F5): overflow deferred, paths untouched.
-        # Disabled => no deferred tag at all. When the WHOLE wave fits
-        # inside the default budget, no single host can exceed it: the
-        # limiter is a provable no-op, so its per-wave count aggregate
-        # + broadcast join are skipped too (r6; only sound without a
-        # politeness table, whose per-host budgets can undercut the
-        # default).
-        split = self.politeness is not None or (
+        return self.politeness is not None or (
             cfg.host_budget_per_wave is not None
             and n_frontier > cfg.host_budget_per_wave)
+
+    def _tag(self, frontier: DataFrame, n_frontier: int, ex,
+             null_urls: bool = True):
+        """ONE tagged frontier, each row's ``_fate`` decided in this
+        precedence — politeness-deferred, then null-source, then
+        robots-blocked, else fetch (so null-source rows are never
+        deferred or blocked, and deferred rows skip the robots check) —
+        with the fetch key columns of the fetch rows. The null-source
+        arm exists only when ``null_urls`` says the frontier can hold a
+        null-url row (True when unknown). Returns (the tagged frame, the
+        fates its rows can have)."""
+        tagged = frontier.withColumn("host", ex.host)
         # (condition, fate) arms in precedence order; the first that
         # holds decides, and a row no arm claims is fetched
         arms = [(F.col("url").isNull(), "nullsrc")] if null_urls else []
-        if split:
+        if self._split(n_frontier):
+            # politeness budget: overflow deferred, paths untouched
             tagged = politeness_ops.split_by_host_budget(
-                tagged, self.politeness, cfg.host_budget_per_wave)
+                tagged, self.politeness, self.config.host_budget_per_wave)
             arms.insert(0, (F.col("_deferred"), "deferred"))
         # robots (F6): precompiled CASE expression when the rule set is
         # small; broadcast-join longest-prefix path when it isn't (never
         # a silent truncation). Blocked rows become 'blocked' emissions
         # so the count rides the wave Observation for free.
-        robots = ex.robots_allowed is not None or self._robots_join
         if ex.robots_allowed is not None:
             arms.append((~ex.robots_allowed, "blocked"))
         elif self._robots_join:
@@ -1251,9 +1244,8 @@ class CrawlEngine:
             fate = (F.when(cond, kind) if fate is None
                     else fate.when(cond, kind))
         fate = F.lit("fetch") if fate is None else fate.otherwise("fetch")
-        fates = {"fetch"} | {kind for _, kind in arms}
         is_fetch = F.col("_fate") == "fetch"
-        tagged = tagged.withColumn(
+        return tagged.withColumn(
             "_fate", fate
         ).drop("_deferred", "_allowed").withColumn(
             "canon_url", F.when(is_fetch, ex.canon)
@@ -1265,62 +1257,57 @@ class CrawlEngine:
         ).withColumn(
             "seen_key",
             F.when(is_fetch, F.coalesce(F.col("seen_key"), ex.seen_key)),
-        )
-        if (split or robots) and n_frontier <= cfg.driver_wave_max:
-            table = tagged.toArrow()
-            fates = set(table.column("_fate").to_pylist())
-            tagged = local_df(self.spark, table, tagged.schema)
-            self._wave_schedule_local = True
-        fetchable = nullsrc = None
-        if "fetch" in fates:
-            fetchable = tagged.filter(is_fetch).drop("_fate")
-        if "nullsrc" in fates:
-            nullsrc = tagged.filter(F.col("_fate") == "nullsrc")
-        unfetched = []
-        if fates & {"blocked", "deferred"}:
-            unfetched.append(
-                tagged.filter(F.col("_fate").isin("blocked", "deferred"))
-                .select(*ex.unfetched_cols))
-        return fetchable, nullsrc, unfetched
+        ), {"fetch"} | {kind for _, kind in arms}
 
-    def _dedup_driver(self, rows: list[tuple] | None):
-        """Dedup phase of the small-wave fast path. When the previous
-        wave landed on the driver AND the exact seen set has a live
-        Python twin, first-wins + seen dedup run here in plain Python —
-        the wave then needs ZERO shuffle stages: a local frontier
-        broadcast-joins the page store and the single AQE round does
-        fetch+process+collect. Returns (rows to fetch, null-source
-        rows) as FRONTIER_SCHEMA tuples, or None when the wave takes the
-        cluster path: no driver rows or twin (there is none when a
-        politeness budget or robots rules apply, see _begin), or a row
-        without its emission hashes."""
-        if (
-            rows is None
-            or self._py_seen is None
-            or not all(
-                r[1] is None or (r[7] is not None and r[8] is not None)
-                for r in rows
-            )
-        ):
-            return None
+    def _schedule(self, frontier: DataFrame, n_frontier: int, ex,
+                  null_urls: bool = True):
+        """Schedule phase of a cluster wave: every branch is a filter
+        over _tag's one frame, and a branch whose fate no row can have
+        is not planned. Returns (fetchable rows, null-source rows or
+        None, the unfetched emission parts)."""
+        tagged, fates = self._tag(frontier, n_frontier, ex, null_urls)
+        nullsrc = (tagged.filter(F.col("_fate") == "nullsrc")
+                   if "nullsrc" in fates else None)
+        return (tagged.filter(F.col("_fate") == "fetch").drop("_fate"),
+                nullsrc, _unfetched(tagged, fates, ex))
+
+    def _dedup_driver(self, frontier: DataFrame, rows: list[tuple] | None,
+                      n_frontier: int, ex, null_urls: bool):
+        """Schedule and dedup phases of a driver-route wave, in the
+        cluster order: _tag's frame collected once (one Arrow job) when
+        a politeness split or robots rules apply or the rows are not
+        driver-held with their hashes, else the driver-held rows as
+        they are; then first-wins (min path) and the seen check against
+        the twin in Python, which requeues bypass as in _dedup. Returns
+        (rows to fetch, null-source rows) as FRONTIER_SCHEMA tuples, and
+        the unfetched emission parts."""
+        unfetched = []
         # FRONTIER_SCHEMA tuple slots: 1=url 3=path 5=attempts
         # 7=url_hash 8=seen_key
-        null_rows = [r for r in rows if r[1] is None]
-        req_rows = [
-            r for r in rows if r[1] is not None and (r[5] or 0) > 0
-        ]
+        if (rows is None or self._split(n_frontier)
+                or ex.robots_allowed is not None or self._robots_join
+                or any(r[1] is not None and (r[7] is None or r[8] is None)
+                       for r in rows)):
+            tagged, _ = self._tag(frontier, n_frontier, ex, null_urls)
+            table = tagged.toArrow()
+            fates = table["_fate"].to_pylist()
+            if {"blocked", "deferred"} & set(fates):  # rows to re-emit
+                unfetched = _unfetched(local_df(
+                    self.spark, table, tagged.schema), set(fates), ex)
+            rows = [tuple(r.values()) for r, f in zip(
+                table.select(schemas.FRONTIER_SCHEMA.names).to_pylist(),
+                fates) if f in ("fetch", "nullsrc")]
         best: dict[tuple[int, int], tuple] = {}
+        requeued, null_rows = [], []
         for r in rows:
-            if r[1] is None or (r[5] or 0) > 0:
-                continue  # null-source / requeue bypass
-            k = (r[7], r[8])
-            b = best.get(k)
-            if b is None or r[3] < b[3]:  # first-wins = min path
-                best[k] = r
-        sched_rows = [
-            r for k, r in best.items() if k not in self._py_seen
-        ] + req_rows
-        return sched_rows, null_rows
+            if r[1] is None:
+                null_rows.append(r)
+            elif r[5]:
+                requeued.append(r)
+            elif (k := (r[7], r[8])) not in self._py_seen and (
+                    k not in best or r[3] < best[k][3]):
+                best[k] = r  # first-wins = min path
+        return [*best.values(), *requeued], null_rows, unfetched
 
     def _transform(self, fetched: DataFrame | None,
                    hooked: DataFrame | None, nullsrc: DataFrame | None,
@@ -1566,7 +1553,7 @@ class CrawlEngine:
         self._ckpt_items.append(items)
         if new_seen is not None:
             self._ckpt_seen.append(new_seen)
-        if (wave + 1 - start_wave) % max(1, self.config.checkpoint_every) == 0:
+        if (wave + 1 - start_wave) % self.config.checkpoint_every == 0:
             self._commit_window(wave, metrics_rows)
 
     def _finish(self, wave: int, start_wave: int, results: list[DataFrame],
@@ -1756,13 +1743,13 @@ class CrawlEngine:
         return {r[0] for r in self.page_store.select("url_hash").collect()}
 
     def _fetch_local(self, rows: list[tuple], null_rows: list[tuple], ex):
-        """Small-wave fetch over driver-resident frontier rows (tuples
-        in FRONTIER_SCHEMA order). With a driver-sized store keyset the
-        found/missing split happens in Python, so the wave's plan has
-        NO anti-join leg — one broadcast build plus the store probe;
-        the missing rows take the cluster path's 404 projection
-        (``missing_cols``) over a LocalRelation. Falls back to
-        `_fetch_wave` (real-HTTP fetcher, or a store too big for a
+        """Fetch phase of a driver-route wave, over the rows
+        _dedup_driver kept (FRONTIER_SCHEMA tuples). With a driver-sized
+        store keyset the found/missing split happens in Python, so the
+        wave's plan has NO anti-join leg — one broadcast build plus the
+        store probe; the missing rows take the cluster path's 404
+        projection (``missing_cols``) over a LocalRelation. Falls back
+        to `_fetch_wave` (real-HTTP fetcher, or a store too big for a
         driver keyset). Returns (fetched rows, fused hook emissions,
         the null-source rows), each a DataFrame or None."""
         spark = self.spark
@@ -1795,7 +1782,7 @@ class CrawlEngine:
                          .select(*ex.missing_cols))
         return _union_tree(parts), None, nullsrc
 
-    def _fetch_wave(self, fetchable: DataFrame | None, broadcast: bool,
+    def _fetch_wave(self, fetchable: DataFrame, broadcast: bool,
                     ex) -> tuple[DataFrame | None, DataFrame | None]:
         """Fetch phase: (the fetched batch for _transform, the hook-class
         emissions of the fused real-HTTP fetch), each None when the wave
@@ -1805,8 +1792,6 @@ class CrawlEngine:
         Python UDF stage measured ~0.25 s a wave at local[4], even over
         empty partitions), and native-class rows are fetched for the
         Catalyst transform."""
-        if fetchable is None:
-            return None, None
         if self.fetch_fn is None:
             return self._fetch(fetchable, broadcast, ex), None
         # here host-salting genuinely matters: fetch work is per-host
@@ -1972,6 +1957,15 @@ def _union_tree(dfs: list, allow_missing: bool = False):
             for i in range(0, len(dfs), 2)
         ]
     return dfs[0]
+
+
+def _unfetched(tagged: DataFrame, fates: set, ex) -> list[DataFrame]:
+    """A tagged frontier's robots-blocked and politeness-deferred rows
+    re-emitted unfetched, or no part when no row can have either fate."""
+    if not fates & {"blocked", "deferred"}:
+        return []
+    return [tagged.filter(F.col("_fate").isin("blocked", "deferred"))
+            .select(*ex.unfetched_cols)]
 
 
 def _window_view(spark: SparkSession, parts: list, schema):

@@ -178,33 +178,42 @@ def test_missing_antijoin_builds_on_found_keys(spark, store):
                and n.joinType().toString() == "Inner" for n in build)
 
 
-def test_budgeted_crawl_builds_no_seen_twin(spark, web, store, monkeypatch):
-    """A host budget keeps every wave off the driver dedup path, so the
-    engine builds no driver seen twin and never collects a wave's new
-    seen keys to feed one."""
-    collected = []
-    collect = type(store).collect
+def test_budgeted_robots_crawl_keeps_seen_twin(spark, web, store,
+                                               monkeypatch):
+    """A host budget and robots rules do not decide the wave route: the
+    budgeted, robots-filtered crawl keeps its driver seen twin on every
+    wave, every wave takes the driver route, and the cluster dedup never
+    runs."""
+    def dedup(eng, *a):
+        raise AssertionError("cluster dedup ran")
 
-    def spy(df):
-        collected.append(tuple(df.columns))
-        return collect(df)
-
-    monkeypatch.setattr(type(store), "collect", spy)
+    monkeypatch.setattr(CrawlEngine, "_dedup", dedup)
     eng = CrawlEngine(spark, media_registry(), page_store=store,
-                      config=CrawlConfig(host_budget_per_wave=7,
-                                         max_waves=3))
+                      robots=web.robots(spark),
+                      config=CrawlConfig(host_budget_per_wave=7))
     twins = []
     update_seen = eng._update_seen
 
     def spy_update(landed, n_next):
         out = update_seen(landed, n_next)
-        twins.append(eng._py_seen)
+        twins.append(eng._py_seen is not None)
         return out
 
     eng._update_seen = spy_update
-    eng.crawl(web.seeds())
-    assert len(twins) == 3 and all(t is None for t in twins)
-    assert ("url_hash", "seen_key") not in collected
+    res = eng.crawl(web.seeds())
+    assert res.metrics["deferred"].sum() > 0
+    assert res.metrics["blocked"].sum() > 0
+    assert twins == [True] * res.waves
+    assert res.metrics["schedule_local"].all()
+
+
+def test_checkpoint_every_below_one_rejected(spark, store):
+    """checkpoint_every < 1 names no commit cadence: the engine refuses
+    it at construction instead of committing every wave."""
+    for k in (0, -2):
+        with pytest.raises(ValueError, match="checkpoint_every"):
+            CrawlEngine(spark, media_registry(), page_store=store,
+                        config=CrawlConfig(checkpoint_every=k))
 
 
 def test_politeness_table_with_nonpositive_budget_rejected(spark, store):
@@ -449,12 +458,14 @@ def _scheduled_crawl(spark, web, store, registry=None, **cfg):
     ).crawl(web.seeds())
 
 
-def test_schedule_paths_parity(spark, sched_web, sched_store, monkeypatch):
-    """A wave's tagged schedule landed on the driver (default
-    driver_wave_max), kept in the cluster plan (driver_wave_max=0), and
-    with the robots join fallback all give the same crawl: ordered
-    items, dead letters, seen set and per-wave metric counts, over
-    deferred, robots-blocked, null-source, native and hook rows."""
+def test_schedule_paths_parity(spark, sched_web, sched_store, monkeypatch,
+                               tmp_path):
+    """A wave's tagged schedule collected on the driver route (default
+    driver_wave_max), kept in the cluster plan (driver_wave_max=0), with
+    the robots join fallback, and a crawl stopped after wave 2 then
+    resumed from its snapshot all give the same crawl: ordered items,
+    dead letters, seen set and per-wave metric counts, over deferred,
+    robots-blocked, null-source, native and hook rows."""
     from spatula_spark.operators import politeness as pol
 
     counts = ["wave", *(c for c, _ in engine_mod._METRIC_KINDS)]
@@ -479,6 +490,11 @@ def test_schedule_paths_parity(spark, sched_web, sched_store, monkeypatch):
     cluster = _scheduled_crawl(spark, web, store, driver_wave_max=0)
     assert not cluster.metrics["schedule_local"].any()
     assert crawl_rows(cluster) == want
+    ck = str(tmp_path / "cks")
+    _scheduled_crawl(spark, web, store, checkpoint_dir=ck, max_waves=2)
+    resumed = _scheduled_crawl(spark, web, store, checkpoint_dir=ck)
+    assert resumed.metrics["schedule_local"].all()
+    assert crawl_rows(resumed) == want
     monkeypatch.setattr(pol, "ROBOTS_EXPR_MAX_RULES", 0)
     joined = _scheduled_crawl(spark, web, store)
     assert joined.metrics["schedule_local"].all()
@@ -488,8 +504,8 @@ def test_schedule_paths_parity(spark, sched_web, sched_store, monkeypatch):
 def test_landed_schedule_plan_shape(spark, sched_web, sched_store,
                                     monkeypatch):
     """A small budgeted, robots-filtered wave after the first plans from
-    its schedule landed on the driver: its executed plan has no ranking
-    window and its frontier side is a LocalRelation."""
+    its schedule collected on the driver route: its executed plan has no
+    ranking window and its frontier side is a LocalRelation."""
     plans = []
     real = CrawlEngine._transform
 
@@ -593,7 +609,7 @@ def _assert_same_crawl(res, full, label=None):
     assert res.items() == full.items(), label
     assert rows(res.dead) == rows(full.dead), label
     assert rows(res.seen) == rows(full.seen), label
-    counts = [c for c in full.metrics.columns if not c.startswith("bloom")]
+    counts = ["wave", *(c for c, _ in engine_mod._METRIC_KINDS)]
     assert res.metrics[counts].equals(full.metrics[counts]), label
 
 
@@ -769,6 +785,9 @@ def test_lazy_bloom_parity_no_wasted_builds(
     monkeypatch.setattr(CrawlEngine, "_dedup", dedup)
     monkeypatch.setattr(engine_mod, "_BLOOM_SHARD_CAPACITY", 1 << 14)
 
+    # driver_wave_max=0 keeps every wave on the cluster route: a small
+    # resumed crawl otherwise dedups against the refilled seen twin and
+    # never probes the filter
     def run(use_bloom):
         ck = str(tmp_path / f"ckb{int(use_bloom)}")
         out = []
@@ -777,7 +796,8 @@ def test_lazy_bloom_parity_no_wasted_builds(
             out.append(CrawlEngine(
                 spark, media_registry(), page_store=store,
                 config=CrawlConfig(checkpoint_dir=ck, max_waves=waves,
-                                   bloom_min_seen=1 if use_bloom else None),
+                                   bloom_min_seen=1 if use_bloom else None,
+                                   driver_wave_max=0),
             ).crawl(web.seeds()))
         return out
 

@@ -180,11 +180,11 @@ def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
                                                         monkeypatch):
     """Hook-class rows of a real-HTTP wave are fetched and transformed
     by ONE mapInPandas — no Python stage feeds another — on cluster
-    waves and the driver fast path alike, and the crawl still yields
-    every item and the 404 dead letter. No frontier here holds a
+    waves (driver_wave_max=0) and the driver route alike, and the crawl
+    still yields every item and the 404 dead letter. No frontier here holds a
     null-url row, so no empty null-source leg is planned, with or
-    without the robots rule (under which every wave's schedule lands on
-    the driver): exactly one mapInPandas per wave."""
+    without the robots rule (every wave takes the driver route either
+    way): exactly one mapInPandas per wave."""
     from plan_nodes import plan_nodes
 
     plans = []
@@ -204,13 +204,15 @@ def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
     reg = _registry(site)
     reg.register(PageSpec(name="Nope", process_page=lambda ctx: {}))
     host = site.split("/")[2].split(":")[0]
-    for robots in (None, spark.createDataFrame(
-            [(host, "/nothing", False)],
-            "host string, path_prefix string, allow boolean")):
+    rules = spark.createDataFrame(
+        [(host, "/nothing", False)],
+        "host string, path_prefix string, allow boolean")
+    dflt = CrawlConfig.driver_wave_max
+    for robots, cap in ((None, 0), (None, dflt), (rules, dflt)):
         plans.clear()
         res = CrawlEngine(
             spark, reg, fetch_fn=make_http_fetcher(), robots=robots,
-            config=CrawlConfig(fail_fast=False),
+            config=CrawlConfig(fail_fast=False, driver_wave_max=cap),
         ).crawl([{"page_cls": "EmployeeList", "url": f"{site}/list"},
                  {"page_cls": "Nope", "url": f"{site}/missing"}])
         assert [i["id"] for i in res.items()] == list(range(7))
@@ -221,7 +223,7 @@ def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
         # no mapInPandas reads another one's output
         assert all(chained == [0] * len(chained) for chained in plans)
         assert [len(udfs) for udfs in plans] == [1] * res.waves, robots
-    assert res.metrics["schedule_local"].all()
+        assert list(res.metrics["schedule_local"]) == [cap > 0] * res.waves
 
 
 def test_fused_fetch_hands_transform_arrow_typed_batches(spark):
