@@ -41,17 +41,13 @@ from pyspark.sql import functions as F
 
 
 def split_by_host_budget(
-    frontier: DataFrame,
-    politeness: DataFrame | None,
-    default_budget: int | None,
+    frontier: DataFrame, budget: int | None
 ) -> DataFrame:
     """Tag a wave's frontier with ``_deferred``: true on the rows over
-    their host's budget, which stay in the frontier for a later wave.
-
-    ``politeness``: optional DataFrame (host, budget_per_wave)
-    overriding ``default_budget``. ``frontier`` needs a ``host`` column;
-    null-source rows (null url, so null host) are never deferred.
-    ``default_budget=None`` disables the limiter (nothing deferred).
+    the per-host ``budget``, which stay in the frontier for a later
+    wave. ``frontier`` needs a ``host`` column; null-source rows (null
+    url, so null host) are never deferred. ``budget=None`` disables the
+    limiter (nothing deferred).
 
     Plan shape (the scale-critical part): a naive ``row_number() over
     (partition by host)`` sorts the ENTIRE frontier every wave. Instead
@@ -64,39 +60,28 @@ def split_by_host_budget(
     result is one frame (cold rows ∪ ranked hot rows); the engine
     derives every wave branch from it by filters.
     """
-    if default_budget is None and politeness is None:
+    if budget is None:
         return frontier.withColumn("_deferred", F.lit(False))
-    if default_budget is not None and default_budget < 1:
+    if budget < 1:
         # budget 0 would defer every row every wave => the crawl loop
         # never drains; None is the documented "disabled" spelling
         raise ValueError(
             "host budget must be >= 1 (use None to disable the limiter)"
         )
 
-    counts = frontier.filter(F.col("url").isNotNull()).groupBy("host").agg(
-        F.count("*").alias("_hn"))
-    if politeness is not None:
-        counts = counts.join(F.broadcast(politeness), "host", "left")
-        # explicit None check — `or` would turn a (validated-away) 0
-        # into "unlimited"; hosts absent from the table fall back to
-        # default_budget, or unlimited when no default is set
-        fallback = 2**31 - 1 if default_budget is None else default_budget
-        budget_col = F.coalesce(F.col("budget_per_wave"), F.lit(fallback))
-    else:
-        budget_col = F.lit(default_budget)
-    hot = counts.filter(F.col("_hn") > budget_col).select(
-        "host", budget_col.cast("long").alias("_budget")
-    )
+    hot = (frontier.filter(F.col("url").isNotNull()).groupBy("host")
+           .agg(F.count("*").alias("_hn")).filter(F.col("_hn") > budget)
+           .select("host", F.lit(True).alias("_hot")))
 
     # a null host (null-source row) never matches the equi-join: cold
     flagged = frontier.join(F.broadcast(hot), "host", "left")
-    cold = flagged.filter(F.col("_budget").isNull()).select(
+    cold = flagged.filter(F.col("_hot").isNull()).select(
         *frontier.columns, F.lit(False).alias("_deferred"))
 
     w = Window.partitionBy("host").orderBy("priority", "path")
-    ranked = flagged.filter(F.col("_budget").isNotNull()).select(
+    ranked = flagged.filter(F.col("_hot")).select(
         *frontier.columns,
-        (F.row_number().over(w) > F.col("_budget")).alias("_deferred"))
+        (F.row_number().over(w) > budget).alias("_deferred"))
     return cold.unionByName(ranked)
 
 
@@ -293,9 +278,10 @@ def trap_hosts(
     diverse content; a mirror farm is repetitive but bounded — so a
     depth level is flagged only when both hold (and ``depth >=
     min_depth``, since depth-1 fan-out from a seed page is normal).
-    Flagged hosts feed the politeness table as budget-0 / blocklist
-    rows; the reference has no counterpart (single-site scrapers
-    can't fall into cross-host traps).
+    A flagged host is blocked by adding a robots ``Disallow: /`` row
+    for it (host, path_prefix "/", allow false); the reference has no
+    counterpart (single-site scrapers can't fall into cross-host
+    traps).
 
     Plan shape at 10^10 URLs: ONE shuffle — the (host, depth)
     aggregate with map-side partial distinct-count expansion — then a

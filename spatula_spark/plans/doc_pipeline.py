@@ -82,18 +82,8 @@ def crawl_doc_tree(
     (doc_id, lang, n_chars, wave) — wave is the BFS depth and must
     equal floor(log2(doc_id+1)) (oracle-verified)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    store = doc_page_store(docs)
-    # the doc store is small and the tree is deep (log2(N) waves of
-    # <=N/2 rows): narrow partitioning halves wall-clock vs full width
-    # (per-task/per-file overhead), and the classic shuffle join beats
-    # the broadcast-frontier fetch here — tiny waves pay the broadcast
-    # path's two broadcast-build jobs without the payload-shuffle
-    # savings it exists for (see BENCH findings)
-    eng = CrawlEngine(
-        spark, doc_registry(), page_store=store,
-        config=config or CrawlConfig(target_partitions=8,
-                                     broadcast_fetch_max=0),
-    )
+    eng = CrawlEngine(spark, doc_registry(),
+                      page_store=doc_page_store(docs), config=config)
     res = eng.crawl(
         [{"page_cls": "DocTreePage",
           "url": "http://h0.docs.example.com/doc/0"}]

@@ -18,7 +18,8 @@ one at a time, this engine keeps it in a DataFrame and processes one
              input), and in-wave first-wins dedup (min_by path per
              (url_hash, seen_key))
            _fetch_wave: broadcast-frontier probe of the page-store on
-             xxhash64(canon url) (shuffle join above broadcast_fetch_max);
+             xxhash64(canon url) (shuffle join above the heap-derived
+             _bcast_fetch_max);
              not-in-store (404) rows anti-join the wave's found keys.
              The real-HTTP fetcher runs on host-salted rows; for hook
              classes it is fused with their transform (one Python pass)
@@ -76,16 +77,16 @@ Scale notes (the part that must survive 100 TB / 10^10 URLs):
 * Per wave the only full-frontier shuffle is the slim dedup aggregate
   on (url_hash, seen_key); the seen check reuses that exchange, and
   the fetch broadcasts the frontier against the page store in place —
-  payload bytes are NEVER shuffled (waves above broadcast_fetch_max
+  payload bytes are NEVER shuffled (waves above _bcast_fetch_max
   fall back to a bucketed shuffle join). The 404 rows are the
   frontier anti-joined against a broadcast of the wave's own found
   keys, so every broadcast a wave builds is wave-sized, never
   store-sized.
-* Politeness ranks only the hosts a count-aggregate proves over
-  budget; cold hosts bypass the sort via a broadcast hash join, and the
-  wave's branches filter the one tagged frame. Hot
-  hosts in the real-HTTP fetch path are salt-split on
-  (host, xxhash64(url)); AQE skew-join handles residue.
+* Politeness (one host_budget_per_wave for every host) ranks only
+  the hosts a count-aggregate proves over budget; cold hosts bypass
+  the sort via a broadcast hash join, and the wave's branches filter
+  the one tagged frame. Hot hosts in the real-HTTP fetch path are
+  salt-split on (host, xxhash64(url)); AQE skew-join handles residue.
 * ONE parquet snapshot per wave (the Iceberg-commit pattern) cuts the
   iterative lineage; frontier/results/seen/dead are all narrow views
   over it.
@@ -107,6 +108,7 @@ import os
 import sys
 import tempfile
 import time as _time
+import warnings
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
@@ -195,8 +197,8 @@ _SALT_BUCKETS = 8
 class CrawlConfig:
     max_waves: int | None = None
     scout: bool = False  # see CrawlEngine.scout
-    # politeness: per-wave per-host budget; None disables (reference's
-    # global --rpm generalized per-host, cli.py:33)
+    # politeness: one per-wave budget for every host; None disables
+    # (the reference's global --rpm applied per host, cli.py:33)
     host_budget_per_wave: int | None = None
     # from this many seen URLs on, each cluster wave probes a broadcast
     # Bloom filter of the seen set ahead of the exact seen join (which
@@ -211,6 +213,9 @@ class CrawlConfig:
     # analogue and needs a configured catalog (plans/snapshots.py). The
     # cadence and rollback knobs below apply to both backends;
     # checkpoint_expire_deltas is parquet-only and rejected with it.
+    # With neither store set, crawl() rejects resume_upto_wave and
+    # checkpoint_expire_deltas, and warns that checkpoint_every and
+    # checkpoint_async commit nothing.
     iceberg_table_prefix: str | None = None
     # durable-snapshot cadence: commit the wave checkpoint every K
     # waves (1 = every wave, the round-4 behavior). Between durable
@@ -249,7 +254,6 @@ class CrawlConfig:
     # linear — without the rollback a subsequent resume would pick up
     # stale post-N state from the abandoned branch. None = latest.
     resume_upto_wave: int | None = None
-    target_partitions: int | None = None  # defaults to shuffle partitions
     verbose: bool = False  # per-wave step timings to stderr
     # scratch dir of the wave materializations; default: a fresh
     # mkdtemp. Never removed by the engine: the CrawlResult DataFrames
@@ -271,18 +275,6 @@ class CrawlConfig:
     # the frontier of a driver-route wave (schedule and dedup on the
     # driver, see _dedup_driver). 0 disables both.
     driver_wave_max: int = 20_000
-    # fetch-join strategy: waves at or below this row count broadcast
-    # the slim frontier side against the page store IN PLACE — the
-    # payload-heavy store is never shuffled and the decode/transform
-    # stage runs at the store's own partitioning. Bigger waves fall
-    # back to the classic shuffle join against a url_hash-partitioned
-    # store copy. None (default) derives the cap from a MEMORY BUDGET:
-    # 10% of spark.driver.memory at ~150 B/row slim frontier — a fixed
-    # 4M-row default OOM'd at Spark's stock 1 GiB driver (the round-2
-    # scaling runs had to set 48g); the budget rule gives ~700k rows at
-    # 1 GiB and ~17M at 24 GiB, scaling with what the deployment
-    # actually provisioned. Set an int to pin it explicitly.
-    broadcast_fetch_max: int | None = None
 
 
 _MEM_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -381,11 +373,33 @@ def _hex_path(parent: str, slot: str, idx: int) -> str:
     return f"{parent}{slot}{idx:08x}"
 
 
-def _resolve_child_source(
-    spec: PageSpec, child: ChildPage
-) -> tuple[str | None, bool]:
-    """(url, is_null_source) with the reference's precedence:
-    ctor arg > class attr > get_source_from_input (pages.py:157-166)."""
+# URL fields the frontier has no column for, with their defaults: a
+# source that sets one is refused, not fetched as a plain GET (retries
+# is honored, through PageSpec.total_attempts)
+_URL_UNCARRIED = {"method": "GET", "data": None, "headers": None,
+                  "verify": True, "timeout": None}
+
+
+def _source_url(src) -> str | None:
+    """The url a page source (str, URL or NullSource) fetches, None for
+    a NullSource. Raises ValueError naming the field when a URL sets an
+    option in _URL_UNCARRIED."""
+    if isinstance(src, NullSource):
+        return None
+    if isinstance(src, URL):
+        for name, default in _URL_UNCARRIED.items():
+            if getattr(src, name) != default:
+                raise ValueError(
+                    f"URL.{name}={getattr(src, name)!r} is not supported "
+                    f"(sources are fetched as plain GETs): {src.url}")
+        return src.url
+    return str(src)
+
+
+def _resolve_child_source(spec: PageSpec, child: ChildPage) -> str | None:
+    """The child's url (None for a NullSource) with the reference's
+    precedence: ctor arg > class attr > get_source_from_input
+    (pages.py:157-166)."""
     src = child.source
     if src is None:
         src = spec.source
@@ -395,11 +409,7 @@ def _resolve_child_source(
         raise MissingSourceError(
             f"{spec.name} has no source or source_from_input"
         )
-    if isinstance(src, NullSource):
-        return None, True
-    if isinstance(src, URL):
-        return src.url, False
-    return str(src), False
+    return _source_url(src)
 
 
 class _SkippedType:
@@ -518,10 +528,7 @@ def _make_transform(
             nxt = spec.next_source(ctx)
             if nxt is None:
                 return
-            if isinstance(nxt, NullSource):
-                url = None
-            else:
-                url = nxt.url if isinstance(nxt, URL) else str(nxt)
+            url = _source_url(nxt)
             rows.append((
                 "next", row.page_cls,
                 _hex_path(parent_path, schemas.SLOT_PAGINATION,
@@ -593,7 +600,7 @@ def _make_transform(
                 continue
             if isinstance(res, ChildPage):
                 child_spec = specs[res.page_cls]
-                child_url, _is_null = _resolve_child_source(child_spec, res)
+                child_url = _resolve_child_source(child_spec, res)
                 pr = (
                     res.priority if res.priority is not None
                     else int(row.priority)
@@ -668,7 +675,6 @@ class CrawlEngine:
         registry: PageRegistry,
         page_store: DataFrame | None = None,
         robots: DataFrame | None = None,
-        politeness: DataFrame | None = None,
         config: CrawlConfig | None = None,
         fetch_fn=None,
     ):
@@ -686,28 +692,13 @@ class CrawlEngine:
         self._robots_join = False
         self._robots_prefix_df = None
         self._robots_wild = None
-        # validate the per-host budget table ONCE here (it's
-        # broadcast-small): a budget_per_wave <= 0 row would defer that
-        # host's rows on every wave, so the loop never drains
-        # (n_frontier never reaches 0) — an infinite crawl unless
-        # max_waves caps it. Same rule as default_budget's >= 1 check.
-        if politeness is not None:
-            bad = politeness.filter(F.col("budget_per_wave") < 1).count()
-            if bad:
-                raise ValueError(
-                    f"politeness table has {bad} row(s) with "
-                    "budget_per_wave < 1; per-host budgets must be >= 1 "
-                    "(drop the row to fall back to the default budget)"
-                )
-        self.politeness = politeness
         self.config = config or CrawlConfig()
         if self.config.checkpoint_every < 1:
             raise ValueError(
                 f"checkpoint_every must be >= 1, got "
                 f"{self.config.checkpoint_every}")
-        self._nparts = self.config.target_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        self._nparts = int(
+            spark.conf.get("spark.sql.shuffle.partitions", "32"))
         if page_store is not None:
             # projection kept in its source partitioning: the default
             # (broadcast-frontier) fetch never shuffles the store. The
@@ -722,13 +713,15 @@ class CrawlEngine:
         else:
             self.page_store = None
         self._store_bykey = None
-        # memory-budget default for the broadcast-fetch cap (see
-        # CrawlConfig.broadcast_fetch_max)
+        # fetch-join strategy: a cluster wave of at most this many rows
+        # broadcasts the slim frontier against the page store IN PLACE
+        # (the payload-heavy store never shuffles); bigger waves take
+        # the shuffle join against a url_hash-partitioned store copy.
+        # The cap is a MEMORY BUDGET, 10% of the heap at ~150 B/row: a
+        # fixed 4M-row cap OOM'd at Spark's stock 1 GiB driver, the
+        # budget gives ~700k rows at 1 GiB and ~17M at 24 GiB.
         heap = _driver_heap(spark)
-        if self.config.broadcast_fetch_max is None:
-            self._bcast_fetch_max = _broadcast_rows_budget(spark, heap=heap)
-        else:
-            self._bcast_fetch_max = self.config.broadcast_fetch_max
+        self._bcast_fetch_max = _broadcast_rows_budget(spark, heap=heap)
         # driver-python-structure caps, derived from the provisioned
         # driver heap (the literals-don't-scale amber from round 4) so a
         # larger deployment widens the driver route instead of inheriting
@@ -806,8 +799,10 @@ class CrawlEngine:
             spec = self.registry[s["page_cls"]]
             url = s.get("url")
             if url is None:
-                child = ChildPage(page_cls=spec.name, input=s.get("input"))
-                url, _ = _resolve_child_source(spec, child)
+                url = _resolve_child_source(
+                    spec, ChildPage(page_cls=spec.name, input=s.get("input")))
+            else:
+                url = _source_url(url)
             rows.append(
                 (
                     s["page_cls"],
@@ -960,6 +955,22 @@ class CrawlEngine:
         resumed metrics rows, whether the frontier can hold a null-url
         row)."""
         cfg = self.config
+        self._store = open_snapshots(self.spark, cfg)
+        if self._store is None:
+            # snapshot knobs with no store to act on
+            for name, on in (
+                    ("resume_upto_wave", cfg.resume_upto_wave is not None),
+                    ("checkpoint_expire_deltas",
+                     cfg.checkpoint_expire_deltas)):
+                if on:
+                    raise ValueError(
+                        f"{name} needs checkpoint_dir or "
+                        "iceberg_table_prefix")
+            if cfg.checkpoint_every != 1 or cfg.checkpoint_async:
+                warnings.warn(
+                    "checkpoint_every/checkpoint_async have no effect "
+                    "without checkpoint_dir or iceberg_table_prefix: "
+                    "this crawl commits no snapshot", stacklevel=3)
         self._spill_n = 0
         self._spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
         os.makedirs(self._spill, exist_ok=True)
@@ -975,7 +986,7 @@ class CrawlEngine:
         self._ckpt_future = None
         self._ckpt_pool = (
             ThreadPoolExecutor(max_workers=1, thread_name_prefix="ckpt")
-            if cfg.checkpoint_async else None)
+            if cfg.checkpoint_async and self._store is not None else None)
         self._seen_count = 0
         # driver-resident twin of the seen set (exact (url_hash,
         # seen_key) pairs) — alive while every wave's new keys were
@@ -991,7 +1002,6 @@ class CrawlEngine:
                 _BLOOM_SHARDS, _BLOOM_SHARD_CAPACITY, _BLOOM_FPR)
             if cfg.bloom_min_seen is not None else None
         )
-        self._store = open_snapshots(self.spark, cfg)
         resumed = self._store and self._store.resume(cfg.resume_upto_wave)
         if resumed is None:
             rows = self._seed_rows(seeds)
@@ -1202,13 +1212,10 @@ class CrawlEngine:
 
     def _split(self, n_frontier: int) -> bool:
         """Whether the wave takes the politeness split (F5): not when the
-        WHOLE wave fits inside the default budget, which makes the
-        limiter a provable no-op (r6; only sound without a politeness
-        table, whose per-host budgets can undercut the default)."""
-        cfg = self.config
-        return self.politeness is not None or (
-            cfg.host_budget_per_wave is not None
-            and n_frontier > cfg.host_budget_per_wave)
+        WHOLE wave fits inside the host budget, which makes the limiter
+        a provable no-op."""
+        budget = self.config.host_budget_per_wave
+        return budget is not None and n_frontier > budget
 
     def _tag(self, frontier: DataFrame, n_frontier: int, ex,
              null_urls: bool = True):
@@ -1227,7 +1234,7 @@ class CrawlEngine:
         if self._split(n_frontier):
             # politeness budget: overflow deferred, paths untouched
             tagged = politeness_ops.split_by_host_budget(
-                tagged, self.politeness, self.config.host_budget_per_wave)
+                tagged, self.config.host_budget_per_wave)
             arms.insert(0, (F.col("_deferred"), "deferred"))
         # robots (F6): precompiled CASE expression when the rule set is
         # small; broadcast-join longest-prefix path when it isn't (never
@@ -1418,7 +1425,7 @@ class CrawlEngine:
         1994-seed wave's 2M-child explode+write into 8 tasks — a
         core-count-independent serial floor. Wave 0 (no history) keeps
         full width."""
-        if self.config.target_partitions is not None or not prev_total:
+        if not prev_total:
             return self._nparts
         # cap at 2x the session width: big waves keep extra partitions
         # so per-row cost variance (image decode) amortizes instead of
@@ -1577,7 +1584,10 @@ class CrawlEngine:
                 [local_df(spark, [], _EMISSION_OUT_SCHEMA)] + dead,
                 allow_missing=True,
             ),
-            seen=self._seen_union(),
+            # lazy, as results and dead are: compacting the slices
+            # (_seen_union) here would cost a job nobody may read
+            seen=_union_tree(
+                self._seen_slices or [local_df(spark, [], SEEN_SCHEMA)]),
             metrics=pd.DataFrame(metrics_rows),
             waves=wave - start_wave,
         )
@@ -1816,7 +1826,7 @@ class CrawlEngine:
         join), in FETCHED_SCHEMA — the real-HTTP fetcher's output
         schema. ``broadcast``: the frontier is small enough to broadcast
         against the store in place (a driver-local wave, or one within
-        broadcast_fetch_max). A frontier row the store lacks comes out
+        _bcast_fetch_max). A frontier row the store lacks comes out
         as a payloadless 404: the broadcast path anti-joins the frontier
         against the wave's found keys, the shuffle path reads the left
         join's null side."""
@@ -1873,30 +1883,31 @@ class CrawlEngine:
         return out
 
     def _run_dep(self, spec: PageSpec) -> Any:
-        child = ChildPage(page_cls=spec.name, input=None)
-        url, is_null = _resolve_child_source(spec, child)
-        payload = links = next_url = image_id = payload_kind = None
-        status = 200
-        if not is_null and url is not None:
-            canon = canonicalize_url(F.lit(url))
-            row = (
-                self.page_store.filter(F.col("url_hash") == url_hash(canon))
-                .take(1)
-            )
-            if row:
-                r = row[0]
-                payload = bytes(r["payload"]) if r["payload"] is not None else None
-                links = list(r["links"]) if r["links"] is not None else None
-                next_url, image_id = r["next_url"], r["image_id"]
-                payload_kind, status = r["payload_kind"], r["status"]
-        ctx = PageCtx(
-            input=None, url=url, status=status, payload=payload, links=links,
-            next_url=next_url, attempts=0, page_seq=0,
-            payload_kind=payload_kind, image_id=image_id,
-        )
+        """Fetch and process one dependency page on the driver: through
+        ``fetch_fn`` as a one-row batch, else from the page store."""
         if spec.process_page is None:
             raise CrawlError(f"dependency {spec.name} needs process_page")
-        return spec.process_page(ctx)
+        url = _resolve_child_source(spec, ChildPage(page_cls=spec.name))
+        page = {}
+        if url is not None and self.fetch_fn is not None:
+            batch = pd.DataFrame(
+                [(spec.name, url, None, schemas.root_path(0), 0, 0, 0, 0, 0)],
+                columns=schemas.FRONTIER_SCHEMA.names)
+            page = next(iter(self.fetch_fn(iter([batch])))).iloc[0].to_dict()
+        elif url is not None:
+            hit = self.page_store.filter(
+                F.col("url_hash") == url_hash(canonicalize_url(F.lit(url)))
+            ).take(1)
+            page = hit[0].asDict() if hit else {}
+        payload, links = page.get("payload"), page.get("links")
+        return spec.process_page(PageCtx(
+            input=None, url=url, status=int(page.get("status", 200)),
+            payload=None if payload is None else bytes(payload),
+            links=None if links is None else list(links),
+            next_url=page.get("next_url"), attempts=0, page_seq=0,
+            payload_kind=page.get("payload_kind"),
+            image_id=page.get("image_id"),
+        ))
 
     # ----------------------------------------------------------- checkpoint
     def _commit_window(self, wave, metrics_rows):

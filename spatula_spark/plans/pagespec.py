@@ -59,9 +59,11 @@ class RejectedResponse(Exception):
 
 @dataclass(frozen=True)
 class URL:
-    """Fetch descriptor (reference ``sources.py:10-41``). On the frontier
-    this flattens into the source columns; method/data/headers are
-    honored by the real-HTTP fetch variant and carried for parity."""
+    """Fetch descriptor (reference ``sources.py:10-41``). Only ``url``
+    reaches the frontier and ``retries`` sets the page's accept-retry
+    budget; the engine refuses a non-default method, data, headers,
+    verify or timeout (a ValueError naming the field), since the
+    fetch would silently be a plain GET."""
 
     url: str
     method: str = "GET"

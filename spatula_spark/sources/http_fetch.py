@@ -3,21 +3,22 @@ scrapelib layer, ``/root/reference/src/spatula/sources.py:42-52``).
 
 The engine's default fetch is the page-store join (synthetic web);
 this module is the drop-in network variant: an Arrow-batched
-``mapInPandas`` body that issues the requests with stdlib urllib —
-honoring per-source method / POST data / headers / timeout / verify
-(reference ``sources.py:11-40``, carried on the frontier's source
-columns) — and emits the same batch schema the join produces, so the
-rest of the wave is identical. For hook-class pages the engine runs
-this body and the page transform in one ``mapInPandas`` (each fetched
-batch converted through Arrow in ``FETCHED_SCHEMA`` in between), so a
-fetcher's output columns are matched by name and type either way.
+``mapInPandas`` body that issues GET requests with stdlib urllib —
+the fetcher-wide headers, timeout, TLS verification, transport
+retries and response cache of the reference's scrapelib setup
+(``cli.py:27-93``) — and emits the same batch schema the join
+produces, so the rest of the wave is identical. Per-source ``URL``
+options (method, data, headers, verify, timeout) are not carried on
+the frontier; the engine refuses a source that sets them. For
+hook-class pages the engine runs this body and the page transform in
+one ``mapInPandas`` (each fetched batch converted through Arrow in
+``FETCHED_SCHEMA`` in between), so a fetcher's output columns are
+matched by name and type either way.
 
 Batching notes (the politeness contract): rows arrive already
 budget-limited per host by the wave's politeness window; the
 salted repartition (politeness.salted_repartition) spreads a hot
-host's budget across tasks so no single task serializes a host. An
-optional per-task ``delay_per_request`` provides intra-wave pacing
-(the reference's requests_per_minute, cli.py:33).
+host's budget across tasks so no single task serializes a host.
 
 Tested against a local http.server in tests/test_http_fetch.py — the
 full reference flow (fetch -> HtmlPage parse -> CSS extraction ->
@@ -26,7 +27,6 @@ detail fan-out -> pagination) over real sockets.
 
 from __future__ import annotations
 
-import json
 import time
 import urllib.error
 import urllib.request
@@ -41,6 +41,9 @@ FETCHED_SCHEMA = (
     "found boolean, priority int, flaky_rejects int, url_hash long, "
     "seen_key long"
 )
+
+# response bytes kept per fetched page; a longer body is truncated
+_MAX_BYTES = 16 * 1024 * 1024
 
 
 def _kind_of(ctype: str) -> str:
@@ -64,18 +67,15 @@ def _kind_of(ctype: str) -> str:
 def make_http_fetcher(
     timeout: float = 5.0,
     user_agent: str = "spatula_spark",
-    delay_per_request: float = 0.0,
-    max_bytes: int = 16 * 1024 * 1024,
     headers: dict | None = None,
     verify: bool = True,
     retries: int = 0,
     retry_wait: float = 0.0,
     cache_dir: str | None = None,
 ):
-    """Build the mapInPandas body. Per-source options ride in the
-    optional ``source_json`` column (method/data/headers/timeout).
+    """Build the mapInPandas body, which GETs each row's url.
 
-    The extra knobs mirror the reference's scrapelib configuration
+    The knobs mirror the reference's scrapelib configuration
     (cli.py:27-93): ``headers`` added to every request, ``verify=False``
     skips TLS cert checks, ``retries``/``retry_wait`` retry transport
     errors (the reference's retry_attempts — distinct from the page
@@ -102,19 +102,8 @@ def make_http_fetcher(
 
         for pdf in batches:
             out = []
-            has_src = "source_json" in pdf.columns
             for row in pdf.itertuples(index=False):
-                src = (
-                    json.loads(row.source_json)
-                    if has_src and row.source_json
-                    else {}
-                )
-                method = src.get("method", "GET")
-                data = src.get("data")
-                body = (
-                    json.dumps(data).encode() if data is not None else None
-                )
-                if cache_dir and method == "GET":
+                if cache_dir:
                     cp = cache_path(row.url)
                     if os.path.exists(cp):
                         with open(cp, "rb") as f:
@@ -129,27 +118,24 @@ def make_http_fetcher(
                         ))
                         continue
                 req = urllib.request.Request(
-                    row.url, data=body, method=method,
-                    headers={"User-Agent": user_agent,
-                             **(headers or {}),
-                             **(src.get("headers") or {})},
+                    row.url,
+                    headers={"User-Agent": user_agent, **(headers or {})},
                 )
-                t_o = src.get("timeout") or timeout
                 status, payload = 0, None
                 ctype = ""
                 for attempt in range(retries + 1):
                     try:
                         with urllib.request.urlopen(
-                            req, timeout=t_o, context=ssl_ctx
+                            req, timeout=timeout, context=ssl_ctx
                         ) as resp:
                             status = resp.status
-                            payload = resp.read(max_bytes)
+                            payload = resp.read(_MAX_BYTES)
                             ctype = resp.headers.get("Content-Type", "")
                         break
                     except urllib.error.HTTPError as e:
                         status = e.code
                         try:
-                            payload = e.read(max_bytes)
+                            payload = e.read(_MAX_BYTES)
                         except Exception:
                             payload = None
                         break  # an HTTP status is a response, not an error
@@ -157,7 +143,7 @@ def make_http_fetcher(
                         status = 0  # transport error -> retry, else not found
                         if attempt < retries and retry_wait:
                             time.sleep(retry_wait)
-                if cache_dir and method == "GET" and status != 0:
+                if cache_dir and status != 0:
                     # write-through response cache (--fastmode)
                     with open(cache_path(row.url), "wb") as f:
                         f.write(f"{status} {ctype}\n".encode())
@@ -169,8 +155,6 @@ def make_http_fetcher(
                     None, status != 0, int(row.priority),
                     0, int(row.url_hash), int(row.seen_key),
                 ))
-                if delay_per_request:
-                    time.sleep(delay_per_request)
             yield pd.DataFrame(out, columns=[
                 "page_cls", "path", "url", "input_json", "payload",
                 "links", "next_url", "status", "attempts", "page_seq",

@@ -104,26 +104,11 @@ def test_crawl_real_jpeg_payloads(spark):
     assert jpeg_rows and all(40.0 <= r["psnr_db"] < 99.0 for r in jpeg_rows)
 
 
-def test_shuffle_fetch_fallback_matches_broadcast(spark, web, store):
-    """Waves above ``broadcast_fetch_max`` take the bucketed shuffle
-    join against the url_hash-partitioned store copy instead of the
-    broadcast-frontier probe; both strategies must produce identical
-    crawls (broadcast_fetch_max=0 forces the fallback on every wave)."""
-    default = CrawlEngine(spark, media_registry(), page_store=store,
-                          config=CrawlConfig())
-    forced = CrawlEngine(spark, media_registry(), page_store=store,
-                         config=CrawlConfig(broadcast_fetch_max=0))
-    r1 = default.crawl(web.seeds())
-    r2 = forced.crawl(web.seeds())
-    assert r1.items() == r2.items()
-    assert r1.seen.count() == r2.seen.count()
-    assert r1.waves == r2.waves
-
-
-def _holey_store_crawl(spark, web, store, **cfg):
+def _holey_store_crawl(spark, web, store, bcast_max=None, **cfg):
     """Crawl a store missing every 7th detail page, with a detail class
     that does not handle errors: each missing page is a 404 dead
-    letter (``fail_fast`` off so the crawl runs to the end)."""
+    letter (``fail_fast`` off so the crawl runs to the end). Returns
+    the result and the engine; ``bcast_max`` pins its fetch cap."""
     holey = store.filter(
         (F.col("kind") != "detail")
         | (F.regexp_extract("url", r"/detail/(\d+)$", 1).cast("int") % 7
@@ -131,25 +116,26 @@ def _holey_store_crawl(spark, web, store, **cfg):
     reg = media_registry()
     reg.register(dataclasses.replace(reg["MediaDetailPage"],
                                      handles_errors=False))
-    return CrawlEngine(spark, reg, page_store=holey,
-                       config=CrawlConfig(fail_fast=False, **cfg)
-                       ).crawl(web.seeds())
+    eng = CrawlEngine(spark, reg, page_store=holey,
+                      config=CrawlConfig(fail_fast=False, **cfg))
+    if bcast_max is not None:
+        eng._bcast_fetch_max = bcast_max
+    return eng.crawl(web.seeds()), eng
 
 
 def test_missing_pages_parity_across_fetch_paths(spark, web, store):
     """Pages the store lacks become the same 404 dead letters on every
     fetch path: the cluster broadcast fetch (frontier anti-joined
-    against the wave's found keys), the cluster shuffle join
-    (broadcast_fetch_max=0), and the driver path's keyset split."""
-    driver = _holey_store_crawl(spark, web, store)
+    against the wave's found keys), the cluster shuffle join (fetch cap
+    0), and the driver path's keyset split."""
+    driver, _ = _holey_store_crawl(spark, web, store)
     dead = [r["error"] for r in driver.dead.collect()]
     assert dead and all("status=404" in e for e in dead)
-    for label, cfg in (
-        ("broadcast", {"driver_wave_max": 0}),
-        ("shuffle", {"driver_wave_max": 0, "broadcast_fetch_max": 0}),
-    ):
-        res = _holey_store_crawl(spark, web, store, **cfg)
+    for label, bcast_max in (("broadcast", None), ("shuffle", 0)):
+        res, eng = _holey_store_crawl(spark, web, store, bcast_max,
+                                      driver_wave_max=0)
         _assert_same_crawl(res, driver, label)
+        assert (eng._store_bykey is not None) == (bcast_max == 0), label
 
 
 def test_missing_antijoin_builds_on_found_keys(spark, store):
@@ -207,25 +193,32 @@ def test_budgeted_robots_crawl_keeps_seen_twin(spark, web, store,
     assert res.metrics["schedule_local"].all()
 
 
-def test_checkpoint_every_below_one_rejected(spark, store):
+def test_checkpoint_every_below_one_rejected(spark, web, store):
     """checkpoint_every < 1 names no commit cadence: the engine refuses
-    it at construction instead of committing every wave."""
+    it at construction instead of committing every wave. With no
+    snapshot store, a crawl refuses resume_upto_wave and
+    checkpoint_expire_deltas before any Spark job, and warns that
+    checkpoint_every / checkpoint_async commit nothing."""
     for k in (0, -2):
         with pytest.raises(ValueError, match="checkpoint_every"):
             CrawlEngine(spark, media_registry(), page_store=store,
                         config=CrawlConfig(checkpoint_every=k))
-
-
-def test_politeness_table_with_nonpositive_budget_rejected(spark, store):
-    """A budget_per_wave <= 0 row would defer that host's rows forever
-    (the loop never drains) — the engine must refuse it at
-    construction, same rule as default_budget's >= 1 check."""
-    bad = spark.createDataFrame(
-        [("h0.example", 0)], "host string, budget_per_wave int"
-    )
-    with pytest.raises(ValueError, match="budget_per_wave"):
-        CrawlEngine(spark, media_registry(), page_store=store,
-                    politeness=bad)
+    sc = spark.sparkContext
+    sc.setJobGroup("nostore", "snapshot knobs without a store")
+    try:
+        for name, value, kind in (
+                ("resume_upto_wave", 0, ValueError),
+                ("checkpoint_expire_deltas", True, ValueError),
+                ("checkpoint_every", 2, UserWarning),
+                ("checkpoint_async", True, UserWarning)):
+            expect = pytest.warns if kind is UserWarning else pytest.raises
+            with expect(kind, match=name):
+                CrawlEngine(spark, media_registry(), page_store=store,
+                            config=CrawlConfig(max_waves=0, **{name: value})
+                            ).crawl(web.seeds())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("nostore")
 
 
 def test_broadcast_fetch_cap_derives_from_memory_budget(spark):
@@ -522,20 +515,6 @@ def test_landed_schedule_plan_shape(spark, sched_web, sched_store,
         assert "WindowExec" not in names
         assert "LocalTableScanExec" in names
     assert res.metrics["schedule_local"].all()
-
-
-def test_bloom_and_exact_agree(spark, web, store, monkeypatch):
-    monkeypatch.setattr(engine_mod, "_BLOOM_SHARD_CAPACITY", 1 << 14)
-    base = CrawlConfig(bloom_min_seen=None)
-    bloom = CrawlConfig(bloom_min_seen=1)
-    r1 = CrawlEngine(spark, media_registry(), page_store=store,
-                     config=base).crawl(web.seeds())
-    r2 = CrawlEngine(spark, media_registry(), page_store=store,
-                     config=bloom).crawl(web.seeds())
-    u1 = sorted(r["url"] for r in crawl_items_df(r1.results).collect())
-    u2 = sorted(r["url"] for r in crawl_items_df(r2.results).collect())
-    assert u1 == u2
-    assert r1.seen.count() == r2.seen.count()
 
 
 def test_dfs_order_matches_document_order(spark, web, store):
@@ -1038,19 +1017,21 @@ def test_driver_wave_fast_path_parity(spark, web, store):
             == sorted(tuple(r) for r in slow.seen.collect()))
 
 
-def test_driver_wave_fast_path_parity_doc_tree(spark):
+def test_driver_wave_fast_path_parity_doc_tree(spark, monkeypatch):
     """Deep-chain shape (13 binary-tree waves at sf0.001): the fast
     path handles every wave after the first two; results must match
-    the cluster path row for row."""
+    the cluster path row for row. The fast crawl never compacts its
+    seen slices: its result's seen set stays a lazy union."""
     from spatula_spark.plans.doc_pipeline import crawl_doc_tree
 
+    labels = []
+    real = CrawlEngine._materialize
+    monkeypatch.setattr(CrawlEngine, "_materialize", lambda eng, df, label,
+                        *a: labels.append(label) or real(eng, df, label, *a))
     sf = "/root/testdata/sf0.001"
     fast = crawl_doc_tree(spark, sf)
-    slow = crawl_doc_tree(
-        spark, sf,
-        config=CrawlConfig(target_partitions=8, broadcast_fetch_max=0,
-                           driver_wave_max=0),
-    )
+    assert "seen_compact" not in labels
+    slow = crawl_doc_tree(spark, sf, config=CrawlConfig(driver_wave_max=0))
     got = [tuple(r) for r in fast.orderBy("doc_id").collect()]
     want = [tuple(r) for r in slow.orderBy("doc_id").collect()]
     assert got == want

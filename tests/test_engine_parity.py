@@ -521,8 +521,8 @@ def test_zero_host_budget_rejected(spark, tiny_store):
     from spatula_spark.operators.politeness import split_by_host_budget
 
     with pytest.raises(ValueError, match="host budget"):
-        split_by_host_budget(tiny_store.limit(0), None, 0)
-    tagged = split_by_host_budget(tiny_store, None, None)
+        split_by_host_budget(tiny_store.limit(0), 0)
+    tagged = split_by_host_budget(tiny_store, None)
     assert tagged.columns == tiny_store.columns + ["_deferred"]
     assert tagged.filter("_deferred").count() == 0
 

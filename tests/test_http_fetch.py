@@ -14,7 +14,7 @@ import pytest
 from spatula_spark.operators.parsers import element_text
 from spatula_spark.operators.selectors import CSS
 from spatula_spark.plans.engine import CrawlConfig, CrawlEngine
-from spatula_spark.plans.pagespec import ChildPage, PageRegistry, PageSpec
+from spatula_spark.plans.pagespec import URL, ChildPage, PageRegistry, PageSpec
 from spatula_spark.sources.http_fetch import make_http_fetcher
 
 EMPLOYEES = [
@@ -174,6 +174,25 @@ def test_http_404_dead_letter(spark, site):
     res = eng.crawl([{"page_cls": "Nope", "url": f"{site}/missing"}])
     assert res.dead.count() == 1
     assert "status=404" in res.dead.collect()[0]["error"]
+
+
+def test_http_dependency_and_refused_url_options(spark, site):
+    """With fetch_fn and no page store, a dependency page is fetched
+    through the fetcher; a URL option the frontier cannot carry is
+    refused by name instead of fetched as a plain GET."""
+    reg = PageRegistry()
+    reg.register(PageSpec(name="Dep", source=f"{site}/detail/3",
+                          process_page=lambda ctx: ctx.json["name"]))
+    reg.register(PageSpec(name="Echo", dependencies={"who": "Dep"},
+                          process_page=lambda ctx: dict(ctx.deps)))
+    eng = CrawlEngine(spark, reg, fetch_fn=make_http_fetcher())
+    seed = {"page_cls": "Echo", "url": f"{site}/detail/0"}
+    assert eng.crawl([seed]).items() == [{"who": "emp3"}]
+    for name, value in (("method", "POST"), ("data", {}), ("headers", {}),
+                        ("verify", False), ("timeout", 1.0)):
+        url = URL(seed["url"], **{name: value})
+        with pytest.raises(ValueError, match=f"URL.{name}="):
+            eng.crawl([{**seed, "url": url}])
 
 
 def test_http_hook_rows_fetch_and_transform_in_one_pass(spark, site,
