@@ -2524,9 +2524,6 @@ def media_phash_near_dups_q(spark, sf_dir):
     return dd.hamming_near_dups(corpus, "image", "fp", max_hamming=7)
 
 
-_DUCK_WLIST = None  # built lazily below (needs synthweb import)
-
-
 def _media_caption_exprs():
     """(Spark phrase Column builder, DuckDB phrase SQL) from the one
     synthweb word pool — caption words are picked by the portable hash

@@ -375,34 +375,6 @@ def lsh_candidate_pairs(
     )
 
 
-def jaccard_pairs_ref(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Pure-Catalyst REFERENCE form of :func:`jaccard_pairs` (what the
-    DuckDB oracle mirrors); equality with the fast path is pinned in
-    tests."""
-    sh = _spread(df).select(
-        "doc_id", word_shingles(F.col(text_col), n).alias("sh")
-    ).localCheckpoint()
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    joined = pairs.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def _shingle_set(t: str, n: int) -> set:
     """Python twin of :func:`word_shingles` (same normalization rules:
     trim = spaces only, Java's ASCII ``\\s`` class, split keeps empty

@@ -57,16 +57,6 @@ def bigrams_from_words(w: Column) -> Column:
     )
 
 
-def word_bigrams(text: Column) -> Column:
-    """Adjacent-word pairs from a raw text column. Convenience form
-    for tests/small frames — hot paths must project the words column
-    and use bigrams_from_words (see its docstring for the lambda-CSE
-    trap and measurements)."""
-    from .dedup import normalized_words
-
-    return bigrams_from_words(normalized_words(text))
-
-
 def bigram_lm_score(
     docs: DataFrame,
     lm_docs: DataFrame | None = None,

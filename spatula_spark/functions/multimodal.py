@@ -1,18 +1,11 @@
-"""Multimodal column operators: image / audio / video as opaque binary.
+"""Audio column operators: clips as opaque binary.
 
 Training-data pipelines treat media as ``binary`` columns with typed
-metadata and run decode / feature-extract / resize / frame-sample as
-Arrow-batched ``mapInPandas`` stages. Real codecs in this container:
-
-* images — stdlib PNG codec + the real baseline JPEG (images.py,
-  jpeg.py);
-* audio — PCM RIFF/WAVE via the stdlib ``wave`` module (8/16/32-bit);
-  non-WAV bytes fall back to a deterministic fake so feature math
-  stays testable on arbitrary payloads;
-* video — Motion-JPEG (concatenated JFIF frames) split on real
-  SOI/EOI marker boundaries and decoded with the in-repo JPEG
-  decoder; other containers (mp4/h264 — no ffmpeg here) fall back to
-  a clearly-marked deterministic chunker.
+metadata and run decode / feature-extract as Arrow-batched
+``mapInPandas`` stages. PCM RIFF/WAVE (8/16/32-bit) is decoded by the
+stdlib ``wave`` module; other formats go through ``soundfile`` when it
+is installed, and raise otherwise. Image codecs live in images.py and
+jpeg.py.
 
 Column-pruning discipline: every operator here takes a slim projection
 and is the only stage that touches the binary column.
@@ -26,100 +19,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .images import decode_image, png_encode
-
-# optional-dependency probes: WAV and Motion-JPEG are decoded by the
-# in-repo codecs regardless; these only widen coverage (non-WAV audio,
-# mp4/h264 video) when the library exists in the deployment. Contract
-# tests exercise the routing with fake modules and skip the real-codec
-# assertions when the libraries are absent (as in this container).
-try:  # pragma: no cover - not in this container
+# optional-dependency probe: WAV is decoded by the stdlib regardless;
+# soundfile only widens coverage (non-WAV audio) when the library
+# exists in the deployment. A contract test exercises the routing with
+# a fake module and skips the real-codec assertion when it is absent.
+try:  # pragma: no cover - optional dependency
     import soundfile  # noqa: F401
 
     _HAVE_AUDIO = True
 except Exception:
     _HAVE_AUDIO = False
 
-try:  # pragma: no cover - not in this container
-    import av  # noqa: F401
 
-    _HAVE_VIDEO = True
-except Exception:
-    _HAVE_VIDEO = False
-
-
-# ----------------------------------------------------------------- images
-IMAGE_FEATURES_SCHEMA = (
-    "image_id string, w int, h int, mean_r double, mean_g double, "
-    "mean_b double, brightness double, edge_energy double"
-)
-
-
-def image_features_iter(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: decode + cheap visual features per image.
-    Input cols: (image_id, bytes, fmt)."""
-    for pdf in batches:
-        rows = []
-        for r in pdf.itertuples(index=False):
-            px = decode_image(bytes(r.bytes), r.fmt).astype(np.float64)
-            mean = px.mean(axis=(0, 1))
-            gray = px.mean(axis=2)
-            gy, gx = np.gradient(gray)
-            rows.append((
-                r.image_id, px.shape[1], px.shape[0],
-                float(mean[0]), float(mean[1]), float(mean[2]),
-                float(gray.mean() / 255.0),
-                float(np.sqrt(gx**2 + gy**2).mean()),
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "image_id", "w", "h", "mean_r", "mean_g", "mean_b",
-            "brightness", "edge_energy",
-        ])
-
-
-def image_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract over the media table; only this stage
-    reads ``bytes`` (check ReadSchema in the scan)."""
-    return media.select("image_id", "bytes", "fmt").mapInPandas(
-        image_features_iter, IMAGE_FEATURES_SCHEMA
-    )
-
-
-def _block_mean_resize(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    h, w, c = px.shape
-    ys = np.linspace(0, h, out_h + 1).astype(int)
-    xs = np.linspace(0, w, out_w + 1).astype(int)
-    out = np.empty((out_h, out_w, c), dtype=np.float64)
-    for i in range(out_h):
-        for j in range(out_w):
-            out[i, j] = px[ys[i]:max(ys[i + 1], ys[i] + 1),
-                           xs[j]:max(xs[j + 1], xs[j] + 1)].mean(axis=(0, 1))
-    return out.clip(0, 255).astype(np.uint8)
-
-
-def resize_images(media: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
-    """Thumbnail stage: decode -> block-mean resize -> re-encode PNG.
-    The write side of a typical training-data image pipeline."""
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                px = decode_image(bytes(r.bytes), r.fmt)
-                thumb = _block_mean_resize(px, out_w, out_h)
-                rows.append((r.image_id, png_encode(thumb), out_w, out_h))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "thumb", "w", "h"]
-            )
-
-    return media.select("image_id", "bytes", "fmt").mapInPandas(
-        it, "image_id string, thumb binary, w int, h int"
-    )
-
-
-# ----------------------------------------------------------------- audio
 AUDIO_FEATURES_SCHEMA = (
     "clip_id string, n_samples long, sample_rate int, rms double, "
     "zero_crossings long"
@@ -144,9 +55,8 @@ def wav_encode(samples: np.ndarray, rate: int = 16000) -> bytes:
 def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     """REAL decode for PCM RIFF/WAVE (stdlib ``wave``: 8/16/32-bit,
     multi-channel averaged to mono float in [-1, 1]); soundfile is used
-    for other formats when importable. Non-audio bytes fall back to a
-    deterministic fake waveform so downstream feature math stays
-    testable on arbitrary payloads."""
+    for other formats when importable. Any other bytes raise
+    ``ValueError``: features of an undecodable clip would be noise."""
     if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
         import io
         import wave as _wave
@@ -176,9 +86,10 @@ def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
 
         wav, rate = sf.read(io.BytesIO(data))
         return np.asarray(wav, dtype=np.float64), int(rate)
-    # deterministic fake: bytes -> [-1, 1) samples
-    arr = np.frombuffer(data, dtype=np.uint8).astype(np.float64)
-    return (arr - 128.0) / 128.0, 16000
+    raise ValueError(
+        f"audio bytes are not RIFF/WAVE (leading {data[:12]!r}) and "
+        "soundfile is not installed to decode other formats"
+    )
 
 
 def audio_features_iter(
@@ -202,87 +113,3 @@ def audio_features(clips: DataFrame) -> DataFrame:
         audio_features_iter, AUDIO_FEATURES_SCHEMA
     )
 
-
-# ----------------------------------------------------------------- video
-def _av_keyframes(data: bytes) -> list[bytes]:  # pragma: no cover
-    """pyav route for real containers (mp4/h264/...): demux, decode
-    keyframes, re-encode each as PNG via the in-repo codec so the
-    downstream frame schema is identical to the Motion-JPEG path."""
-    import io
-
-    import av
-
-    frames: list[bytes] = []
-    with av.open(io.BytesIO(data)) as container:
-        stream = container.streams.video[0]
-        stream.codec_context.skip_frame = "NONKEY"
-        for frame in container.decode(stream):
-            frames.append(png_encode(frame.to_ndarray(format="rgb24")))
-    return frames
-
-
-def extract_frames(data: bytes, frame_bytes: int = 256) -> list[bytes]:
-    """Per-payload frame extraction with codec dispatch: Motion-JPEG
-    (SOI magic) via the in-repo splitter, other containers via pyav
-    when importable, else the deterministic chunker fallback (no
-    pyav/ffmpeg in this container) that keeps the plumbing testable
-    on arbitrary payloads."""
-    if data[:2] == b"\xff\xd8":  # Motion-JPEG
-        return split_mjpeg(data)
-    if _HAVE_VIDEO:  # pragma: no cover - optional dep
-        return _av_keyframes(data)
-    return [
-        data[i:i + frame_bytes]
-        for i in range(0, max(len(data), 1), frame_bytes)
-    ]
-
-
-def mjpeg_encode(frames: list[np.ndarray], quality: int = 90) -> bytes:
-    """Concatenated-JFIF Motion-JPEG stream from (h, w, 3) frames."""
-    from .jpeg import jpeg_encode
-
-    return b"".join(jpeg_encode(f, quality) for f in frames)
-
-
-def split_mjpeg(data: bytes) -> list[bytes]:
-    """Split a Motion-JPEG stream on real SOI/EOI marker boundaries."""
-    frames = []
-    pos = 0
-    while True:
-        start = data.find(b"\xff\xd8", pos)
-        if start < 0:
-            break
-        end = data.find(b"\xff\xd9", start)
-        if end < 0:
-            break
-        frames.append(data[start:end + 2])
-        pos = end + 2
-    return frames
-
-
-def sample_video_frames(
-    videos: DataFrame, every_n: int = 10, frame_bytes: int = 256
-) -> DataFrame:
-    """Frame-sampling: one input row -> many frame rows (mapInPandas
-    with a fan-out batch shape). REAL for Motion-JPEG payloads —
-    streams starting with the JPEG SOI marker are split on actual
-    SOI/EOI boundaries into standalone JFIF frames (decodable by
-    functions/jpeg.py). Other containers (mp4/h264 — no ffmpeg in this
-    container) fall back to a deterministic ``frame_bytes`` chunker,
-    clearly marked; a pyav keyframe iterator drops in at that call."""
-
-    def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"video_id": [], "frame_no": [], "frame": []}
-            for r in pdf.itertuples(index=False):
-                data = bytes(r.bytes)
-                frames = extract_frames(data, frame_bytes)
-                for f in range(0, len(frames), every_n):
-                    out["video_id"].append(r.video_id)
-                    out["frame_no"].append(f)
-                    out["frame"].append(frames[f])
-            yield pd.DataFrame(out)
-
-    return videos.select("video_id", "bytes").mapInPandas(
-        it, "video_id string, frame_no int, frame binary"
-    )

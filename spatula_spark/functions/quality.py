@@ -45,21 +45,14 @@ MAX_ADJACENT_DUP_FRAC = 0.08
 SAMPLE_DENOM = float(1 << 60)  # portable_hash64 is uniform in [0, 2^60)
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """All word n-grams of the normalized text, WITH multiplicity
-    (repetition metrics need counts; the distinct variant is
-    :func:`~spatula_spark.functions.dedup.word_shingles`). Empty array
-    when the doc has fewer than n words."""
-    # nested zip_with over shifted slices: the words array stays
-    # OUTSIDE every lambda (Catalyst does not CSE across lambda
-    # boundaries — the transform-with-index form re-ran the split per
-    # produced gram; see dedup.word_shingles for the measurements)
-    return word_ngrams_from(normalized_words(text), n)
-
-
 def word_ngrams_from(w: Column, n: int) -> Column:
-    """:func:`word_ngrams` over an ALREADY-PROJECTED words-array column
-    (the lambda-CSE-safe form — hot paths must project the array)."""
+    """All word n-grams of an ALREADY-PROJECTED words-array column,
+    WITH multiplicity (repetition metrics need counts; the distinct
+    variant is :func:`~spatula_spark.functions.dedup.word_shingles`).
+    Empty array when the doc has fewer than n words. Nested zip_with
+    over shifted slices keeps the array OUTSIDE every lambda: Catalyst
+    does not CSE across lambda boundaries, so callers must project the
+    array first (see dedup.word_shingles for the measurements)."""
     m = F.size(w) - n + 1
     acc = F.slice(w, 1, m)
     for k in range(1, n):

@@ -613,42 +613,14 @@ def _pq_encode_udf(books: np.ndarray):
     return _enc
 
 
-def _pq_lut_expr(books: np.ndarray, vec_name: str) -> Column:
-    """ADC lookup table as ONE parsed SQL expression over the vector
-    column ``vec_name``: lut[s*n_codes + j] = round-half-up integer
-    micro-distance ||v_sub_s - book[s][j]||^2 * 1e6. Integer entries
-    sum order-independently, so the ADC total is bit-identical across
-    numpy / Catalyst / DuckDB; the per-entry d-fold is the explicit
-    left-to-right order the twins use. Generated as a string and
-    parsed once — building it from Column objects costs a py4j round
-    trip per operator (11 s measured driver time)."""
-    m, n_codes, sub = books.shape
-
-    def _lit(x: float) -> str:
-        return repr(float(x)) + "D"  # D suffix: DOUBLE, not DECIMAL
-
-    entries = []
-    for ss in range(m):
-        for jj in range(n_codes):
-            terms = " + ".join(
-                f"(element_at({vec_name}, {ss * sub + d + 1}) - "
-                f"{_lit(books[ss][jj][d])})*"
-                f"(element_at({vec_name}, {ss * sub + d + 1}) - "
-                f"{_lit(books[ss][jj][d])})"
-                for d in range(sub)
-            )
-            entries.append(f"CAST(round(({terms}) * 1e6) AS BIGINT)")
-    return F.expr("array(" + ", ".join(entries) + ")")
-
-
 def _pq_lut_udf(books: np.ndarray):
-    """Arrow-vectorized ADC lookup table — same integer entries as
-    :func:`_pq_lut_expr` (identical explicit d-sequential fold and
-    round-half-up keying, so the DuckDB twin still replays it
-    bit-for-bit), computed in numpy instead of a ~1k-term Catalyst
-    expression. Used where the LUT input is a small probe table whose
-    stage would otherwise eat the Janino 64KB compile-and-fail cost
-    (~3 s of driver time for 20 rows)."""
+    """Arrow-vectorized ADC lookup table: lut[s*n_codes + j] =
+    round-half-up integer micro-distance ||v_sub_s - book[s][j]||^2 *
+    1e6, folded over d left to right so the DuckDB twin replays it
+    bit-for-bit (integer entries sum order-independently). Computed in
+    numpy instead of a ~1k-term Catalyst expression, whose stage would
+    eat the Janino 64KB compile-and-fail cost (~3 s of driver time for
+    20 rows)."""
     m, n_codes, sub = books.shape
 
     @F.pandas_udf(T.ArrayType(T.LongType()))

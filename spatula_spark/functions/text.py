@@ -29,12 +29,8 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
 def tokens(text: Column) -> Column:
-    """Whitespace tokenization (the baseline tokenizer; BPE-ish regex
-    splitting is ``F.split`` with the pattern below)."""
+    """Whitespace tokenization (the baseline tokenizer)."""
     return F.split(F.trim(text), "\\s+")
-
-
-BPE_SPLIT_PATTERN = r"\s+|(?=[.,!?;:])"
 
 
 def token_count_from(text: Column, toks: Column) -> Column:

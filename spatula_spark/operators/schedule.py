@@ -61,20 +61,3 @@ def fetch_schedule(
         )
     )
 
-
-def host_makespan(
-    schedule: DataFrame,
-    host_col: str = "host",
-    delay_col: str = "crawl_delay_ms",
-) -> DataFrame:
-    """Per-host drain summary of a fetch schedule: URL count, last
-    fetch time (makespan), and delay — the table the recrawl planner
-    joins against to decide which hosts can absorb more budget this
-    cycle. One map-side-combinable aggregate over the slim schedule.
-    ``delay_col`` mirrors :func:`fetch_schedule`'s parameter so a
-    custom-named delay column works through the rollup too."""
-    return schedule.groupBy(host_col).agg(
-        F.count("*").alias("n_urls"),
-        F.max("fetch_at_ms").alias("makespan_ms"),
-        F.max(delay_col).alias(delay_col),
-    )

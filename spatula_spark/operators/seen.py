@@ -93,7 +93,9 @@ class CuckooFilter:
     """Cuckoo filter over int64 keys: 4-slot buckets, 16-bit
     fingerprints, supports delete (the north rule's "cuckoo-filter
     variant for deletions"). Vectorized lookup; inserts are per-key
-    (build-time only, off the query hot path)."""
+    (build-time only, off the query hot path). Only tests use it: the
+    engine's seen set is append-only until a recrawl path deletes seen
+    keys, which is what this filter is for."""
 
     MAX_KICKS = 500
 

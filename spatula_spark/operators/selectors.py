@@ -38,21 +38,13 @@ import xml.etree.ElementTree as ET
 from abc import ABC, abstractmethod
 from collections.abc import Iterator
 
+from ..utils import display_element
 from .xpath_engine import xpath_compile, xpath_eval
 
 
 class SelectorError(ValueError):
     """Raised when a cardinality constraint is not met
     (reference ``selectors.py:8-13``)."""
-
-
-def _display_element(el: ET.Element) -> str:
-    """Reference ``utils._display_element`` (utils.py:17-27),
-    including the ``@ line N`` suffix for parse_html-built elements
-    (see utils.display_element — the canonical copy)."""
-    from ..utils import display_element
-
-    return display_element(el)
 
 
 class Selector(ABC):
@@ -81,7 +73,7 @@ class Selector(ABC):
         min_items = self.min_items if min_items is None else min_items
 
         where = (
-            _display_element(element)
+            display_element(element)
             if isinstance(element, ET.Element) else str(element)
         )
         if num_items is not None and len(items) != num_items:

@@ -35,9 +35,10 @@ from typing import Any, Callable
 
 from ..operators import parsers
 
-# reference config.py:3-4 (env-overridable there; plain defaults here)
+# reference config.py:3 (env-overridable there; a plain default here;
+# the reference's retry wait has no counterpart: the engine retries in
+# the next wave, not by sleeping)
 REJECTED_RESPONSE_RETRIES = 1
-RETRY_WAIT_SECONDS = 0.0  # synthetic store: no reason to sleep
 
 
 class SkipItem(Exception):

@@ -39,25 +39,6 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-# tagged-union emission rows produced by a page transform — the Spark
-# encoding of "process_page may return an item, a Page, or a generator
-# of either" (`pages.py:225-241`).
-EMIT_KIND_ITEM = "item"
-EMIT_KIND_CHILD = "child"
-EMIT_KIND_NEXT = "next"
-
-EMISSION_SCHEMA = T.StructType(
-    [
-        T.StructField("emit_kind", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("item_json", T.StringType(), True),
-        T.StructField("child_cls", T.StringType(), True),
-        T.StructField("child_url", T.StringType(), True),
-        T.StructField("child_input_json", T.StringType(), True),
-        T.StructField("priority", T.IntegerType(), False),
-    ]
-)
-
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType(), False),
@@ -85,51 +66,6 @@ PAGE_STORE_SCHEMA = T.StructType(
         # number of leading attempts accept_response rejects (retry tests,
         # reference retry loop `pages.py:168-195`)
         T.StructField("flaky_rejects", T.IntegerType(), False),
-    ]
-)
-
-# BASELINE.json input_hint: Iceberg table of image+caption pairs.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("bytes", T.BinaryType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("h", T.IntegerType(), False),
-        T.StructField("fmt", T.StringType(), False),
-        T.StructField("caption", T.StringType(), False),
-        T.StructField("phash", T.LongType(), False),
-    ]
-)
-
-SEEDS_SCHEMA = T.StructType(
-    [
-        T.StructField("page_cls", T.StringType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("input_json", T.StringType(), True),
-        T.StructField("priority", T.IntegerType(), False),
-        T.StructField("seq", T.IntegerType(), False),
-    ]
-)
-
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("path_prefix", T.StringType(), False),
-        T.StructField("allow", T.BooleanType(), False),
-    ]
-)
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("scheduled", T.LongType(), False),
-        T.StructField("fetched", T.LongType(), False),
-        T.StructField("errors", T.LongType(), False),
-        T.StructField("deferred", T.LongType(), False),
-        T.StructField("blocked", T.LongType(), False),
-        T.StructField("items", T.LongType(), False),
-        T.StructField("children", T.LongType(), False),
     ]
 )
 

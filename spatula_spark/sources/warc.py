@@ -287,47 +287,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_warc_slices(
-    spark: SparkSession, warc_dir: str, manifest: DataFrame
-) -> DataFrame:
-    """CDX-driven random access: read ONLY the records the manifest
-    rows point at, never scanning the shards.
-
-    This is the operation that makes a 100-TB archive usable as a page
-    store: a refetch/reparse wave joins its wanted URLs against the
-    CDX/manifest table (filename, offset, length), and each task then
-    seek-reads just its byte ranges — IO proportional to the wanted
-    set, not the archive. Records are grouped per shard inside each
-    partition so a file is opened once per task; repartition the
-    manifest by ``filename`` upstream when the wanted set is large so
-    ranged reads of one shard co-locate.
-
-    Returns the same schema as :func:`read_warc`.
-    """
-    import pandas as pd
-
-    def _fetch(batches):
-        for pdf in batches:
-            out = []
-            for fname, grp in pdf.groupby("filename", sort=False):
-                with open(os.path.join(warc_dir, fname), "rb") as fh:
-                    for off, ln in zip(grp["offset"], grp["length"]):
-                        fh.seek(int(off))
-                        member = fh.read(int(ln))
-                        raw = gzip.decompress(member)
-                        out.append(
-                            _parse_record(raw, fname, int(off), int(ln))
-                        )
-            if out:
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in RECORD_SCHEMA]
-                )
-
-    return manifest.select("filename", "offset", "length").mapInPandas(
-        _fetch, schema=RECORD_SCHEMA
-    )
-
-
 _MIME_BY_KIND = {
     "html": "text/html",
     "json": "application/json",

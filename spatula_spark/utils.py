@@ -1,6 +1,6 @@
-"""Display/debug helpers (reference ``utils.py:17-42`` ``_display`` /
-``_display_element``) and the single-page debug runner (reference
-``spatula test``, ``cli.py:283-370``)."""
+"""Element display (reference ``utils.py:17-27`` ``_display_element``)
+and the single-page debug runner (reference ``spatula test``,
+``cli.py:283-370``)."""
 
 from __future__ import annotations
 
@@ -26,30 +26,6 @@ def display_element(el: ET.Element) -> str:
 
     line = source_line(el)
     return f"{s} @ line {line}" if line is not None else s
-
-
-def display(obj: Any) -> str:
-    """Reference ``utils._display`` (utils.py:34-42): elements via
-    :func:`display_element`; dict-representable objects (None, dict,
-    dataclass, attrs, pydantic) via ``pprint.pformat`` of their dict
-    form; everything else via ``str`` (so strings print unquoted)."""
-    import dataclasses
-    import pprint
-
-    if isinstance(obj, ET.Element):
-        return display_element(obj)
-    if (
-        obj is None
-        or isinstance(obj, dict)
-        or dataclasses.is_dataclass(obj)
-        or hasattr(obj, "__attrs_attrs__")
-        or hasattr(obj, "model_dump")
-        or (hasattr(obj, "dict") and hasattr(obj, "__fields__"))
-    ):
-        from .plans.pagespec import obj_to_dict
-
-        return pprint.pformat(obj_to_dict(obj))
-    return str(obj)
 
 
 def synthesize_input(

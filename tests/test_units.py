@@ -521,30 +521,10 @@ def test_obj_to_dict():
 
 
 def test_display_reference_parity():
-    """Reference tests/test_utils.py table: pformat for dict-able,
-    str for scalars, '<tag id> @ line N' for parsed elements."""
-    import pprint
-    from dataclasses import dataclass
-
+    """Reference tests/test_utils.py element cases: '<tag id> @ line N'
+    for parsed elements, id over class over the attribute list."""
     from spatula_spark.operators.parsers import parse_html
-    from spatula_spark.utils import display
-
-    for data in ({}, {"a": 1, "b": ["x", "y", "z"]}):
-        assert display(data) == pprint.pformat(data)
-    for item, out in [
-        ("some str", "some str"),
-        (True, "True"),
-        (None, "None"),
-        (1234, "1234"),
-    ]:
-        assert display(item) == out
-
-    @dataclass
-    class Obj:
-        a: int
-        b: str
-
-    assert display(Obj(1, "two")) == pprint.pformat({"a": 1, "b": "two"})
+    from spatula_spark.utils import display_element
 
     cases = [
         ("<b>test</b>", "b", "<b> @ line 1"),
@@ -560,13 +540,13 @@ def test_display_reference_parity():
     for html, tag, want in cases:
         root = parse_html(html)  # single-element docs unwrap to the element
         el = root if root.tag == tag else root.find(f".//{tag}")
-        assert display(el) == want
+        assert display_element(el) == want
 
     # multi-line documents report the start-tag's line
     el = parse_html("<div>\n<span>x</span>\n<p id='late'>y</p></div>").find(
         ".//p"
     )
-    assert display(el) == "<p id='late'> @ line 3"
+    assert display_element(el) == "<p id='late'> @ line 3"
 
 
 def test_unsupported_documents_raise_typed_errors():

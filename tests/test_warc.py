@@ -174,23 +174,6 @@ def test_surt_key_golden(spark):
     ]
 
 
-def test_cdx_random_access_slices(spark, warc_dir):
-    """read_warc_slices fetches exactly the manifest-selected records
-    by (file, offset, length) seek — the wanted-set join pattern."""
-    from spatula_spark.sources.warc import read_warc_slices
-
-    out, manifest = warc_dir
-    wanted = manifest.filter(
-        F.col("url").isin("http://a.example.com/2", "http://c.example.com/5")
-    )
-    rows = {r["url"]: r for r in read_warc_slices(spark, out, wanted).collect()}
-    assert set(rows) == {"http://a.example.com/2", "http://c.example.com/5"}
-    payloads = {u: p for u, _, _, _, p in ROWS}
-    for u, r in rows.items():
-        assert bytes(r["payload"]) == payloads[u]
-        assert r["digest_ok"] is True
-
-
 def test_archive_page_store_roundtrip(spark, tmp_path):
     """Crawl-to-archive hop: the synthetic web's page store written as
     WARC and read back — payload bytes and MIME mapping intact, every
