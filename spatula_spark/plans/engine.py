@@ -202,19 +202,18 @@ class CrawlConfig:
     host_budget_per_wave: int | None = None
     # from this many seen URLs on, each cluster wave probes a broadcast
     # Bloom filter of the seen set ahead of the exact seen join (which
-    # still sees every row; see _dedup); None never probes. Below
-    # ~100k the per-wave blob broadcast + python UDF cost more than
-    # the plain anti-join (measured)
+    # still sees every row; see _dedup); None never probes. The probe
+    # prunes nothing, so its blob broadcast and Arrow UDF add cost at
+    # every seen-set size
     bloom_min_seen: int | None = 100_000
     fail_fast: bool = True
     checkpoint_dir: str | None = None
     # real-Iceberg snapshot backend: "catalog.namespace.name" table
     # prefix; takes precedence over checkpoint_dir's parquet-manifest
     # analogue and needs a configured catalog (plans/snapshots.py). The
-    # cadence and rollback knobs below apply to both backends;
-    # checkpoint_expire_deltas is parquet-only and rejected with it.
-    # With neither store set, crawl() rejects resume_upto_wave and
-    # checkpoint_expire_deltas, and warns that checkpoint_every and
+    # cadence knobs below apply to both backends. A crawl with either
+    # store set resumes from its latest committed snapshot; with
+    # neither, crawl() warns that checkpoint_every and
     # checkpoint_async commit nothing.
     iceberg_table_prefix: str | None = None
     # durable-snapshot cadence: commit the wave checkpoint every K
@@ -230,30 +229,15 @@ class CrawlConfig:
     checkpoint_every: int = 1
     # overlap the durable snapshot write with the next wave's compute:
     # the commit runs on ONE background thread. Sync and async commit
-    # the same plan (the wave's landed emissions: scratch parquet, or a
-    # LocalRelation for a driver-local wave, immutable until crawl
-    # end), and the next wave reads that same plan in both modes, so
-    # only the timing differs. One thread serializes the commits, so
+    # the same views (filters over the wave's landed emissions in
+    # scratch parquet, or for a driver-held wave Arrow tables that the
+    # store writes with pyarrow; immutable until crawl end), so only
+    # the timing differs. One thread serializes the commits, so
     # manifest-last atomicity is untouched; the loop joins the
     # in-flight write before starting the next one and before crawl()
     # returns. Hides snapshot-commit latency behind the next wave's
     # politeness/dedup/fetch stages instead of serializing it.
     checkpoint_async: bool = False
-    # snapshot expiry (Iceberg expire_snapshots analogue): after a
-    # successful seen compaction (every 16 deltas), delete the seen
-    # deltas and older bases the new base supersedes. Keeps seen
-    # storage at ~1x instead of 2x (+ one full copy per retained
-    # base); the tradeoff is that rollback to a wave older than the
-    # latest base becomes impossible — resume detects the gap via the
-    # manifests' has_delta flags and raises instead of silently
-    # rebuilding an incomplete seen set. Parquet snapshots only.
-    checkpoint_expire_deltas: bool = False
-    # time-travel resume (Iceberg rollback_to_snapshot analogue):
-    # resume from the wave=N snapshot even when later snapshots exist.
-    # Later snapshots are DELETED at resume so the replayed timeline is
-    # linear — without the rollback a subsequent resume would pick up
-    # stale post-N state from the abandoned branch. None = latest.
-    resume_upto_wave: int | None = None
     verbose: bool = False  # per-wave step timings to stderr
     # scratch dir of the wave materializations; default: a fresh
     # mkdtemp. Never removed by the engine: the CrawlResult DataFrames
@@ -956,21 +940,12 @@ class CrawlEngine:
         row)."""
         cfg = self.config
         self._store = open_snapshots(self.spark, cfg)
-        if self._store is None:
-            # snapshot knobs with no store to act on
-            for name, on in (
-                    ("resume_upto_wave", cfg.resume_upto_wave is not None),
-                    ("checkpoint_expire_deltas",
-                     cfg.checkpoint_expire_deltas)):
-                if on:
-                    raise ValueError(
-                        f"{name} needs checkpoint_dir or "
-                        "iceberg_table_prefix")
-            if cfg.checkpoint_every != 1 or cfg.checkpoint_async:
-                warnings.warn(
-                    "checkpoint_every/checkpoint_async have no effect "
-                    "without checkpoint_dir or iceberg_table_prefix: "
-                    "this crawl commits no snapshot", stacklevel=3)
+        if self._store is None and (cfg.checkpoint_every != 1
+                                    or cfg.checkpoint_async):
+            warnings.warn(
+                "checkpoint_every/checkpoint_async have no effect "
+                "without checkpoint_dir or iceberg_table_prefix: "
+                "this crawl commits no snapshot", stacklevel=3)
         self._spill_n = 0
         self._spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
         os.makedirs(self._spill, exist_ok=True)
@@ -1002,7 +977,7 @@ class CrawlEngine:
                 _BLOOM_SHARDS, _BLOOM_SHARD_CAPACITY, _BLOOM_FPR)
             if cfg.bloom_min_seen is not None else None
         )
-        resumed = self._store and self._store.resume(cfg.resume_upto_wave)
+        resumed = self._store and self._store.resume()
         if resumed is None:
             rows = self._seed_rows(seeds)
             return (local_df(self.spark, rows, schemas.FRONTIER_SCHEMA),

@@ -12,9 +12,8 @@ two-method contract, which both stores here implement:
   view is a DataFrame, or an Arrow table in the view's schema
   (``FRONTIER_SCHEMA``, ``SEEN_SCHEMA``, ``RESULT_SCHEMA``) when the
   engine already holds the window's rows on the driver.
-* ``resume(upto) -> Resumed | None``: the latest committed snapshot, or
-  with ``upto`` the latest at or before that wave, deleting later ones
-  so the replayed timeline is linear (Iceberg rollback_to_snapshot).
+* ``resume() -> Resumed | None``: the latest committed snapshot, or
+  None when there is none.
 
 Both commit manifest-last: readers take the latest manifested wave, so
 a kill mid-commit leaves the previous snapshot whole. ``seen_volatile``
@@ -24,8 +23,9 @@ says whether the seen files a resume read can vanish mid-crawl.
 ANALOGUE of Iceberg snapshots for deployments without the Iceberg
 runtime jar: one ``wave=N`` dir per commit holding ``frontier``,
 ``seen_delta`` (append-only), ``items``, every ``_COMPACT_EVERY``
-deltas a ``seen_base`` (the whole seen set; ``expire_deltas`` deletes
-what it supersedes), and ``MANIFEST.json`` (written last). A DataFrame
+deltas a ``seen_base`` (the whole seen set, so resume reads one base
+and fewer than ``_COMPACT_EVERY`` deltas), and ``MANIFEST.json``
+(written last). Superseded seen dirs stay on disk. A DataFrame
 view is written by Spark; an Arrow view by ``pyarrow`` on the calling
 thread, as one part file in the session's
 ``spark.sql.parquet.compression.codec`` with every column optional (as
@@ -35,12 +35,11 @@ Spark writes them), so a small wave's commit starts no Spark job.
 store for deployments that have one (`spark-submit --packages
 org.apache.iceberg:iceberg-spark-runtime-...` plus a
 ``spark.sql.catalog.<name>`` configuration): four real tables, the
-manifest table's row as commit marker, rollback as a row-level
+manifest table's row as commit marker. Resume drops the rows a killed
+commit appended past the latest manifested wave with a row-level
 ``DELETE ... WHERE wave > N``. Its append-only seen table has no delta
-fan-in to compact and no deltas to expire, so
-``checkpoint_expire_deltas`` with a prefix is rejected. Arrow views
-are planted as LocalRelations (``local_df``) and appended like any
-other. Its e2e test
+fan-in to compact. Arrow views are planted as LocalRelations
+(``local_df``) and appended like any other. Its e2e test
 (tests/test_crawl_media.py::test_iceberg_checkpoint_resume) is
 skip-marked without a catalog, so that Arrow path is unexercised here.
 """
@@ -108,11 +107,6 @@ def open_snapshots(spark: SparkSession, cfg):
     from: Iceberg tables when ``iceberg_table_prefix`` is set, else
     parquet under ``checkpoint_dir``, else None (no snapshots)."""
     if cfg.iceberg_table_prefix:
-        if cfg.checkpoint_expire_deltas:
-            raise CrawlError(
-                "checkpoint_expire_deltas applies to checkpoint_dir "
-                "snapshots only; unset it or iceberg_table_prefix"
-            )
         if not iceberg_available(spark):
             raise CrawlError(
                 "iceberg_table_prefix is set but no Iceberg catalog "
@@ -123,8 +117,7 @@ def open_snapshots(spark: SparkSession, cfg):
             )
         return IcebergSnapshots(spark, cfg.iceberg_table_prefix)
     if cfg.checkpoint_dir:
-        return ParquetSnapshots(
-            spark, cfg.checkpoint_dir, cfg.checkpoint_expire_deltas)
+        return ParquetSnapshots(spark, cfg.checkpoint_dir)
     return None
 
 
@@ -132,13 +125,12 @@ class ParquetSnapshots:
     """Wave-granular snapshots as ``wave=N`` parquet dirs under ``base``
     (layout in the module docstring)."""
 
-    def __init__(self, spark: SparkSession, base: str,
-                 expire_deltas: bool):
+    # no commit deletes a seen dir a resume read
+    seen_volatile = False
+
+    def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
         self.base = base
-        self.expire_deltas = expire_deltas
-        # expiry after a compaction deletes seen dirs a resume read
-        self.seen_volatile = expire_deltas
 
     def _path(self, wave: int, *sub: str) -> str:
         return os.path.join(self.base, f"wave={wave}", *sub)
@@ -169,8 +161,6 @@ class ParquetSnapshots:
                        "has_delta": seen_delta is not None,
                        "seen_base": has_base, "files": stats,
                        "metrics": metrics_rows}, f)
-        if has_base and self.expire_deltas:
-            self._expire_superseded(wave)
 
     def _write(self, view, path: str, schema) -> None:
         """One snapshot view as a parquet dir: a DataFrame by a Spark
@@ -187,23 +177,6 @@ class ParquetSnapshots:
         pq.write_table(view.cast(optional),
                        os.path.join(path, "part-00000.parquet"),
                        compression=codec)
-
-    def _expire_superseded(self, new_base_wave):
-        """Delete seen deltas and older seen bases that the freshly
-        committed base at ``new_base_wave`` supersedes (Iceberg
-        expire_snapshots). Runs only AFTER the new base's manifest is
-        on disk, so a kill between compaction and expiry never loses
-        state. Manifests are untouched: their ``has_delta`` flags are
-        how a later rollback detects it cannot reach past the base."""
-        for w in self._waves():
-            if w > new_base_wave:
-                continue
-            delta = self._path(w, "seen_delta")
-            if os.path.isdir(delta):
-                shutil.rmtree(delta)
-            old_base = self._path(w, "seen_base")
-            if w < new_base_wave and os.path.isdir(old_base):
-                shutil.rmtree(old_base)
 
     def _compact_seen(self, wave, seen_delta) -> bool:
         """Compact the seen set into ``wave=N/seen_base`` when
@@ -244,13 +217,9 @@ class ParquetSnapshots:
             w for w in deltas if base_wave is None or w > base_wave
         ]
 
-    def resume(self, upto: int | None) -> Resumed | None:
-        if not os.path.isdir(self.base):
-            return None
-        waves = self._committed_waves(upto)
+    def resume(self) -> Resumed | None:
+        waves = self._committed_waves(None)
         if not waves:
-            if upto is not None:
-                raise _no_snapshot_before(upto, self.base)
             return None
         last = max(waves)
         manifest = self._manifest(last)
@@ -262,28 +231,18 @@ class ParquetSnapshots:
             self._path(last, "frontier"))
         base_wave, delta_waves = self._seen_sources(upto=last)
         for w in waves:
-            # expiry leaves manifests intact; a wave that HAD a delta
-            # but lost the dir and isn't covered by a base at or before
-            # ``last`` means this rollback target predates the latest
-            # compaction — fail loudly, never rebuild an incomplete
-            # seen set (it would silently refetch)
+            # a wave whose manifest says it HAD a delta, whose dir is
+            # gone and that no seen_base covers: the snapshot is
+            # damaged. Fail loudly, never rebuild an incomplete seen
+            # set (it would silently refetch)
             if (base_wave is not None and w <= base_wave) or w in delta_waves:
                 continue
             if self._manifest(w).get("has_delta"):
                 raise CrawlError(
-                    f"wave {w}'s seen delta was expired by a later "
-                    f"compaction; cannot resume as of wave {last} — "
-                    f"resume at or after the latest seen_base snapshot"
+                    f"wave {w}'s seen delta is missing from {self.base} "
+                    f"and no seen_base covers it; cannot resume as of "
+                    f"wave {last}"
                 )
-        if upto is not None:
-            # rollback: delete snapshots newer than the target so the
-            # replayed timeline is linear (abandoned-branch dirs would
-            # otherwise poison the NEXT resume's max-wave scan). Runs
-            # only after the completeness validation above — a REFUSED
-            # rollback must leave the live snapshot chain untouched.
-            for w in self._waves():
-                if w > last:
-                    shutil.rmtree(self._path(w))
         parts = ([(base_wave, "seen_base")]
                  if base_wave is not None else [])
         parts += [(w, "seen_delta") for w in delta_waves]
@@ -318,11 +277,6 @@ class ParquetSnapshots:
     def _manifest(self, wave: int) -> dict:
         with open(self._path(wave, "MANIFEST.json")) as f:
             return json.load(f)
-
-
-def _no_snapshot_before(upto: int, where: str) -> CrawlError:
-    return CrawlError(f"resume_upto_wave={upto}: no committed snapshot at "
-                      f"or before that wave in {where}")
 
 
 def _manifest_rows(manifest: dict, sub: str) -> int | None:
@@ -390,8 +344,8 @@ class IcebergSnapshots:
     ``<prefix>_manifest``  1 row per committed wave (written LAST)
     """
 
-    # resume's seen rows are a filter over a table later commits and
-    # rollbacks change
+    # resume's seen rows are a filter over a table that later commits
+    # and resumes change
     seen_volatile = True
 
     def __init__(self, spark: SparkSession, prefix: str):
@@ -454,21 +408,16 @@ class IcebergSnapshots:
         ).writeTo(self._t("manifest")).append()
 
     # ------------------------------------------------------------ resume
-    def resume(self, upto: int | None) -> Resumed | None:
+    def resume(self) -> Resumed | None:
         """The row counts are None: the engine counts the tables."""
         if not self.spark.catalog.tableExists(self._t("manifest")):
             return None
-        man = self.spark.table(self._t("manifest"))
-        if upto is not None:
-            man = man.filter(F.col("wave") <= upto)
-        row = man.orderBy(F.col("wave").desc()).limit(1).collect()
+        row = (self.spark.table(self._t("manifest"))
+               .orderBy(F.col("wave").desc()).limit(1).collect())
         if not row:
-            if upto is not None:
-                raise _no_snapshot_before(upto, self.prefix)
             return None
         last = int(row[0]["wave"])
-        # also drops rows a killed commit appended after ``last``: the
-        # replayed waves append them again
+        # drops rows a killed commit appended after ``last``
         self._rollback_past(last)
         # the tables hold the snapshot chain: later commits append
         self._ensured = True
@@ -489,11 +438,11 @@ class IcebergSnapshots:
                        None, None)
 
     def _rollback_past(self, wave: int) -> None:
-        """Time-travel rollback: delete every row newer than ``wave``
-        so the replayed timeline is linear (the parquet analogue
-        deletes abandoned wave dirs). Row-level DELETE is the Iceberg
-        way; it commits a new snapshot per table, so a crash mid-way
-        re-runs idempotently on the next resume."""
+        """Delete every row newer than ``wave``, the latest committed
+        one: rows a killed commit appended before its manifest row.
+        The replayed waves append them again. Row-level DELETE is the
+        Iceberg way; it commits a new snapshot per table, so a crash
+        mid-way re-runs idempotently on the next resume."""
         for name in ("manifest", "frontier", "seen", "items"):
             self.spark.sql(
                 f"DELETE FROM {self._t(name)} WHERE wave > {wave}"

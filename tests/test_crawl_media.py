@@ -196,8 +196,7 @@ def test_budgeted_robots_crawl_keeps_seen_twin(spark, web, store,
 def test_checkpoint_every_below_one_rejected(spark, web, store):
     """checkpoint_every < 1 names no commit cadence: the engine refuses
     it at construction instead of committing every wave. With no
-    snapshot store, a crawl refuses resume_upto_wave and
-    checkpoint_expire_deltas before any Spark job, and warns that
+    snapshot store, a crawl warns before any Spark job that
     checkpoint_every / checkpoint_async commit nothing."""
     for k in (0, -2):
         with pytest.raises(ValueError, match="checkpoint_every"):
@@ -206,13 +205,9 @@ def test_checkpoint_every_below_one_rejected(spark, web, store):
     sc = spark.sparkContext
     sc.setJobGroup("nostore", "snapshot knobs without a store")
     try:
-        for name, value, kind in (
-                ("resume_upto_wave", 0, ValueError),
-                ("checkpoint_expire_deltas", True, ValueError),
-                ("checkpoint_every", 2, UserWarning),
-                ("checkpoint_async", True, UserWarning)):
-            expect = pytest.warns if kind is UserWarning else pytest.raises
-            with expect(kind, match=name):
+        for name, value in (("checkpoint_every", 2),
+                            ("checkpoint_async", True)):
+            with pytest.warns(UserWarning, match=name):
                 CrawlEngine(spark, media_registry(), page_store=store,
                             config=CrawlConfig(max_waves=0, **{name: value})
                             ).crawl(web.seeds())
@@ -702,34 +697,40 @@ def test_held_wave_commit_starts_no_spark_job(spark, web, store, tmp_path,
     assert not sc.statusTracker().getJobIdsForGroup("probe")
 
 
-def test_resume_then_compaction_and_expiry(
+def test_resume_volatile_seen_keeps_private_copy(
         spark, web, store, tmp_path, monkeypatch):
-    """A crawl stopped at wave 2 and resumed with compaction + expiry:
-    the resumed crawl compacts and expires the very seen dirs its
-    resume read, so the resumed seen slice must be a private copy —
-    items and seen set equal an uncheckpointed crawl's, and
-    ``res.seen`` still reads after the expiry."""
+    """A store whose seen_volatile is true (Iceberg: later commits and
+    resumes change the seen table a resume read) hands the engine a
+    seen set it copies: with a parquet store marked volatile, the
+    resumed crawl's ``res.seen`` still reads after the snapshot's seen
+    dirs are deleted, and equals an uncheckpointed crawl's seen set."""
     import os
 
-    ck = str(tmp_path / "ckx")
-    monkeypatch.setattr(snapshots, "_COMPACT_EVERY", 2)
-    cfg = dict(checkpoint_dir=ck, checkpoint_expire_deltas=True)
+    ck = str(tmp_path / "ckv")
     full = CrawlEngine(spark, media_registry(), page_store=store,
                        config=CrawlConfig()).crawl(web.seeds())
     CrawlEngine(spark, media_registry(), page_store=store,
-                config=CrawlConfig(max_waves=2, **cfg)).crawl(web.seeds())
-    read_at_resume = {
-        os.path.join(ck, e, sub) for e in os.listdir(ck)
-        for sub in ("seen_base", "seen_delta")
-        if os.path.isdir(os.path.join(ck, e, sub))
-    }
+                config=CrawlConfig(checkpoint_dir=ck, max_waves=2)
+                ).crawl(web.seeds())
+
+    def open_volatile(spark, cfg):
+        st = snapshots.ParquetSnapshots(spark, cfg.checkpoint_dir)
+        st.seen_volatile = True
+        return st
+
+    monkeypatch.setattr(engine_mod, "open_snapshots", open_volatile)
     res = CrawlEngine(spark, media_registry(), page_store=store,
-                      config=CrawlConfig(**cfg)).crawl(web.seeds())
-    assert any(not os.path.isdir(d) for d in read_at_resume)  # expired
+                      config=CrawlConfig(checkpoint_dir=ck)
+                      ).crawl(web.seeds())
+    seen_dirs = [os.path.join(ck, e, sub) for e in os.listdir(ck)
+                 for sub in ("seen_base", "seen_delta")
+                 if os.path.isdir(os.path.join(ck, e, sub))]
+    assert seen_dirs
+    for d in seen_dirs:
+        shutil.rmtree(d)
     assert res.items() == full.items()
     assert (sorted(tuple(r) for r in res.seen.collect())
             == sorted(tuple(r) for r in full.seen.collect()))
-    assert res.seen.count() == full.seen.count()
     shutil.rmtree(ck, ignore_errors=True)
 
 
@@ -882,103 +883,70 @@ def test_checkpoint_seen_compaction_bounds_resume_fanin(
     # deltas are disjoint by construction (compaction relies on it)
     n_delta_rows = spark.read.parquet(*every_delta).count()
     assert n_delta_rows == len(b)
-    shutil.rmtree(ck, ignore_errors=True)
-
-
-def test_checkpoint_rollback_time_travel(spark, web, store, tmp_path):
-    """resume_upto_wave=N rolls the crawl back to the wave=N snapshot
-    (Iceberg rollback_to_snapshot analogue): later snapshots are
-    deleted, the replay from N+1 reproduces the full run exactly, and
-    the replayed snapshot chain is linear (a later plain resume sees
-    only the replayed timeline)."""
-    import os
-
-    ck = str(tmp_path / "ckr")
-    full = CrawlEngine(spark, media_registry(), page_store=store,
-                       config=CrawlConfig(checkpoint_dir=ck)
-                       ).crawl(web.seeds())
-    waves_full = sorted(int(e.split("=")[1]) for e in os.listdir(ck)
-                        if e.startswith("wave="))
-    res = CrawlEngine(spark, media_registry(), page_store=store,
-                      config=CrawlConfig(checkpoint_dir=ck,
-                                         resume_upto_wave=1)
-                      ).crawl(web.seeds())
-    got = {r["url"] for r in crawl_items_df(res.results).collect()}
-    want = {r["url"] for r in crawl_items_df(full.results).collect()}
-    assert got == want
-    assert res.seen.count() == full.seen.count()
-    waves_replayed = sorted(int(e.split("=")[1]) for e in os.listdir(ck)
-                            if e.startswith("wave="))
-    assert waves_replayed == waves_full  # replay rebuilt the chain
-    # rolling back past the first snapshot is an error, not a silent
-    # from-scratch restart over a dirty checkpoint dir
-    with pytest.raises(Exception, match="resume_upto_wave"):
-        CrawlEngine(spark, media_registry(), page_store=store,
-                    config=CrawlConfig(checkpoint_dir=ck,
-                                       resume_upto_wave=-1)
-                    ).crawl(web.seeds())
-    shutil.rmtree(ck, ignore_errors=True)
-
-
-def test_checkpoint_expiry_and_manifest_stats(
-        spark, web, store, tmp_path, monkeypatch):
-    """checkpoint_expire_deltas deletes what each new seen_base
-    supersedes (storage stays ~1x the seen set), manifests carry
-    per-file byte/row stats from the parquet footers, resume from the
-    live snapshot still works, and rolling back past the latest base
-    fails loudly instead of rebuilding an incomplete seen set."""
-    import json as _json
-    import os
-
-    ck = str(tmp_path / "cke")
-    monkeypatch.setattr(snapshots, "_COMPACT_EVERY", 2)
-    cfg = CrawlConfig(checkpoint_dir=ck, checkpoint_expire_deltas=True)
-    res = CrawlEngine(spark, media_registry(), page_store=store,
-                      config=cfg).crawl(web.seeds())
-    n_items = res.results.count()
-
-    wave_dirs = sorted(
-        (int(e.split("=")[1]), os.path.join(ck, e))
-        for e in os.listdir(ck) if e.startswith("wave=")
-    )
-    bases = [w for w, d in wave_dirs
-             if os.path.isdir(os.path.join(d, "seen_base"))]
-    assert len(bases) == 1  # superseded bases expired
-    for w, d in wave_dirs:
-        if w <= bases[0]:  # superseded deltas expired
-            assert not os.path.isdir(os.path.join(d, "seen_delta"))
-
-    # manifest file stats: footer row counts sum to the real item count
+    # manifest file stats: the items' footer rows sum to the real item
+    # count, and no part file is empty
     total_item_rows = 0
-    for w, d in wave_dirs:
-        with open(os.path.join(d, "MANIFEST.json")) as f:
-            mf = _json.load(f)
+    for e in os.listdir(ck):
+        if not e.startswith("wave="):
+            continue
+        with open(os.path.join(ck, e, "MANIFEST.json")) as f:
+            mf = json.load(f)
         total_item_rows += sum(
-            fi["rows"] or 0 for fi in mf["files"].get("items", ())
-        )
+            fi["rows"] for fi in mf["files"].get("items", ()))
         assert all(fi["bytes"] > 0 for grp in mf["files"].values()
                    for fi in grp)
-    assert total_item_rows == n_items
-
-    # resume of the finished crawl reproduces it from the live snapshot
-    res2 = CrawlEngine(spark, media_registry(), page_store=store,
-                       config=cfg).crawl(web.seeds())
-    a = {r["url"] for r in crawl_items_df(res2.results).collect()}
-    b = {r["url"] for r in crawl_items_df(res.results).collect()}
-    assert a == b
-    assert res2.seen.count() == res.seen.count()
-
-    # rollback to a wave whose deltas were expired must raise
-    with pytest.raises(Exception, match="expired"):
-        CrawlEngine(spark, media_registry(), page_store=store,
-                    config=CrawlConfig(checkpoint_dir=ck,
-                                       resume_upto_wave=max(0, bases[0] - 1))
-                    ).crawl(web.seeds())
-    # and the refused rollback must leave the live chain untouched
-    res3 = CrawlEngine(spark, media_registry(), page_store=store,
-                       config=cfg).crawl(web.seeds())
-    assert res3.seen.count() == res.seen.count()
+    assert total_item_rows == full.results.count()
+    # the finished crawl's snapshot reads back whole: an empty
+    # frontier, the full seen set and every item
+    done = eng._store.resume()
+    assert (done.next_wave, done.n_frontier, done.n_seen) == (
+        last + 1, 0, full.seen.count())
+    assert done.items.count() == total_item_rows
     shutil.rmtree(ck, ignore_errors=True)
+
+
+def test_resume_refuses_missing_seen_delta(tmp_path, spark, monkeypatch):
+    """A committed parquet checkpoint that lost a seen_delta dir no
+    seen_base covers is damaged: resume raises CrawlError naming that
+    wave instead of rebuilding an incomplete seen set (the crawl would
+    silently refetch), and leaves the checkpoint dir as it found it. A
+    lost delta that a later seen_base covers resumes as before."""
+    import os
+
+    from spatula_spark import schemas
+    from spatula_spark.session import arrow_table
+
+    monkeypatch.setattr(snapshots, "_COMPACT_EVERY", 2)
+    ck = str(tmp_path / "ckd")
+    st = snapshots.ParquetSnapshots(spark, ck)
+    # waves 0-2, one seen key and one item each; wave 1 compacts the
+    # first two deltas into a seen_base, wave 2's delta is past it
+    for w in range(3):
+        st.commit(
+            w, arrow_table([], schemas.FRONTIER_SCHEMA),
+            arrow_table([(w, 10 + w)], snapshots.SEEN_SCHEMA),
+            arrow_table([(f"/{w}", "P", "{}", w)], schemas.RESULT_SCHEMA),
+            [{"wave": w}])
+    assert os.path.isdir(os.path.join(ck, "wave=1", "seen_base"))
+
+    def listing(d):
+        return sorted((os.path.relpath(os.path.join(r, n), d),
+                       os.path.getsize(os.path.join(r, n)))
+                      for r, _, names in os.walk(d) for n in names)
+
+    covered = str(tmp_path / "covered")
+    shutil.copytree(ck, covered)
+    shutil.rmtree(os.path.join(covered, "wave=0", "seen_delta"))
+    res = snapshots.ParquetSnapshots(spark, covered).resume()
+    assert (res.next_wave, res.n_seen) == (3, 3)
+
+    damaged = str(tmp_path / "damaged")
+    shutil.copytree(ck, damaged)
+    shutil.rmtree(os.path.join(damaged, "wave=2", "seen_delta"))
+    before = listing(damaged)
+    with pytest.raises(snapshots.CrawlError, match="wave 2's seen delta"):
+        snapshots.ParquetSnapshots(spark, damaged).resume()
+    assert listing(damaged) == before
 
 
 def test_scout_lists_only_first_level(spark, web, store):
@@ -1056,22 +1024,6 @@ def test_iceberg_backend_requires_catalog(spark, web, store):
         eng.crawl(web.seeds())
 
 
-def test_iceberg_rejects_delta_expiry(spark, web, store):
-    """checkpoint_expire_deltas has no Iceberg counterpart (the seen
-    table keeps no deltas to expire): with iceberg_table_prefix it is
-    rejected before any catalog lookup, not silently ignored."""
-    from spatula_spark.plans.engine import CrawlError
-
-    eng = CrawlEngine(
-        spark, media_registry(), page_store=store,
-        config=CrawlConfig(iceberg_table_prefix="ice.crawl.t",
-                           checkpoint_expire_deltas=True),
-    )
-    with pytest.raises(CrawlError, match="checkpoint_expire_deltas.*"
-                                         "iceberg_table_prefix"):
-        eng.crawl(web.seeds())
-
-
 def _view_rows(view):
     """A snapshot view's rows: an Arrow table's, or a DataFrame's."""
     if isinstance(view, pa.Table):
@@ -1097,7 +1049,7 @@ class _RecordingStore:
         time.sleep(0.5)  # keeps an async commit in flight a while
         self.done += 1
 
-    def resume(self, upto):
+    def resume(self):
         return None
 
 
