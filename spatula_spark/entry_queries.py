@@ -93,7 +93,7 @@ corpus AS (
 
 
 def _duck_minhash_cols(num_perms: int) -> str:
-    """Mirror of dedup.minhash_signature's chunked scheme: permutation
+    """Mirror of dedup.minhash_signatures' chunked scheme: permutation
     i = 32-bit hex chunk i%4 of md5(shingle || ':' || i//4)."""
     return ", ".join(
         "list_min(list_transform(shingles, s -> "
@@ -992,7 +992,7 @@ GROUP BY 1, 2 HAVING count(*) >= 3
 )
 def winnow_near_dups_q(spark, sf_dir):
     """Substring-level near-dup detection via WINNOWING rolling-hash
-    fingerprints (text.winnow_fingerprints — the MOSS selection, k=3
+    fingerprints (text.winnow_fingerprints_fast — the MOSS selection, k=3
     words, w=4 windows): documents sharing >= 3 selected fingerprints,
     with the shared count. Complements MinHash (whole-document Jaccard)
     with the guarantee that any shared run of >= 6 words surfaces, at

@@ -91,59 +91,19 @@ def word_shingles(text: Column, n: int = 3) -> Column:
 # ----------------------------------------------------------------- minhash
 
 
-def minhash_signature(text: Column, num_perms: int, n: int = 3) -> list[Column]:
-    """num_perms MinHash values, four 32-bit permutations per md5.
-
-    Permutation ``i`` is hex chunk ``i % 4`` of ``md5(shingle + ':' +
-    i//4)`` — one md5 call covers four permutations instead of one
-    (measured 2.3x on the signature stage; md5 dominates). The per-salt
-    hash-array subtree is built ONCE and shared by its four consumers,
-    so Catalyst's common-subexpression elimination evaluates each md5
-    pass once per row. 32-bit minima are the standard MinHash width
-    (collision odds 2^-32 per shingle pair); DuckDB replicates the
-    chunking with the same substr arithmetic."""
-    sh = word_shingles(text, n)
-
-    # NB: factories, not default-arg lambdas — pyspark treats a 2-arg
-    # higher-order-function lambda as (element, index), so a captured
-    # default like ``lambda s, j=j`` silently becomes the array index
-    def _salted(j):
-        return lambda s: F.md5(F.concat(s, F.lit(f":{j}")))
-
-    def _chunk(k):
-        return lambda x: F.conv(
-            F.substring(x, 1 + 8 * k, 8), 16, 10
-        ).cast("long")
-
-    hashed = [
-        F.transform(sh, _salted(j)) for j in range((num_perms + 3) // 4)
-    ]
-    return [
-        F.array_min(F.transform(hashed[i // 4], _chunk(i % 4)))
-        .alias(f"mh_{i}")
-        for i in range(num_perms)
-    ]
-
-
-def minhash_signatures_ref(
-    df: DataFrame, text_col: str = "text", num_perms: int = 8, n: int = 3
-) -> DataFrame:
-    """Pure-Catalyst REFERENCE form of :func:`minhash_signatures` (what
-    the DuckDB oracle mirrors); the default path is the bit-identical
-    Arrow fast path below — equality pinned in tests."""
-    return _spread(df).select(
-        "doc_id", *minhash_signature(F.col(text_col), num_perms, n)
-    )
-
-
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", num_perms: int = 8, n: int = 3
 ) -> DataFrame:
-    """Arrow-vectorized MinHash signatures — bit-identical to
-    :func:`minhash_signatures_ref` (md5 is md5; the chunk arithmetic
-    ``int(hex[8k:8k+8], 16)`` equals ``conv(substring(...), 16, 10)``)
-    and ~6x faster: the Catalyst spelling evaluates the md5 + conv
-    transforms as interpreted higher-order functions per shingle
+    """Arrow-vectorized MinHash signatures, four 32-bit permutations per
+    md5: permutation ``i`` is hex chunk ``i % 4`` of ``md5(shingle +
+    ':' + i//4)``, minimized over the doc's shingles (one md5 call
+    covers four permutations; md5 dominates). Bit-identical to the
+    pure-Catalyst spelling the DuckDB oracle mirrors, which lives in
+    tests as the reference this is pinned against (md5 is md5; the
+    chunk arithmetic ``int(hex[8k:8k+8], 16)`` equals
+    ``conv(substring(...), 16, 10)``), and ~6x faster: the Catalyst
+    spelling evaluates the md5 + conv transforms as interpreted
+    higher-order functions per shingle
     (~600 us/doc measured at sf0.1); here each doc is one tight Python
     loop over hashlib.md5. Normalization replicates the reference
     column expression exactly: trim = leading/trailing SPACES only,

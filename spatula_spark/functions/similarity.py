@@ -141,48 +141,16 @@ def plane_signs(plane: int, dim: int) -> list[int]:
     return out
 
 
-def hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
-    """Sign of <vec, h_plane>. The ±1 coords are FOLDED TO LITERALS at
-    plan-build time (they depend only on (plane, d)): the runtime does
-    one zip-multiply-sum per plane instead of per-element modular
-    arithmetic inside an interpreted lambda — measured ~2x on the
-    bucketing stage, exact same values as the formula."""
-    signs = F.array(*[F.lit(s) for s in plane_signs(plane, dim)])
-    signed = F.aggregate(
-        F.zip_with(vec, signs, lambda x, s: x * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (signed > 0).cast("int")
-
-
-def lsh_buckets(vec: Column, n_tables: int, n_planes: int, dim: int) -> Column:
-    """One bucket id per hash table (multi-table LSH: recall compounds
-    across independent tables, the standard random-hyperplane recipe).
-    Table t uses planes [t*n_planes, (t+1)*n_planes).
-
-    This is the pure-Catalyst REFERENCE form (and what the DuckDB
-    oracles mirror); the hot paths call :func:`lsh_buckets_fast`, whose
-    bit-equality with this form is pinned in tests."""
-    return F.array(*[
-        lsh_bucket_offset(vec, t * n_planes, n_planes, dim)
-        for t in range(n_tables)
-    ])
-
-
-def lsh_bucket_offset(
-    vec: Column, first_plane: int, n_planes: int, dim: int
-) -> Column:
-    acc = F.lit(0)
-    for p in range(n_planes):
-        acc = acc + hyperplane_sign(vec, first_plane + p, dim) * F.lit(1 << p)
-    return acc
-
-
 def lsh_buckets_fast(
     vec_col: str, n_tables: int, n_planes: int, dim: int
 ) -> Column:
-    """Arrow-vectorized :func:`lsh_buckets` — bit-identical, ~7x faster.
+    """One bucket id per hash table (multi-table LSH: recall compounds
+    across independent tables, the standard random-hyperplane recipe).
+    Table t uses planes [t*n_planes, (t+1)*n_planes); its id sums
+    ``1 << p`` over the planes whose signed dot with ``vec`` is
+    positive. Arrow-vectorized, and bit-identical to the pure-Catalyst
+    spelling the DuckDB oracles mirror (it lives in tests, pinned per
+    row against this), ~7x faster.
 
     The Catalyst spelling evaluates dim*planes interpreted-lambda ops
     per row (higher-order functions are CodegenFallback; unrolling the
@@ -193,9 +161,9 @@ def lsh_buckets_fast(
     ``acc = acc + X[:, d] * s[d]`` in dimension order — the exact
     association the aggregate/zip_with form computes, and IEEE
     ``x * (-1.0) == -x`` — so bucket ids are bit-identical to the
-    reference form (asserted per-row in tests) and the DuckDB oracle
-    parity is untouched. Measured on 4k x 64-dim doubles: 2.5 s
-    (interpreted HOF) -> 0.36 s end-to-end."""
+    Catalyst spelling and the DuckDB oracle parity is untouched.
+    Measured on 4k x 64-dim doubles: 2.5 s (interpreted HOF) -> 0.36 s
+    end-to-end."""
     signs = np.array(
         [plane_signs(p, dim) for p in range(n_tables * n_planes)],
         dtype=np.float64,

@@ -120,7 +120,7 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.lower(F.regexp_replace(F.trim(text), "\\s+", " ")))
 
 
-def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
+def winnow_fingerprints_fast(text_col, k: int = 3, w: int = 4) -> Column:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS rolling-hash selection): hash every k-word
     gram, slide a w-hash window, keep each window's MINIMUM; the
@@ -129,51 +129,17 @@ def winnow_fingerprints(text: Column, k: int = 3, w: int = 4) -> Column:
     Guarantee: two documents sharing any run of >= w+k-1 words share
     at least one selected fingerprint, at an expected density of only
     2/(w+1) of all grams — the sparse, position-robust join key a
-    plagiarism / substring-level near-dup pass uses at corpus scale
-    (hashing EVERY shingle joins ~(w+1)/2 times more rows for the same
-    guarantee). Pure Catalyst HOFs over the same normalization as the
-    MinHash path; the DuckDB oracle replays the identical arithmetic
-    through the shared portable hash. Short docs (< k words) hash the
-    whole text; <= w grams yield one global minimum."""
-    from ..urls import portable_hash64
+    plagiarism / substring-level near-dup pass uses at corpus scale.
+    Short docs (< k words) hash the whole text; <= w grams yield one
+    global minimum.
 
-    # grams and window minima via zip_with over shifted slices: the
-    # array operands stay OUTSIDE every lambda. The previous
-    # transform-with-index forms re-evaluated the captured array per
-    # produced element — for ``sel`` that meant re-hashing EVERY gram
-    # once per window position (O(n*w) hash evals); see
-    # dedup.word_shingles for the trap's measurements.
-    ws = F.split(F.lower(F.regexp_replace(F.trim(text), "\\s+", " ")), " ")
-    n = F.size(ws)
-    gm = n - (k - 1)
-    gacc = F.slice(ws, 1, gm)
-    for j in range(1, k):
-        gacc = F.zip_with(
-            gacc, F.slice(ws, j + 1, gm),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    grams = F.when(n >= k, gacc).otherwise(
-        F.array(F.array_join(ws, " "))
-    )
-    hs = F.transform(grams, lambda g: portable_hash64(g))
-    m = F.size(hs)
-    sm = m - (w - 1)
-    sacc = F.slice(hs, 1, sm)
-    for j in range(1, w):
-        sacc = F.zip_with(
-            sacc, F.slice(hs, j + 1, sm), lambda a, b: F.least(a, b)
-        )
-    sel = F.when(m > w, sacc).otherwise(F.array(F.array_min(hs)))
-    return F.array_sort(F.array_distinct(sel))
-
-
-def winnow_fingerprints_fast(text_col, k: int = 3, w: int = 4) -> Column:
-    """Arrow fast path of :func:`winnow_fingerprints` — bit-identical
-    by construction (same ASCII-\\s normalization twin the minhash
-    fast path pins, same md5-prefix portable hash) and asserted equal
-    in tests. The Catalyst spelling is interpreted end-to-end (HOFs
-    get no codegen) and measured 42 s at sf0.01 even spread across
-    cores; this pandas UDF computes the same selection in ~1 s."""
+    A pandas UDF, bit-identical by construction (the ASCII-\\s
+    normalization twin the minhash fast path pins, the md5-prefix
+    portable hash) to the pure-Catalyst spelling the DuckDB oracle
+    replays, which lives in tests and is asserted equal there. That
+    spelling is interpreted end-to-end (HOFs get no codegen) and
+    measured 42 s at sf0.01 even spread across cores; this computes
+    the same selection in ~1 s."""
     import hashlib
     import re
 

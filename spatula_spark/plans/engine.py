@@ -43,10 +43,13 @@ one at a time, this engine keeps it in a DataFrame and processes one
 
     Driver route, for every wave of at most driver_wave_max frontier
     rows while the driver twin of the seen set is alive: _dedup_driver
-    runs the same schedule (collecting _tag's frame once when a
-    politeness split or robots rules apply) and dedups in Python against
-    the twin, and _fetch_local replaces _fetch_wave, so the wave plans
-    from LocalRelations with no dedup shuffle.
+    runs the same schedule with no Spark job (hosts, hashes and the
+    robots verdict from one projection Catalyst folds into a
+    LocalRelation on the driver, the host-budget split and the fates
+    in Python) and dedups in Python against the twin, and _fetch_local
+    replaces _fetch_wave, so the wave plans from LocalRelations with no
+    dedup shuffle. A resumed wave within the caps reads its frontier
+    and the twin's seen keys from the snapshot with pyarrow.
 
 Depth-first emission order is reconstructed, not executed: every row
 carries a lexicographically sortable lineage ``path`` (schemas.py), and
@@ -120,6 +123,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
@@ -130,7 +134,12 @@ from ..operators import seen as seen_ops
 from ..operators.parsers import UnsupportedDocumentError
 from ..sources.http_fetch import FETCHED_SCHEMA
 from ..urls import canonicalize_url, host_of, url_hash
-from .snapshots import SEEN_SCHEMA, CrawlError, open_snapshots
+from .snapshots import (
+    SEEN_SCHEMA,
+    CrawlError,
+    open_snapshots,
+    read_parquet_dirs,
+)
 from .pagespec import (
     ChildPage,
     HandledError,  # noqa: F401  (public API re-export)
@@ -178,6 +187,11 @@ _METRIC_KINDS = (
 )
 # every emission kind a wave lands: each is counted by one column
 _KIND_NAMES = tuple(k for _, kinds in _METRIC_KINDS for k in kinds)
+
+# a driver-route wave's robots-blocked and politeness-deferred rows:
+# frontier rows with their fate, re-emitted unfetched (_unfetched)
+_PARKED_SCHEMA = T.StructType(
+    schemas.FRONTIER_SCHEMA.fields + [T.StructField("_fate", T.StringType())])
 
 # Bloom prefilter shards at crawl start; ShardedBloom.regrow widens
 # them 4x from the exact seen table whenever the filter fills up
@@ -323,18 +337,56 @@ class _Landed:
 
 
 def _metrics_row(wave: int, counts: dict[str, int],
-                 bloom_fpr: float | None, schedule_local: bool) -> dict:
+                 bloom_fpr: float | None, schedule_local: bool,
+                 host_split: bool) -> dict:
     """The wave's CrawlResult.metrics row: the _METRIC_KINDS counts,
     whether the wave's dedup probed the Bloom prefilter with its
-    estimated FPR at that probe (else None), and whether the wave took
-    the driver route (see _dedup_driver)."""
+    estimated FPR at that probe (else None), whether the wave took
+    the driver route (see _dedup_driver), and whether it ran the
+    politeness split (see CrawlEngine._split)."""
     return {
         "wave": wave,
         **{col: sum(counts[k] for k in kinds) for col, kinds in _METRIC_KINDS},
         "bloom_probed": bloom_fpr is not None,
         "bloom_fpr": bloom_fpr,
         "schedule_local": schedule_local,
+        "host_split": host_split,
     }
+
+
+def _resumed_total(metrics_rows: list[dict]) -> int | None:
+    """The emission total of a resumed snapshot's last wave, from its
+    metrics row (every emission kind is counted by exactly one
+    _METRIC_KINDS column), or None when there is no such row or it
+    lacks a column."""
+    try:
+        return sum(metrics_rows[-1][col] for col, _ in _METRIC_KINDS)
+    except (IndexError, KeyError):
+        return None
+
+
+def _host_budget_deferred(rows: list[tuple], hosts: list,
+                          budget: int) -> list[bool]:
+    """``split_by_host_budget``'s ``_deferred`` over driver rows
+    (FRONTIER_SCHEMA-ordered tuples; ``hosts`` their ``host_of``): a
+    host with more than ``budget`` non-null-url rows ranks its rows by
+    (priority, path), ascending with nulls first as Spark orders them,
+    and defers the ranks above the budget. A null host is never
+    deferred."""
+    # FRONTIER_SCHEMA tuple slots: 1=url 3=path 4=priority
+    counts = Counter(h for r, h in zip(rows, hosts)
+                     if h is not None and r[1] is not None)
+    hot: dict[str, list[int]] = {}
+    for i, h in enumerate(hosts):
+        if counts.get(h, 0) > budget:
+            hot.setdefault(h, []).append(i)
+    deferred = [False] * len(rows)
+    for idx in hot.values():
+        idx.sort(key=lambda i: (rows[i][4] is not None, rows[i][4] or 0,
+                                rows[i][3]))
+        for i in idx[budget:]:
+            deferred[i] = True
+    return deferred
 
 
 def _payloadless_cols(status: int, found: bool, hash_cols: list) -> list:
@@ -852,15 +904,15 @@ class CrawlEngine:
         the crawl; each wave runs the phase methods in the order the
         module docstring lists them."""
         cfg = self.config
-        (frontier, n_frontier, start_wave, results, metrics_rows,
-         null_urls) = self._begin(seeds)
+        (frontier, frontier_rows, n_frontier, start_wave, results,
+         metrics_rows, null_urls) = self._begin(seeds)
         ex = None  # built once a wave is about to run
         dead: list[DataFrame] = []
-        # the previous wave's frontier as FRONTIER_SCHEMA tuples when it
-        # was driver-held, and its emission total (None: no wave has
-        # run in this crawl yet)
-        frontier_rows: list[tuple] | None = None
-        prev_total: int | None = None
+        # frontier_rows: the wave's frontier as FRONTIER_SCHEMA tuples
+        # when the driver holds it (the seeds, a driver-held wave's
+        # output, a resumed frontier read with pyarrow), else None.
+        # prev_total: the previous wave's emission total (None: unknown)
+        prev_total = _resumed_total(metrics_rows)
         # seed lists hold attempts=0 rows only; a resumed frontier may
         # carry in-flight requeues
         requeues = start_wave > 0
@@ -880,6 +932,8 @@ class CrawlEngine:
                 # per-crawl set-up a crawl that runs no wave never pays
                 ex = self._wave_exprs()
                 self._refill_twin()
+                if frontier_rows is None:
+                    frontier_rows = self._resumed_rows(n_frontier)
             # size the wave by its likely OUTPUT, not its input: the
             # previous wave's emission total is the fan-out-aware
             # estimator (a wave of list pages explodes ~fan-out×)
@@ -888,9 +942,10 @@ class CrawlEngine:
             # the driver route: schedule and dedup over driver rows
             driver = (self._py_seen is not None
                       and n_frontier <= cfg.driver_wave_max)
+            split = self._split(n_frontier)
             if driver:
                 rows, null_rows, unfetched = self._dedup_driver(
-                    frontier, frontier_rows, n_frontier, ex, null_urls)
+                    frontier, frontier_rows, n_frontier, ex)
                 fetched, hooked, nullsrc = self._fetch_local(
                     rows, null_rows, ex)
             else:
@@ -915,7 +970,7 @@ class CrawlEngine:
             n_frontier = sum(landed.counts[k] for k in ex.followed)
             self._tick(wave, "emissions ckpt", t)
             row = _metrics_row(wave, landed.counts, self._wave_bloom_fpr,
-                               driver)
+                               driver, split)
             items = (_scout_projection if cfg.scout else _item_projection)(
                 landed.emissions, wave)
             results.append(items)
@@ -935,9 +990,11 @@ class CrawlEngine:
     def _begin(self, seeds: list[dict]):
         """Reset the per-crawl state, and resume from the latest
         committed snapshot when there is one. Returns (frontier, its
-        row count or None when unknown, start wave, resumed results,
-        resumed metrics rows, whether the frontier can hold a null-url
-        row)."""
+        rows as FRONTIER_SCHEMA tuples when the driver holds them (the
+        seeds; a resumed frontier is read by _resumed_rows once a wave
+        runs), its row count or None when unknown, start wave, resumed
+        results, resumed metrics rows, whether the frontier can hold a
+        null-url row)."""
         cfg = self.config
         self._store = open_snapshots(self.spark, cfg)
         if self._store is None and (cfg.checkpoint_every != 1
@@ -978,10 +1035,17 @@ class CrawlEngine:
             if cfg.bloom_min_seen is not None else None
         )
         resumed = self._store and self._store.resume()
+        # the resumed snapshot's files, read with pyarrow once a wave
+        # runs (_refill_twin, _resumed_rows); None for a seen set that
+        # can vanish mid-crawl, or a store that names no files
+        self._resumed_files = None
         if resumed is None:
             rows = self._seed_rows(seeds)
             return (local_df(self.spark, rows, schemas.FRONTIER_SCHEMA),
-                    len(rows), 0, [], [], any(r[1] is None for r in rows))
+                    rows, len(rows), 0, [], [],
+                    any(r[1] is None for r in rows))
+        if resumed.frontier_dir is not None and not self._store.seen_volatile:
+            self._resumed_files = resumed
         rseen = resumed.seen
         self._seen_count = (rseen.count() if resumed.n_seen is None
                             else resumed.n_seen)
@@ -993,19 +1057,38 @@ class CrawlEngine:
             self._seen_slices.append(rseen)
             self._bloom_pending.append(rseen)
         # a resumed frontier's null urls are unknown
-        return (resumed.frontier, resumed.n_frontier, resumed.next_wave,
-                [resumed.items], resumed.metrics_rows, True)
+        return (resumed.frontier, None, resumed.n_frontier,
+                resumed.next_wave, [resumed.items], resumed.metrics_rows,
+                True)
 
     def _refill_twin(self) -> None:
-        """Load a resumed seen set into the twin (one collect) when it
-        has at most _driver_seen_max keys, else drop the twin."""
+        """Load a resumed seen set into the twin when it has at most
+        _driver_seen_max keys, else drop the twin: read with pyarrow
+        from the snapshot's seen files when _begin kept them (no Spark
+        job), else one collect."""
         if self._py_seen is None or not self._seen_count:
             return
         self._py_seen = None
         if self._seen_count <= self._driver_seen_max:
-            seen = self._seen_union().toArrow()
+            files = self._resumed_files
+            seen = (self._seen_union().toArrow() if files is None
+                    else read_parquet_dirs(files.seen_dirs, SEEN_SCHEMA))
             self._py_seen = set(zip(seen["url_hash"].to_pylist(),
                                     seen["seen_key"].to_pylist()))
+
+    def _resumed_rows(self, n_frontier: int) -> list[tuple] | None:
+        """The resumed frontier as FRONTIER_SCHEMA tuples, read with
+        pyarrow from the snapshot (no Spark job, schema-pinned: a
+        frontier written before hash-at-emission reads null hashes)
+        when _begin kept its files and the wave takes the driver route;
+        else None."""
+        files = self._resumed_files
+        if (files is None or self._py_seen is None
+                or n_frontier > self.config.driver_wave_max):
+            return None
+        table = read_parquet_dirs([files.frontier_dir],
+                                  schemas.FRONTIER_SCHEMA)
+        return list(zip(*(c.to_pylist() for c in table.columns)))
 
     def _wave_exprs(self) -> SimpleNamespace:
         """The wave-invariant expression cache, built ONCE per crawl.
@@ -1201,7 +1284,9 @@ class CrawlEngine:
         with the fetch key columns of the fetch rows. The null-source
         arm exists only when ``null_urls`` says the frontier can hold a
         null-url row (True when unknown). Returns (the tagged frame, the
-        fates its rows can have)."""
+        fates its rows can have). The cluster route's schedule; the
+        driver route decides the same fates in Python
+        (_schedule_rows)."""
         tagged = frontier.withColumn("host", ex.host)
         # (condition, fate) arms in precedence order; the first that
         # holds decides, and a row no arm claims is fetched
@@ -1254,15 +1339,15 @@ class CrawlEngine:
                 nullsrc, _unfetched(tagged, fates, ex))
 
     def _dedup_driver(self, frontier: DataFrame, rows: list[tuple] | None,
-                      n_frontier: int, ex, null_urls: bool):
+                      n_frontier: int, ex):
         """Schedule and dedup phases of a driver-route wave, in the
-        cluster order: _tag's frame collected once (one Arrow job) when
-        a politeness split or robots rules apply or the rows are not
-        driver-held with their hashes, else the driver-held rows as
-        they are; then first-wins (min path) and the seen check against
-        the twin in Python, which requeues bypass as in _dedup. Returns
-        (rows to fetch, null-source rows) as FRONTIER_SCHEMA tuples, and
-        the unfetched emission parts."""
+        cluster order: the schedule is _schedule_rows' when a politeness
+        split or robots rules apply or a row lacks its hashes, else the
+        driver-held rows as they are; then first-wins (min path) and the
+        seen check against the twin in Python, which requeues bypass as
+        in _dedup. Driver-held rows take no Spark job. Returns (rows to
+        fetch, null-source rows) as FRONTIER_SCHEMA tuples, and the
+        unfetched emission parts."""
         unfetched = []
         # FRONTIER_SCHEMA tuple slots: 1=url 3=path 5=attempts
         # 7=url_hash 8=seen_key
@@ -1270,15 +1355,8 @@ class CrawlEngine:
                 or ex.robots_allowed is not None or self._robots_join
                 or any(r[1] is not None and (r[7] is None or r[8] is None)
                        for r in rows)):
-            tagged, _ = self._tag(frontier, n_frontier, ex, null_urls)
-            table = tagged.toArrow()
-            fates = table["_fate"].to_pylist()
-            if {"blocked", "deferred"} & set(fates):  # rows to re-emit
-                unfetched = _unfetched(local_df(
-                    self.spark, table, tagged.schema), set(fates), ex)
-            rows = [tuple(r.values()) for r, f in zip(
-                table.select(schemas.FRONTIER_SCHEMA.names).to_pylist(),
-                fates) if f in ("fetch", "nullsrc")]
+            rows, unfetched = self._schedule_rows(
+                frontier, rows, n_frontier, ex)
         best: dict[tuple[int, int], tuple] = {}
         requeued, null_rows = [], []
         for r in rows:
@@ -1290,6 +1368,54 @@ class CrawlEngine:
                     k not in best or r[3] < best[k][3]):
                 best[k] = r  # first-wins = min path
         return [*best.values(), *requeued], null_rows, unfetched
+
+    def _schedule_rows(self, frontier: DataFrame, rows: list[tuple] | None,
+                       n_frontier: int, ex):
+        """_tag's schedule decided on the driver. One projection gives
+        each row its host, the fetch hashes _tag coalesces in, and its
+        robots verdict (the same ``ex`` Columns). Over driver-held rows
+        it runs on a LocalRelation (``createDataFrame`` of an Arrow
+        table, not ``local_df``, whose coalesce(1) stops the fold):
+        Catalyst's ConvertToLocalRelation evaluates it on the driver, so
+        the collect starts no Spark job. Rows the driver does not hold
+        are projected from ``frontier``, and an oversized robots rule
+        set takes its broadcast join: one job either way. Fates then
+        follow _tag's precedence in Python: politeness-deferred
+        (_host_budget_deferred, split_by_host_budget's rule), then
+        null-source, then robots-blocked, else fetch. Returns (the fetch
+        and null-source rows as FRONTIER_SCHEMA tuples, only fetch rows
+        keeping their hashes, and the unfetched emission parts)."""
+        src = frontier if rows is None else self.spark.createDataFrame(
+            arrow_table(rows, schemas.FRONTIER_SCHEMA),
+            schemas.FRONTIER_SCHEMA)
+        sched = src.withColumns({"host": ex.host, "canon_url": ex.canon}) \
+            .withColumn("url_hash", F.coalesce(F.col("url_hash"), ex.uhash)) \
+            .withColumn("seen_key", F.coalesce(F.col("seen_key"),
+                                               ex.seen_key))
+        allowed = F.lit(True)
+        if ex.robots_allowed is not None:
+            allowed = ex.robots_allowed
+        elif self._robots_join:
+            sched = politeness_ops.robots_broadcast_join(
+                sched, self._robots_prefix_df, self._robots_wild)
+            allowed = F.col("_allowed")
+        # projected tuple slots: 0-8 FRONTIER_SCHEMA, 9=host, 10=allowed
+        got = sched.select(*schemas.FRONTIER_SCHEMA.names, "host",
+                           allowed).collect()
+        deferred = (
+            _host_budget_deferred(got, [r[9] for r in got],
+                                  self.config.host_budget_per_wave)
+            if self._split(n_frontier) else [False] * len(got))
+        kept, parked = [], []
+        for r, d in zip(got, deferred):
+            if d or (r[1] is not None and not r[10]):
+                parked.append((*r[:7], None, None,
+                               "deferred" if d else "blocked"))
+            else:
+                kept.append(r[:9] if r[1] is not None
+                            else (*r[:7], None, None))
+        return kept, [local_df(self.spark, parked, _PARKED_SCHEMA)
+                      .select(*ex.unfetched_cols)] if parked else []
 
     def _transform(self, fetched: DataFrame | None,
                    hooked: DataFrame | None, nullsrc: DataFrame | None,

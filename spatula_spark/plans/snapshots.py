@@ -30,6 +30,9 @@ view is written by Spark; an Arrow view by ``pyarrow`` on the calling
 thread, as one part file in the session's
 ``spark.sql.parquet.compression.codec`` with every column optional (as
 Spark writes them), so a small wave's commit starts no Spark job.
+Its ``Resumed`` names the frontier and seen dirs, which the engine
+reads with ``read_parquet_dirs`` (pyarrow, no Spark job) when the
+resumed wave is small enough for the driver.
 
 ``IcebergSnapshots`` (``iceberg_table_prefix``) is the catalog-native
 store for deployments that have one (`spark-submit --packages
@@ -55,9 +58,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
-from ..session import as_df
+from ..session import _struct, as_df
 
 SEEN_SCHEMA = "url_hash long, seen_key long"
 
@@ -100,6 +104,10 @@ class Resumed:
     # row counts known without a job, else None (the engine counts)
     n_frontier: int | None
     n_seen: int | None
+    # the parquet dirs frontier and seen scan, for a driver read with
+    # read_parquet_dirs; None when the store keeps no such files
+    frontier_dir: str | None = None
+    seen_dirs: list[str] | None = None
 
 
 def open_snapshots(spark: SparkSession, cfg):
@@ -259,7 +267,8 @@ class ParquetSnapshots:
             *[self._path(w, "items") for w in waves])
         return Resumed(frontier, seen, items, list(manifest["metrics"]),
                        last + 1, _manifest_rows(manifest, "frontier"),
-                       n_seen)
+                       n_seen, self._path(last, "frontier"),
+                       [self._path(w, sub) for w, sub in parts])
 
     def _waves(self) -> list[int]:
         """Every wave with a snapshot dir, committed or not."""
@@ -277,6 +286,17 @@ class ParquetSnapshots:
     def _manifest(self, wave: int) -> dict:
         with open(self._path(wave, "MANIFEST.json")) as f:
             return json.load(f)
+
+
+def read_parquet_dirs(dirs: list[str], schema) -> pa.Table:
+    """Snapshot parquet dirs read on the driver with pyarrow (no Spark
+    job) in ``schema``, pinned as the Spark reads pin it: a column a
+    file lacks reads as null."""
+    if isinstance(schema, str):
+        schema = _struct(schema)
+    arrow = pa.schema([f.with_nullable(True)
+                       for f in to_arrow_schema(schema)])
+    return pa.concat_tables([pq.read_table(d, schema=arrow) for d in dirs])
 
 
 def _manifest_rows(manifest: dict, sub: str) -> int | None:

@@ -123,7 +123,11 @@ def local_df(
     Arrow batches and are planted there as a LocalRelation (below
     spark.sql.execution.arrow.localRelationThreshold), so scanning the
     result never starts a Python worker — an RDD of Python rows
-    (``parallelize``) pays one on every scan."""
+    (``parallelize``) pays one on every scan. The ``coalesce(1)`` on
+    top stops Catalyst's ConvertToLocalRelation: a projection over the
+    result runs as a Spark job, where one over a bare
+    ``createDataFrame`` of the Arrow table is evaluated on the driver
+    and its ``collect()`` starts no job."""
     schema = _struct(schema) if isinstance(schema, str) else schema
     if not isinstance(data, pa.Table):
         data = arrow_table(data, schema)

@@ -19,11 +19,11 @@ engine that layer with no third-party deps:
   payload digest re-verified (``digest_ok``). One shard per task;
   shards are written ~partition-sized so this matches Spark's
   binaryFile non-splittable unit.
-* :func:`warc_record_str` / :func:`_record_bytes` — ONE serialization
-  shared by the writer and by the Catalyst column expression the
-  ``warc_cdx`` battery query uses for record lengths, so the SQL
-  oracle's arithmetic is pinned to the real on-disk layout
-  (tests/test_warc.py asserts byte-for-byte equality).
+* :func:`_record_bytes` — the ONE serialization of a record. The
+  Catalyst column expression the ``warc_cdx`` battery query uses for
+  record lengths spells the same layout, and tests/test_warc.py pins
+  the two byte for byte (through a text twin of this function), so
+  the SQL oracle's arithmetic matches the real on-disk layout.
 
 Digest note: WARC-Payload-Digest uses a labelled algorithm; we emit
 ``sha256:<hex>`` (not the conventional sha1) because both Spark
@@ -81,37 +81,6 @@ def record_uuid(url: str, warc_date: str) -> str:
     oracle (md5 is native in both Spark and DuckDB)."""
     h = hashlib.md5((url + warc_date).encode("utf-8")).hexdigest()
     return f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-
-
-def warc_record_str(
-    url: str,
-    warc_date: str,
-    status: int,
-    content_type: str,
-    payload_text: str,
-) -> str:
-    """The full WARC record as TEXT (str) — the exact layout
-    :func:`_record_bytes` encodes. Kept as a separate pure function so
-    tests can pin the Catalyst/DuckDB concat in the ``warc_cdx`` query
-    to this serialization character-for-character."""
-    payload_len = len(payload_text.encode("utf-8"))
-    block = (
-        f"HTTP/1.1 {status} {http_reason(status)}\r\n"
-        f"Content-Type: {content_type}\r\n"
-        f"Content-Length: {payload_len}\r\n\r\n" + payload_text
-    )
-    block_len = len(block.encode("utf-8"))
-    digest = hashlib.sha256(payload_text.encode("utf-8")).hexdigest()
-    return (
-        "WARC/1.1\r\n"
-        "WARC-Type: response\r\n"
-        f"WARC-Record-ID: <urn:uuid:{record_uuid(url, warc_date)}>\r\n"
-        f"WARC-Date: {warc_date}\r\n"
-        f"WARC-Target-URI: {url}\r\n"
-        f"WARC-Payload-Digest: sha256:{digest}\r\n"
-        "Content-Type: application/http;msgtype=response\r\n"
-        f"Content-Length: {block_len}\r\n\r\n" + block + "\r\n\r\n"
-    )
 
 
 def _record_bytes(

@@ -7,6 +7,7 @@ import json
 import shutil
 import time
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -510,6 +511,65 @@ def test_landed_schedule_plan_shape(spark, sched_web, sched_store,
         assert "WindowExec" not in names
         assert "LocalTableScanExec" in names
     assert res.metrics["schedule_local"].all()
+
+
+def test_driver_route_schedule_and_resume_start_no_job(
+        spark, sched_web, sched_store, monkeypatch, tmp_path):
+    """A budgeted, robots-filtered crawl on a parquet checkpoint,
+    stopped at wave 2 and resumed: on every wave of both legs the
+    driver-route schedule and dedup (_dedup_driver) and the twin refill
+    (_refill_twin) start no Spark job. The schedule's projection is
+    folded into a LocalRelation on the driver, the resumed frontier
+    and seen keys are read with pyarrow, and the first resumed wave
+    lands on the driver (no parquet ``_emissions`` spill). If a Spark
+    upgrade stops folding the projection, this test says so."""
+    import os
+
+    sc = spark.sparkContext
+    groups: dict[str, list[str]] = {"_dedup_driver": [], "_refill_twin": []}
+
+    def grouped(name):
+        real = getattr(CrawlEngine, name)
+
+        def run(eng, *a):
+            group = f"pin-{name}-{len(groups[name])}"
+            groups[name].append(group)
+            sc.setJobGroup(group, name)
+            try:
+                return real(eng, *a)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        return run
+
+    for name in groups:
+        monkeypatch.setattr(CrawlEngine, name, grouped(name))
+    ck, spill = tmp_path / "ck", tmp_path / "spill"
+    legs = {}
+    for leg, waves in (("a", 2), ("b", None)):
+        eng = CrawlEngine(
+            spark, media_registry(), page_store=sched_store,
+            robots=sched_web.robots(spark),
+            config=CrawlConfig(host_budget_per_wave=6, max_waves=waves,
+                               checkpoint_dir=str(ck),
+                               spill_dir=str(spill / leg)))
+        legs[leg] = eng.crawl(sched_web.seeds())
+    a, b = legs["a"], legs["b"]
+    assert a.waves == 2 and b.waves >= 2
+    m = pd.concat([a.metrics, b.metrics])
+    assert m["schedule_local"].all()
+    assert m["host_split"].any() and m["deferred"].sum() > 0
+    assert m["blocked"].sum() > 0
+    assert len(groups["_dedup_driver"]) == a.waves + b.waves
+    assert len(groups["_refill_twin"]) == 2
+    assert eng._py_seen  # the resumed leg refilled its twin
+    # the first resumed wave landed on the driver
+    assert not [d for d in os.listdir(spill / "b")
+                if d.endswith("_emissions")]
+    # read once every leg's jobs have been posted
+    spark.range(1).collect()
+    started = {g: sc.statusTracker().getJobIdsForGroup(g)
+               for gs in groups.values() for g in gs}
+    assert not any(started.values()), started
 
 
 def test_dfs_order_matches_document_order(spark, web, store):

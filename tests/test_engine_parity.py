@@ -527,6 +527,61 @@ def test_zero_host_budget_rejected(spark, tiny_store):
     assert tagged.filter("_deferred").count() == 0
 
 
+def test_python_host_split_matches_split_by_host_budget(spark):
+    """The driver route's host-budget split in Python defers exactly the
+    rows split_by_host_budget defers, path by path, on seeded frontiers
+    with priority ties, null priorities, null-url rows, non-null urls
+    whose host_of is null, a host exactly at the budget, and budget 1.
+    Hosts come from the same Spark host_of column both sides read."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from spatula_spark.operators.politeness import split_by_host_budget
+    from spatula_spark.plans.engine import _host_budget_deferred
+    from spatula_spark.urls import host_of
+
+    schema = ("page_cls string, url string, input_json string, "
+              "path string, priority int, attempts int, page_seq int, "
+              "url_hash long, seen_key long")
+    for budget in (1, 2, 3):
+        rows = []
+        for case in range(40):
+            rng = random.Random(1000 * budget + case)
+            n_hosts = rng.randint(1, 4)
+            for j in range(rng.randint(0, 14)):
+                u = rng.random()
+                url = (None if u < 0.08 else f"relative/c{case}/{j}"
+                       if u < 0.16 else
+                       f"http://h{rng.randrange(n_hosts)}.c{case}.example"
+                       f".com/p{j}")
+                prio = None if rng.random() < 0.1 else rng.randint(0, 2)
+                path = f"c{case:02d}/{rng.randrange(1 << 20):06x}/{j:02d}"
+                rows.append(("P", url, None, path, prio, 0, 0, None, None))
+        # one host exactly at the budget, one just over it
+        for k, n in (("at", budget), ("over", budget + 1)):
+            rows += [("P", f"http://{k}.example.com/{j}", None,
+                      f"z{k}/{j:02d}", 0, 0, 0, None, None)
+                     for j in range(n)]
+        got = split_by_host_budget(
+            spark.createDataFrame(rows, schema)
+            .withColumn("host", host_of(F.col("url"))), budget,
+        ).select("path", "host", "_deferred").collect()
+        host = {r["path"]: r["host"] for r in got}
+        want = {r["path"]: r["_deferred"] for r in got}
+        assert len(want) == len(rows)
+        deferred = _host_budget_deferred(
+            rows, [host[r[3]] for r in rows], budget)
+        assert dict(zip((r[3] for r in rows), deferred)) == want, budget
+        assert any(want.values())
+        assert not any(want[p] for p in want if p.startswith("zat/"))
+        assert sum(want[p] for p in want if p.startswith("zover/")) == 1
+        # the null-host rows exist and none is deferred
+        nullhost = [r[3] for r in rows if host[r[3]] is None]
+        assert any(r[1] for r in rows if r[3] in nullhost)
+        assert not any(want[p] for p in nullhost)
+
+
 def test_scout_escapes_json(spark, tiny_store):
     """A child URL containing a double quote must not break the scout
     projection's JSON."""

@@ -259,6 +259,29 @@ def _jaccard_pairs_ref(df, pairs, n=3, threshold=0.8):
     )
 
 
+def _minhash_signatures_ref(df, num_perms=8, n=3):
+    """Pure-Catalyst reference form of dd.minhash_signatures (what the
+    DuckDB oracle mirrors): permutation ``i`` is the minimum over the
+    doc's shingles of hex chunk ``i % 4`` of ``md5(shingle || ':' ||
+    i // 4)``, as a 32-bit value."""
+    sh = dd.word_shingles(F.col("text"), n)
+
+    # factories, not default-arg lambdas: pyspark reads a 2-arg
+    # higher-order-function lambda as (element, index)
+    def _salted(j):
+        return lambda s: F.md5(F.concat(s, F.lit(f":{j}")))
+
+    def _chunk(k):
+        return lambda x: F.conv(
+            F.substring(x, 1 + 8 * k, 8), 16, 10).cast("long")
+
+    hashed = [F.transform(sh, _salted(j))
+              for j in range((num_perms + 3) // 4)]
+    return dd._spread(df).select("doc_id", *[
+        F.array_min(F.transform(hashed[i // 4], _chunk(i % 4)))
+        .alias(f"mh_{i}") for i in range(num_perms)])
+
+
 def test_minhash_fast_path_bit_identical(docs, spark):
     """The Arrow signature/jaccard fast paths must equal the
     pure-Catalyst reference forms (which the DuckDB oracles mirror)
@@ -271,7 +294,7 @@ def test_minhash_fast_path_bit_identical(docs, spark):
     corpus = dd.perturbed_corpus(docs.limit(150)).unionByName(edge)
     cols = [f"mh_{i}" for i in range(8)]
     fast = dd.minhash_signatures(corpus).alias("f")
-    ref = dd.minhash_signatures_ref(corpus).alias("r")
+    ref = _minhash_signatures_ref(corpus).alias("r")
     neq = fast.join(ref, "doc_id").filter(" OR ".join(
         f"f.{c} IS DISTINCT FROM r.{c}" for c in cols
     )).count()
@@ -408,6 +431,26 @@ def test_simhash_fast_bit_identical(docs):
     assert m == 0
 
 
+def _lsh_buckets(vec, n_tables, n_planes, dim):
+    """Pure-Catalyst reference form of sim.lsh_buckets_fast (what the
+    DuckDB oracles mirror): table t's bucket id sums 2^p over its
+    planes p whose signed dot <vec, plane_signs(t*n_planes + p)>,
+    a left fold in dimension order, is positive."""
+    def bit(plane):
+        signs = F.array(*[F.lit(s) for s in sim.plane_signs(plane, dim)])
+        dot = F.aggregate(F.zip_with(vec, signs, lambda x, s: x * s),
+                          F.lit(0.0), lambda acc, v: acc + v)
+        return (dot > 0).cast("int")
+
+    def table(first):
+        acc = F.lit(0)
+        for p in range(n_planes):
+            acc = acc + bit(first + p) * F.lit(1 << p)
+        return acc
+
+    return F.array(*[table(t * n_planes) for t in range(n_tables)])
+
+
 def test_lsh_buckets_fast_bit_identical(emb):
     """The Arrow-vectorized bucketing must equal the pure-Catalyst
     reference form on EVERY row (same left-fold association) — this is
@@ -415,7 +458,7 @@ def test_lsh_buckets_fast_bit_identical(emb):
     valid for the fast path."""
     mismatches = emb.select(
         sim.lsh_buckets_fast("embedding", 4, 8, 64).alias("fast"),
-        sim.lsh_buckets(F.col("embedding"), 4, 8, 64).alias("ref"),
+        _lsh_buckets(F.col("embedding"), 4, 8, 64).alias("ref"),
     ).filter("fast != ref").count()
     assert mismatches == 0
 
@@ -1292,6 +1335,33 @@ def test_simhash_bucket_cap(spark):
     assert stats["capped_buckets"] == 4
 
 
+def _winnow_fingerprints(text, k=3, w=4):
+    """Pure-Catalyst reference form of tx.winnow_fingerprints_fast (the
+    arithmetic the DuckDB oracle replays): portable_hash64 of every
+    k-word gram of the normalized text, each w-hash window's minimum,
+    distinct and sorted. Short docs (< k words) hash the whole text;
+    <= w grams yield one global minimum."""
+    from spatula_spark.urls import portable_hash64
+
+    ws = F.split(F.lower(F.regexp_replace(F.trim(text), "\\s+", " ")), " ")
+    n = F.size(ws)
+    gm = n - (k - 1)
+    gacc = F.slice(ws, 1, gm)
+    for j in range(1, k):
+        gacc = F.zip_with(gacc, F.slice(ws, j + 1, gm),
+                          lambda a, b: F.concat_ws(" ", a, b))
+    grams = F.when(n >= k, gacc).otherwise(F.array(F.array_join(ws, " ")))
+    hs = F.transform(grams, lambda g: portable_hash64(g))
+    m = F.size(hs)
+    sm = m - (w - 1)
+    sacc = F.slice(hs, 1, sm)
+    for j in range(1, w):
+        sacc = F.zip_with(sacc, F.slice(hs, j + 1, sm),
+                          lambda a, b: F.least(a, b))
+    sel = F.when(m > w, sacc).otherwise(F.array(F.array_min(hs)))
+    return F.array_sort(F.array_distinct(sel))
+
+
 def test_winnow_fingerprints_guarantee(spark):
     """Winnowing invariants (Schleimer et al.): (a) selected
     fingerprints are a subset of the doc's gram hashes at roughly
@@ -1311,7 +1381,7 @@ def test_winnow_fingerprints_guarantee(spark):
     out = {
         r["doc_id"]: set(r["fps"])
         for r in df.select(
-            "doc_id", tx.winnow_fingerprints(F.col("text")).alias("fps")
+            "doc_id", _winnow_fingerprints(F.col("text")).alias("fps")
         ).collect()
     }
     assert out[1] & out[2], "shared 6-word run must share a fingerprint"
@@ -1342,7 +1412,7 @@ def test_winnow_fingerprints_guarantee(spark):
     all_hashes = {r["h"] for r in grams.collect()}
     fps = set(
         long_doc.select(
-            F.explode(tx.winnow_fingerprints(F.col("text"))).alias("f")
+            F.explode(_winnow_fingerprints(F.col("text"))).alias("f")
         ).toPandas()["f"]
     )
     assert fps <= all_hashes
@@ -1364,7 +1434,7 @@ def test_winnow_fast_path_bit_identical(spark, docs):
         "doc_id", tx.winnow_fingerprints_fast(F.col("text")).alias("f")
     )
     ref = corpus.select(
-        "doc_id", tx.winnow_fingerprints(F.col("text")).alias("f")
+        "doc_id", _winnow_fingerprints(F.col("text")).alias("f")
     )
     got = {r["doc_id"]: r["f"] for r in fast.collect()}
     want = {r["doc_id"]: r["f"] for r in ref.collect()}

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 from spatula_spark.sources.warc import (
     _parse_record,
     _record_bytes,
+    http_reason,
     read_warc,
-    warc_record_str,
+    record_uuid,
     write_warc,
 )
 from spatula_spark.urls import surt_key
@@ -113,13 +114,37 @@ def test_corrupt_member_surfaces_as_digest_false(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["digest_ok"] is False
 
 
+def _warc_record_str(url, warc_date, status, content_type, payload_text):
+    """The full WARC record as text, the layout _record_bytes encodes:
+    the twin the warc_cdx query's Catalyst/DuckDB concat is pinned to
+    character for character."""
+    payload_len = len(payload_text.encode("utf-8"))
+    block = (
+        f"HTTP/1.1 {status} {http_reason(status)}\r\n"
+        f"Content-Type: {content_type}\r\n"
+        f"Content-Length: {payload_len}\r\n\r\n" + payload_text
+    )
+    digest = hashlib.sha256(payload_text.encode("utf-8")).hexdigest()
+    return (
+        "WARC/1.1\r\n"
+        "WARC-Type: response\r\n"
+        f"WARC-Record-ID: <urn:uuid:{record_uuid(url, warc_date)}>\r\n"
+        f"WARC-Date: {warc_date}\r\n"
+        f"WARC-Target-URI: {url}\r\n"
+        f"WARC-Payload-Digest: sha256:{digest}\r\n"
+        "Content-Type: application/http;msgtype=response\r\n"
+        f"Content-Length: {len(block.encode('utf-8'))}\r\n\r\n"
+        + block + "\r\n\r\n"
+    )
+
+
 def test_record_str_matches_record_bytes():
     for url, date, status, ct, payload in ROWS:
         try:
             text = payload.decode("utf-8")
         except UnicodeDecodeError:
             continue  # text twin only defined for utf-8 payloads
-        assert warc_record_str(url, date, status, ct, text).encode(
+        assert _warc_record_str(url, date, status, ct, text).encode(
             "utf-8"
         ) == _record_bytes(url, date, status, ct, payload)
 
