@@ -711,14 +711,15 @@ def _bpe_merges_oracle() -> str:
     iterative argmax the driver's single SQL statement cannot replay,
     so — like the codec-pinned image fingerprints — the literal table
     comes from an INDEPENDENT implementation (tx.bpe_python_twin, a
-    dict-based scan trainer sharing no code with the Spark loop) run
+    dict-based scan trainer sharing no code with either training
+    route, the driver trainer or the Spark loop) run
     over the same documents table the driver compares at
     (sf0.01 per the driver contract; SPARK_GRAFT_ORACLE_SF_DIR
     overrides for local runs at other scales). The honest asymmetry —
     the corpus read is pinned to that directory rather than the SQL
     views — is the same shape image_near_dup_phash documents, and the
     twin-vs-engine equivalence is separately pytest-pinned on an
-    adversarial corpus (escapes, overlaps, ties)."""
+    adversarial corpus (escapes, overlaps, ties), on both routes."""
     if not _BPE_MERGE_SQL_CACHE:
         import os
 
@@ -811,12 +812,16 @@ def bpe_encode_tokens_q(spark, sf_dir):
 @register("bpe_train_merges", _bpe_merges_oracle)
 def bpe_train_merges_q(spark, sf_dir):
     """Full BPE tokenizer training (tx.bpe_train_merges): 10 merges
-    over the documents corpus in rounds — each round one vocab-sized
-    pair-count aggregate, a ranked top-pairs collect from which the
-    driver accepts every merge sequential BPE would make next, and
-    those merges' boundary-anchored regexp re-segmentation of the
-    persisted vocabulary state. The merge sequence (step, pair, merged, count)
-    is integer/total-order deterministic, replayed bit-for-bit by the
+    over the documents corpus. One Spark action collects the
+    word-frequency table (31 distinct words at sf0.01), and the driver
+    trains on it incrementally, recounting only the words that hold
+    each merged pair. A vocabulary above the heap-derived cap trains in rounds
+    instead: each round one vocab-sized pair-count aggregate, a ranked
+    top-pairs collect from which the driver accepts every merge
+    sequential BPE would make next, and those merges' boundary-anchored
+    regexp re-segmentation of the persisted vocabulary state. The merge
+    sequence (step, pair, merged, count) is integer/total-order
+    deterministic on both routes, replayed bit-for-bit by the
     independent pure-Python twin that renders the oracle."""
     return tx.bpe_train_merges(_t(spark, sf_dir, "documents"), n_merges=10)
 

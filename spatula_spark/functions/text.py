@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_df, scoped_conf
+from ..session import _broadcast_rows_budget, local_df, scoped_conf
 
 # tiny embedded stopword lists for the language-ID heuristic; the
 # point is the *operator shape* (vectorized n-gram/marker scoring),
@@ -689,60 +689,89 @@ def _bpe_merge_batch(
     return batch
 
 
-def bpe_train_merges(
-    df: DataFrame, text_col: str = "text", n_merges: int = 10
-) -> DataFrame:
-    """Full distributed BPE tokenizer training (Sennrich et al. 2016):
-    ``n_merges`` merges in training order, the iterative loop
-    :func:`bpe_pair_counts` is the first round of.
+def _bpe_driver_vocab_max(spark) -> int:
+    """Distinct words :func:`bpe_train_merges` trains on the driver:
+    5% of the heap at ~1.5 KB per word, the word, its symbol list and
+    its pair-index entries (the tracemalloc peak of 1,000 merges over
+    100k random words of 2-14 letters); ~71k words at a 2 GiB heap,
+    ~860k at 24 GiB. A bigger vocabulary trains in the Spark loop."""
+    return _broadcast_rows_budget(spark, 0.05, 1500)
 
-    Scale shape — the loop never touches corpus-scale rows after the
-    single word-count pass: state is the Heaps-law vocabulary table
-    ``(n_w, syms)`` where ``syms`` packs the word's current
-    segmentation as ``SEP sym SEP ... SEP``. Each round runs one
-    vocab-sized pair count (map-side combined) and collects only its
-    top ``room + 1`` pairs, ``room`` being the merges still wanted. The
-    driver accepts the longest ranked prefix :func:`_bpe_merge_batch`
-    allows (no self-pair before the last member, no member overlapping
-    an earlier one, no earlier member's merged string already live, no
-    two members merging to one string, and a strict count drop after
-    the last member) and rewrites the packed string with that prefix's
-    merges chained in one persisted projection (:func:`_bpe_apply`).
-    Per-round state is persisted and the previous round unpersisted,
-    so lineage stays O(1) across rounds.
 
-    Exactness: a merge to a string not yet live lowers only the counts
-    of pairs overlapping it, and a pair it creates, ``(x, ab)``, is
-    bounded by the overlapping pair ``(x, a)``. The conditions keep
-    every such pair out of the accepted prefix, so each lies at or
-    below the first rejected pair, whose count is strictly below the
-    last member's: every member is the argmax at its own step, its
-    count this round is its sequential count, and a batch of one is
-    the plain argmax.
+def _bpe_train_local(
+    vocab: list[tuple[str, int]], n_merges: int
+) -> list[tuple[str, str, int]]:
+    """Sequential BPE over a driver-resident ``(word, n_w)`` vocabulary:
+    up to ``n_merges`` merges in training order as ``(left, right, n)``.
 
-    Determinism: integer counts; the tie-break is (count DESC, left
-    ASC, right ASC) — a total order, so the merge sequence is
-    replayable bit-for-bit by an independent trainer (the pure-Python
-    twin that renders the oracle literal table, pinned again by
-    pytest).
+    Incremental: a pair -> weighted-count map and a pair -> words index
+    are built once; each merge re-segments only the words holding the
+    merged pair and applies their pairs' count changes. A heap keyed
+    (-count, left, right) holds every pair count ever reached; an entry
+    whose count is no longer the pair's is skipped when popped, so the
+    top live entry is the (count DESC, left ASC, right ASC) argmax."""
+    import heapq
+    from collections import defaultdict
 
-    Returns (step, left_sym, right_sym, merged, n): the merge table a
-    tokenizer ships as its vocab, in training order."""
-    from .dedup import normalized_words
+    segs = [[*w, "</w>"] for w, _ in vocab]
+    weight = [n for _, n in vocab]
+    counts: dict[tuple[str, str], int] = defaultdict(int)
+    holders: dict[tuple[str, str], set[int]] = defaultdict(set)
+    for i, syms in enumerate(segs):
+        for pair in zip(syms, syms[1:]):
+            counts[pair] += weight[i]
+            holders[pair].add(i)
+    heap = [(-n, left, right) for (left, right), n in counts.items()]
+    heapq.heapify(heap)
+    merges: list[tuple[str, str, int]] = []
+    while heap and len(merges) < n_merges:
+        neg, left, right = heapq.heappop(heap)
+        if counts.get((left, right)) != -neg:
+            continue
+        merges.append((left, right, -neg))
+        merged = left + right
+        delta: dict[tuple[str, str], int] = defaultdict(int)
+        for i in holders.pop((left, right)):
+            old, new, j = segs[i], [], 0
+            # left to right without overlap: the BPE merge rule
+            while j < len(old):
+                if old[j] == left and old[j + 1:j + 2] == [right]:
+                    new.append(merged)
+                    j += 2
+                else:
+                    new.append(old[j])
+                    j += 1
+            for pair in zip(old, old[1:]):
+                delta[pair] -= weight[i]
+                holders[pair].discard(i)
+            for pair in zip(new, new[1:]):
+                delta[pair] += weight[i]
+                holders[pair].add(i)
+            segs[i] = new
+        for pair, d in delta.items():
+            if not d:
+                continue
+            counts[pair] += d
+            if counts[pair]:
+                heapq.heappush(heap, (-counts[pair], *pair))
+            else:
+                del counts[pair]
+                holders.pop(pair, None)
+    return merges
 
-    spark = df.sparkSession
-    sep = BPE_SEP
-    freq = (
-        df.select(F.explode(normalized_words(F.col(text_col))).alias("w"))
-        .filter((F.length("w") > 0) & (~F.col("w").contains(sep)))
-        .groupBy("w")
-        .agg(F.count("*").alias("n_w"))
-    )
+
+def _bpe_train_spark(
+    freq: DataFrame, n_merges: int
+) -> list[tuple[str, str, int]]:
+    """The batched Spark merge loop over a ``(w, n_w)`` vocabulary
+    DataFrame: up to ``n_merges`` merges in training order as
+    ``(left, right, n)`` (see :func:`bpe_train_merges`)."""
+    spark = freq.sparkSession
     cur = freq.select(
         "n_w", _bpe_segment(F.col("w")).alias("syms")
     ).persist()
     prev = None
-    merges: list[tuple[int, str, str, str, int]] = []
+    merges: list[tuple[str, str, int]] = []
     made: set[str] = set()
     # AQE is off from the count on, both confs restored after: its
     # per-stage re-planning dominates the sub-second jobs of this loop
@@ -778,11 +807,8 @@ def bpe_train_merges(
                     batch = _bpe_merge_batch(ranked, made, room)
                     if not batch:
                         break
-                    for left, right, n in batch:
-                        merges.append(
-                            (len(merges) + 1, left, right, left + right, n)
-                        )
-                        made.add(left + right)
+                    merges.extend(batch)
+                    made.update(left + right for left, right, _ in batch)
                     prev = cur
                     cur = cur.withColumn(
                         "syms", _bpe_apply(F.col("syms"), batch)
@@ -791,10 +817,95 @@ def bpe_train_merges(
         cur.unpersist()
         if prev is not None:
             prev.unpersist()
+    return merges
+
+
+def _bpe_train(
+    df: DataFrame, text_col: str, n_merges: int
+) -> list[tuple[str, str, int]]:
+    """BPE merges of ``df``'s ``text_col`` in training order as
+    ``(left, right, n)``, on the driver or in the Spark loop (see
+    :func:`bpe_train_merges`). The words are Spark's
+    ``normalized_words``, never re-normalized in Python: Java and
+    Python disagree on what ``\\s`` matches."""
+    from .dedup import normalized_words
+
+    freq = (
+        df.select(F.explode(normalized_words(F.col(text_col))).alias("w"))
+        .filter((F.length("w") > 0) & (~F.col("w").contains(BPE_SEP)))
+        .groupBy("w")
+        .agg(F.count("*").alias("n_w"))
+    )
+    spark = df.sparkSession
+    cap = _bpe_driver_vocab_max(spark)
+    # with AQE on, the aggregate's map stage would be a job of its own
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        vocab = freq.limit(cap + 1).toArrow()
+    if vocab.num_rows <= cap:
+        return _bpe_train_local(
+            list(zip(vocab["w"].to_pylist(), vocab["n_w"].to_pylist())),
+            n_merges,
+        )
+    return _bpe_train_spark(freq, n_merges)
+
+
+def bpe_train_merges(
+    df: DataFrame, text_col: str = "text", n_merges: int = 10
+) -> DataFrame:
+    """Full BPE tokenizer training (Sennrich et al. 2016): ``n_merges``
+    merges in training order, the iterative loop
+    :func:`bpe_pair_counts` is the first round of.
+
+    Scale shape — one corpus pass builds the Heaps-law word-frequency
+    table ``(w, n_w)``, collected as one Arrow table of at most
+    :func:`_bpe_driver_vocab_max` + 1 rows (the cap is derived from the
+    driver heap); no merge touches corpus-scale rows.
+
+    - A table within the cap trains on the driver, incrementally
+      (:func:`_bpe_train_local`): each merge recounts only the words
+      holding the merged pair. Training is that one Spark action.
+    - A bigger table trains in a batched Spark loop, which builds the
+      table again from the corpus (a second pass). Its state is the
+      vocabulary ``(n_w, syms)``, ``syms`` packing the word's current
+      segmentation as ``SEP sym SEP ... SEP``. Each round runs one
+      vocab-sized pair count (map-side combined) and collects its top
+      ``room + 1`` pairs, ``room`` being the merges still wanted. The
+      driver accepts the longest ranked prefix :func:`_bpe_merge_batch`
+      allows (no self-pair before the last member, no member
+      overlapping an earlier one, no earlier member's merged string
+      already live, no two members merging to one string, and a strict
+      count drop after the last member) and rewrites the packed string
+      with that prefix's merges chained in one persisted projection
+      (:func:`_bpe_apply`). Per-round state is persisted and the
+      previous round unpersisted, so lineage stays O(1) across rounds.
+
+    Exactness: the driver trainer is plain sequential BPE. In the Spark
+    loop, a merge to a string not yet live lowers only the counts of
+    pairs overlapping it, and a pair it creates, ``(x, ab)``, is
+    bounded by the overlapping pair ``(x, a)``. The batch conditions
+    keep every such pair out of the accepted prefix, so each lies at or
+    below the first rejected pair, whose count is strictly below the
+    last member's: every member is the argmax at its own step, its
+    count this round is its sequential count, and a batch of one is
+    the plain argmax. Both routes train on the words Spark normalized,
+    so they return the same merges.
+
+    Determinism: integer counts; the tie-break is (count DESC, left
+    ASC, right ASC) — a total order, so the merge sequence is
+    replayable bit-for-bit by an independent trainer (the pure-Python
+    twin that renders the oracle literal table, pinned again by
+    pytest on both routes).
+
+    Returns (step, left_sym, right_sym, merged, n): the merge table a
+    tokenizer ships as its vocab, in training order."""
+    merges = _bpe_train(df, text_col, n_merges)
     # a LocalRelation: scanning the merge table starts no Python worker
     return local_df(
-        spark,
-        merges,
+        df.sparkSession,
+        [
+            (step, left, right, left + right, n)
+            for step, (left, right, n) in enumerate(merges, 1)
+        ],
         "step int, left_sym string, right_sym string, merged string, "
         "n long",
     )
@@ -809,27 +920,22 @@ def bpe_encode_counts(
     """The inference side of BPE — tokenize the corpus under a trained
     merge table and count tokens per document (the number every
     training-data pipeline actually bills by). ``merges`` is the
-    ordered [(left, right), ...] list; None trains it on ``df`` via
-    :func:`bpe_train_merges` (train-then-tokenize, the self-contained
-    corpus-prep shape).
+    ordered [(left, right), ...] list; None trains it on ``df`` the
+    way :func:`bpe_train_merges` does, on the driver or in the Spark
+    loop by the same vocabulary cap (train-then-tokenize, the
+    self-contained corpus-prep shape).
 
     Scale shape: the merge chain is applied to the DISTINCT word table
     only — all ``n_merges`` boundary-anchored regexp_replaces fuse
-    into ONE vocab-sized projection (no loop jobs, unlike training,
-    which must recount pairs between rounds to know its next merges)
-    — and documents then count tokens via an explode + join on the
-    word key + per-doc sum, so corpus-scale rows never carry
-    segmentation strings. Returns (doc_id, n_words, n_tokens); docs
+    into ONE vocab-sized projection — and documents then count tokens
+    via an explode + join on the word key + per-doc sum, so
+    corpus-scale rows never carry segmentation strings. Returns (doc_id, n_words, n_tokens); docs
     with no words are omitted (explode semantics), matching the twin."""
     from .dedup import normalized_words
 
     sep = BPE_SEP
     if merges is None:
-        rows = bpe_train_merges(df, text_col, n_merges).collect()
-        merges = [
-            (r["left_sym"], r["right_sym"])
-            for r in sorted(rows, key=lambda r: r["step"])
-        ]
+        merges = _bpe_train(df, text_col, n_merges)
     toks = df.select(
         "doc_id", F.explode(normalized_words(F.col(text_col))).alias("w")
     ).filter((F.length("w") > 0) & (~F.col("w").contains(sep)))

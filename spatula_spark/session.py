@@ -111,6 +111,41 @@ def scoped_conf(
                 spark.conf.set(k, v)
 
 
+_MEM_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _parse_jvm_mem(s: str) -> int:
+    """'24g' / '4096m' / raw bytes -> bytes (JVM -Xmx spelling)."""
+    s = s.strip().lower().removesuffix("b")
+    if s and s[-1] in _MEM_SUFFIX:
+        return int(float(s[:-1]) * _MEM_SUFFIX[s[-1]])
+    return int(s)
+
+
+def _driver_heap(spark: SparkSession) -> int:
+    """The tighter of the driver and executor heaps (a broadcast also
+    lands on every executor); Spark's stock 1 GiB when neither is set.
+    Unset keys read as None: a raising lookup (a local master has no
+    executor memory) costs a py4j exception conversion per call."""
+    mems = [_parse_jvm_mem(v) for v in (
+        spark.conf.get(k, None)
+        for k in ("spark.driver.memory", "spark.executor.memory")) if v]
+    return min(mems) if mems else 1 << 30
+
+
+def _broadcast_rows_budget(
+    spark: SparkSession, frac: float = 0.10, row_bytes: int = 150,
+    heap: int | None = None,
+) -> int:
+    """Rows a broadcast or a driver-resident structure may hold:
+    ``frac`` of the heap (``_driver_heap`` unless given) at
+    ~``row_bytes``/row, at least 10,000. The defaults size a slim
+    frontier broadcast (url + path + input_json + hash-relation
+    overhead)."""
+    heap = heap if heap is not None else _driver_heap(spark)
+    return max(10_000, int(heap * frac) // row_bytes)
+
+
 _struct = functools.cache(T.StructType.fromDDL)  # DDL -> StructType
 
 

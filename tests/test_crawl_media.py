@@ -221,10 +221,7 @@ def test_broadcast_fetch_cap_derives_from_memory_budget(spark):
     """The default broadcast-fetch cap follows the driver heap (10% at
     ~150 B/row) instead of a fixed row count that OOMs stock 1 GiB
     drivers."""
-    from spatula_spark.plans.engine import (
-        _broadcast_rows_budget,
-        _parse_jvm_mem,
-    )
+    from spatula_spark.session import _broadcast_rows_budget, _parse_jvm_mem
 
     assert _parse_jvm_mem("1g") == 1 << 30
     assert _parse_jvm_mem("4096m") == 4096 << 20
@@ -596,7 +593,7 @@ def test_driver_caps_derive_from_heap(spark, store):
     """The driver-python-structure caps scale with the provisioned
     driver heap (the round-4 'literals don't scale' amber): 5% of heap
     at the structure's bytes/key, never below the 10k floor."""
-    from spatula_spark.plans.engine import _parse_jvm_mem
+    from spatula_spark.session import _parse_jvm_mem
 
     eng = CrawlEngine(spark, media_registry(), page_store=store,
                       config=CrawlConfig())

@@ -1857,14 +1857,27 @@ def test_duplicate_spans_n50_hashed_matches_twin(spark):
     assert got_str == got
 
 
-def test_bpe_encode_counts_matches_python_twin(spark):
+def _spy_ranked_pairs(monkeypatch):
+    """Record each ranked-pair round of the Spark merge loop."""
+    from spatula_spark.functions import text as tx
+
+    rounds = []
+    real = tx._bpe_ranked_pairs
+
+    def spy(state, k):
+        rounds.append(k)
+        return real(state, k)
+
+    monkeypatch.setattr(tx, "_bpe_ranked_pairs", spy)
+    return rounds
+
+
+def test_bpe_encode_counts_matches_python_twin(spark, monkeypatch):
     """Train-then-tokenize agrees with the independent scan-replay
-    twin per document, and merged symbols actually compress: a word
+    twin per document on both training routes (the Spark loop at
+    vocabulary cap 0), and merged symbols actually compress: a word
     made of trained merges costs fewer tokens than chars+1."""
-    from spatula_spark.functions.text import (
-        bpe_encode_counts,
-        bpe_encode_python_twin,
-    )
+    from spatula_spark.functions import text as tx
 
     texts = [
         (0, "the cat sat on the mat"),
@@ -1874,12 +1887,19 @@ def test_bpe_encode_counts_matches_python_twin(spark):
         (4, ""),
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["n_words"], r["n_tokens"])
-        for r in bpe_encode_counts(df, n_merges=12).collect()
-    }
-    twin = bpe_encode_python_twin(texts, 12)
-    assert got == twin["per_doc"]
+    twin = tx.bpe_encode_python_twin(texts, 12)
+    rounds = _spy_ranked_pairs(monkeypatch)
+    for route in ("driver", "spark"):
+        if route == "spark":
+            monkeypatch.setattr(
+                tx, "_bpe_driver_vocab_max", lambda spark: 0
+            )
+        got = {
+            r["doc_id"]: (r["n_words"], r["n_tokens"])
+            for r in tx.bpe_encode_counts(df, n_merges=12).collect()
+        }
+        assert bool(rounds) == (route == "spark")
+        assert got == twin["per_doc"], route
     assert 4 not in got  # empty doc omitted on both sides
     for doc, (nw, nt) in got.items():
         assert nt >= nw  # at least one token per word
@@ -1901,45 +1921,58 @@ BPE_END_MARKER_CORPUS = [
 BPE_SELF_PAIR_CORPUS = ["aaab aaac aaad xyq xyr"]
 
 
-@pytest.mark.parametrize(
-    "texts, n_merges",
-    [
-        (
-            [
-                "the cat sat on the mat",
-                "the cats eat the rats",
-                "low lower lowest newer newest",
-                "  Mixed   CASE   text  with.punct, and $dollar\\back ",
-                "aaaa aaaa aa a",
-                "x.y x.y (par) (par) [br] c++ c++",
-                "",
-            ],
-            15,
-        ),
-        (BPE_END_MARKER_CORPUS, 15),
-        (BPE_SELF_PAIR_CORPUS, 5),
-    ],
-    ids=["adversarial", "end_marker", "self_pair"],
-)
-def test_bpe_train_merges_matches_python_twin(spark, texts, n_merges):
-    """The distributed merge loop replays the independent dict-based
-    trainer bit-for-bit: regex metachars and Java-replacement specials
-    ($, backslash) inside symbols, overlapping merge runs (aaaa -> aa
-    aa, not aa a a), count ties broken (left ASC, right ASC), an empty
-    document, a merge re-creating the live end marker, and a self-pair
-    whose merge creates a pair that outranks the next disjoint one."""
-    from spatula_spark.functions.text import (
-        bpe_python_twin,
-        bpe_train_merges,
-    )
+BPE_TWIN_CASES = {
+    "adversarial": (
+        [
+            "the cat sat on the mat",
+            "the cats eat the rats",
+            "low lower lowest newer newest",
+            "  Mixed   CASE   text  with.punct, and $dollar\\back ",
+            "aaaa aaaa aa a",
+            "x.y x.y (par) (par) [br] c++ c++",
+            "",
+        ],
+        15,
+    ),
+    "end_marker": (BPE_END_MARKER_CORPUS, 15),
+    "self_pair": (BPE_SELF_PAIR_CORPUS, 5),
+}
 
+
+# the driver route keeps the bare case ids; "-spark" forces the loop
+@pytest.mark.parametrize(
+    "case, route",
+    [(c, "driver") for c in BPE_TWIN_CASES]
+    + [(c, "spark") for c in BPE_TWIN_CASES],
+    ids=list(BPE_TWIN_CASES) + [f"{c}-spark" for c in BPE_TWIN_CASES],
+)
+def test_bpe_train_merges_matches_python_twin(
+    spark, monkeypatch, case, route
+):
+    """Both training routes replay the independent dict-based trainer
+    bit-for-bit: the driver trainer at the default vocabulary cap and
+    the distributed merge loop at cap 0. The corpora hold regex
+    metachars and Java-replacement specials ($, backslash) inside
+    symbols, overlapping merge runs (aaaa -> aa aa, not aa a a), count
+    ties broken (left ASC, right ASC), an empty document, a merge
+    re-creating the live end marker, and a self-pair whose merge
+    creates a pair that outranks the next disjoint one."""
+    from spatula_spark.functions import text as tx
+
+    texts, n_merges = BPE_TWIN_CASES[case]
+    rounds = _spy_ranked_pairs(monkeypatch)
+    if route == "spark":
+        monkeypatch.setattr(tx, "_bpe_driver_vocab_max", lambda spark: 0)
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = [
-        tuple(r) for r in bpe_train_merges(df, n_merges=n_merges).collect()
+        tuple(r)
+        for r in tx.bpe_train_merges(df, n_merges=n_merges).collect()
     ]
-    want = bpe_python_twin(texts, n_merges)
+    want = tx.bpe_python_twin(texts, n_merges)
+    # the route under test is the one that ran
+    assert bool(rounds) == (route == "spark")
     assert len(got) == n_merges
     assert got == want
     # training order: steps sequential; a count rises only right after
@@ -1962,18 +1995,25 @@ def _merge_scan(syms, left, right):
     return out
 
 
-def _batched_bpe(texts, n_merges, rule):
-    """Plain-Python BPE trainer that accepts each round's merges through
-    ``rule`` (the batch rule's signature): returns (merges, rounds)."""
+def _word_freq(texts):
+    """Word -> count of whitespace-normalized, lower-cased ``texts``."""
     import re
     from collections import Counter
 
-    wf = Counter(
+    return Counter(
         w
         for t in texts
         for w in re.sub(r"\s+", " ", t.strip()).lower().split(" ")
         if w
     )
+
+
+def _batched_bpe(texts, n_merges, rule):
+    """Plain-Python BPE trainer that accepts each round's merges through
+    ``rule`` (the batch rule's signature): returns (merges, rounds)."""
+    from collections import Counter
+
+    wf = _word_freq(texts)
     segs = {w: list(w) + ["</w>"] for w in wf}
     made, merges, rounds = set(), [], 0
     while len(merges) < n_merges:
@@ -2021,13 +2061,18 @@ def _candidate_only_rule(ranked, made, room):
 
 
 def test_bpe_merge_batch_replays_sequential_twin():
-    """The batch rule, driven by a plain pair counter, reproduces the
-    one-merge-per-round twin's merge list exactly on seeded random
+    """The batch rule, driven by a plain pair counter, and the driver
+    trainer, fed the word counts in a shuffled order, each reproduce
+    the one-merge-per-round twin's merge list exactly on seeded random
     corpora over alphabets holding the end-marker characters and the
     regex/replacement specials, plus the two pinned corpora."""
     import random
 
-    from spatula_spark.functions.text import _bpe_merge_batch, bpe_python_twin
+    from spatula_spark.functions.text import (
+        _bpe_merge_batch,
+        _bpe_train_local,
+        bpe_python_twin,
+    )
 
     rng = random.Random(20160)
     alphabets = ["ab", "abc", "aw/<>", "</w>$\\.", "a<w/>$\\.", "abcdefg"]
@@ -2040,8 +2085,18 @@ def test_bpe_merge_batch_replays_sequential_twin():
         ]
         cases.append((texts, rng.randint(1, 30)))
     for texts, n_merges in cases:
+        want = bpe_python_twin(texts, n_merges)
         got, _ = _batched_bpe(texts, n_merges, _bpe_merge_batch)
-        assert got == bpe_python_twin(texts, n_merges), (texts, n_merges)
+        assert got == want, (texts, n_merges)
+        vocab = list(_word_freq(texts).items())
+        rng.shuffle(vocab)
+        local = [
+            (step, left, right, left + right, n)
+            for step, (left, right, n) in enumerate(
+                _bpe_train_local(vocab, n_merges), 1
+            )
+        ]
+        assert local == want, (texts, n_merges)
 
 
 def test_bpe_end_marker_corpus_rejects_candidate_only_rule():
@@ -2057,19 +2112,10 @@ def test_bpe_end_marker_corpus_rejects_candidate_only_rule():
     assert wrong != want
 
 
-def test_bpe_train_merges_collects_once_per_batched_round(
-    spark, monkeypatch
-):
-    """On a corpus shaped like the benchmark's documents (a few dozen
-    repeated words), training collects its ranked pairs once per round
-    the batch rule needs — fewer rounds than merges."""
+def _bench_shaped_texts():
+    """60 documents of 8-90 words drawn from a 31-word vocabulary, the
+    shape of the benchmark's ``documents`` table."""
     import random
-
-    from spatula_spark.functions.text import (
-        _bpe_merge_batch,
-        bpe_python_twin,
-        bpe_train_merges,
-    )
 
     rng = random.Random(3)
     vocab = (
@@ -2077,13 +2123,27 @@ def test_bpe_train_merges_collects_once_per_batched_round(
         "order vector line data table agg value key stream window spark a "
         "group part big sort query fast the"
     ).split()
-    texts = [
+    return [
         " ".join(rng.choice(vocab) for _ in range(rng.randint(8, 90)))
         for _ in range(60)
     ]
-    want, rounds = _batched_bpe(texts, 10, _bpe_merge_batch)
-    assert want == bpe_python_twin(texts, 10)
-    assert rounds < 10
+
+
+def test_bpe_train_merges_collects_once_per_batched_round(
+    spark, monkeypatch
+):
+    """Forced onto the Spark merge loop (vocabulary cap 0), training on
+    a corpus shaped like the benchmark's documents collects its ranked
+    pairs once per round the batch rule needs — fewer rounds than
+    merges — and still matches the twin."""
+    from spatula_spark.functions import text as tx
+
+    texts = _bench_shaped_texts()
+    want, rounds = _batched_bpe(texts, 10, tx._bpe_merge_batch)
+    assert want == tx.bpe_python_twin(texts, 10)
+    assert 0 < rounds < 10
+    monkeypatch.setattr(tx, "_bpe_driver_vocab_max", lambda spark: 0)
+    ranked = _spy_ranked_pairs(monkeypatch)
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
@@ -2095,10 +2155,51 @@ def test_bpe_train_merges_collects_once_per_batched_round(
         return real_collect(self)
 
     monkeypatch.setattr(type(df), "collect", spy)
-    out = bpe_train_merges(df, n_merges=10)
+    out = tx.bpe_train_merges(df, n_merges=10)
+    assert len(ranked) == rounds
     assert len(calls) == rounds
     monkeypatch.undo()
     assert [tuple(r) for r in out.collect()] == want
+
+
+def test_bpe_train_merges_trains_on_the_driver_in_one_action(
+    spark, monkeypatch
+):
+    """At the default vocabulary cap, training the benchmark-shaped
+    corpus takes one DataFrame action, the vocabulary's ``toArrow``,
+    which runs as one Spark job, and no ranked-pair round."""
+    from spatula_spark.functions import text as tx
+
+    texts = _bench_shaped_texts()
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    ranked = _spy_ranked_pairs(monkeypatch)
+    actions = []
+    cls = type(df)
+    for name in ("collect", "toArrow", "toPandas", "count", "take",
+                 "head", "first", "toLocalIterator", "foreach",
+                 "foreachPartition"):
+        def spy(self, *a, _name=name, _real=getattr(cls, name), **k):
+            actions.append(_name)
+            return _real(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("bpe-train", "bpe_train_merges")
+    try:
+        out = tx.bpe_train_merges(df, n_merges=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert actions == ["toArrow"]
+    assert not ranked
+    monkeypatch.undo()
+    # read once the training's jobs have been posted
+    spark.range(1).collect()
+    assert len(sc.statusTracker().getJobIdsForGroup("bpe-train")) == 1
+    assert [tuple(r) for r in out.collect()] == tx.bpe_python_twin(
+        texts, 10
+    )
 
 
 def test_zorder_key_and_locality(spark):
