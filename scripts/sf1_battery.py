@@ -209,7 +209,7 @@ def run_scale(spark, tag: str, n_docs: int, n_vecs: int, n_events: int,
         .filter(F.col("cent_id").isNotNull())
         .localCheckpoint()
     )
-    out["sem_cands"] = dd._capped_bucket_pairs(
+    out["sem_cands"] = dd._bucket_pairs(
         s_asg, ["cent_id"], "cid", 64, payload_c="cv").count()
     out["sem_cand_s"] = round(time.time() - t, 2)
     t = time.time()

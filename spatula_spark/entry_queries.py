@@ -1065,7 +1065,7 @@ def dedup_lsh_capped_q(spark, sf_dir):
     98.7x candidate volume at 10x rows in the sf1 battery), and the
     LSH pipeline runs with max_bucket=16. Buckets above the cap emit
     star edges to the bucket-min doc instead of all pairs
-    (functions/dedup.py _capped_bucket_pairs); DuckDB replicates the
+    (functions/dedup.py _cap_buckets); DuckDB replicates the
     same rule (bucket counts -> full pairs below the cap, hub stars
     above) so the hash match pins the capped candidate semantics — the
     100 TB safety valve — not just the happy path."""

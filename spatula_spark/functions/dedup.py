@@ -9,11 +9,21 @@ oracle reproduces signatures bit-for-bit.
 
 Scale shapes:
 * exact: one hash-aggregate on the fingerprint (map-side partial).
-* MinHash/LSH: per-doc signature (narrow) -> explode bands (xB rows)
-  -> self-join on (band, signature) buckets — the join keys are
-  64-bit, the payload slim; candidate verification re-joins the two
-  shingle arrays only for the candidate sliver.
-* SimHash: explode words -> 32 conditional sums per doc (one shuffle).
+* MinHash/LSH: per-doc signature (narrow Arrow UDF) -> explode bands
+  (xB rows) -> bucket join on (band, md5 band signature), the payload
+  slim; verification joins the text column back onto the candidate
+  sliver only and scores exact Jaccard in one Arrow UDF.
+* SimHash: 64-bit, per doc from native md5 hash transforms over the
+  word array and an Arrow bit-fold — no word explode, no shuffle;
+  near-dups are a banded or multi-index hamming bucket join.
+* One bucket join: every banded or bucketed near-dup operator (LSH,
+  SimHash / hamming bands, multi-index hamming, embedding LSH,
+  SemDeDup clusters) finds candidates with :func:`_bucket_pairs` — a
+  join on the bucket keys with ``l.id < r.id``, then ``distinct``.
+  Its one cap rule, :func:`_cap_buckets` (``max_bucket``): a bucket
+  over the cap keeps only its min-id hub in the join and reaches its
+  other members by hub -> member star edges (O(m) rows, not O(m^2)),
+  sized by a map-side aggregate and join-back, never a window.
 """
 
 from __future__ import annotations
@@ -178,43 +188,43 @@ def _bucket_cap_stats(
     )
 
 
-def _capped_bucket_pairs(
+def _cap_buckets(
     bands: DataFrame,
     key_cols: list[str],
     id_c: str,
-    max_bucket: int,
+    max_bucket: int | None,
     payload_c: str | None = None,
     stats: dict | None = None,
-) -> DataFrame:
-    """Within-bucket (a < b) candidate pairs with a mega-bucket cap.
+) -> tuple[DataFrame, DataFrame | None]:
+    """The mega-bucket cap of every bucket join: ``(kept, stars)``.
 
-    Buckets of <= ``max_bucket`` rows emit every pair (the complete
-    LSH/pigeonhole contract); larger buckets emit STAR edges from the
-    bucket-min id to each member instead — connectivity-equivalent for
-    the connected-components consumer (a clique and a star have the
-    same components) while turning the worst case from O(m^2) rows per
-    bucket to O(m). The repo's sf1 battery measured 98.7x banded
-    candidate growth at 10x rows on boilerplate-heavy corpora without
-    this cap; with it, growth is bounded linear by construction.
+    ``max_bucket=None`` is no cap: ``(bands, None)``, nothing planned.
+    Otherwise a bucket of <= ``max_bucket`` rows keeps every member in
+    ``kept``; a bigger bucket keeps only its min-id hub there, and
+    ``stars`` holds its hub -> member edges ``(_a, _b[, _pa, _pb])``
+    instead — connectivity-equivalent for the connected-components
+    consumer (a clique and a star have the same components) while
+    turning the worst case from O(m^2) rows per bucket to O(m). The
+    repo's sf1 battery measured 98.7x banded candidate growth at 10x
+    rows on boilerplate-heavy corpora without this cap; with it,
+    growth is bounded linear by construction.
 
     Completeness caveat (documented contract): pairs internal to a
     capped bucket are represented transitively through the hub, so a
     pair-level consumer that verifies with a radius/threshold may
-    reject a hub edge a full clique would have kept. Use
-    ``max_bucket=None`` in the callers when exact pair enumeration
-    matters more than bounded cost.
-
-    Returns columns ``(_a, _b[, _pa, _pb])`` — ids and, when
-    ``payload_c`` is given, the payload (fingerprint) of each side.
-    Bucket-min hubs guarantee ``_a < _b``.
+    reject a hub edge a full clique would have kept; an uncapped
+    caller keeps exact pair enumeration.
 
     Invariant: the ``key_cols`` are non-null. Every caller's keys are
     (band literal, md5 band signature), (band literal, bit block of a
-    fingerprint), or a null-filtered cluster id. The stats join-back drops a
-    null-key row (a null fingerprint), which then emits nothing — the
-    same as in the uncapped equi-join — whereas a count/min window
-    would have pooled every null key into one bucket.
+    fingerprint), (table, hyperplane bucket) or a null-filtered
+    cluster id. The stats join-back drops a null-key row (a null
+    fingerprint), which then emits nothing — the same as in the
+    uncapped equi-join — whereas a count/min window would have pooled
+    every null key into one bucket.
     """
+    if max_bucket is None:
+        return bands, None
     pay = [payload_c] if payload_c else []
     hub_struct = F.struct(
         F.col(id_c).alias("i"), *[F.col(c).alias("p") for c in pay]
@@ -232,32 +242,58 @@ def _capped_bucket_pairs(
         F.count(F.lit(1)).alias("_bn"),
         F.min(hub_struct).alias("_hub"),
     )
-    b2 = bands.join(bstats, key_cols).select(
-        id_c, *pay, *key_cols, "_bn", "_hub"
+    b2 = bands.join(bstats, key_cols)
+    big = F.col("_bn") > max_bucket
+    hub = F.col(id_c) == F.col("_hub.i")
+    kept = b2.filter(~big | hub).select(id_c, *pay, *key_cols)
+    stars = b2.filter(big & ~hub).select(
+        F.col("_hub.i").alias("_a"),
+        F.col(id_c).alias("_b"),
+        *([F.col("_hub.p").alias("_pa"), F.col(payload_c).alias("_pb")]
+          if payload_c else []),
     )
-    small = b2.filter(F.col("_bn") <= max_bucket)
-    sl, sr = small.alias("l"), small.alias("r")
+    if stats is not None:
+        _bucket_cap_stats(bands, key_cols, max_bucket, stats)
+    return kept, stars
+
+
+def _bucket_pairs(
+    bands: DataFrame,
+    key_cols: list[str],
+    id_c: str,
+    max_bucket: int | None,
+    payload_c: str | None = None,
+    stats: dict | None = None,
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """The one bucket join of every near-dup operator: distinct
+    ``(_a < _b)`` id pairs that share a bucket (equal ``key_cols``),
+    plus the payload (fingerprint, vector) of each side as ``_pa`` /
+    ``_pb`` when ``payload_c`` is given.
+
+    The buckets are capped by :func:`_cap_buckets` (``max_bucket``;
+    ``None`` = every pair) and its star edges are unioned in. A hub is
+    alone in its kept bucket, so it forms no self-pair there, and
+    bucket-min hubs keep ``_a < _b``. ``probe`` (same columns as
+    ``bands``) replaces the kept bands on the left side of the join —
+    the multi-index hamming scheme probes with flipped keys."""
+    kept, stars = _cap_buckets(
+        bands, key_cols, id_c, max_bucket, payload_c, stats
+    )
+    pay = [payload_c] if payload_c else []
+    l, r = (kept if probe is None else probe).alias("l"), kept.alias("r")
     cond = F.col(f"l.{id_c}") < F.col(f"r.{id_c}")
     for k in key_cols:
         cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    out_cols = [
+    pairs = l.join(r, cond).select(
         F.col(f"l.{id_c}").alias("_a"),
         F.col(f"r.{id_c}").alias("_b"),
-    ] + [F.col(f"l.{c}").alias("_pa") for c in pay] + [
-        F.col(f"r.{c}").alias("_pb") for c in pay
-    ]
-    pairs = sl.join(sr, cond).select(*out_cols)
-    star_cols = [
-        F.col("_hub.i").alias("_a"),
-        F.col(id_c).alias("_b"),
-    ] + ([F.col("_hub.p").alias("_pa"), F.col(payload_c).alias("_pb")]
-         if payload_c else [])
-    stars = b2.filter(
-        (F.col("_bn") > max_bucket) & (F.col(id_c) != F.col("_hub.i"))
-    ).select(*star_cols)
-    if stats is not None:
-        _bucket_cap_stats(bands, key_cols, max_bucket, stats)
-    return pairs.union(stars).distinct()
+        *[F.col(f"l.{c}").alias("_pa") for c in pay],
+        *[F.col(f"r.{c}").alias("_pb") for c in pay],
+    )
+    if stars is not None:
+        pairs = pairs.union(stars)
+    return pairs.distinct()
 
 
 def _band_table(
@@ -267,7 +303,13 @@ def _band_table(
     ``(doc_id, band, bsig)`` — the probe/build key table of every LSH
     join (self-join dedup, delta-vs-corpus incremental dedup). bsig is
     md5 over the band's ``band_rows`` signature columns, so bucket
-    keys are fixed-width strings regardless of ``band_rows``."""
+    keys are fixed-width strings regardless of ``band_rows``, which must
+    divide ``num_perms`` (a remainder would be hashed and never used)."""
+    if band_rows < 1 or num_perms % band_rows:
+        raise ValueError(
+            f"band_rows must be a positive divisor of num_perms "
+            f"(got band_rows={band_rows}, num_perms={num_perms})"
+        )
     n_bands = num_perms // band_rows
     return sig.select(
         "doc_id",
@@ -305,7 +347,7 @@ def lsh_candidate_pairs(
 
     ``max_bucket`` caps mega-buckets (boilerplate cliques): buckets
     above it emit star edges to the bucket-min doc instead of all
-    pairs — see :func:`_capped_bucket_pairs` for the exact contract."""
+    pairs — see :func:`_cap_buckets` for the exact contract."""
     # EAGER localCheckpoint, not lazy persist: the self-join's two
     # shuffle legs run concurrently, and with a lazy cache both legs
     # race past the empty cache and compute the whole signature
@@ -313,26 +355,9 @@ def lsh_candidate_pairs(
     # stage). Checkpoint blocks free on driver GC (no unpersist leak).
     sig = minhash_signatures(df, text_col, num_perms, n).localCheckpoint()
     bands = _band_table(sig, num_perms, band_rows)
-    if max_bucket is not None:
-        return _capped_bucket_pairs(
-            bands, ["band", "bsig"], "doc_id", max_bucket, stats=stats
-        ).select(
-            F.col("_a").alias("doc_a"), F.col("_b").alias("doc_b")
-        )
-    left = bands.alias("l")
-    right = bands.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bsig") == F.col("r.bsig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    return _bucket_pairs(
+        bands, ["band", "bsig"], "doc_id", max_bucket, stats=stats
+    ).select(F.col("_a").alias("doc_a"), F.col("_b").alias("doc_b"))
 
 
 def _shingle_set(t: str, n: int) -> set:
@@ -403,7 +428,7 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> band -> bucket-join
     -> exact-Jaccard verify. ``max_bucket`` bounds mega-bucket candidate
-    blowup (see :func:`_capped_bucket_pairs`)."""
+    blowup (see :func:`_cap_buckets`)."""
     df = df.persist()  # read by both the signature and the verify stage
     cands = lsh_candidate_pairs(
         df, text_col, num_perms, band_rows, n, max_bucket, stats
@@ -448,7 +473,8 @@ def incremental_near_dups(
     ``base_id`` may shift from the global best to the representative,
     which is why the gate-scale battery query runs uncapped.
     ``stats`` (opt-in) is filled with the same cap telemetry as
-    :func:`_capped_bucket_pairs`.
+    :func:`_cap_buckets`, which caps the base side here (its star
+    edges are not needed: a delta doc meets the representative).
 
     The ``(band, bsig)`` bucket keys are never null (``bsig`` is md5
     over ``concat_ws``, which skips nulls), so the cap's stats
@@ -458,28 +484,17 @@ def incremental_near_dups(
     # verify stage) — same lifecycle as minhash_dedup_pairs
     base = base.persist()
     delta = delta.persist()
-    bands_b = _band_table(
-        minhash_signatures(base, text_col, num_perms, n),
-        num_perms, band_rows,
+    bands_b, _ = _cap_buckets(
+        _band_table(
+            minhash_signatures(base, text_col, num_perms, n),
+            num_perms, band_rows,
+        ),
+        ["band", "bsig"], "doc_id", max_bucket, stats=stats,
     )
     bands_d = _band_table(
         minhash_signatures(delta, text_col, num_perms, n),
         num_perms, band_rows,
     )
-    if max_bucket is not None:
-        # map-side aggregate + join back, not count/min windows over
-        # the bucket key (the mega-bucket single-task-buffering flaw —
-        # see _capped_bucket_pairs)
-        bstats = bands_b.groupBy("band", "bsig").agg(
-            F.count(F.lit(1)).alias("_bn"),
-            F.min("doc_id").alias("_rep"),
-        )
-        b2 = bands_b.join(bstats, ["band", "bsig"])
-        if stats is not None:
-            _bucket_cap_stats(bands_b, ["band", "bsig"], max_bucket, stats)
-        bands_b = b2.filter(
-            (F.col("_bn") <= max_bucket) | (F.col("doc_id") == F.col("_rep"))
-        ).select("doc_id", "band", "bsig")
     cands = (
         bands_d.alias("d")
         .join(
@@ -878,7 +893,7 @@ def simhash_near_dups(
     over a 32-bit hash, which degenerated toward all-pairs beyond ~10^5
     docs) — expected within-bucket candidates shrink ~N^2/65536 per
     band; ``max_bucket`` bounds the residual identical-fingerprint
-    clique case (see :func:`_capped_bucket_pairs`).
+    clique case (see :func:`_cap_buckets`).
 
     The banded join itself is :func:`hamming_near_dups` at n_bands=4
     (identical quarter-key scheme — one implementation, one cap)."""
@@ -907,7 +922,9 @@ def hamming_near_dups(
     """Generic hamming-radius self-join over any 64-bit fingerprint
     column (SimHash, DCT image pHash, audio fingerprints, ...).
 
-    Two complete schemes, auto-selected:
+    Two complete schemes, auto-selected; both are the bucket join
+    :func:`_bucket_pairs` on ``(band, key)`` followed by an exact
+    hamming filter:
 
     * **banded** (``n_bands`` given, or radius <= 3): ``n_bands``
       disjoint bands of ``64/n_bands`` bits; <= ``max_hamming`` flips
@@ -922,24 +939,27 @@ def hamming_near_dups(
       ``max_hamming // 4`` of the flips, so expanding ONE join side's
       block key by all <=q-bit flips (q=1 -> 17 keys, q=2 -> 137) and
       matching the other side exactly is complete — with 65,536
-      buckets per block (Norouzi et al., multi-index hashing). Both
-      schemes are asserted equal to the brute-force all-pairs join in
-      tests.
+      buckets per block (Norouzi et al., multi-index hashing). The
+      expansion masks are plan-build-time literals; the join is a
+      plain equi-join on (block, key), so it shuffles short keys only
+      and AQE handles skewed buckets. Both schemes are asserted equal
+      to the brute-force all-pairs join in tests.
 
     ``max_bucket`` caps identical-fingerprint mega-buckets in either
     scheme (star edges to the bucket-min id above the cap, the
-    connectivity-preserving contract of :func:`_capped_bucket_pairs`);
-    ``stats`` receives cap telemetry when given.
+    connectivity-preserving contract of :func:`_cap_buckets`);
+    ``stats`` receives cap telemetry when given. In the multi-index
+    scheme the cap applies to the exact side: probe rows from outside
+    a capped bucket meet only its hub (the lossy, documented trade —
+    an outside probe within radius of a member but not hub-connected
+    through any other small bucket is dropped).
     """
-    if n_bands is None and 3 < max_hamming <= 11:
-        return _mih_near_dups(
-            df, id_col, hash_col, max_hamming, max_bucket, stats
-        )
+    mih = n_bands is None and 3 < max_hamming <= 11
     if n_bands is None:
-        n_bands = max_hamming + 1
+        n_bands = 4 if mih else max_hamming + 1
     if not (0 < n_bands <= 64 and 64 % n_bands == 0):
         raise ValueError("n_bands must divide 64")
-    if max_hamming >= n_bands:
+    if max_hamming >= n_bands and not mih:
         raise ValueError(
             f"completeness needs max_hamming < n_bands "
             f"(got {max_hamming} >= {n_bands})"
@@ -962,145 +982,27 @@ def hamming_near_dups(
             ])
         ).alias("bk"),
     ).select("_id", "_h", "bk.b", "bk.key")
-    if max_bucket is not None:
-        cands = _capped_bucket_pairs(
-            bands, ["b", "key"], "_id", max_bucket, "_h", stats
-        ).select(
-            F.col("_a").alias(id_col + "_a"),
-            F.col("_b").alias(id_col + "_b"),
-            F.col("_pa").alias("_ha"),
-            F.col("_pb").alias("_hb"),
+    probe = None
+    if mih:  # probe side: every <=q-flip variant of each block key
+        masks = [0] + [1 << j for j in range(16)]
+        if max_hamming // 4 >= 2:
+            masks += [(1 << i) | (1 << j)
+                      for i in range(16) for j in range(i + 1, 16)]
+        probe = bands.select(
+            "_id", "_h", "b",
+            F.explode(F.transform(
+                F.array(*[F.lit(m) for m in masks]),
+                lambda m: F.col("key").bitwiseXOR(m),
+            )).alias("key"),
         )
-    else:
-        l, r = bands.alias("l"), bands.alias("r")
-        cands = (
-            l.join(
-                r,
-                (F.col("l.b") == F.col("r.b"))
-                & (F.col("l.key") == F.col("r.key"))
-                & (F.col("l._id") < F.col("r._id")),
-            )
-            .select(
-                F.col("l._id").alias(id_col + "_a"),
-                F.col("r._id").alias(id_col + "_b"),
-                F.col("l._h").alias("_ha"),
-                F.col("r._h").alias("_hb"),
-            )
-            .distinct()
-        )
-    ham = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-    return cands.select(
-        id_col + "_a", id_col + "_b", ham.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def _mih_near_dups(
-    df: DataFrame,
-    id_col: str,
-    hash_col: str,
-    max_hamming: int,
-    max_bucket: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Multi-index hamming join: 4 x 16-bit blocks, left-side key
-    expansion by all <=(max_hamming//4)-bit flips (see
-    hamming_near_dups docstring). Expansion masks are plan-build-time
-    literals; the join itself is a plain equi-join on (block, key), so
-    it shuffles short keys only and AQE handles skewed buckets.
-
-    ``max_bucket`` caps the EXACT side's (block, key) buckets — the
-    quadratic core of a fingerprint mega-clique is the equal-key
-    bucket every member shares in all 4 blocks. Members of a capped
-    bucket are replaced on the join side by the bucket-min hub and
-    reconnected to it by star edges; probe rows from outside the
-    bucket therefore meet only the hub (the lossy, documented trade:
-    an outside probe within radius of a member but not hub-connected
-    through any other small bucket is dropped — telemetry via
-    ``stats``).
-
-    The ``(b, key)`` block keys are null only for a null fingerprint.
-    The cap's stats join-back drops such a row, as the probe
-    equi-join does without the cap, so a null fingerprint never has
-    a near-dup either way."""
-    q = max_hamming // 4
-    masks = [0]
-    masks += [1 << j for j in range(16)]
-    if q >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(16) for j in range(i + 1, 16)]
-    if q >= 3:  # radius > 11 needs q=3 (697 keys/block) — refuse
-        raise ValueError("multi-index scheme supports max_hamming <= 11")
-    mask_arr = F.array(*[F.lit(m) for m in masks])
-
-    h = df.select(F.col(id_col).alias("_id"), F.col(hash_col).alias("_h"))
-    blocks = [
-        F.shiftright("_h", 16 * b).bitwiseAND(F.lit((1 << 16) - 1))
-        for b in range(4)
-    ]
-    # probe side: every <=q-flip variant of each block key
-    probe = h.select(
-        "_id", "_h",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("b"), blocks[b].alias("key"))
-            for b in range(4)
-        ])).alias("bk"),
-    ).select(
-        "_id", "_h", "bk.b",
-        F.explode(F.transform(
-            mask_arr, lambda m: F.col("bk.key").bitwiseXOR(m)
-        )).alias("key"),
+    cands = _bucket_pairs(
+        bands, ["b", "key"], "_id", max_bucket, "_h", stats, probe
     )
-    exact = h.select(
-        F.col("_id").alias("_rid"), F.col("_h").alias("_rh"),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("b"), blocks[b].alias("key"))
-            for b in range(4)
-        ])).alias("bk"),
-    ).select("_rid", "_rh", "bk.b", "bk.key")
-    stars = None
-    if max_bucket is not None:
-        if stats is not None:
-            _bucket_cap_stats(exact, ["b", "key"], max_bucket, stats)
-        # map-side aggregate + join back, not count/min windows over
-        # the bucket key (the mega-bucket single-task-buffering flaw —
-        # see _capped_bucket_pairs)
-        estats = exact.groupBy("b", "key").agg(
-            F.count(F.lit(1)).alias("_bn"),
-            F.min(F.struct(
-                F.col("_rid").alias("i"), F.col("_rh").alias("p")
-            )).alias("_hub"),
-        )
-        e2 = exact.join(estats, ["b", "key"]).select(
-            "_rid", "_rh", "b", "key", "_bn", "_hub"
-        )
-        exact = e2.filter(
-            (F.col("_bn") <= max_bucket)
-            | (F.col("_rid") == F.col("_hub.i"))
-        ).select("_rid", "_rh", "b", "key")
-        stars = e2.filter(
-            (F.col("_bn") > max_bucket) & (F.col("_rid") != F.col("_hub.i"))
-        ).select(
-            F.col("_hub.i").alias(id_col + "_a"),
-            F.col("_rid").alias(id_col + "_b"),
-            F.col("_hub.p").alias("_ha"),
-            F.col("_rh").alias("_hb"),
-        )
-    cands = (
-        probe.join(exact, ["b", "key"])
-        .filter(F.col("_id") < F.col("_rid"))
-        .select(
-            F.col("_id").alias(id_col + "_a"),
-            F.col("_rid").alias(id_col + "_b"),
-            F.col("_h").alias("_ha"),
-            F.col("_rh").alias("_hb"),
-        )
-    )
-    if stars is not None:
-        cands = cands.union(stars)
-    cands = cands.distinct()
-    ham = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
+    ham = F.bit_count(F.col("_pa").bitwiseXOR(F.col("_pb")))
     return cands.select(
-        id_col + "_a", id_col + "_b", ham.cast("int").alias("hamming")
+        F.col("_a").alias(id_col + "_a"),
+        F.col("_b").alias(id_col + "_b"),
+        ham.cast("int").alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
 
 

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _bucket_pairs
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -482,18 +484,9 @@ def embedding_near_dups(
             lsh_buckets_fast("v", n_tables, n_planes, dim)
         ).alias("table", "bucket"),
     ).localCheckpoint()
-    l, r = b.alias("l"), b.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.vid") < F.col("r.vid")),
-        )
-        .select(
-            F.col("l.vid").alias("vec_a"), F.col("r.vid").alias("vec_b")
-        )
-        .distinct()  # dedup BEFORE scoring: a pair may share many tables
+    # distinct BEFORE scoring: a pair may share many tables
+    cands = _bucket_pairs(b, ["table", "bucket"], "vid", None).select(
+        F.col("_a").alias("vec_a"), F.col("_b").alias("vec_b")
     )
     pairs = (
         cands.join(
@@ -843,16 +836,17 @@ def semdedup(
     (driver memory independent of corpus size), assignment is one
     Arrow matmul batch pass, the pair join is a shuffle keyed on
     cent_id (raise n_centroids with the corpus to bound cluster
-    sizes, like IVF nlist). ``max_cluster`` star-connects oversized
-    clusters (dedup._capped_bucket_pairs) and DEFAULTS ON at 4096 —
-    at 100 TB one runaway cluster must degrade to O(m) hub
-    comparisons, never O(m^2) pairs; for the epsilon-ball clusters
-    that actually create mega-clusters the hub finds the same
-    duplicates the full clique would (pinned by
-    test_semdedup_cluster_cap), and the sf1
-    battery pins ~linear candidate growth with the cap active. Pass
-    ``max_cluster=None`` for the exact all-pairs semantics when
-    cluster sizes are known-bounded.
+    sizes, like IVF nlist). The pair join is the near-dup operators'
+    one bucket join (dedup._bucket_pairs) with ``max_cluster`` as its
+    cap: oversized clusters are star-connected to their min-id hub.
+    The cap DEFAULTS ON at 4096 — at 100 TB one runaway cluster must
+    degrade to O(m) hub comparisons, never O(m^2) pairs; for the
+    epsilon-ball clusters that actually create mega-clusters the hub
+    finds the same duplicates the full clique would (pinned by
+    test_semdedup_cluster_cap), and the sf1 battery pins ~linear
+    candidate growth with the cap active. ``max_cluster=None`` lifts
+    the cap (every within-cluster pair is compared) when cluster sizes
+    are known-bounded.
 
     Returns the DROPPED set: (vec_id, cent_id, dup_of, cos) where
     dup_of is the smallest qualifying lower id (deterministic,
@@ -872,57 +866,19 @@ def semdedup(
         .filter(F.col("cent_id").isNotNull())
         .localCheckpoint()
     )
-    if max_cluster is not None:
-        # mega-cluster cap (the LSH bucket-cap contract,
-        # dedup._capped_bucket_pairs): clusters over the cap compare
-        # members against the cluster-min hub only — O(m) rows instead
-        # of O(m^2), and for an epsilon-ball (the case that creates
-        # mega-clusters) hub comparisons find the same duplicates the
-        # full clique would. dup_of stays deterministic (hub = min id).
-        from .dedup import _capped_bucket_pairs
-
-        pr = _capped_bucket_pairs(
-            asg, ["cent_id"], "cid", max_cluster, payload_c="cv"
-        )
-        hits = pr.select(
-            F.col("_b").alias("vec_id"),
-            F.col("_a").alias("a_id"),
-            F.round(
-                cosine_fast(F.col("_pa"), F.col("_pb")), 6
-            ).alias("cos"),
-        ).filter(F.col("cos") >= eps)
-        best = hits.groupBy("vec_id").agg(
-            F.min(F.struct("a_id", "cos")).alias("m")
-        )
-        return best.join(
-            asg.select(F.col("cid").alias("vec_id"), "cent_id"), "vec_id"
-        ).select(
-            "vec_id", "cent_id",
-            F.col("m.a_id").alias("dup_of"), F.col("m.cos").alias("cos"),
-        )
-    a = asg.select(
-        "cent_id", F.col("cid").alias("a_id"), F.col("cv").alias("av")
+    # dup_of stays deterministic under the cap: the hub is the min id
+    pr = _bucket_pairs(asg, ["cent_id"], "cid", max_cluster, payload_c="cv")
+    hits = pr.select(
+        F.col("_b").alias("vec_id"),
+        F.col("_a").alias("a_id"),
+        F.round(cosine_fast(F.col("_pa"), F.col("_pb")), 6).alias("cos"),
+    ).filter(F.col("cos") >= eps)
+    best = hits.groupBy("vec_id").agg(  # smallest anchor id
+        F.min(F.struct("a_id", "cos")).alias("m")
     )
-    b = asg.select(
-        "cent_id", F.col("cid").alias("vec_id"), F.col("cv").alias("bv")
-    )
-    hits = (
-        a.join(b, "cent_id")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .select(
-            "cent_id",
-            "vec_id",
-            "a_id",
-            F.round(cosine_fast(F.col("av"), F.col("bv")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= eps)
-    )
-    best = F.min(F.struct("a_id", "cos")).alias("m")  # smallest anchor id
-    return (
-        hits.groupBy("vec_id", "cent_id")
-        .agg(best)
-        .select(
-            "vec_id", "cent_id",
-            F.col("m.a_id").alias("dup_of"), F.col("m.cos").alias("cos"),
-        )
+    return best.join(
+        asg.select(F.col("cid").alias("vec_id"), "cent_id"), "vec_id"
+    ).select(
+        "vec_id", "cent_id",
+        F.col("m.a_id").alias("dup_of"), F.col("m.cos").alias("cos"),
     )

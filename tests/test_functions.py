@@ -1317,6 +1317,16 @@ def test_lsh_bucket_cap_star_semantics(spark, docs):
     assert {p for p in cc_c if p[0] < 80} == {(i, 0) for i in range(80)}
 
 
+@pytest.mark.parametrize("band_rows", [3, 0, 16])
+def test_lsh_band_rows_must_divide_num_perms(docs, band_rows):
+    """band_rows that do not divide num_perms would hash permutations
+    no band uses (8 // 3 = 2 bands of 3 leave two unused): refused, not
+    silently dropped."""
+    with pytest.raises(ValueError, match="positive divisor"):
+        dd.lsh_candidate_pairs(docs.limit(5), num_perms=8,
+                               band_rows=band_rows)
+
+
 def test_simhash_bucket_cap(spark):
     """max_bucket threads through simhash_near_dups (which shares the
     banded hamming join): identical texts -> identical simhash ->
@@ -1731,6 +1741,12 @@ def test_semdedup_cluster_cap(spark):
     full = sim.semdedup(df, n_centroids=105, eps=0.999)
     got_c = {r["vec_id"]: r for r in capped.collect()}
     got_f = {r["vec_id"]: r for r in full.collect()}
+    # uncapped: every cluster is under the default cap of 4096, so the
+    # default is inert and lifting it changes no row
+    uncapped = sim.semdedup(df, n_centroids=105, eps=0.999, max_cluster=None)
+    assert sorted(map(tuple, uncapped.collect())) == sorted(
+        map(tuple, got_f.values())
+    )
     # colinear balls: hub-star finds the identical dropped set with the
     # identical dup_of (hub == group min == full path's min anchor)
     assert set(got_c) == set(got_f)
