@@ -429,7 +429,6 @@ def minhash_dedup_pairs(
     """Full near-dup pipeline: shingle -> minhash -> band -> bucket-join
     -> exact-Jaccard verify. ``max_bucket`` bounds mega-bucket candidate
     blowup (see :func:`_cap_buckets`)."""
-    df = df.persist()  # read by both the signature and the verify stage
     cands = lsh_candidate_pairs(
         df, text_col, num_perms, band_rows, n, max_bucket, stats
     )
@@ -481,9 +480,11 @@ def incremental_near_dups(
     join-back keeps every base band row.
     """
     # both sides are read twice (signature build + text re-join in the
-    # verify stage) — same lifecycle as minhash_dedup_pairs
-    base = base.persist()
-    delta = delta.persist()
+    # verify stage): a lazy local checkpoint computes each once and,
+    # unlike a persist, frees on driver GC (sf0.01, local[4]: 1.69 s
+    # uncached, 1.49 s checkpointed, 8 jobs either way)
+    base = base.localCheckpoint(eager=False)
+    delta = delta.localCheckpoint(eager=False)
     bands_b, _ = _cap_buckets(
         _band_table(
             minhash_signatures(base, text_col, num_perms, n),
@@ -897,9 +898,7 @@ def simhash_near_dups(
 
     The banded join itself is :func:`hamming_near_dups` at n_bands=4
     (identical quarter-key scheme — one implementation, one cap)."""
-    sh = _spread(df).select(
-        "doc_id", simhash(F.col(text_col)).alias("sh")
-    ).persist()
+    sh = _spread(df).select("doc_id", simhash(F.col(text_col)).alias("sh"))
     out = hamming_near_dups(
         sh, "doc_id", "sh", max_hamming, n_bands=4,
         max_bucket=max_bucket, stats=stats,

@@ -77,43 +77,6 @@ def cosine_fast(a: Column | str, b: Column | str) -> Column:
     return _cosine_udf(a, b)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k neighbors per query vector (excluding self).
-
-    queries is expected small => broadcast; the corpus side streams.
-    Ties broken by neighbor id for full determinism.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
-
-
 # ------------------------------------------------------------------ LSH ANN
 
 
@@ -209,9 +172,9 @@ def ann_lsh_topk(
     """Approximate top-k via multi-table LSH: candidates = union of the
     query's buckets across ``n_tables`` independent hyperplane tables,
     scored exactly, deduped, top-k. Deterministic (hyperplanes derived
-    from index arithmetic); recall vs :func:`cosine_topk` is asserted
-    in the suite. Scale shape: corpus bucketed once per table (narrow),
-    candidates shuffle on (table, bucket) short keys only."""
+    from index arithmetic); recall vs an exact brute-force top-k is
+    asserted in the suite. Scale shape: corpus bucketed once per table
+    (narrow), candidates shuffle on (table, bucket) short keys only."""
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -373,8 +336,8 @@ def ivf_topk(
     Scale shape: lists are bucketed by ``cent_id`` (an Iceberg
     deployment partitions on it), so a probe reads nprobe partitions —
     candidate generation never shuffles the corpus, and with
-    ``nprobe >= n_centroids`` the result provably equals
-    :func:`cosine_topk` (asserted in tests). Size ``n_centroids``
+    ``nprobe >= n_centroids`` the result provably equals the exact
+    brute-force top-k (asserted in tests). Size ``n_centroids``
     ~sqrt(|corpus|) for balanced lists (the classic IVF operating
     point); the driver cost stays n_centroids rows either way."""
     c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))

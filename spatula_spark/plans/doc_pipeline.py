@@ -35,7 +35,7 @@ def doc_url(doc_id) -> F.Column:
 
 
 def doc_page_store(docs: DataFrame) -> DataFrame:
-    """documents -> PAGE_STORE rows (pure column exprs)."""
+    """documents -> page-store rows (pure column exprs)."""
     n = docs.count()
     d = F.col("doc_id")
     children = F.filter(

@@ -715,12 +715,13 @@ class CrawlEngine:
             # (broadcast-frontier) fetch never shuffles the store. The
             # url_hash-bucketed copy for the big-wave shuffle join is
             # built lazily on first use (the Iceberg deployment buckets
-            # the table on url_hash instead).
+            # the table on url_hash instead). Both are cached for one
+            # crawl() only (see crawl).
             self.page_store = page_store.select(
                 "url_hash", "status", "payload_kind", "payload",
                 "links", "next_url", "image_id", "flaky_rejects",
                 F.col("canon_url").alias("store_url"),
-            ).persist()
+            )
         else:
             self.page_store = None
         self._store_bykey = None
@@ -877,7 +878,23 @@ class CrawlEngine:
     def crawl(self, seeds: list[dict]) -> CrawlResult:
         """Run waves until the frontier drains or ``max_waves`` stops
         the crawl; each wave runs the phase methods in the order the
-        module docstring lists them."""
+        module docstring lists them.
+
+        The page-store projection is cached for the crawl, and so is
+        its url_hash-partitioned copy once a shuffle fetch builds it.
+        Every wave lands its emissions, so no result reads the store:
+        both caches are released when the crawl returns or raises."""
+        self._store_bykey = None
+        if self.page_store is not None:
+            self.page_store.persist()
+        try:
+            return self._crawl(seeds)
+        finally:
+            for df in (self.page_store, self._store_bykey):
+                if df is not None:
+                    df.unpersist()
+
+    def _crawl(self, seeds: list[dict]) -> CrawlResult:
         cfg = self.config
         (frontier, frontier_rows, n_frontier, start_wave, results,
          metrics_rows, null_urls) = self._begin(seeds)

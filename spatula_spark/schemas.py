@@ -48,27 +48,6 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
-# synthetic web graph — the join target that replaces the HTTP socket
-# (`sources.py:42-52` `URL.get_response`). One row per fetchable URL.
-PAGE_STORE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("canon_url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # list|detail|media|error
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("payload_kind", T.StringType(), False),  # html|json|csv|xml|bin
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
-        T.StructField("next_url", T.StringType(), True),
-        T.StructField("image_id", T.StringType(), True),
-        # number of leading attempts accept_response rejects (retry tests,
-        # reference retry loop `pages.py:168-195`)
-        T.StructField("flaky_rejects", T.IntegerType(), False),
-    ]
-)
-
 # lineage path-key construction ------------------------------------------
 
 SLOT_CHILD = "00"

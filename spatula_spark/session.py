@@ -97,7 +97,30 @@ def scoped_conf(
     Session conf is global to the SparkSession, not to the thread: a
     query planned on another thread meanwhile (the crawl engine's async
     snapshot commit) sees the scoped values. So only keys that shape a
-    plan without changing its rows (partition counts, AQE) belong here."""
+    plan without changing its rows (partition counts, AQE) belong here,
+    and each caller stays only for a measured cost:
+
+    - the driver-route ``_land`` in ``plans/engine.py`` (AQE off): with
+      AQE on, the salted repartition becomes a query stage of its own,
+      one more job per driver land;
+    - the vocabulary collect in ``functions/text.py::_bpe_train`` (AQE
+      off): with AQE on, the aggregate's map stage is one more job;
+    - the ``_bpe_train_spark`` loop (AQE off, loop-sized shuffle
+      width): AQE's re-planning was ~25% of the 10-round wall;
+    - ``streaming/drain.py::drain_events``: a query takes its state
+      partition count from ``shuffle.partitions`` at start, so the
+      start runs under the input-sized count (a no-op where it equals
+      the session width).
+
+    The drain does not start its query in a ``spark.newSession()``
+    (own SQL conf, same SparkContext). A child session drains
+    correctly and leaves the parent's conf alone, but it does not
+    inherit conf set on the parent at runtime (a parent
+    ``spark.sql.session.timeZone`` set after start reads ``UTC`` in the
+    child, which would shift window starts), and each child drain left
+    two more ``StreamingQueryListenerBus`` on the context's listener
+    bus after a Python and a JVM GC, against one for a same-session
+    drain, keeping the child session reachable."""
     prev = {k: spark.conf.get(k, None) for k in conf}
     try:
         for k, v in conf.items():

@@ -236,7 +236,10 @@ class SynthWeb:
 
     # -------------------------------------------------------- page store
     def page_store(self, spark: SparkSession) -> DataFrame:
-        """Detail + list pages as one DataFrame, PAGE_STORE_SCHEMA."""
+        """Detail + list pages as one DataFrame, one row per fetchable
+        URL: url, host, kind, status, payload_kind, payload, links,
+        next_url, image_id, flaky_rejects, canon_url, url_hash (the
+        columns ``CrawlEngine`` projects from its ``page_store``)."""
         details = self._detail_pages(spark)
         lists = self._list_pages(spark)
         store = details.unionByName(lists)

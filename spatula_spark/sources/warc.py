@@ -274,7 +274,7 @@ def archive_page_store(
     shards: int | None = None,
     prefix: str = "store",
 ) -> DataFrame:
-    """Archive a PAGE_STORE_SCHEMA DataFrame (schemas.py) as WARC —
+    """Archive a page store (``SynthWeb.page_store``'s columns) as WARC —
     the crawl-to-archive hop: what the engine fetched this run becomes
     next run's seekable page store. Maps payload_kind → MIME, skips
     payload-less rows (pure-error rows have nothing to archive), and

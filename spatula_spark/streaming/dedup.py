@@ -20,45 +20,10 @@ giving the exact DuckDB oracle in ``entry_queries``.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import scoped_conf
-from .windows import EVENTS_SCHEMA
-
-
-def _as_stream_dir(path: str) -> str:
-    if path.endswith(".parquet") and not os.path.isdir(path):
-        d = tempfile.mkdtemp(prefix="spatula_stream_")
-        os.symlink(os.path.abspath(path), os.path.join(d, "events.parquet"))
-        return d
-    return path
-
-
-def _state_partitions(spark: SparkSession, path: str) -> int:
-    """State-store partition count derived from INPUT SIZE, capped at
-    session parallelism (guide-§2 scale-adaptive partitioning): every
-    state partition pays a fixed per-microbatch cost (delta file +
-    maintenance snapshot per store instance), so a small keyed stream
-    across ``shuffle.partitions`` stores is pure overhead (measured
-    1.64s -> 0.91s on the sf0.1 dedup drain at 32 -> 8), while a
-    high-throughput stream keeps full width. ~32 MB of source per
-    state partition, floor 8. A source of unknown size keeps the full
-    width: os.walk sees nothing under an s3:// or hdfs:// path."""
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    try:
-        total = 0
-        for dp, _dirs, files in os.walk(path, followlinks=True):
-            for f in files:
-                total += os.path.getsize(os.path.join(dp, f))
-    except OSError:
-        return n
-    if total == 0:
-        return n
-    return max(min(n, total // (32 << 20) + 1), min(8, n))
+# the state-width rule is imported from here by its tests
+from .drain import _state_partitions, drain_events  # noqa: F401
 
 
 def stream_distinct_keys(
@@ -74,35 +39,16 @@ def stream_distinct_keys(
     independent of which physical row arrived first (the retained
     row's other columns are arrival-order-dependent; the key set is
     not)."""
-    name = "dedup_" + uuid.uuid4().hex[:12]
-    src = _as_stream_dir(events_path)
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(src)
-        .withWatermark("ts", watermark)
-        .select(*keys, "ts")
-        .dropDuplicatesWithinWatermark(list(keys))
-        .select(*keys)
-    )
-    # the query snapshots shuffle.partitions at start() as its state
-    # partition count; derive it from input size, restore the session
-    # conf immediately after
-    with scoped_conf(spark, {
-        "spark.sql.shuffle.partitions": _state_partitions(spark, src)
-    }):
-        q = (
-            stream.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+    def build(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", watermark)
+            .select(*keys, "ts")
+            .dropDuplicatesWithinWatermark(list(keys))
+            .select(*keys)
         )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+
+    return drain_events(spark, events_path, build,
+                        max_files_per_trigger=max_files_per_trigger)
 
 
 def stream_distinct_derived(
@@ -124,28 +70,9 @@ def stream_distinct_derived(
     ``derive`` maps the raw stream DataFrame (EVENTS_SCHEMA + ts) to
     a DataFrame with ``out_cols`` + ``ts``; dedup is on ``out_cols``.
     """
-    name = "fpdedup_" + uuid.uuid4().hex[:12]
-    src = _as_stream_dir(events_path)
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(src)
-        .withWatermark("ts", watermark)
+    return drain_events(
+        spark, events_path,
+        lambda stream: derive(stream.withWatermark("ts", watermark))
+        .dropDuplicatesWithinWatermark(list(out_cols))
+        .select(*out_cols),
     )
-    deduped = derive(stream).dropDuplicatesWithinWatermark(list(out_cols))
-    # input-sized state partitioning (see _state_partitions)
-    with scoped_conf(spark, {
-        "spark.sql.shuffle.partitions": _state_partitions(spark, src)
-    }):
-        q = (
-            deduped.select(*out_cols)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-    return spark.table(name)

@@ -30,9 +30,6 @@ that scales.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -46,7 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .windows import EVENTS_SCHEMA
+from .drain import drain_events
 
 OUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
@@ -131,16 +128,9 @@ def stream_sessionize(
     """Run the stateful sessionizer over the events file as a real
     streaming query (drained synchronously); returns the emitted
     closed sessions."""
-    name = "sess_" + uuid.uuid4().hex[:12]
-    if events_path.endswith(".parquet") and not os.path.isdir(events_path):
-        d = tempfile.mkdtemp(prefix="spatula_stream_")
-        os.symlink(
-            os.path.abspath(events_path), os.path.join(d, "events.parquet")
-        )
-        events_path = d
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
-        .withWatermark("ts", watermark)
+    return drain_events(
+        spark, events_path,
+        lambda stream: stream.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
             _session_fn(gap_sec * 1_000_000),
@@ -148,16 +138,5 @@ def stream_sessionize(
             STATE_SCHEMA,
             "append",
             GroupStateTimeout.EventTimeTimeout,
-        )
+        ),
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)

@@ -11,17 +11,10 @@ batch aggregation.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
+from .drain import drain_events
 
 
 def stream_window_counts(
@@ -37,35 +30,20 @@ def stream_window_counts(
     width W each event lands in W/S overlapping windows. Complete
     output mode so every window is emitted regardless of watermark
     closure (the file source is finite)."""
-    name = "win_" + uuid.uuid4().hex[:12]
-    if events_path.endswith(".parquet") and not os.path.isdir(events_path):
-        # the streaming file source requires a directory
-        d = tempfile.mkdtemp(prefix="spatula_stream_")
-        os.symlink(
-            os.path.abspath(events_path), os.path.join(d, "events.parquet")
-        )
-        events_path = d
     win = (
         F.window("ts", window, slide) if slide
         else F.window("ts", window)
     )
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(events_path)
-        .withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("total"))
-    )
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+
+    def build(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", watermark)
+            .groupBy(win, "event_type")
+            .agg(F.count("*").alias("n"),
+                 F.round(F.sum("value"), 6).alias("total"))
+        )
+
+    return drain_events(spark, events_path, build, "complete").select(
         F.col("window.start").alias("win_start"),
         "event_type",
         "n",
